@@ -2203,7 +2203,7 @@ def q_optimizer_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     res = eo.optimize(
         li, "l_extendedprice", "l_returnflag", "R", ["l_quantity"],
-        budget=2_000_000.0, strategy="greedy", id_col="rid", gap_bootstrap_reps=0,
+        budget=2_000_000.0, strategy="greedy", id_col="rid",
     )
     return (
         res.adjustments_df.filter(F.col("adjustment") > 1e-9)

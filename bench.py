@@ -586,17 +586,16 @@ def main():
         "suspect": suspect,
     }
     # Diagnostics (per-query samples + loadavg audit trail) go to a side
-    # file and a PRECEDING stdout line: the driver records only the last
-    # ~2000 chars of stdout and parses the final line as the bench JSON —
-    # rounds 4-6 shipped one ~4 KB line and the driver recorded
-    # "parsed": null every time. The final line stays compact (~1.2 KB).
+    # file and to stderr, so stdout is exactly one compact (~1.2 KB) JSON
+    # line that a reader can parse whole; a ~4 KB line gets truncated by
+    # readers that keep only the tail of stdout.
     detail = dict(out, samples=samples, loadavg_1min=loadavg)
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass
-    print("DETAIL " + json.dumps({"samples": samples, "loadavg_1min": loadavg}))
+    print("DETAIL " + json.dumps({"samples": samples, "loadavg_1min": loadavg}), file=sys.stderr)
     print(json.dumps(out))
     spark.stop()
 

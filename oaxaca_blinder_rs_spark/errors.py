@@ -47,8 +47,9 @@ class PerfectSeparation(OaxacaError):
 
 
 class NonNumericData(OaxacaError):
-    """Strict cast introduced nulls (engine/src/analysis.rs:14-35)."""
+    """Strict cast introduced nulls (engine/src/analysis.rs:14-35) or
+    values that no estimate survives (+-Infinity)."""
 
-    def __init__(self, column: str):
-        super().__init__(f"Column '{column}' contains non-numeric data")
+    def __init__(self, column: str, what: str = "non-numeric data"):
+        super().__init__(f"Column '{column}' contains {what}")
         self.column = column

@@ -204,16 +204,19 @@ class McpServer:
                 adjust_both_groups=bool(args.get("adjust_both_groups", False)),
                 id_col=rid,
             )
-            return {
-                "adjustments": [asdict(a) for a in res.adjustments],
-                "total_cost": res.total_cost,
-                "original_gap": res.original_gap,
-                "new_gap": res.new_gap,
-                "original_unexplained_gap": res.original_unexplained_gap,
-                "new_unexplained_gap": res.new_unexplained_gap,
-                "required_budget": res.required_budget,
-                "model_coefficients": [asdict(c) for c in res.model_coefficients],
-            }
+            try:
+                return {
+                    "adjustments": [asdict(a) for a in res.adjustments],
+                    "total_cost": res.total_cost,
+                    "original_gap": res.original_gap,
+                    "new_gap": res.new_gap,
+                    "original_unexplained_gap": res.original_unexplained_gap,
+                    "new_unexplained_gap": res.new_unexplained_gap,
+                    "required_budget": res.required_budget,
+                    "model_coefficients": [asdict(c) for c in res.model_coefficients],
+                }
+            finally:
+                res.release()  # a long-lived server must not accumulate pinned blocks
         if name == "verify_adjustments":
             adj = [(a["index"], a["value"]) for a in args["adjustments"]]
             res = eo.verify_adjustments(df, adj, outcome, group, ref, preds, cats, id_col=rid)

@@ -13,10 +13,16 @@ Spark-first realization:
   k x k driver constants — they run distributed over any n;
 - greedy allocation is the window-cumsum reformulation (exact equivalence to
   the sequential loop, see budget.py);
-- the frontier keeps only O(k^2) Gram state + the payment schedule on the
-  driver and updates X'y / y'y incrementally per budget step — no per-step
-  data pass (the reference recomputes an n-row matmul per step,
-  analysis.rs:1087-1096).
+- one request casts, validates, aggregates and scans its frame once:
+  ``optimize`` and ``efficient_frontier`` share one strict cast, one stats
+  pass per group level and one greedy prefix scan; the frontier's pooled
+  Gram state comes from the per-group stats on the driver, and every budget
+  step's X'y / y'y delta from one aggregation over the payment schedule —
+  no per-step data pass (the reference recomputes an n-row matmul per step,
+  analysis.rs:1087-1096);
+- tables built on the driver (adjustments, overrides, budget steps) enter
+  the JVM through ``local_table`` as Arrow LocalRelations, so no call
+  without a UDF starts a Python worker.
 
 Row identity: adjustments are keyed by a stable ``row_id`` (pass ``id_col``),
 not by position (SURVEY §7.5 risk 1).
@@ -31,9 +37,15 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scan import ordered_prev_cumsum
-from ..errors import ColumnNotFound, NonNumericData, OaxacaError
-from ..functions.linalg import collect_group_stats
+from .scan import ordered_prev_cumsum, release
+from ..errors import ColumnNotFound, InvalidGroupVariable, NonNumericData, OaxacaError
+from ..functions.linalg import (
+    GroupStats,
+    collect_group_stats,
+    gram_agg_exprs,
+    pooled_stats,
+    stats_from_row,
+)
 from ..functions.mathx import norm_cdf_scalar, norm_ppf_scalar
 
 INTERCEPT = "__ob_intercept__"
@@ -68,12 +80,14 @@ class Adjustment:
 class OptimizationResult:
     """Result of ``optimize``. ``adjustments_df`` is the lazy plan; the
     scalar summaries and the driver-side ``adjustments`` list are computed
-    ON FIRST ACCESS (r14 OPT, guide §5: a query path that only consumes
-    ``adjustments_df`` — the contract shape — must not pay for the
-    original-gap decomposition run, the summary aggregations, or a
-    COLLECT_LIMIT-bounded collect of every adjustment row; library/MCP
-    consumers that read the attributes get the identical values, computed
-    by the identical jobs, just on demand). Each lazy attribute memoizes."""
+    ON FIRST ACCESS, so a query path that only consumes ``adjustments_df``
+    (the contract shape) pays for no summary job and no collect. Each lazy
+    attribute memoizes.
+
+    The result owns the frames ``optimize`` pinned (the cleaned input and
+    the greedy scan's checkpoint): the lazy attributes read them, and
+    ``release()`` drops them once the caller is done. A long-lived caller
+    (the MCP server) must call it; nothing may be read afterwards."""
 
     def __init__(
         self,
@@ -85,12 +99,14 @@ class OptimizationResult:
         adjustments_fn,
         model_coefficients: list[Contribution],
         adjustments_df: DataFrame | None = None,
+        release_fn=None,
     ) -> None:
         self._required_budget_fn = required_budget_fn
         self._total_cost_fn = total_cost_fn
         self._original_gap_fn = original_gap_fn
         self._target_stats_fn = target_stats_fn
         self._adjustments_fn = adjustments_fn
+        self._release_fn = release_fn
         self.model_coefficients = model_coefficients
         self.adjustments_df = adjustments_df
         self._memo: dict[str, object] = {}
@@ -99,6 +115,12 @@ class OptimizationResult:
         if key not in self._memo:
             self._memo[key] = fn()
         return self._memo[key]
+
+    def release(self) -> None:
+        """Unpin the frames behind the lazy attributes (idempotent)."""
+        fn, self._release_fn = self._release_fn, None
+        if fn is not None:
+            fn()
 
     @property
     def required_budget(self) -> float:
@@ -172,23 +194,57 @@ class DecompositionResult:
 
 def strict_numeric_cast(df: DataFrame, cols: list[str]) -> DataFrame:
     """S3 (engine/src/analysis.rs:14-35): cast to double; error if the cast
-    introduces nulls ('contains non-numeric data')."""
+    introduces nulls ('contains non-numeric data') or yields +-Infinity,
+    which would turn every downstream estimate into NaN. One aggregate
+    counts both."""
     existing = set(df.columns)
     for c in cols:
         if c not in existing:
             raise ColumnNotFound(c)
-    checks = [
-        F.sum((F.col(c).try_cast("double").isNull() & F.col(c).isNotNull()).cast("long")).alias(c)
-        for c in cols
-    ]
+    checks = []
+    for i, c in enumerate(cols):
+        d = F.col(c).try_cast("double")
+        checks.append(F.sum((d.isNull() & F.col(c).isNotNull()).cast("long")).alias(f"bad{i}"))
+        checks.append(F.sum((F.abs(d) == F.lit(math.inf)).cast("long")).alias(f"inf{i}"))
     bad = df.agg(*checks).collect()[0]
-    for c in cols:
-        if int(bad[c] or 0) > 0:
+    for i, c in enumerate(cols):
+        if int(bad[f"bad{i}"] or 0) > 0:
             raise NonNumericData(c)
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.col(c).try_cast("double"))
-    return out
+        if int(bad[f"inf{i}"] or 0) > 0:
+            raise NonNumericData(c, "infinite values")
+    return df.withColumns({c: F.col(c).try_cast("double") for c in cols})
+
+
+def local_table(spark, columns: dict[str, tuple[str, list]]) -> DataFrame:
+    """A small driver-built table (``name -> ("long" | "double", values)``)
+    as a JVM LocalRelation. ``createDataFrame`` on a Python list yields a
+    pickled Python RDD, which starts Python worker tasks in every job that
+    reads it; an Arrow table is decoded in the JVM alone."""
+    import pyarrow as pa
+
+    types = {"long": pa.int64(), "double": pa.float64()}
+    return spark.createDataFrame(
+        pa.table({name: pa.array(vals, types[t]) for name, (t, vals) in columns.items()})
+    )
+
+
+def _with_row_id(df: DataFrame, id_col: str | None) -> DataFrame:
+    if id_col:
+        return df.withColumn(ROW_ID, F.col(id_col).cast("long"))
+    return df.withColumn(ROW_ID, F.monotonically_increasing_id())
+
+
+def _adjustment_table(df: DataFrame, adjustments) -> DataFrame:
+    """(ROW_ID, __delta) from an ``index``/``adjustment`` frame or a list of
+    (index, delta) pairs."""
+    if isinstance(adjustments, DataFrame):
+        return adjustments.select(
+            F.col("index").cast("long").alias(ROW_ID), F.col("adjustment").alias("__delta")
+        )
+    return local_table(df.sparkSession, {
+        ROW_ID: ("long", [int(i) for i, _ in adjustments]),
+        "__delta": ("double", [float(v) for _, v in adjustments]),
+    })
 
 
 def _design(df: DataFrame, predictors: list[str], categorical_predictors: list[str] | None):
@@ -205,10 +261,10 @@ def _design(df: DataFrame, predictors: list[str], categorical_predictors: list[s
     return out, xcols
 
 
-def _lstsq_beta(stats) -> np.ndarray:
+def _lstsq_beta(xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
     """SVD least-squares semantics from sufficient statistics:
     pinv(X'X) X'y == X^+ y (min-norm solution, matches analysis.rs:434-460)."""
-    return np.linalg.pinv(stats.xtx) @ stats.xty
+    return np.linalg.pinv(xtx) @ xty
 
 
 def _leverage_expr(cov: np.ndarray, xcols: list[str]):
@@ -229,6 +285,22 @@ def _xb_expr(beta, xcols):
     return e
 
 
+def _sum_stats(parts: list[GroupStats]) -> GroupStats:
+    """Sufficient stats of the union of disjoint row sets."""
+    if len(parts) == 1:
+        return parts[0]
+    return GroupStats(
+        names=list(parts[0].names),
+        n=sum(p.n for p in parts),
+        wsum=sum(p.wsum for p in parts),
+        xtx=sum(p.xtx for p in parts),
+        xty=sum(p.xty for p in parts),
+        xsum=sum(p.xsum for p in parts),
+        yty=sum(p.yty for p in parts),
+        ysum=sum(p.ysum for p in parts),
+    )
+
+
 # ---------------------------------------------------------------------------
 # decomposition request surface (run_decomposition_on_df, analysis.rs:99-307)
 # ---------------------------------------------------------------------------
@@ -244,9 +316,27 @@ def run_decomposition(
     reference_coefficients: str | None = None,
     quantile: float | None = None,
 ) -> DecompositionResult:
+    df = strict_numeric_cast(df, [outcome] + list(predictors))
+    return _decompose(
+        df, outcome, group, reference_group, predictors, categorical_predictors,
+        bootstrap_reps, reference_coefficients, quantile,
+    )
+
+
+def _decompose(
+    df: DataFrame,
+    outcome: str,
+    group: str,
+    reference_group: str,
+    predictors: list[str],
+    categorical_predictors: list[str] | None,
+    bootstrap_reps: int,
+    reference_coefficients: str | None = None,
+    quantile: float | None = None,
+) -> DecompositionResult:
+    """``run_decomposition`` on a frame ``strict_numeric_cast`` already checked."""
     from ..builder import OaxacaBuilder
 
-    df = strict_numeric_cast(df, [outcome] + list(predictors))
     # engine summary: A = reference group (analysis.rs:106-133)
     srow = df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -298,6 +388,176 @@ def run_decomposition(
 # M19: optimizer
 # ---------------------------------------------------------------------------
 
+def _payable():
+    """A row the allocation pays: eligible, with a positive gap to its target."""
+    return F.col("__eligible") & (F.col("__diff") > 0)
+
+
+@dataclass
+class _Prepared:
+    """One request's cleaned frame (cached; the caller unpersists it) and
+    its single stats pass, per raw group level and split reference/target."""
+
+    df: DataFrame
+    design: DataFrame
+    xcols: list[str]
+    by_level: dict
+    stats_ref: GroupStats
+    stats_tgt: GroupStats
+
+
+def _prepare(
+    df: DataFrame,
+    outcome: str,
+    group: str,
+    reference_group: str,
+    predictors: list[str],
+    categorical_predictors: list[str] | None,
+    id_col: str | None,
+) -> _Prepared:
+    df = strict_numeric_cast(df, [outcome] + list(predictors))
+    df = _with_row_id(df, id_col).dropna(
+        subset=[outcome, group] + list(predictors) + list(categorical_predictors or [])
+    ).cache()
+    try:
+        design, xcols = _design(df, predictors, categorical_predictors)
+        # grouped by the raw level, so the library gap can pick its A the
+        # builder's way; the reference flag is Spark's own comparison
+        rows = design.groupBy(group).agg(
+            F.first(F.col(group) == F.lit(reference_group)).alias("__is_ref"),
+            *gram_agg_exprs(xcols, outcome),
+        ).collect()
+        by_level = {r[group]: stats_from_row(r, xcols) for r in rows}
+        ref = [by_level[r[group]] for r in rows if r["__is_ref"] is True]
+        tgt = [by_level[r[group]] for r in rows if r["__is_ref"] is False]
+        if not ref or not tgt:
+            raise OaxacaError("One group has no data")
+    except BaseException:
+        df.unpersist()
+        raise
+    return _Prepared(df, design, xcols, by_level, _sum_stats(ref), _sum_stats(tgt))
+
+
+def _original_gap(
+    prep: _Prepared,
+    outcome: str,
+    group: str,
+    reference_group: str,
+    predictors: list[str],
+    categorical_predictors: list[str] | None,
+) -> float:
+    """The library's pooled-decomposition gap (analysis.rs:349-363) from the
+    per-level stats ``_prepare`` collected: the builder's level choice (B =
+    reference, A = first sorted level that is not B) and its from-stats
+    path, so the value and the errors are those of
+    ``OaxacaBuilder(...).run().total_gap``."""
+    from ..builder import OaxacaBuilder
+
+    stats = prep.by_level
+    levels = sorted(g for g in stats if g is not None)
+    if len(levels) < 2:
+        raise InvalidGroupVariable("Not enough groups for comparison")
+    group_a = levels[0] if levels[0] != reference_group else levels[1]
+    if group_a not in stats or reference_group not in stats:
+        raise InvalidGroupVariable("One group has no data")
+    builder = (
+        OaxacaBuilder(prep.df, outcome, group, reference_group)
+        .predictors(predictors)
+        .categorical_predictors(categorical_predictors or [])
+        .reference_coefficients("pooled")
+    )
+    point = builder._decompose_from_stats(
+        stats[group_a], stats[reference_group], {}, {}, len(predictors)
+    )
+    return point.total_gap
+
+
+def _score(
+    prep: _Prepared,
+    outcome: str,
+    group: str,
+    reference_group: str,
+    *,
+    target: str,
+    range_target: str,
+    confidence_level: float,
+    min_gap_pct: float,
+    forensic_mode: bool,
+    adjust_both_groups: bool,
+) -> tuple[np.ndarray, DataFrame, DataFrame]:
+    """Fair-wage model from the stats pass (analysis.rs:389-490), every row
+    scored against it (``__diff``; design columns kept for the frontier) and
+    the in-scope rows with ``__eligible``."""
+    stats_ref, stats_tgt = prep.stats_ref, prep.stats_tgt
+    xcols = prep.xcols
+    if target == "pooled":
+        beta_fair = _lstsq_beta(stats_ref.xtx + stats_tgt.xtx, stats_ref.xty + stats_tgt.xty)
+    else:
+        beta_fair = _lstsq_beta(stats_ref.xtx, stats_ref.xty)
+
+    # sigma^2 from reference-group residuals (analysis.rs:477-490)
+    rss = float(stats_ref.yty - 2 * beta_fair @ stats_ref.xty + beta_fair @ stats_ref.xtx @ beta_fair)
+    dof = stats_ref.n - len(xcols)
+    sigma2 = rss / dof if dof > 0 else 0.0
+    try:
+        cov = np.linalg.inv(stats_ref.xtx)
+    except np.linalg.LinAlgError as e:
+        raise OaxacaError(
+            "Covariance matrix is singular, likely due to perfect multicollinearity."
+        ) from e
+
+    confidence = min(max(confidence_level, 0.50), 0.999)
+    z = norm_ppf_scalar(1.0 - (1.0 - confidence) / 2.0)
+
+    fair = _xb_expr(beta_fair, xcols)
+    if sigma2 <= 1e-9:
+        lower, upper = fair, fair
+    else:
+        se = F.sqrt(F.lit(sigma2) * (F.lit(1.0) + _leverage_expr(cov, xcols)))
+        lower = fair - F.lit(z) * se
+        upper = fair + F.lit(z) * se
+    target_wage = {"midpoint": fair, "lowerbound": lower, "upperbound": upper}[
+        range_target.replace("_", "").lower()
+    ]
+    diff = target_wage - F.col(outcome)
+    gap_pct = F.when(F.abs(F.col(outcome)) > 1e-6, diff / F.col(outcome)).otherwise(F.lit(0.0))
+
+    scored = prep.design.select(
+        ROW_ID,
+        F.col(outcome).alias("__wage"),
+        (F.col(group) == F.lit(reference_group)).alias("__is_ref"),
+        fair.alias("fair_wage"),
+        lower.alias("fair_wage_lower_bound"),
+        upper.alias("fair_wage_upper_bound"),
+        diff.alias("__diff"),
+        gap_pct.alias("__gap_pct"),
+        F.map_from_arrays(
+            F.array(*[F.lit(n) for n in xcols]),
+            F.array(*[(F.col(c) * F.lit(float(b))).alias(c) for c, b in zip(xcols, beta_fair)]),
+        ).alias("contributions"),
+        *xcols,
+    )
+    in_scope = (~F.col("__is_ref")) | F.lit(bool(adjust_both_groups or forensic_mode))
+    eligible = (
+        (F.col("__diff") > 1e-6)
+        & (F.col("__gap_pct") >= F.lit(float(min_gap_pct)))
+        & ((~F.col("__is_ref")) | F.lit(bool(adjust_both_groups)))
+    )
+    pot = scored.filter(in_scope).withColumn("__eligible", eligible)
+    if not forensic_mode:
+        pot = pot.filter(F.col("__eligible"))
+    return beta_fair, scored, pot
+
+
+def _greedy_scan(payable: DataFrame) -> DataFrame:
+    """``__cum_prev`` = the gaps paid before each row under greedy order
+    (largest gap first, row id breaking ties); ``._scan_total`` = the
+    budget that pays every row in full."""
+    return ordered_prev_cumsum(
+        payable, [F.col("__diff").desc(), F.col(ROW_ID).asc()], F.col("__diff"), "__cum_prev"
+    )
+
+
 def optimize(
     df: DataFrame,
     outcome: str,
@@ -315,169 +575,57 @@ def optimize(
     forensic_mode: bool = False,
     adjust_both_groups: bool = False,
     id_col: str | None = None,
-    gap_bootstrap_reps: int = 10,
 ) -> OptimizationResult:
-    """Remediation-budget optimizer (analysis.rs:309-869)."""
-    df = strict_numeric_cast(df, [outcome] + list(predictors))
-    if id_col:
-        df = df.withColumn(ROW_ID, F.col(id_col).cast("long"))
-    else:
-        df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
-    df = df.dropna(subset=[outcome, group] + list(predictors) + list(categorical_predictors or []))
-    df = df.cache()
+    """Remediation-budget optimizer (analysis.rs:309-869).
+
+    One strict cast, one stats pass and (greedy) one prefix scan; the
+    original gap, the target-group summary and the greedy required budget
+    are derived from those on the driver. The result owns the cached input
+    and the scan's checkpoint: call ``release()`` when done with it."""
+    prep = _prepare(df, outcome, group, reference_group, predictors, categorical_predictors, id_col)
+    scanned = None
+
+    def release_fn() -> None:
+        prep.df.unpersist()
+        if scanned is not None:
+            release(scanned)
+
     try:
-        # original gap via the library builder, pooled beta* (analysis.rs:349-363)
-        from ..builder import OaxacaBuilder
-
-        gap_builder = (
-            OaxacaBuilder(df, outcome, group, reference_group)
-            .predictors(predictors)
-            .reference_coefficients("pooled")
-            .bootstrap_reps(gap_bootstrap_reps)
-            .id_col(ROW_ID)
+        beta_fair, scored, pot = _score(
+            prep, outcome, group, reference_group,
+            target=target, range_target=range_target, confidence_level=confidence_level,
+            min_gap_pct=min_gap_pct, forensic_mode=forensic_mode,
+            adjust_both_groups=adjust_both_groups,
         )
-        if categorical_predictors:
-            gap_builder.categorical_predictors(categorical_predictors)
-        # r14 OPT (guide §5): the decomposition run behind original_gap is
-        # deferred to first access of .original_gap/.new_gap — nothing below
-        # consumes it, and the contract query path never reads it.
-        original_gap_fn = lambda: gap_builder.run().total_gap  # noqa: E731
-
-        design, xcols = _design(df, predictors, categorical_predictors)
-        is_ref = F.col(group) == F.lit(reference_group)
-        stats = collect_group_stats(
-            design.withColumn("__is_ref", is_ref), xcols, outcome, group="__is_ref"
-        )
-        if True not in stats or False not in stats:
-            raise OaxacaError("One group has no data")
-        stats_ref, stats_tgt = stats[True], stats[False]
-
-        # fair-wage model (analysis.rs:434-460)
-        if target == "pooled":
-            pooled = stats_ref.xtx + stats_tgt.xtx
-            pooled_xty = stats_ref.xty + stats_tgt.xty
-
-            class _P:
-                xtx = pooled
-                xty = pooled_xty
-
-            beta_fair = _lstsq_beta(_P)
-        else:
-            beta_fair = _lstsq_beta(stats_ref)
-        model_coefficients = [Contribution(n, float(b)) for n, b in zip(xcols, beta_fair)]
-
-        # sigma^2 from reference-group residuals (analysis.rs:477-490)
-        rss = float(stats_ref.yty - 2 * beta_fair @ stats_ref.xty + beta_fair @ stats_ref.xtx @ beta_fair)
-        dof = stats_ref.n - len(xcols)
-        sigma2 = rss / dof if dof > 0 else 0.0
-        try:
-            cov = np.linalg.inv(stats_ref.xtx)
-        except np.linalg.LinAlgError as e:
-            raise OaxacaError(
-                "Covariance matrix is singular, likely due to perfect multicollinearity."
-            ) from e
-
-        confidence = min(max(confidence_level, 0.50), 0.999)
-        z = norm_ppf_scalar(1.0 - (1.0 - confidence) / 2.0)
-
-        fair = _xb_expr(beta_fair, xcols)
-        if sigma2 <= 1e-9:
-            lower, upper = fair, fair
-        else:
-            se = F.sqrt(F.lit(sigma2) * (F.lit(1.0) + _leverage_expr(cov, xcols)))
-            lower = fair - F.lit(z) * se
-            upper = fair + F.lit(z) * se
-        target_wage = {"midpoint": fair, "lowerbound": lower, "upperbound": upper}[
-            range_target.replace("_", "").lower()
-        ]
-        diff = target_wage - F.col(outcome)
-        gap_pct = F.when(F.abs(F.col(outcome)) > 1e-6, diff / F.col(outcome)).otherwise(F.lit(0.0))
-
-        scored = design.select(
-            ROW_ID,
-            F.col(outcome).alias("__wage"),
-            is_ref.alias("__is_ref"),
-            fair.alias("fair_wage"),
-            lower.alias("fair_wage_lower_bound"),
-            upper.alias("fair_wage_upper_bound"),
-            diff.alias("__diff"),
-            gap_pct.alias("__gap_pct"),
-            F.map_from_arrays(
-                F.array(*[F.lit(n) for n in xcols]),
-                F.array(*[(F.col(c) * F.lit(float(b))).alias(c) for c, b in zip(xcols, beta_fair)]),
-            ).alias("contributions"),
-        )
-
-        in_scope = (~F.col("__is_ref")) | F.lit(bool(adjust_both_groups or forensic_mode))
-        eligible = (
-            (F.col("__diff") > 1e-6)
-            & (F.col("__gap_pct") >= F.lit(float(min_gap_pct)))
-            & ((~F.col("__is_ref")) | F.lit(bool(adjust_both_groups)))
-        )
-        pot = scored.filter(in_scope).withColumn("__eligible", eligible)
-        if not forensic_mode:
-            pot = pot.filter(F.col("__eligible"))
-        pot = pot.cache()
-
-        # r14 OPT (guide §5): the required-budget aggregate is only needed
-        # eagerly when its value is baked into the allocation plan (equitable
-        # coverage, or greedy with no explicit budget); a greedy run with an
-        # explicit budget defers it to first access of .required_budget.
-        need_memo: dict[str, float] = {}
-
-        def required_budget_fn() -> float:
-            if "v" not in need_memo:
-                row = pot.filter(F.col("__eligible") & (F.col("__diff") > 0)).agg(
-                    F.sum("__diff").alias("need")
-                ).collect()[0]
-                need_memo["v"] = float(row["need"] or 0.0)
-            return need_memo["v"]
-
-        if strategy.lower() == "equitable" or budget <= 0.0:
-            total_need = required_budget_fn()
-        else:
-            total_need = None
-        effective_budget = budget if budget > 0.0 else total_need * 1.00001
+        model_coefficients = [Contribution(n, float(b)) for n, b in zip(prep.xcols, beta_fair)]
+        keep = [ROW_ID, "__wage", "fair_wage", "fair_wage_lower_bound",
+                "fair_wage_upper_bound", "__diff", "contributions"]
 
         if strategy.lower() == "equitable":
+            total_need = float(
+                pot.filter(_payable()).agg(F.sum("__diff")).collect()[0][0] or 0.0
+            )
+            effective_budget = budget if budget > 0.0 else total_need * 1.00001
             coverage = min(effective_budget / total_need, 1.0) if total_need > 0 else 0.0
             alloc = pot.withColumn(
                 "adjustment",
-                F.when(
-                    F.col("__eligible") & (F.col("__diff") > 0), F.col("__diff") * F.lit(coverage)
-                ).otherwise(F.lit(0.0)),
-            )
+                F.when(_payable(), F.col("__diff") * F.lit(coverage)).otherwise(F.lit(0.0)),
+            ).select(*keep, "adjustment")
         else:
-            paid = pot.filter(F.col("__eligible") & (F.col("__diff") > 0))
-            paid = ordered_prev_cumsum(
-                paid,
-                [F.col("__diff").desc(), F.col(ROW_ID).asc()],
-                F.col("__diff"),
-                "__cum_prev",
-            ).withColumn(
+            scanned = _greedy_scan(pot.filter(_payable()).select(*keep))
+            total_need = scanned._scan_total
+            effective_budget = budget if budget > 0.0 else total_need * 1.00001
+            paid = scanned.withColumn(
                 "adjustment",
                 F.least(
                     F.col("__diff"),
                     F.greatest(F.lit(effective_budget) - F.col("__cum_prev"), F.lit(0.0)),
                 ),
             ).drop("__cum_prev")
-            rest = pot.filter(~(F.col("__eligible") & (F.col("__diff") > 0))).withColumn(
-                "adjustment", F.lit(0.0)
-            )
+            rest = pot.filter(~_payable()).select(*keep).withColumn("adjustment", F.lit(0.0))
             alloc = paid.unionByName(rest)
 
         alloc = alloc.withColumn("new_wage", F.col("__wage") + F.col("adjustment"))
-        alloc = alloc.cache()
-
-        def total_cost_fn() -> float:
-            return float(alloc.agg(F.sum("adjustment")).collect()[0][0] or 0.0)
-
-        def target_stats_fn() -> tuple[float, float]:
-            mrow = scored.filter(~F.col("__is_ref")).agg(
-                F.count(F.lit(1)).alias("n_t"), F.sum("__diff").alias("net")
-            ).collect()[0]
-            return float(mrow["n_t"] or 0), float(mrow["net"] or 0.0)
-
         adjustments_df = alloc.select(
             F.col(ROW_ID).alias("index"),
             "adjustment",
@@ -488,37 +636,53 @@ def optimize(
             "fair_wage_upper_bound",
             "contributions",
         )
+    except BaseException:
+        release_fn()
+        raise
 
-        def adjustments_fn() -> list[Adjustment]:
-            out: list[Adjustment] = []
-            n_adj = adjustments_df.count()
-            if n_adj <= COLLECT_LIMIT:
-                for r in adjustments_df.orderBy("index").collect():
-                    out.append(
-                        Adjustment(
-                            index=int(r["index"]),
-                            adjustment=float(r["adjustment"]),
-                            current_wage=float(r["current_wage"]),
-                            new_wage=float(r["new_wage"]),
-                            fair_wage=float(r["fair_wage"]),
-                            fair_wage_lower_bound=float(r["fair_wage_lower_bound"]),
-                            fair_wage_upper_bound=float(r["fair_wage_upper_bound"]),
-                            contributions=[Contribution(n, float(v)) for n, v in r["contributions"].items()],
-                        )
-                    )
-            return out
+    def target_stats_fn() -> tuple[float, float]:
+        tgt = prep.stats_tgt
+        if range_target.replace("_", "").lower() == "midpoint":
+            # sum over target rows of (x'beta - y): linear, so from the stats
+            return float(tgt.n), float(beta_fair @ tgt.xsum - tgt.ysum)
+        row = scored.filter(~F.col("__is_ref")).agg(F.sum("__diff")).collect()[0]
+        return float(tgt.n), float(row[0] or 0.0)
 
-        return OptimizationResult(
-            required_budget_fn=required_budget_fn,
-            total_cost_fn=total_cost_fn,
-            original_gap_fn=original_gap_fn,
-            target_stats_fn=target_stats_fn,
-            adjustments_fn=adjustments_fn,
-            model_coefficients=model_coefficients,
-            adjustments_df=adjustments_df,
+    def adjustments_fn() -> list[Adjustment]:
+        # the stats pass bounds the row count; count only past the limit
+        n_scope = prep.stats_tgt.n + (
+            prep.stats_ref.n if (adjust_both_groups or forensic_mode) else 0
         )
-    finally:
-        df.unpersist()
+        if n_scope > COLLECT_LIMIT and adjustments_df.count() > COLLECT_LIMIT:
+            return []
+        return [
+            Adjustment(
+                index=int(r["index"]),
+                adjustment=float(r["adjustment"]),
+                current_wage=float(r["current_wage"]),
+                new_wage=float(r["new_wage"]),
+                fair_wage=float(r["fair_wage"]),
+                fair_wage_lower_bound=float(r["fair_wage_lower_bound"]),
+                fair_wage_upper_bound=float(r["fair_wage_upper_bound"]),
+                contributions=[Contribution(n, float(v)) for n, v in r["contributions"].items()],
+            )
+            for r in sorted(adjustments_df.collect(), key=lambda r: r["index"])
+        ]
+
+    return OptimizationResult(
+        required_budget_fn=lambda: total_need,
+        # both strategies spend min(budget, need): greedy pays in gap order
+        # until the budget runs out, equitable pays need x min(budget/need, 1)
+        total_cost_fn=lambda: min(effective_budget, total_need),
+        original_gap_fn=lambda: _original_gap(
+            prep, outcome, group, reference_group, predictors, categorical_predictors
+        ),
+        target_stats_fn=target_stats_fn,
+        adjustments_fn=adjustments_fn,
+        model_coefficients=model_coefficients,
+        adjustments_df=adjustments_df,
+        release_fn=release_fn,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -537,26 +701,15 @@ def verify_adjustments(
     id_col: str | None = None,
 ) -> DecompositionResult:
     """analysis.rs:40-96: apply wage deltas at row ids, re-run decomposition."""
-    df = strict_numeric_cast(df, [outcome] + list(predictors))
-    if id_col:
-        df = df.withColumn(ROW_ID, F.col(id_col).cast("long"))
-    else:
-        df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
-    spark = df.sparkSession
-    if isinstance(adjustments, DataFrame):
-        adj_df = adjustments.select(
-            F.col("index").cast("long").alias(ROW_ID), F.col("adjustment").alias("__delta")
-        )
-    else:
-        adj_df = spark.createDataFrame(
-            [(int(i), float(v)) for i, v in adjustments], f"{ROW_ID} long, __delta double"
-        )
-    mutated = df.join(F.broadcast(adj_df), on=ROW_ID, how="left").withColumn(
+    df = _with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col)
+    mutated = df.join(
+        F.broadcast(_adjustment_table(df, adjustments)), on=ROW_ID, how="left"
+    ).withColumn(
         outcome, F.col(outcome) + F.coalesce(F.col("__delta"), F.lit(0.0))
     ).drop("__delta")
-    return run_decomposition(
+    return _decompose(
         mutated, outcome, group, reference_group, predictors, categorical_predictors,
-        bootstrap_reps=bootstrap_reps,
+        bootstrap_reps,
     )
 
 
@@ -578,83 +731,79 @@ def efficient_frontier(
 ) -> list[FrontierPoint]:
     """analysis.rs:871-1153: t-stat of the group dummy as budget grows.
 
-    Spark computes the pooled Gram state ONCE; the per-step updates touch
-    only the payment schedule (X'y += x_i * dy_i, y'y += 2 y_i dy_i + dy_i^2),
-    so the sweep is O(steps * schedule) driver work with zero extra jobs.
+    Reuses ``optimize``'s work rather than repeating it: one strict cast,
+    one stats pass per group level and one greedy prefix scan, all on the
+    null-dropped rows the optimizer pays. The pooled Gram state with the
+    group dummy at position 1 is assembled on the driver from the
+    per-group stats (``linalg.pooled_stats``). At the auto budget
+    (1.00001 x need) every scheduled row is paid its full gap, so the
+    payment schedule is the scan itself: gap = ``__diff``, running total =
+    ``__cum_prev``. One aggregation over schedule x steps then yields every
+    step's X'y / y'y delta; the t-statistics are k x k driver work.
     """
-    opt = optimize(
-        df, outcome, group, reference_group, predictors, categorical_predictors,
-        budget=0.0, strategy="greedy", target="reference", id_col=id_col,
-    )
-    total_need = opt.required_budget
-    mb = max_budget if max_budget is not None else total_need * 1.1
-    safe_max = mb if mb >= 1e-9 else 1000.0
-    step_size = safe_max / steps
-
-    dfc = strict_numeric_cast(df, [outcome] + list(predictors))
-    if id_col:
-        dfc = dfc.withColumn(ROW_ID, F.col(id_col).cast("long"))
-    else:
-        dfc = dfc.withColumn(ROW_ID, F.monotonically_increasing_id())
-    design, xcols_raw = _design(dfc, predictors, categorical_predictors)
-    # pooled design [intercept, group_dummy(=1 for non-reference), features...]
-    design = design.withColumn("__gd", (F.col(group) != F.lit(reference_group)).cast("double"))
-    xcols = [INTERCEPT, "__gd"] + [c for c in xcols_raw if c != INTERCEPT]
-    stats = collect_group_stats(design, xcols, outcome)
+    prep = _prepare(df, outcome, group, reference_group, predictors, categorical_predictors, id_col)
+    scanned = None
     try:
-        xtx_inv = np.linalg.inv(stats.xtx)
-    except np.linalg.LinAlgError as e:
-        raise OaxacaError("Singular matrix in Pooled OLS") from e
+        _, _, pot = _score(
+            prep, outcome, group, reference_group,
+            target="reference", range_target="midpoint", confidence_level=0.95,
+            min_gap_pct=0.0, forensic_mode=False, adjust_both_groups=False,
+        )
+        # pooled design [intercept, group_dummy(=1 for non-reference), features...]
+        pooled = pooled_stats(prep.stats_tgt, prep.stats_ref, "__gd", indicator_pos=1)
+        try:
+            xtx_inv = np.linalg.inv(pooled.xtx)
+        except np.linalg.LinAlgError as e:
+            raise OaxacaError("Singular matrix in Pooled OLS") from e
+        xcols = pooled.names
+        dof = pooled.n - len(xcols)
 
-    xty = stats.xty.copy()
-    yty = stats.yty
-    n_pooled = stats.n
-    dof = n_pooled - len(xcols)
-
-    # Distributed budget sweep. Under greedy allocation the amount paid to a
-    # row at budget b is closed-form: paid_i(b) = clip(b - cum_prev_i, 0,
-    # gap_i) with cum_prev the prefix sum of gaps in desc-gap order (the same
-    # window trick as allocate_budget). Payments at budget b are totals from
-    # the baseline, so each step's sufficient-stat deltas against the
-    # baseline Gram state are plain sums:
-    #   X'y(b) = X'y + sum_i x_i paid_i(b)
-    #   y'y(b) = y'y + sum_i (2 y_i paid_i(b) + paid_i(b)^2)
-    # One crossJoin with the (steps)-row budget table + one groupBy therefore
-    # yields every step's deltas in a single job — nothing scaling with the
-    # schedule ever reaches the driver (vs analysis.rs:1107-1150's per-step
-    # sequential payment loop).
-    sched = design.join(
-        F.broadcast(
-            opt.adjustments_df.filter(F.col("adjustment") > 0).select(
-                F.col("index").alias(ROW_ID), F.col("adjustment").alias("__gap")
+        scanned = _greedy_scan(
+            pot.filter(_payable()).select(
+                ROW_ID, "__diff", "__wage",
+                *[(~F.col("__is_ref")).cast("double").alias(c) if c == "__gd" else F.col(c)
+                  for c in xcols],
             )
-        ),
-        on=ROW_ID,
-    ).select(ROW_ID, "__gap", F.col(outcome).alias("__y"), *xcols)
-    sched = ordered_prev_cumsum(
-        sched, [F.col("__gap").desc(), F.col(ROW_ID).asc()], F.col("__gap"), "__cum_prev"
-    )
+        )
+        total_need = scanned._scan_total
+        mb = max_budget if max_budget is not None else total_need * 1.1
+        safe_max = mb if mb >= 1e-9 else 1000.0
+        step_size = safe_max / steps
 
-    spark = design.sparkSession
-    steps_df = F.broadcast(
-        spark.createDataFrame(
-            [(t, t * step_size) for t in range(1, steps + 1)], "__step long, __budget double"
+        # Under greedy allocation the amount paid to a row at budget b is
+        # closed-form: paid_i(b) = clip(b - cum_prev_i, 0, gap_i). Payments
+        # at budget b are totals from the baseline, so each step's deltas
+        # against the baseline Gram state are plain sums:
+        #   X'y(b) = X'y + sum_i x_i paid_i(b)
+        #   y'y(b) = y'y + sum_i (2 y_i paid_i(b) + paid_i(b)^2)
+        # One crossJoin with the (steps)-row budget table + one groupBy yields
+        # every step's deltas in a single job — nothing scaling with the
+        # schedule reaches the driver (vs analysis.rs:1107-1150's per-step
+        # sequential payment loop).
+        steps_df = local_table(prep.df.sparkSession, {
+            "__step": ("long", list(range(1, steps + 1))),
+            "__budget": ("double", [t * step_size for t in range(1, steps + 1)]),
+        })
+        paid = F.greatest(
+            F.lit(0.0), F.least(F.col("__diff"), F.col("__budget") - F.col("__cum_prev"))
         )
-    )
-    paid = F.greatest(F.lit(0.0), F.least(F.col("__gap"), F.col("__budget") - F.col("__cum_prev")))
-    per_step = (
-        sched.crossJoin(steps_df)
-        .withColumn("__paid", paid)
-        .filter(F.col("__paid") > 0)
-        .groupBy("__step")
-        .agg(
-            *[F.sum(F.col(c) * F.col("__paid")).alias(f"__dxy_{j}") for j, c in enumerate(xcols)],
-            F.sum(
-                F.lit(2.0) * F.col("__y") * F.col("__paid") + F.col("__paid") * F.col("__paid")
-            ).alias("__dyty"),
+        per_step = (
+            scanned.crossJoin(F.broadcast(steps_df))
+            .withColumn("__paid", paid)
+            .filter(F.col("__paid") > 0)
+            .groupBy("__step")
+            .agg(
+                *[F.sum(F.col(c) * F.col("__paid")).alias(f"__dxy_{j}") for j, c in enumerate(xcols)],
+                F.sum(
+                    F.lit(2.0) * F.col("__wage") * F.col("__paid") + F.col("__paid") * F.col("__paid")
+                ).alias("__dyty"),
+            )
+            .collect()
         )
-        .collect()
-    )
+    finally:
+        prep.df.unpersist()
+        if scanned is not None:
+            release(scanned)
     deltas = {
         int(r["__step"]): (
             np.array([float(r[f"__dxy_{j}"] or 0.0) for j in range(len(xcols))]),
@@ -663,9 +812,9 @@ def efficient_frontier(
         for r in per_step
     }
 
-    def t_stat(xty_t: np.ndarray, yty_t: float) -> FrontierPoint:
+    def t_stat(xty_t: np.ndarray, yty_t: float):
         beta = xtx_inv @ xty_t
-        rss = max(yty_t - 2 * beta @ xty_t + beta @ stats.xtx @ beta, 0.0)
+        rss = max(yty_t - 2 * beta @ xty_t + beta @ pooled.xtx @ beta, 0.0)
         if dof <= 0:
             return (0.0, 1.0, False)
         sigma2 = rss / dof
@@ -674,14 +823,11 @@ def efficient_frontier(
         p = 2.0 * norm_cdf_scalar(-abs(t))
         return t, p, p < 0.05
 
-    points = []
-    t, p, s = t_stat(xty, yty)
-    points.append(FrontierPoint(0.0, t, p, s))
+    points = [FrontierPoint(0.0, *t_stat(pooled.xty, pooled.yty))]
     zero_k = np.zeros(len(xcols))
     for step in range(1, steps + 1):
         dxy, dyty = deltas.get(step, (zero_k, 0.0))
-        t, p, s = t_stat(xty + dxy, yty + dyty)
-        points.append(FrontierPoint(step * step_size, t, p, s))
+        points.append(FrontierPoint(step * step_size, *t_stat(pooled.xty + dxy, pooled.yty + dyty)))
     return points
 
 
@@ -704,19 +850,15 @@ def check_defensibility(
     """defensibility.rs:9-388: adjustment defensible iff
     new_wage >= fair-wage 95% lower bound - 1.0 (reference-group SVD fit),
     with per-row predictor overrides applied before prediction."""
-    dfc = strict_numeric_cast(df, [outcome] + list(predictors))
-    if id_col:
-        dfc = dfc.withColumn(ROW_ID, F.col(id_col).cast("long"))
-    else:
-        dfc = dfc.withColumn(ROW_ID, F.monotonically_increasing_id())
-    spark = dfc.sparkSession
+    dfc = _with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col)
 
     if overrides:
-        ov_rows = []
-        for rid, omap in overrides.items():
-            ov_rows.append(tuple([int(rid)] + [float(omap.get(p, math.nan)) for p in predictors]))
-        schema = ", ".join([f"{ROW_ID} long"] + [f"__ov_{p} double" for p in predictors])
-        ov_df = spark.createDataFrame(ov_rows, schema)
+        # NaN marks a predictor the row does not override
+        ov_df = local_table(dfc.sparkSession, {
+            ROW_ID: ("long", [int(rid) for rid in overrides]),
+            **{f"__ov_{p}": ("double", [float(o.get(p, math.nan)) for o in overrides.values()])
+               for p in predictors},
+        })
         dfc = dfc.join(F.broadcast(ov_df), on=ROW_ID, how="left")
         for p in predictors:
             dfc = dfc.withColumn(
@@ -727,7 +869,7 @@ def check_defensibility(
     design, xcols = _design(dfc, predictors, categorical_predictors)
     is_ref = F.col(group) == F.lit(reference_group)
     stats_ref = collect_group_stats(design.filter(is_ref), xcols, outcome)
-    beta_fair = _lstsq_beta(stats_ref)
+    beta_fair = _lstsq_beta(stats_ref.xtx, stats_ref.xty)
     rss = float(stats_ref.yty - 2 * beta_fair @ stats_ref.xty + beta_fair @ stats_ref.xtx @ beta_fair)
     dof = stats_ref.n - len(xcols)
     sigma2 = rss / dof if dof > 0 else 0.0
@@ -737,22 +879,13 @@ def check_defensibility(
         raise OaxacaError("Covariance matrix is singular") from e
     z = norm_ppf_scalar(0.975)
 
-    if isinstance(adjustments, DataFrame):
-        adj_df = adjustments.select(
-            F.col("index").cast("long").alias(ROW_ID), F.col("adjustment").alias("__delta")
-        )
-    else:
-        adj_df = spark.createDataFrame(
-            [(int(i), float(v)) for i, v in adjustments], f"{ROW_ID} long, __delta double"
-        )
-
     fair = _xb_expr(beta_fair, xcols)
     if sigma2 <= 1e-9:
         lower = fair
     else:
         lower = fair - F.lit(z) * F.sqrt(F.lit(sigma2) * (F.lit(1.0) + _leverage_expr(cov, xcols)))
 
-    out = design.join(F.broadcast(adj_df), on=ROW_ID, how="inner").select(
+    out = design.join(F.broadcast(_adjustment_table(dfc, adjustments)), on=ROW_ID, how="inner").select(
         F.col(ROW_ID).alias("index"),
         F.col("__delta").alias("adjustment"),
         F.col(outcome).alias("current_wage"),

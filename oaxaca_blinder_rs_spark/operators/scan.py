@@ -10,7 +10,8 @@ that scan is expressed here once, parallel at any size:
    partition p+1's; ties never span a boundary),
 2. one tiny aggregation of per-partition sums -> exclusive offsets on the
    driver (numPartitions rows),
-3. broadcast the offsets back and finish with a partition-LOCAL window.
+3. index the offsets as a literal array by partition id and finish with a
+   partition-LOCAL window.
 
 The ranged frame is persisted across the two jobs (range bounds are sampled
 per physical plan, so both must read one materialization) and the result is
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "ordered_prev_cumsum",
+    "release",
     "grouped_prev_cumsum",
     "grouped_prev_cumsum_multi",
     "grouped_dense_rank",
@@ -45,7 +47,8 @@ def ordered_prev_cumsum(
     Row r gets sum(value) over all rows strictly before r in ``order``
     (ties resolved by the caller's tiebreaker columns, exactly as a global
     ``rowsBetween(unboundedPreceding, -1)`` window would) — without ever
-    collapsing the data to one partition.
+    collapsing the data to one partition. The grand total of ``value`` is
+    attached as ``._scan_total``; ``release`` drops the checkpoint.
     """
     spark = df.sparkSession
     nparts = max(spark.sparkContext.defaultParallelism, 1)
@@ -59,34 +62,42 @@ def ordered_prev_cumsum(
         .persist()
     )
     try:
-        sums = (
-            ranged.groupBy("__scan_pid")
-            .agg(F.sum("__scan_v").alias("__s"))
-            .orderBy("__scan_pid")
-            .collect()
+        # <= nparts rows: ordered on the driver and indexed by partition id
+        # as a literal array, so the offsets cost no sort job and no table
+        sums = dict(
+            ranged.groupBy("__scan_pid").agg(F.sum("__scan_v").alias("__s")).collect()
         )
+        if not sums:
+            out = df.withColumn(out_col, F.lit(0.0))
+            out._scan_total = 0.0
+            return out
         offsets, running = [], 0.0
-        for r in sums:
-            offsets.append((int(r["__scan_pid"]), running))
-            running += float(r["__s"] or 0.0)
-        if not offsets:
-            return df.withColumn(out_col, F.lit(0.0))
-        off_df = spark.createDataFrame(offsets, "__scan_pid int, __scan_off double")
+        for pid in range(max(nparts, max(sums) + 1)):
+            offsets.append(running)
+            running += float(sums.get(pid) or 0.0)
         w = (
             Window.partitionBy("__scan_pid")
             .orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        result = (
-            ranged.join(F.broadcast(off_df), "__scan_pid")
-            .withColumn(
-                out_col, F.col("__scan_off") + F.coalesce(F.sum("__scan_v").over(w), F.lit(0.0))
-            )
-            .drop("__scan_pid", "__scan_off", "__scan_v")
-        )
-        return _checkpoint_with_plan(result)
+        offset = F.element_at(F.array(*[F.lit(o) for o in offsets]), F.col("__scan_pid") + 1)
+        result = ranged.withColumn(
+            out_col, offset + F.coalesce(F.sum("__scan_v").over(w), F.lit(0.0))
+        ).drop("__scan_pid", "__scan_v")
+        out = _checkpoint_with_plan(result)
+        out._scan_total = running
+        return out
     finally:
         ranged.unpersist()
+
+
+def release(scanned: DataFrame) -> None:
+    """Drop the blocks a scan result's local checkpoint pins. The frame (and
+    anything derived from it) must not be read afterwards. A result that was
+    never checkpointed (empty input) pins nothing."""
+    plan = scanned._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def _checkpoint_with_plan(result: DataFrame) -> DataFrame:

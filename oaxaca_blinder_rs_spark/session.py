@@ -8,6 +8,7 @@ an externally-built SparkSession/DataFrame too.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import SparkSession
@@ -49,24 +50,39 @@ def _ship_package(spark: SparkSession) -> None:
     the repo root or the package is pip-installed. Shipping a zip via
     ``addPyFile`` covers every other launch directory and is exactly what a
     real cluster deployment would do (spark-submit --py-files).
+
+    The zip's name carries a hash of the package sources, so a zip left in
+    ``$SPARK_GRAFT_TMP`` by another version of the tree is never reused.
     """
     try:
         import oaxaca_blinder_rs_spark  # noqa: PLW0406
 
         pkg_dir = os.path.dirname(os.path.abspath(oaxaca_blinder_rs_spark.__file__))
+        sources = []
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    sources.append((os.path.relpath(full, os.path.dirname(pkg_dir)), full))
+        sources.sort()
+        digest = hashlib.sha256()
+        for rel, full in sources:
+            with open(full, "rb") as fh:
+                digest.update(rel.encode() + b"\0" + fh.read() + b"\0")
         zip_path = os.path.join(
-            os.environ.get("SPARK_GRAFT_TMP", "/tmp"), "oaxaca_blinder_rs_spark_pkg.zip"
+            os.environ.get("SPARK_GRAFT_TMP", "/tmp"),
+            f"oaxaca_blinder_rs_spark_pkg-{digest.hexdigest()[:16]}.zip",
         )
         if not os.path.exists(zip_path):
             import zipfile
 
-            with zipfile.ZipFile(zip_path, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for f in files:
-                        if f.endswith(".py"):
-                            full = os.path.join(root, f)
-                            rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                            zf.write(full, rel)
+            # written aside and renamed, so a concurrent launch never reads
+            # a half-written zip
+            tmp_path = f"{zip_path}.{os.getpid()}.tmp"
+            with zipfile.ZipFile(tmp_path, "w") as zf:
+                for rel, full in sources:
+                    zf.write(full, rel)
+            os.replace(tmp_path, zip_path)
         spark.sparkContext.addPyFile(zip_path)
     except Exception:
         pass  # best effort: repo-root / installed launches never need it

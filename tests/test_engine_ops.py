@@ -137,6 +137,109 @@ def test_strict_cast_error(spark):
         eo.run_decomposition(df, "wage", "gender", "M", ["education"], bootstrap_reps=0)
 
 
+def test_strict_cast_rejects_infinity(spark):
+    """+-Infinity (as text or as a double) is refused by name, in the cast
+    check's one aggregate, instead of surfacing later as a NaN estimate."""
+    rows = [(1, "50000", "16", "M"), (2, "41000", "inf", "F"), (3, "52000", "18", "M"), (4, "43000", "12", "F")]
+    df = spark.createDataFrame(rows, "rid long, wage string, education string, gender string")
+    with pytest.raises(NonNumericData, match="'education' contains infinite values"):
+        eo.run_decomposition(df, "wage", "gender", "M", ["education"], bootstrap_reps=0)
+    rows = [(1, 50000.0, 16.0, "M"), (2, 41000.0, 12.0, "F"), (3, -math.inf, 18.0, "M"), (4, 43000.0, 12.0, "F")]
+    df = spark.createDataFrame(rows, "rid long, wage double, education double, gender string")
+    with pytest.raises(NonNumericData, match="'wage' contains infinite values"):
+        eo.optimize(df, "wage", "gender", "M", ["education"], id_col="rid")
+
+
+PREDS = ["education", "experience"]
+
+
+def _company(spark, levels, n=240, seed=5):
+    """Random wages with a per-level shift; ids shuffled against row order."""
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    g = rng.choice(levels, n)
+    edu = np.round(rng.normal(16, 2, n), 1)
+    exp = np.round(rng.uniform(0, 20, n), 1)
+    shift = np.array([3000.0 * levels.index(x) for x in g])
+    wage = 20000 + 1500 * edu + 800 * exp + shift + rng.normal(0, 4000, n)
+    pdf = pd.DataFrame(
+        {"rid": rng.permutation(n), "wage": wage, "education": edu, "experience": exp, "g": g}
+    )
+    return pdf, spark.createDataFrame(pdf)
+
+
+def _np_schedule(pdf, ref):
+    """Driver-side reference: fair wage from the reference rows' least
+    squares, and the greedy order (largest gap first, id breaking ties) of
+    the underpaid target rows with each row's preceding running total."""
+    X = np.column_stack([np.ones(len(pdf))] + [pdf[p].to_numpy(float) for p in PREDS])
+    y = pdf["wage"].to_numpy(float)
+    is_ref = (pdf["g"] == ref).to_numpy()
+    beta = np.linalg.pinv(X[is_ref].T @ X[is_ref]) @ (X[is_ref].T @ y[is_ref])
+    diff = X @ beta - y
+    ids = pdf["rid"].to_numpy()
+    order = sorted(np.flatnonzero(~is_ref & (diff > 1e-6)), key=lambda i: (-diff[i], ids[i]))
+    cum_prev = np.concatenate([[0.0], np.cumsum(diff[order])[:-1]])
+    return X, y, is_ref, diff, ids, np.array(order, dtype=int), cum_prev
+
+
+LEVELS = [(["F", "M"], "M"), (["A", "B", "C"], "B")]
+
+
+@pytest.mark.parametrize("levels,ref", LEVELS)
+@pytest.mark.parametrize("share", [None, 0.4])
+def test_remediation_matches_sequential_greedy(spark, levels, ref, share):
+    """(index, adjustment) equals a sequential greedy replay on the driver,
+    and original_gap equals the library decomposition's total gap — with
+    three levels too, where the builder's A is the first sorted non-reference
+    level while the remediation targets every non-reference row."""
+    from oaxaca_blinder_rs_spark.builder import OaxacaBuilder
+
+    pdf, df = _company(spark, levels)
+    full = eo.optimize(df, "wage", "g", ref, PREDS, id_col="rid")
+    budget = 0.0 if share is None else share * full.required_budget
+    res = full if share is None else eo.optimize(df, "wage", "g", ref, PREDS, budget=budget, id_col="rid")
+    try:
+        _, _, _, diff, ids, order, _ = _np_schedule(pdf, ref)
+        left = budget if budget > 0 else full.required_budget * 1.00001
+        want = {}
+        for i in order:
+            want[int(ids[i])] = min(diff[i], max(left, 0.0))
+            left -= want[int(ids[i])]
+        got = [(a.index, a.adjustment) for a in res.adjustments]
+        assert [i for i, _ in got] == sorted(want)
+        for i, v in got:
+            assert v == pytest.approx(want[i], rel=1e-9, abs=1e-6), i
+        assert res.total_cost == pytest.approx(sum(v for _, v in got), rel=1e-9)
+        gap = (
+            OaxacaBuilder(df, "wage", "g", ref).predictors(PREDS)
+            .reference_coefficients("pooled").bootstrap_reps(0).run().total_gap
+        )
+        assert res.original_gap == pytest.approx(gap, rel=1e-12)
+    finally:
+        res.release()
+        full.release()
+
+
+@pytest.mark.parametrize("levels,ref", LEVELS)
+def test_frontier_matches_numpy_pooled_ols(spark, levels, ref):
+    """Every step's t-statistic equals a NumPy pooled OLS of y + paid_i(b)
+    on [1, group dummy, X], paid_i(b) = clip(b - cum_prev_i, 0, gap_i)."""
+    pdf, df = _company(spark, levels, seed=9)
+    pts = eo.efficient_frontier(df, "wage", "g", ref, PREDS, steps=8, id_col="rid")
+    X, y, is_ref, diff, _, order, cum_prev = _np_schedule(pdf, ref)
+    Xp = np.column_stack([X[:, :1], (~is_ref).astype(float), X[:, 1:]])
+    inv = np.linalg.inv(Xp.T @ Xp)
+    for p in pts:
+        yb = y.copy()
+        yb[order] += np.clip(p.budget - cum_prev, 0.0, diff[order])
+        beta = inv @ (Xp.T @ yb)
+        resid = yb - Xp @ beta
+        se = math.sqrt(resid @ resid / (len(yb) - Xp.shape[1]) * inv[1, 1])
+        assert p.t_statistic == pytest.approx(beta[1] / se, rel=1e-9), p.budget
+
+
 def test_defensibility(spark):
     df = mock_df(spark)
     opt = eo.optimize(df, "wage", "gender", "M", ["education", "experience"], id_col="rid")

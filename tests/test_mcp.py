@@ -104,6 +104,81 @@ def test_tool_error_is_not_protocol_error(spark):
     assert "missing_col" in resp["result"]["content"][0]["text"]
 
 
+def test_infinite_value_is_tool_error(spark):
+    """An infinite predictor is refused by name (NonNumericData), not
+    decomposed into a NaN estimate."""
+    server = McpServer(spark)
+    csv = CSV.replace("14.0,F", "inf,F", 1)
+    for tool in ("forensic_decomposition", "simulate_remediation"):
+        req = {
+            "jsonrpc": "2.0", "id": 10, "method": "tools/call",
+            "params": {"name": tool, "arguments": {**BASE_ARGS, "csv_content": csv, "budget": 0.0}},
+        }
+        res = server.handle(req)["result"]
+        assert res["isError"] is True
+        assert "'education' contains infinite values" in res["content"][0]["text"]
+
+
+def _review(server, call=_call):
+    """One pay-equity review through all five tools, in client order."""
+    call(server, "forensic_decomposition", {"bootstrap_reps": 5})
+    opt = call(server, "simulate_remediation", {"budget": 0.0, "reference_group": "M"})
+    call(server, "generate_efficient_frontier", {"steps": 5, "reference_group": "M"})
+    adj = [{"index": a["index"], "value": a["adjustment"]} for a in opt["adjustments"] if a["adjustment"] > 0]
+    call(server, "verify_adjustments", {"adjustments": adj, "reference_group": "M"})
+    adj[0]["predictor_overrides"] = {"education": 18.0}
+    call(server, "check_defensibility", {"adjustments": adj, "reference_group": "M"})
+
+
+# Spark jobs per tool on CSV (local[4], 8 shuffle partitions), counted by
+# job group. Before the decision layer shared one cast, one stats pass and
+# one prefix scan per request, the same calls ran 8 / 32 / 36 / 14 / 8.
+TOOL_JOB_CEILINGS = {
+    "forensic_decomposition": 8,
+    "simulate_remediation": 13,
+    "generate_efficient_frontier": 15,
+    "verify_adjustments": 11,
+    "check_defensibility": 8,
+}
+
+
+def test_tool_job_counts(spark):
+    sc = spark.sparkContext
+    server = McpServer(spark)
+    jobs = {}
+
+    def counting(server, name, extra):
+        group = f"test-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            out = _call(server, name, extra)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        return out
+
+    _review(server, counting)
+    assert all(jobs[t] <= TOOL_JOB_CEILINGS[t] for t in TOOL_JOB_CEILINGS), jobs
+
+
+def test_reviews_release_pinned_blocks(spark):
+    """A long-lived server holds no cached or checkpointed blocks between
+    calls: no call of five reviews leaves a persistent RDD behind. Compared
+    by id after every call, because the context cleaner may meanwhile drop
+    blocks that earlier tests left."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    def checked(server, name, extra):
+        out = _call(server, name, extra)
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set(), name
+        return out
+
+    server = McpServer(spark)
+    for _ in range(5):
+        _review(server, checked)
+
+
 # ---------------------------------------------------------------------------
 # HTTP/SSE transport (meridian-mcp/src/main.rs:254-520 semantics)
 # ---------------------------------------------------------------------------
