@@ -591,26 +591,6 @@ def q_adaptive_logprob_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return textops.adaptive_logprob_filter(docs, frac=0.5, by_col="lang")
 
 
-def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view -> click -> purchase funnel over events: per-user
-    strictly-increasing earliest timestamp chain, one type-filtered
-    per-user min-agg per step (operators/funnel.py — no windows over the
-    full stream, no per-user history collection)."""
-    from oaxaca_blinder_rs_spark.operators.funnel import funnel
-
-    ev = _t(spark, sf_dir, "events")
-    return funnel(ev, ["view", "click", "purchase"])
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily cohort retention matrix over events: first-activity-day
-    cohorts x day offsets -> active user counts (operators/funnel.py)."""
-    from oaxaca_blinder_rs_spark.operators.funnel import cohort_retention
-
-    ev = _t(spark, sf_dir, "events")
-    return cohort_retention(ev)
-
-
 def q_script_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unicode-script composition + dominant-script ID over the
     multilingual-augmented corpus (textops.script_ratios / script_id):
@@ -1266,94 +1246,6 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_dedup(docs, block_tokens=8, min_df=2)
 
 
-def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact 5-iteration weighted PageRank (graph.pagerank) on the
-    customer<->supplier co-purchase graph (edges both directions, weight =
-    lineitem count). Ranks are int64 mass units summing to ~1e12; every
-    iteration is a keyed join + keyed sum in int64, so the result is
-    bit-identical across partitionings AND to the oracle's unrolled CTE
-    replay — no float summation-order hazard. Suppliers serving many
-    customers surface at the top."""
-    from oaxaca_blinder_rs_spark.operators.graph import pagerank
-
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("c"),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst"), "w"
-    ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
-    return pagerank(edges, iters=5, weight="w")
-
-
-def q_connected_components_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (graph.connected_components) of the geography
-    graph: customer--nation, supplier--nation, nation--region edges with
-    typed string node ids. Components are exactly the five regions;
-    component labels are the lexicographic-min reachable node (a "C..."
-    customer id), identical in Spark and DuckDB under binary string
-    compare. Exercises multi-sweep propagation (diameter 4:
-    customer -> nation -> region -> nation' -> customer')."""
-    from oaxaca_blinder_rs_spark.operators.graph import connected_components
-
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    cn = c.select(
-        F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("N"), F.col("c_nationkey").cast("string")).alias("dst"),
-    )
-    sn = s.select(
-        F.concat(F.lit("S"), F.col("s_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("N"), F.col("s_nationkey").cast("string")).alias("dst"),
-    )
-    nr = n.select(
-        F.concat(F.lit("N"), F.col("n_nationkey").cast("string")).alias("src"),
-        F.concat(F.lit("R"), F.col("n_regionkey").cast("string")).alias("dst"),
-    )
-    return connected_components(cn.unionByName(sn).unionByName(nr))
-
-
-def q_part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part triangle counts (graph.triangle_count) of the co-purchase
-    graph: parts are adjacent when they appear in the same small basket
-    (orders with 2-5 distinct parts). Degree-oriented wedge join — each
-    triangle found exactly once at its (degree, id)-smallest corner —
-    so the plan is keyed joins only, O(E^1.5) worst-case, no cartesian.
-    Integer output (node, degree, triangles): no float hash hazard."""
-    from oaxaca_blinder_rs_spark.operators.graph import triangle_count
-
-    l = _t(spark, sf_dir, "lineitem")
-    items = l.select("l_orderkey", "l_partkey").distinct()
-    small = (
-        items.groupBy("l_orderkey")
-        .agg(F.count(F.lit(1)).alias("np"))
-        .filter((F.col("np") >= 2) & (F.col("np") <= 5))
-        .select("l_orderkey")
-    )
-    # r14 OPT (guide §5 reuse): both sides of the basket self-join read `it`;
-    # left lazy each side re-runs the lineitem scan + distinct + small-order
-    # join. The small-basket item list is tiny — pin it once.
-    it = items.join(small, "l_orderkey").localCheckpoint()
-    a, b = it.alias("a"), it.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst"))
-        .distinct()
-    )
-    return triangle_count(pairs)
-
-
 def q_events_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PSI drift report (profiling.drift_report) between the first and
     second half of the events month (split at 2024-01-16): event_type
@@ -1417,44 +1309,6 @@ def q_lineitem_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"type": "foreign_key", "col": "l_orderkey", "ref": o, "ref_col": "o_orderkey"},
     ]
     return check_constraints(li, rules)
-
-
-def q_events_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling z-score anomaly flags (timeseries.flag_anomalies) per user
-    over a trailing 3-day baseline STRICTLY before each event (the spike
-    never contaminates its own baseline). One RANGE frame per key — both
-    engines evaluate the identical [t-259200, t-1] window over
-    microsecond-exact epoch doubles; stats rounded 6dp."""
-    from oaxaca_blinder_rs_spark.operators.timeseries import flag_anomalies
-
-    ev = _t(spark, sf_dir, "events")
-    return flag_anomalies(
-        ev, window_seconds=3 * 86400, k=3.0, min_baseline=5
-    ).select(
-        "event_id",
-        "user_id",
-        "baseline_n",
-        "baseline_mean",
-        "baseline_std",
-        "zscore",
-        "is_anomaly",
-    )
-
-
-def q_scd2_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD Type-2 dimension build (cdc.scd2_build): collapse the event feed
-    into effective-dated intervals of constant event_type per user —
-    (user_id, segment, event_id, valid_from, valid_to, is_current), with
-    valid_to = next change's timestamp and NULL marking the current row.
-    Same-timestamp order is pinned by event_id on both engines. One hash
-    partitioning of user_id serves both window passes (plan-asserted
-    single Exchange)."""
-    from oaxaca_blinder_rs_spark.operators.cdc import scd2_build
-
-    ev = _t(spark, sf_dir, "events")
-    return scd2_build(ev, "user_id", ["event_type"], "ts", ["event_id"]).withColumnRenamed(
-        "event_type", "segment"
-    )
 
 
 def q_machado_mata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1963,28 +1817,6 @@ def q_hll_count_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketches.hll_count_distinct(ev, "u", p=8)
 
 
-def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch conversion attribution (funnel.attribution, r6): purchase
-    conversions credited to the most recent view/click/signup touch within
-    a 2-day lookback; no-touch conversions fall to '(direct)'. User-keyed
-    join + per-conversion max-of-struct — no event-stream window."""
-    from oaxaca_blinder_rs_spark.operators.funnel import attribution
-
-    ev = _t(spark, sf_dir, "events")
-    return attribution(ev, "purchase", ["view", "click", "signup"],
-                       model="last_touch", lookback_days=2)
-
-
-def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-model attribution: each of the k touches before a conversion
-    gets credit 1/k (same 2-day lookback)."""
-    from oaxaca_blinder_rs_spark.operators.funnel import attribution
-
-    ev = _t(spark, sf_dir, "events")
-    return attribution(ev, "purchase", ["view", "click", "signup"],
-                       model="linear", lookback_days=2)
-
-
 def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch point estimates (sketches.cms_table/cms_estimate,
     r6): event counts per user for users 0..19, estimated from a w=256 x
@@ -2003,16 +1835,6 @@ def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return sketches.cms_estimate(cms, probes, "u", w=256, d=4)
-
-
-def q_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """User-journey transition matrix (funnel.path_transitions, r6):
-    consecutive event-type pairs per user's time-ordered stream plus
-    (start)/(end) endpoint edges — one user-partitioned window pass,
-    deterministic (ts, event_id) ordering."""
-    from oaxaca_blinder_rs_spark.operators.funnel import path_transitions
-
-    return path_transitions(_t(spark, sf_dir, "events"))
 
 
 def q_histogram_extendedprice(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2124,40 +1946,6 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return sketches.bloom_maybe_contains(bloom, probes, "u", m_bits=512, k=3)
-
-
-def q_zorder_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout index (layout.zorder_index, r6): customers
-    keyed by the interleave of quantized acctbal and nationkey — the
-    multi-dimension clustering key Delta/Iceberg-style OPTIMIZE ZORDER
-    writes would sort by. Exact integer bit arithmetic; the oracle replays
-    the interleave bit-for-bit."""
-    from oaxaca_blinder_rs_spark.operators.layout import zorder_index
-
-    cust = _t(spark, sf_dir, "customer")
-    q_bal = F.pmod(F.round(F.col("c_acctbal") * 100).cast("long"), F.lit(1 << 16))
-    q_nat = F.pmod(F.col("c_nationkey").cast("long"), F.lit(1 << 16))
-    return cust.select(
-        "c_custkey", zorder_index([q_bal, q_nat], bits=16).alias("zvalue")
-    )
-
-
-def q_hilbert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve layout index (layout.hilbert_index, r9): customers
-    keyed by the Hilbert walk over the same quantized (acctbal,
-    nationkey) plane as the Morton row — the locality-superior clustering
-    key (unit steps only, so min-max zones prune strictly better than
-    Morton's quadrant jumps). The engine runs the classic xy2d walk as
-    one runtime fold; the oracle unrolls all 16 levels as CTE stages and
-    replays every rotate/flip/digit bit-for-bit."""
-    from oaxaca_blinder_rs_spark.operators.layout import hilbert_index
-
-    cust = _t(spark, sf_dir, "customer")
-    q_bal = F.pmod(F.round(F.col("c_acctbal") * 100).cast("long"), F.lit(1 << 16))
-    q_nat = F.pmod(F.col("c_nationkey").cast("long"), F.lit(1 << 16))
-    return cust.select(
-        "c_custkey", hilbert_index(q_bal, q_nat, bits=16).alias("hvalue")
-    )
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2398,27 +2186,6 @@ def q_salted_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_items"),
         F.round(F.sum("l_extendedprice"), 4).alias("revenue"),
     )
-
-
-def q_events_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense hourly calendar (timeseries.gap_fill_hourly): every hour x
-    event_type cell in the span, zeros where no events landed."""
-    from oaxaca_blinder_rs_spark.operators.timeseries import gap_fill_hourly
-    from oaxaca_blinder_rs_spark.session import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    return gap_fill_hourly(ev)
-
-
-def q_rolling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event trailing-hour features (timeseries.rolling_window): count
-    and value sum of the same user's events in the preceding 3600 s."""
-    from oaxaca_blinder_rs_spark.operators.timeseries import rolling_window
-    from oaxaca_blinder_rs_spark.session import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    out = rolling_window(ev, window_seconds=3600)
-    return out.select("event_id", "user_id", "w_count", "w_sum")
 
 
 def q_segment_revenue_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3694,7 +3461,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     roc_points, streaming_histogram, streaming_vocab, streaming_drift;
     (5) rows 15-21: the remaining 7 slipped r10 rows — vocab_stats,
     machado_mata, embedding_outliers, semantic_dedup, matching_weights,
-    cross_corpus_dedup, connected_components_geo;
+    cross_corpus_dedup, connected_components_geo (the last since removed
+    with operators/graph.py);
     (6) rows 22-49: the 28 oldest r11-record rows in registry order
     (events_drift .. knn_cosine_top3).
 
@@ -3762,13 +3530,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "semantic_dedup": q_semantic_dedup,
         "matching_weights": q_matching_weights,
         "cross_corpus_dedup": q_cross_corpus_dedup,
-        "connected_components_geo": q_connected_components_geo,
         # rows 21-49: the 29 oldest r11-record rows, registry order (18
         # slip to r15 — see past-window section)
         "events_drift": q_events_drift,
         "events_drift_metrics": q_events_drift_metrics,
         "lineitem_constraints": q_lineitem_constraints,
-        "events_anomalies": q_events_anomalies,
         "dfl_design_check": q_dfl_design_check,
         "heckman_probit_design": q_heckman_probit_design,
         "mm_ols_start": q_mm_ols_start,
@@ -3777,7 +3543,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mm_tau_stream": q_mm_tau_stream,
         "optimizer_greedy": q_optimizer_greedy,
         "events_hourly": q_events_hourly,
-        "events_gapfilled": q_events_gapfilled,
         "pricing_summary": q_pricing_summary,
         "group_outcome_stats": q_group_outcome_stats,
         "quantiles_type7": q_quantiles_type7,
@@ -3804,7 +3569,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "weighted_kde_grid": q_weighted_kde_grid,
         "ngram_doc_freq": q_ngram_doc_freq,
         "ngram_contamination": q_ngram_contamination,
-        "part_triangles": q_part_triangles,
         "heavy_hitters_weighted": q_heavy_hitters_weighted,
         "dedup_keep_best": q_dedup_keep_best,
         "topk_tokens_per_lang": q_topk_tokens_per_lang,
@@ -3825,10 +3589,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "substring_dedup_clean": q_substring_dedup_clean,
         "span_dedup": q_span_dedup,
         "sample_weighted": q_sample_weighted,
-        "attribution_last_touch": q_attribution_last_touch,
         "cms_user_counts": q_cms_user_counts,
-        "path_transitions": q_path_transitions,
-        "zorder_customers": q_zorder_customers,
         "bloom_membership": q_bloom_membership,
         "hll_users_by_type": q_hll_users_by_type,
         "hll_intersection_users": q_hll_intersection_users,
@@ -3837,7 +3598,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "histogram_extendedprice": q_histogram_extendedprice,
         "profile_lineitem": q_profile_lineitem,
         "skew_report_custkey": q_skew_report_custkey,
-        "attribution_linear": q_attribution_linear,
         "hll_registers": q_hll_registers,
         "hll_count_users": q_hll_count_users,
         "akm_effects": q_akm_effects,
@@ -3849,14 +3609,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents": q_chunk_documents,
         "histogram_quantiles": q_histogram_quantiles,
         "priority_sample": q_priority_sample,
-        "scd2_user_segments": q_scd2_user_segments,
-        "pagerank_copurchase": q_pagerank_copurchase,
-        "event_funnel": q_event_funnel,
-        "cohort_retention": q_cohort_retention,
         "events_pivot": q_events_pivot,
         "events_melt": q_events_melt,
         "revenue_rollup": q_revenue_rollup,
-        "rolling_events": q_rolling_events,
         "range_join_events": q_range_join_events,
         "salted_join_check": q_salted_join_check,
         "pca_whiten_invariants": q_pca_whiten_invariants,
@@ -3864,7 +3619,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_token_ids": q_bpe_token_ids,
         "bpe_vocab": q_bpe_vocab,
         "bpe_merges": q_bpe_merges,
-        "hilbert_customers": q_hilbert_customers,
         # fresh r13 driver records (r13 window rows) — due r16
         "clip_stub_central": q_clip_stub_central,
         "streaming_sessions": q_streaming_sessions,
@@ -3976,124 +3730,6 @@ _PII_AUG_SQL = """
     CASE WHEN doc_id % 5 = 0 THEN ' ip 10.0.' || (doc_id % 256) || '.7' ELSE '' END ||
     CASE WHEN doc_id % 7 = 0 THEN ' call +1 555 000 ' || (1000 + doc_id % 9000) ELSE '' END AS text
   FROM documents
-"""
-
-
-def _pagerank_oracle_sql(iters: int = 5) -> str:
-    """DuckDB twin of graph.pagerank on the customer<->supplier co-purchase
-    graph: the integer-exact iteration unrolled as one CTE stage per step
-    (the kmeans/dfl/heckman construction). All arithmetic is int64
-    floor-div — sums are order-independent, so the replay is bit-identical
-    to the engine on any layout; CASTs guard DuckDB's HUGEINT promotion of
-    SUM. Every stage CTE is MATERIALIZED: r{{k}} references r{{k-1}} twice
-    (contribution join + dangling scan), so plain CTEs would inline the
-    plan tree 2^iters-fold (the AKM-oracle planning blowup)."""
-    head = """
-WITH pairs AS MATERIALIZED (
-  SELECT 'C' || o.o_custkey AS c, 'S' || l.l_suppkey AS s, COUNT(*) AS w
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-), edges AS MATERIALIZED (
-  SELECT c AS src, s AS dst, w FROM pairs
-  UNION ALL SELECT s AS src, c AS dst, w FROM pairs
-), nodes AS MATERIALIZED (
-  SELECT DISTINCT src AS node FROM edges UNION SELECT DISTINCT dst AS node FROM edges
-), cnt AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM nodes),
-outw AS MATERIALIZED (SELECT src AS node, CAST(SUM(w) AS BIGINT) AS ow FROM edges GROUP BY src),
-we AS MATERIALIZED (SELECT e.src, e.dst, CAST(e.w AS BIGINT) AS w, o.ow
-       FROM edges e JOIN outw o ON o.node = e.src),
-r0 AS MATERIALIZED (SELECT n.node, 1000000000000 // c AS r FROM nodes n CROSS JOIN cnt)"""
-    stages = []
-    for k in range(1, iters + 1):
-        stages.append(
-            f""",
-r{k} AS MATERIALIZED (
-  SELECT n.node,
-         CAST((15 * 1000000000000) // (100 * cnt.c)
-              + (85 * (COALESCE(i.s, 0) + dg.d // cnt.c)) // 100 AS BIGINT) AS r
-  FROM nodes n
-  CROSS JOIN cnt
-  LEFT JOIN (
-    SELECT e.dst AS node, CAST(SUM((r.r * e.w) // e.ow) AS BIGINT) AS s
-    FROM we e JOIN r{k - 1} r ON e.src = r.node GROUP BY e.dst
-  ) i ON i.node = n.node
-  CROSS JOIN (
-    SELECT CAST(COALESCE(SUM(r.r), 0) AS BIGINT) AS d
-    FROM r{k - 1} r LEFT JOIN outw o ON r.node = o.node WHERE o.node IS NULL
-  ) dg
-)"""
-        )
-    return head + "".join(stages) + f"\nSELECT node, r AS rank_int FROM r{iters}"
-
-
-def _connected_components_sql(sweeps: int = 6) -> str:
-    """DuckDB twin of graph.connected_components on the geography graph:
-    min-label propagation unrolled as MATERIALIZED stages (each sweep
-    references the previous one twice — plain CTEs would inline
-    exponentially). The argmin node of every component is a customer and
-    the component diameter is 4 (customer->nation->region->nation'->
-    customer'), so labels are at their fixed point after 4 sweeps; the
-    extra sweeps are no-ops (min is monotone + idempotent), exactly the
-    property the engine's converged-stop relies on."""
-    head = """
-WITH edges0 AS MATERIALIZED (
-  SELECT 'C' || c_custkey AS a, 'N' || c_nationkey AS b FROM customer
-  UNION ALL SELECT 'S' || s_suppkey, 'N' || s_nationkey FROM supplier
-  UNION ALL SELECT 'N' || n_nationkey, 'R' || n_regionkey FROM nation
-), und AS MATERIALIZED (
-  SELECT DISTINCT a, b FROM (SELECT a, b FROM edges0 UNION ALL SELECT b, a FROM edges0)
-), l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS lab FROM und)"""
-    stages = []
-    for k in range(1, sweeps + 1):
-        stages.append(
-            f""",
-l{k} AS MATERIALIZED (
-  SELECT l.node, LEAST(l.lab, COALESCE(p.m, l.lab)) AS lab
-  FROM l{k - 1} l LEFT JOIN (
-    SELECT e.b AS node, MIN(x.lab) AS m
-    FROM und e JOIN l{k - 1} x ON x.node = e.a GROUP BY e.b
-  ) p ON p.node = l.node
-)"""
-        )
-    return head + "".join(stages) + f"\nSELECT node, lab AS component FROM l{sweeps}"
-
-
-_PART_TRIANGLES_SQL = """
-WITH items AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-small AS MATERIALIZED (
-  SELECT l_orderkey FROM items GROUP BY 1 HAVING COUNT(*) BETWEEN 2 AND 5
-),
-it AS MATERIALIZED (SELECT i.* FROM items i JOIN small USING (l_orderkey)),
-pairs AS MATERIALIZED (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM it a JOIN it b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-und AS MATERIALIZED (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
-deg AS MATERIALIZED (SELECT u AS node, CAST(COUNT(*) AS BIGINT) AS degree FROM und GROUP BY 1),
--- orient each edge from its (degree, id)-smaller endpoint; carry the head's
--- degree so the wedge join compares in the SAME (degree, id) order (raw-id
--- ordering would drop triangles whose closing edge points 'backwards')
-oriented AS MATERIALIZED (
-  SELECT CASE WHEN (da.degree, p.u) < (db.degree, p.v) THEN p.u ELSE p.v END AS a,
-         CASE WHEN (da.degree, p.u) < (db.degree, p.v) THEN p.v ELSE p.u END AS b,
-         CASE WHEN (da.degree, p.u) < (db.degree, p.v) THEN db.degree ELSE da.degree END AS db
-  FROM pairs p JOIN deg da ON da.node = p.u JOIN deg db ON db.node = p.v
-),
-tris AS MATERIALIZED (
-  SELECT e1.a AS a, e1.b AS b1, e2.b AS b2
-  FROM oriented e1
-  JOIN oriented e2 ON e2.a = e1.a AND (e1.db, e1.b) < (e2.db, e2.b)
-  JOIN oriented e3 ON e3.a = e1.b AND e3.b = e2.b
-),
-corner AS MATERIALIZED (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS triangles FROM (
-    SELECT a AS node FROM tris
-    UNION ALL SELECT b1 FROM tris
-    UNION ALL SELECT b2 FROM tris
-  ) GROUP BY 1
-)
-SELECT d.node, d.degree, CAST(COALESCE(c.triangles, 0) AS BIGINT) AS triangles
-FROM deg d LEFT JOIN corner c ON c.node = d.node
 """
 
 
@@ -4340,44 +3976,6 @@ def _ivfpq_sql(
       FROM tot
     ) WHERE rk <= {top_k}"""
     return "WITH " + ",\n".join(parts) + "\n" + final
-
-
-def _hilbert_sql(bits: int = 16) -> str:
-    """DuckDB twin of layout.hilbert_index over the customer plane: the
-    xy2d walk unrolled as one CTE stage per level (each stage computes the
-    quadrant bits rx/ry, adds the s^2-weighted digit, and applies the
-    flip-then-swap rotation) — integer arithmetic end to end."""
-    n = 1 << bits
-    parts = [
-        f"""h{bits} AS (
-          SELECT c_custkey,
-                 ((CAST(round(c_acctbal * 100) AS BIGINT) % {n}) + {n}) % {n} AS x,
-                 ((CAST(c_nationkey AS BIGINT) % {n}) + {n}) % {n} AS y,
-                 CAST(0 AS BIGINT) AS d
-          FROM customer
-        )"""
-    ]
-    for l in range(bits - 1, -1, -1):
-        s = 1 << l
-        parts.append(
-            f"""h{l} AS (
-              SELECT c_custkey,
-                     CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN {n - 1} - y ELSE y END)
-                          ELSE x END AS x,
-                     CASE WHEN ry = 0 THEN (CASE WHEN rx = 1 THEN {n - 1} - x ELSE x END)
-                          ELSE y END AS y,
-                     d + {s * s} * CAST(xor(3 * rx, ry) AS BIGINT) AS d
-              FROM (
-                SELECT c_custkey, x, y, d,
-                       CASE WHEN (x & {s}) > 0 THEN 1 ELSE 0 END rx,
-                       CASE WHEN (y & {s}) > 0 THEN 1 ELSE 0 END ry
-                FROM h{l + 1}
-              )
-            )"""
-        )
-    return (
-        "WITH " + ",\n".join(parts) + "\nSELECT c_custkey, d AS hvalue FROM h0"
-    )
 
 
 def _kmeans_sql(k: int = 6, iters: int = 2) -> str:
@@ -6654,31 +6252,6 @@ def _oracle_sql_literals() -> dict[str, str]:
             SELECT v AS value, bool_and(hit) AS maybe_present
             FROM hits GROUP BY v
         """,
-        "zorder_customers": """
-            WITH q AS (
-              SELECT c_custkey,
-                     ((CAST(round(c_acctbal * 100) AS BIGINT) % 65536) + 65536) % 65536 AS qb,
-                     ((CAST(c_nationkey AS BIGINT) % 65536) + 65536) % 65536 AS qn
-              FROM customer
-            )
-            SELECT c_custkey, CAST(((qb // 1) % 2) * 1 + ((qb // 2) % 2) * 4 + ((qb // 4) % 2) * 16 + ((qb // 8) % 2) * 64 + ((qb // 16) % 2) * 256 + ((qb // 32) % 2) * 1024 + ((qb // 64) % 2) * 4096 + ((qb // 128) % 2) * 16384 + ((qb // 256) % 2) * 65536 + ((qb // 512) % 2) * 262144 + ((qb // 1024) % 2) * 1048576 + ((qb // 2048) % 2) * 4194304 + ((qb // 4096) % 2) * 16777216 + ((qb // 8192) % 2) * 67108864 + ((qb // 16384) % 2) * 268435456 + ((qb // 32768) % 2) * 1073741824 + ((qn // 1) % 2) * 2 + ((qn // 2) % 2) * 8 + ((qn // 4) % 2) * 32 + ((qn // 8) % 2) * 128 + ((qn // 16) % 2) * 512 + ((qn // 32) % 2) * 2048 + ((qn // 64) % 2) * 8192 + ((qn // 128) % 2) * 32768 + ((qn // 256) % 2) * 131072 + ((qn // 512) % 2) * 524288 + ((qn // 1024) % 2) * 2097152 + ((qn // 2048) % 2) * 8388608 + ((qn // 4096) % 2) * 33554432 + ((qn // 8192) % 2) * 134217728 + ((qn // 16384) % 2) * 536870912 + ((qn // 32768) % 2) * 2147483648 AS BIGINT) AS zvalue FROM q
-        """,
-        "path_transitions": """
-            WITH b AS (
-              SELECT user_id AS u, event_type AS t,
-                     lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev,
-                     lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-              FROM events
-            ), edges AS (
-              SELECT prev AS from_type, t AS to_type FROM b WHERE prev IS NOT NULL
-              UNION ALL
-              SELECT '(start)', t FROM b WHERE prev IS NULL
-              UNION ALL
-              SELECT t, '(end)' FROM b WHERE nxt IS NULL
-            )
-            SELECT from_type, to_type, count(*) AS transitions
-            FROM edges GROUP BY from_type, to_type
-        """,
         "cms_user_counts": """
             WITH uv AS (
               SELECT CAST(user_id AS VARCHAR) AS v, count(*) AS n FROM events GROUP BY 1
@@ -6697,57 +6270,6 @@ def _oracle_sql_literals() -> dict[str, str]:
             SELECT p.v AS value, min(coalesce(c.cnt, 0)) AS estimate
             FROM probe p LEFT JOIN cells c USING (row, col)
             GROUP BY p.v
-        """,
-        "attribution_last_touch": """
-            WITH conv AS (
-              SELECT user_id AS u, event_id AS cid, ts AS ct, CAST(value AS DOUBLE) AS cv
-              FROM events WHERE event_type = 'purchase'
-            ), touch AS (
-              SELECT user_id AS u, ts AS tt, event_id AS tid, event_type AS channel
-              FROM events WHERE event_type IN ('view', 'click', 'signup')
-            ), j AS (
-              SELECT c.cid, c.cv, t.channel, t.tt, t.tid
-              FROM conv c JOIN touch t ON t.u = c.u
-              WHERE t.tt < c.ct AND t.tt >= c.ct - INTERVAL 2 DAYS
-            ), direct AS (
-              SELECT '(direct)' AS channel, CAST(1.0 AS DOUBLE) AS credit, c.cv
-              FROM conv c WHERE NOT EXISTS (SELECT 1 FROM j WHERE j.cid = c.cid)
-            ),
-            pick AS (
-              SELECT cid, cv, channel,
-                     row_number() OVER (PARTITION BY cid ORDER BY tt DESC, tid DESC) AS rn
-              FROM j
-            ), cr AS (
-              SELECT channel, CAST(1.0 AS DOUBLE) AS credit, cv FROM pick WHERE rn = 1
-              UNION ALL SELECT * FROM direct
-            )
-            SELECT channel, round(sum(credit), 4) AS credit,
-                   round(sum(credit * cv), 2) AS credited_value
-            FROM cr GROUP BY channel
-        """,
-        "attribution_linear": """
-            WITH conv AS (
-              SELECT user_id AS u, event_id AS cid, ts AS ct, CAST(value AS DOUBLE) AS cv
-              FROM events WHERE event_type = 'purchase'
-            ), touch AS (
-              SELECT user_id AS u, ts AS tt, event_id AS tid, event_type AS channel
-              FROM events WHERE event_type IN ('view', 'click', 'signup')
-            ), j AS (
-              SELECT c.cid, c.cv, t.channel, t.tt, t.tid
-              FROM conv c JOIN touch t ON t.u = c.u
-              WHERE t.tt < c.ct AND t.tt >= c.ct - INTERVAL 2 DAYS
-            ), direct AS (
-              SELECT '(direct)' AS channel, CAST(1.0 AS DOUBLE) AS credit, c.cv
-              FROM conv c WHERE NOT EXISTS (SELECT 1 FROM j WHERE j.cid = c.cid)
-            ),
-            cnt AS (SELECT cid, count(*) AS k FROM j GROUP BY cid),
-            cr AS (
-              SELECT j.channel, 1.0 / cnt.k AS credit, j.cv FROM j JOIN cnt USING (cid)
-              UNION ALL SELECT * FROM direct
-            )
-            SELECT channel, round(sum(credit), 4) AS credit,
-                   round(sum(credit * cv), 2) AS credited_value
-            FROM cr GROUP BY channel
         """,
         "sample_weighted": """
             WITH mw AS (SELECT avg(CAST(length(text) AS DOUBLE)) AS w FROM documents)
@@ -6846,32 +6368,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                    CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) signup,
                    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) "view"
             FROM events GROUP BY 1
-        """,
-        "events_gapfilled": """
-            WITH agg AS (
-              SELECT date_trunc('hour', ts) h, event_type g,
-                     count(*) n_events, round(sum(value), 6) sum_value
-              FROM events GROUP BY 1, 2
-            ), span AS (
-              SELECT min(date_trunc('hour', ts)) lo, max(date_trunc('hour', ts)) hi
-              FROM events
-            ), hours AS (
-              SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) h FROM span
-            ), groups AS (SELECT DISTINCT event_type g FROM events)
-            SELECT strftime(hours.h, '%Y-%m-%d %H:%M:%S') hour_start,
-                   groups.g event_type,
-                   coalesce(agg.n_events, 0) n_events,
-                   coalesce(agg.sum_value, 0.0) sum_value
-            FROM hours CROSS JOIN groups
-            LEFT JOIN agg ON agg.h = hours.h AND agg.g = groups.g
-        """,
-        "rolling_events": """
-            SELECT event_id, user_id,
-                   count(*) OVER w w_count,
-                   round(sum(value) OVER w, 6) w_sum
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)/1000000.0
-                         RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
         """,
         "asof_join_events": """
             WITH l AS (
@@ -7015,36 +6511,6 @@ def _oracle_sql_literals() -> dict[str, str]:
             FROM (SELECT *, avg(y) OVER (PARTITION BY worker) wy FROM p)
             GROUP BY firm ORDER BY firm
         """,
-        "event_funnel": """
-            WITH s0 AS (
-              SELECT user_id, min(ts) t FROM events WHERE event_type = 'view' GROUP BY user_id
-            ), s1 AS (
-              SELECT e.user_id, min(e.ts) t FROM events e JOIN s0 ON e.user_id = s0.user_id
-              WHERE e.event_type = 'click' AND e.ts > s0.t GROUP BY e.user_id
-            ), s2 AS (
-              SELECT e.user_id, min(e.ts) t FROM events e JOIN s1 ON e.user_id = s1.user_id
-              WHERE e.event_type = 'purchase' AND e.ts > s1.t GROUP BY e.user_id
-            )
-            SELECT CAST(0 AS BIGINT) step_idx, 'view' step, CAST((SELECT count(*) FROM s0) AS BIGINT) n_users
-            UNION ALL
-            SELECT 1, 'click', CAST((SELECT count(*) FROM s1) AS BIGINT)
-            UNION ALL
-            SELECT 2, 'purchase', CAST((SELECT count(*) FROM s2) AS BIGINT)
-        """,
-        "cohort_retention": """
-            WITH p AS (
-              SELECT user_id, CAST(date_trunc('day', ts) AS DATE) pd FROM events
-            ), firsts AS (
-              SELECT user_id, min(pd) cohort FROM p GROUP BY user_id
-            ), acts AS (
-              SELECT DISTINCT user_id, pd FROM p
-            )
-            SELECT f.cohort cohort_date,
-                   CAST(date_diff('day', f.cohort, a.pd) AS BIGINT) "offset",
-                   CAST(count(*) AS BIGINT) active_users
-            FROM acts a JOIN firsts f ON a.user_id = f.user_id
-            GROUP BY f.cohort, date_diff('day', f.cohort, a.pd)
-        """,
         "adaptive_logprob_keep": """
             WITH toks AS (
               SELECT doc_id, lang, regexp_split_to_array(lower(trim(text)), '\\s+') t
@@ -7151,9 +6617,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                    array_to_string(list_slice(toks, st + 1, st + 64), ' ') AS chunk_text
             FROM s
         """,
-        "pagerank_copurchase": _pagerank_oracle_sql(),
-        "connected_components_geo": _connected_components_sql(),
-        "part_triangles": _PART_TRIANGLES_SQL,
         # drift_report twin: same long-form construction — the numeric dim
         # bins over the global [min, max] of BOTH snapshots (the engine
         # computes per-snapshot min/max and combines; over a disjoint split
@@ -7248,36 +6711,6 @@ def _oracle_sql_literals() -> dict[str, str]:
         # RANGE BETWEEN w PRECEDING AND 1 PRECEDING over the SAME
         # microsecond-exact epoch double both engines compute; n<=1 guards
         # mirror the engine's ANSI-safe whens, 6dp rounds, flag coalesced.
-        "events_anomalies": """
-            WITH base AS (
-              SELECT event_id, user_id, CAST(value AS DOUBLE) AS v,
-                     CAST(epoch_us(ts) AS DOUBLE) / 1000000 AS ep
-              FROM events
-            ), stats AS (
-              SELECT event_id, user_id, v,
-                     CAST(COUNT(v) OVER w AS BIGINT) AS n,
-                     SUM(v) OVER w AS s1,
-                     SUM(v * v) OVER w AS s2
-              FROM base
-              WINDOW w AS (PARTITION BY user_id ORDER BY ep
-                           RANGE BETWEEN 259200 PRECEDING AND 1 PRECEDING)
-            ), z AS (
-              SELECT event_id, user_id, n, v,
-                     CASE WHEN n > 0 THEN s1 / n END AS mean,
-                     CASE WHEN n > 1 THEN
-                       SQRT(GREATEST((s2 - s1 * s1 / n) / (n - 1), 0.0))
-                     END AS std
-              FROM stats
-            )
-            SELECT event_id, user_id, n AS baseline_n,
-                   ROUND(mean, 6) AS baseline_mean,
-                   ROUND(std, 6) AS baseline_std,
-                   ROUND(CASE WHEN std > 0 THEN (v - mean) / std END, 6) AS zscore,
-                   COALESCE(n >= 5 AND std > 0
-                            AND ABS(CASE WHEN std > 0 THEN (v - mean) / std END) > 3.0,
-                            FALSE) AS is_anomaly
-            FROM z
-        """,
         # check_constraints twin: one UNION ALL arm per rule with exact
         # integer violation counts; null fails range/in_set/predicate
         # (the strict gate reading); unique counts ROWS in duplicated
@@ -7327,22 +6760,6 @@ def _oracle_sql_literals() -> dict[str, str]:
                    (SELECT COUNT(*) FROM lineitem l
                     WHERE l.l_orderkey IS NOT NULL
                       AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) = 0
-        """,
-        "scd2_user_segments": """
-            WITH ordered AS (
-              SELECT user_id, event_type, ts, event_id,
-                     row_number() OVER w AS rn,
-                     lag(event_type) OVER w AS prev_attr
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), seg AS (
-              SELECT user_id, event_type, ts, event_id FROM ordered
-              WHERE rn = 1 OR prev_attr IS DISTINCT FROM event_type
-            )
-            SELECT user_id, event_type AS segment, event_id,
-                   ts AS valid_from, lead(ts) OVER w2 AS valid_to,
-                   (lead(ts) OVER w2 IS NULL) AS is_current
-            FROM seg WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
         """,
         "span_dedup": r"""
             WITH t AS (
@@ -8047,7 +7464,6 @@ def _oracle_sql_literals() -> dict[str, str]:
         """,
         "kmeans_clusters": _kmeans_sql(k=6, iters=2),
         "pq_adc_top3": _pq_sql(m=4, k_codebook=8, iters=2, top_k=3),
-        "hilbert_customers": _hilbert_sql(bits=16),
         # feature hashing: md5 buckets (the DSIR convention), densified
         # via a doc x bucket grid left-joined onto the per-bucket counts
         "hashed_bow": """

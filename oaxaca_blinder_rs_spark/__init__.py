@@ -18,7 +18,10 @@ from .errors import (
 from .api import OaxacaBlinder, estimate_akm, match_units, run_dfl_from_csv
 from .formula import Formula
 from .quantile_builder import QuantileDecompositionBuilder, QuantileDecompositionResults
+from .operators.budget import allocate_budget
 from .operators.decomposition import ReferenceCoefficients
+from .operators.diagnostics import calculate_vif
+from .operators.jmp import decompose_changes
 from .results import BudgetAdjustment, ComponentResult, OaxacaResults
 from .session import get_spark, load_table
 
@@ -32,6 +35,9 @@ __all__ = [
     "estimate_akm",
     "match_units",
     "run_dfl_from_csv",
+    "decompose_changes",
+    "calculate_vif",
+    "allocate_budget",
     "ReferenceCoefficients",
     "OaxacaResults",
     "ComponentResult",

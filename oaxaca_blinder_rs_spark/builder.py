@@ -28,14 +28,14 @@ guard.
 from __future__ import annotations
 
 import math
-import sys
+import warnings
 from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .errors import ColumnNotFound, InsufficientData, InvalidGroupVariable, OaxacaError
+from .errors import ColumnNotFound, InsufficientData, InvalidGroupVariable, NonNumericData, OaxacaError
 from .formula import Formula
 from .functions.linalg import (
     GroupStats,
@@ -219,12 +219,36 @@ class OaxacaBuilder:
     def _group_names(self, df: DataFrame) -> tuple[str, str]:
         """builder.rs:61-102: B = reference group; A = first sorted distinct != B."""
         uniques = [r[0] for r in df.select(self._group).distinct().orderBy(self._group).collect()]
-        uniques = [u for u in uniques if u is not None]
-        if len(uniques) < 2:
+        return self._pick_groups([u for u in uniques if u is not None])
+
+    def _pick_groups(self, levels: list) -> tuple[str, str]:
+        """Group A is the first sorted level that is not the reference B.
+        Any further levels are left out of the comparison, with a warning."""
+        if len(levels) < 2:
             raise InvalidGroupVariable("Not enough groups for comparison")
         group_b = self._reference_group
-        group_a = uniques[0] if uniques[0] != group_b else uniques[1]
+        group_a = levels[0] if levels[0] != group_b else levels[1]
+        dropped = [lv for lv in levels if lv not in (group_a, group_b)]
+        if dropped:
+            warnings.warn(
+                f"Group column '{self._group}' has {len(levels)} levels; comparing "
+                f"'{group_a}' with reference '{group_b}' and dropping {dropped}.",
+                stacklevel=3,
+            )
         return group_a, group_b
+
+    def _check_finite(self, *group_stats: GroupStats) -> None:
+        """Refuse +-Infinity in the weights, outcome or a predictor. Such a
+        value makes its column's sums non-finite, so the point-pass stats
+        already on the driver show it without another job."""
+        for s in group_stats:
+            if self._weights_col and not math.isfinite(s.wsum):
+                raise NonNumericData(self._weights_col, "infinite values")
+            if not (math.isfinite(s.ysum) and math.isfinite(s.yty)):
+                raise NonNumericData(self._outcome, "infinite values")
+            finite = np.isfinite(np.diag(s.xtx)) & np.isfinite(s.xsum)
+            if not finite.all():
+                raise NonNumericData(s.names[int(np.argmin(finite))], "infinite values")
 
     def _design(self, df: DataFrame, dummy_names: list[str]) -> tuple[DataFrame, list[str]]:
         """Append intercept + dummy columns as Catalyst expressions.
@@ -417,14 +441,11 @@ class OaxacaBuilder:
                 design, xcols, self._outcome, group=self._group,
                 wcol=self._weights_col, engine=self._engine,
             )
-        levels = sorted(g for g in stats if g is not None)
-        if len(levels) < 2:
-            raise InvalidGroupVariable("Not enough groups for comparison")
-        group_b = self._reference_group
-        group_a = levels[0] if levels[0] != group_b else levels[1]
+        group_a, group_b = self._pick_groups(sorted(g for g in stats if g is not None))
         if group_a not in stats or group_b not in stats:
             raise InvalidGroupVariable("One group has no data")
         stats_a, stats_b = stats[group_a], stats[group_b]
+        self._check_finite(stats_a, stats_b)
 
         point = self._decompose_from_stats(
             stats_a, stats_b, category_counts, base_categories, len(self._predictors)
@@ -481,12 +502,12 @@ class OaxacaBuilder:
                 except OaxacaError:
                     continue
             if len(reps_results) < self._bootstrap_reps:
-                print(
-                    f"Warning: {self._bootstrap_reps - len(reps_results)} out of "
+                warnings.warn(
+                    f"{self._bootstrap_reps - len(reps_results)} out of "
                     f"{self._bootstrap_reps} bootstrap replications failed and were "
                     f"discarded. The analysis is based on {len(reps_results)} "
                     "successful replications.",
-                    file=sys.stderr,
+                    stacklevel=2,
                 )
 
         return self._assemble_results(point, reps_results, stats_a, stats_b, design, xcols, group_b)
@@ -592,11 +613,7 @@ class OaxacaBuilder:
             from .operators.rif import rif_params_from_pandas
 
             pdf = df.select(self._group, F.col(self._outcome).cast("double").alias("__y")).toPandas()
-            levels = sorted(x for x in pdf[self._group].dropna().unique())
-            if len(levels) < 2:
-                raise InvalidGroupVariable("Not enough groups for comparison")
-            group_b = self._reference_group
-            group_a = levels[0] if levels[0] != group_b else levels[1]
+            group_a, group_b = self._pick_groups(sorted(x for x in pdf[self._group].dropna().unique()))
             sub = pdf[pdf[self._group].isin([group_a, group_b])]
             params = rif_params_from_pandas(sub, self._group, "__y", quantile)
             df = df.filter(F.col(self._group).isin([group_a, group_b]))
@@ -610,6 +627,11 @@ class OaxacaBuilder:
             df_mod = df.withColumn(
                 self._outcome, rif_expr_from_params(params, self._outcome, self._group, quantile)
             )
+        # an infinite outcome turns its group's bandwidth and density into NaN
+        # (checked here: the NaN RIF rows would otherwise be dropped as nulls)
+        finite = (math.isfinite(p["q"]) and math.isfinite(p.get("density") or 0.0) for p in params.values())
+        if not all(finite):
+            raise NonNumericData(self._outcome, "infinite values")
 
         builder = OaxacaBuilder(df_mod, self._outcome, self._group, self._reference_group)
         builder._predictors = list(self._predictors)

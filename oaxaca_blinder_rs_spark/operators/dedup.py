@@ -294,7 +294,7 @@ def dedup_state(
     Scale shape (100 TB): the state is ~50 bytes of hashes per document
     regardless of text size; build it once per corpus, append per-batch.
     For the exact stage's equi-join, persist it bucketed by ``fp``
-    (sources/bucketed.py) so each ingest prunes to colliding buckets.
+    (``DataFrameWriter.bucketBy``) so each ingest prunes to colliding buckets.
     Engine parity: fp and every sig component are md5 strings — the whole
     table replays bit-identically in DuckDB (the contract oracle does)."""
     sig = minhash_table(df, text_col=text_col, id_col=id_col, num_perm=num_perm, k=k, out_col="sig")

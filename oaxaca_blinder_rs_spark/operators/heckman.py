@@ -28,7 +28,7 @@ panic on the same path).
 
 from __future__ import annotations
 
-import sys
+import warnings
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -478,11 +478,11 @@ def run_heckman_oaxaca(builder):
             except OaxacaError:
                 continue
         if reps and len(reps_results) < reps:
-            print(
-                f"Warning: {reps - len(reps_results)} out of {reps} bootstrap "
+            warnings.warn(
+                f"{reps - len(reps_results)} out of {reps} bootstrap "
                 "replications failed and were discarded. The analysis is based "
                 f"on {len(reps_results)} successful replications.",
-                file=sys.stderr,
+                stacklevel=2,
             )
 
         def component(name, est, estimates):

@@ -26,6 +26,7 @@ thread_rng — unseeded; we improve on that, SURVEY §7.1).
 from __future__ import annotations
 
 import math
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -334,18 +335,6 @@ class QuantileDecompositionBuilder:
         """
         from pyspark.sql import Window
 
-        import time as _time
-
-        stage_times: list[tuple[str, float]] = []  # instrumentation (r15)
-        self._mm_stage_times = stage_times
-        _t_stage = _time.perf_counter()
-
-        def _mark(name: str) -> None:
-            nonlocal _t_stage
-            now = _time.perf_counter()
-            stage_times.append((name, now - _t_stage))
-            _t_stage = now
-
         design, xcols, group_a, group_b = self._prepare_design()
         design = design.filter(F.col(self._group).isin([group_a, group_b]))
         spark = design.sparkSession
@@ -381,13 +370,11 @@ class QuantileDecompositionBuilder:
         design = design.withColumn("__mm_mid", F.monotonically_increasing_id()).withColumn(
             "__mm_pid", F.shiftrightunsigned(F.col("__mm_mid"), 33)
         ).localCheckpoint()
-        _mark("design_checkpoint")
         cell_rows = (
             design.groupBy(self._group, "__mm_pid")
             .agg(F.count(F.lit(1)).alias("__c"))
             .collect()
         )
-        _mark("offsets_collect")
         offs, running = [], {}
         for r in sorted(cell_rows, key=lambda r: (str(r[self._group]), int(r["__mm_pid"]))):
             g = r[self._group]
@@ -403,7 +390,6 @@ class QuantileDecompositionBuilder:
         )
         n_a, n_b = int(running[group_a]), int(running[group_b])
 
-        _mark("rank_plan")
         if strategy == "taubatch":
             betas = self._fit_taubatch(
                 spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
@@ -412,7 +398,6 @@ class QuantileDecompositionBuilder:
             betas = self._fit_gram(
                 spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
             )
-        _mark("fit")
 
         # per-rep simulation plan: translate picks into original row ranks
         plans: dict[int, dict] = {}
@@ -444,21 +429,17 @@ class QuantileDecompositionBuilder:
             needed[group_a].update(int(i) for i in rank_a)
             needed[group_b].update(int(i) for i in rank_b)
         if failed:
-            import sys as _sys
-
-            print(
-                f"Warning: {failed} out of {B} bootstrap replications failed and "
+            warnings.warn(
+                f"{failed} out of {B} bootstrap replications failed and "
                 f"were discarded. The analysis is based on {B - failed} successful "
                 "replications.",
-                file=_sys.stderr,
+                stacklevel=2,
             )
 
-        _mark("plans")
         want = ranked.filter(
             ((F.col(self._group) == group_a) & F.col("__mm_rn").isin(sorted(needed[group_a])))
             | ((F.col(self._group) == group_b) & F.col("__mm_rn").isin(sorted(needed[group_b])))
         ).select(self._group, "__mm_rn", *xcols).collect()
-        _mark("want_collect")
         rows_by = {}
         for r_ in want:
             rows_by[(r_[self._group], int(r_["__mm_rn"]))] = np.array(
@@ -567,16 +548,11 @@ class QuantileDecompositionBuilder:
                     out.append((rep, gval, int(ti), [], False))
             return pd.DataFrame(out, columns=["rep", "grp", "tau_idx", "beta", "ok"])
 
-        import time as _time
-
-        _t0 = _time.perf_counter()
         beta_rows = (
             replicated.groupBy("__mm_rep", self._group, "__mm_batch")
             .applyInPandas(fit_batch, "rep int, grp string, tau_idx int, beta array<double>, ok boolean")
             .collect()
         )
-        self._taubatch_collect_sec = _time.perf_counter() - _t0  # instrumentation
-        self._taubatch_n_batches = n_batches
         betas: dict[tuple[int, int], list[np.ndarray]] = {}
         for row in sorted(
             (r for r in beta_rows if r["ok"]), key=lambda r: (int(r["rep"]), int(r["tau_idx"]))
@@ -672,17 +648,11 @@ class QuantileDecompositionBuilder:
         n_by_side_l = dict(n_by_side)
         side_of_l = dict(side_of)
 
-        import time as _time
-
-        pass_times: list[tuple[str, int, float]] = []  # (mode, active, sec)
-        self._gram_pass_times = pass_times  # instrumentation, NOTES_r12
-
         def run_pass(payload: dict) -> dict[int, np.ndarray]:
             """One mapInPandas pass. payload: side -> dict(mode, ureps[,
             repcol, taus, betas, h]). Returns side -> summed stat block:
             (L+k+3) x nreps for mode 'ols' (adds count/sum/sumsq y-moment
             rows for the bandwidth), (L+k) x m for mode 'newton'."""
-            _t0 = _time.perf_counter()
 
             def compute(iterator, payload=payload):
                 from pyspark import TaskContext
@@ -783,12 +753,6 @@ class QuantileDecompositionBuilder:
                 for st in grp["stats"]:
                     acc += np.asarray(st, dtype=np.float64).reshape((height, m), order="F")
                 out[int(side_v)] = acc
-            mode = next(iter(payload.values()))["mode"]
-            active = sum(
-                len(pl["taus"]) if pl["mode"] == "newton" else len(pl["ureps"])
-                for pl in payload.values()
-            )
-            pass_times.append((mode, active, _time.perf_counter() - _t0))
             return out
 
         def solve_block(stats: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -5,7 +5,6 @@
   reflecting input order (SURVEY §7.5 risk 1).
 - read_csv_bytes: in-memory CSV text/bytes -> DataFrame
   (engine/src/analysis.rs:10-11 Cursor reader) — pandas->Arrow->Spark.
-- strict_numeric_cast re-exported from engine_ops (S3).
 """
 
 from __future__ import annotations
@@ -15,9 +14,7 @@ import io
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.engine_ops import strict_numeric_cast  # noqa: F401
-
-__all__ = ["read_csv", "read_csv_bytes", "attach_row_ids", "strict_numeric_cast"]
+__all__ = ["read_csv", "read_csv_bytes", "attach_row_ids"]
 
 ROW_ID = "__ob_row_id__"
 

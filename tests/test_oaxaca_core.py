@@ -269,3 +269,14 @@ def test_sinks(spark):
     assert res.to_markdown().startswith("### Oaxaca")
     assert "\\begin{table}" in res.to_latex()
     assert "explained by" in res.interpret()
+
+
+def test_failed_replicates_are_reported_as_a_warning(spark):
+    """A 3-row group makes many resamples rank-deficient; the discarded
+    replicates are reported through ``warnings``, not printed."""
+    rows = [(float(10 + i), float(i % 5), "F") for i in range(3)]
+    rows += [(float(20 + i), float(i % 7), "M") for i in range(30)]
+    df = spark.createDataFrame(rows, ["wage", "education", "gender"])
+    b = OaxacaBuilder(df, "wage", "gender", "F").predictors(["education"]).bootstrap_reps(20)
+    with pytest.warns(UserWarning, match="bootstrap replications failed and were discarded"):
+        b.run()

@@ -222,93 +222,6 @@ def test_adaptive_logprob_filter_no_per_group_window(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_funnel_no_window_no_collect(spark, sf_dir):
-    """Funnel steps are per-user min-aggregations chained by user-keyed
-    joins: no window over the event stream, no collect_list of user
-    histories, and the step's type filter reaches the parquet scan."""
-    from oaxaca_blinder_rs_spark.operators.funnel import funnel
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # build the final step's frame without triggering the counts: replicate
-    # the chain manually to keep a DataFrame to explain
-    first = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min(F.col("ts").cast("timestamp")).alias("__t")
-    )
-    plan = _plan(first)
-    assert "Window" not in plan and "collect_list" not in plan
-    assert "PushedFilters" in plan and "EqualTo(event_type,view)" in plan
-    # the public API returns the counts frame
-    out = funnel(ev, ["view", "click"])
-    assert [r["step"] for r in out.collect()] == ["view", "click"]
-
-
-def test_funnel_persists_each_step_and_leaks_nothing(spark, sf_dir, monkeypatch):
-    """The r5 verdict flagged funnel's k^2/2 event scans: step i's count
-    re-executed steps 1..i-1 because each count was an action on an
-    uncached chain. The contract now is: every step's reached set is
-    persisted before it is counted (so the next step's join reads the
-    materialized per-user state — k scans total), and every persist is
-    dropped before funnel() returns."""
-    from oaxaca_blinder_rs_spark.operators import funnel as funnel_mod
-
-    # patch the CONCRETE class (pyspark 4's classic DataFrame overrides the
-    # pyspark.sql.DataFrame base methods)
-    DataFrame = type(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    persists, unpersists = [], []
-    orig_persist, orig_unpersist = DataFrame.persist, DataFrame.unpersist
-
-    def spy_persist(self, *a, **k):
-        persists.append(1)
-        return orig_persist(self, *a, **k)
-
-    def spy_unpersist(self, *a, **k):
-        unpersists.append(1)
-        return orig_unpersist(self, *a, **k)
-
-    monkeypatch.setattr(DataFrame, "persist", spy_persist)
-    monkeypatch.setattr(DataFrame, "unpersist", spy_unpersist)
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    steps = ["view", "click", "purchase"]
-    out = funnel_mod.funnel(ev, steps)
-    assert len(persists) == len(steps)
-    assert len(unpersists) == len(steps)
-    # funnel leaves no NEW cached RDDs behind (other suites may hold their
-    # own caches, so compare against the pre-call count rather than zero)
-    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    assert after <= before
-    ns = [r["n_users"] for r in out.orderBy("step_idx").collect()]
-    assert ns == sorted(ns, reverse=True)
-
-
-def test_cohort_retention_offset_counts_periods(spark):
-    """granularity='week'/'month' offsets count PERIODS, not days (the r5
-    ADVICE fix): a user first seen in week W and active again the next
-    week has offset 1, not 7."""
-    from datetime import datetime
-
-    from oaxaca_blinder_rs_spark.operators.funnel import cohort_retention
-
-    rows = [
-        (1, datetime(2024, 1, 1), "x"), (1, datetime(2024, 1, 8), "x"),
-        (1, datetime(2024, 2, 5), "x"),
-        (2, datetime(2024, 1, 3), "x"), (2, datetime(2024, 3, 1), "x"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    wk = {(str(r["cohort_date"]), r["offset"]): r["active_users"]
-          for r in cohort_retention(ev, granularity="week").collect()}
-    # 2024-01-01 is a Monday; both users land in that cohort week
-    assert wk == {("2024-01-01", 0): 2, ("2024-01-01", 1): 1,
-                  ("2024-01-01", 5): 1, ("2024-01-01", 8): 1}
-    mo = {(str(r["cohort_date"]), r["offset"]): r["active_users"]
-          for r in cohort_retention(ev, granularity="month").collect()}
-    assert mo == {("2024-01-01", 0): 2, ("2024-01-01", 1): 1, ("2024-01-01", 2): 1}
-    import pytest
-
-    with pytest.raises(ValueError):
-        cohort_retention(ev, granularity="fortnight")
-
-
 def test_chunk_documents_is_map_only(spark, sf_dir):
     """chunk_documents is split -> sequence -> slice -> posexplode: one
     scan -> generate -> project, NO shuffle, and only (doc_id, text) read
@@ -353,40 +266,6 @@ def test_span_dedup_is_keyed_shuffles_only(spark, sf_dir):
     assert "Window" not in plan
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "text" in read_schema and "lang" not in read_schema
-
-
-def test_scd2_build_single_exchange(spark, sf_dir):
-    """Both SCD2 window passes (change detection, interval chaining) must
-    ride ONE hash partitioning of the key: the change-point filter preserves
-    distribution and order, so a second Exchange would be pure waste at
-    dimension scale."""
-    from oaxaca_blinder_rs_spark.operators.cdc import scd2_build
-
-    import re
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    plan = _plan(scd2_build(ev, "user_id", ["event_type"], "ts", ["event_id"]))
-    # formatted explain prints each node twice (tree + detail header);
-    # count the "(n) Exchange" detail headers
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
-    assert "CartesianProduct" not in plan
-
-
-def test_triangle_count_keyed_joins_only(spark, sf_dir):
-    """triangle_count is the degree-orientation wedge join: every join in
-    the plan must be an equi-join (wedge pivot, closing-edge key) — no
-    cartesian, no nested loop — or the operator cannot survive a dense
-    100 TB co-purchase graph."""
-    from oaxaca_blinder_rs_spark.operators.graph import triangle_count
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    edges = ev.select(
-        F.col("user_id").alias("src"), F.xxhash64("event_type").alias("dst")
-    )
-    plan = _plan(triangle_count(edges))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Window" not in plan
 
 
 def test_drift_report_single_agg_no_window(spark, sf_dir):

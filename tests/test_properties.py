@@ -4,11 +4,14 @@ invariance, allocation feasibility) — on random inputs, not fixtures.
 
 Driver-side NumPy mirrors of the k-vector arithmetic are exercised directly
 (no Spark in the loop: hypothesis generates hundreds of cases; identities are
-pure driver math by design)."""
+pure driver math by design). The input-guard tests at the end run the builder
+on small Spark frames."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from oaxaca_blinder_rs_spark import NonNumericData, OaxacaBuilder
 from oaxaca_blinder_rs_spark.operators import decomposition as dec
 from oaxaca_blinder_rs_spark.operators.bootstrap import bootstrap_stats
 from oaxaca_blinder_rs_spark.operators.quantile_regression import solve_qr
@@ -269,3 +272,42 @@ def test_water_fill_rates_empty_group(ss=None):
     assert water_fill_rates([("xx", 0)], 0.3, 0.5) == [("xx", 0, 0.0)]
     with _pytest.raises(ValueError, match=">= 0"):
         water_fill_rates([("en", -1)], 0.3, 0.5)
+
+
+# ---- input guards on the builder (Spark, small frames) ----------------------
+
+
+def _edu_frame(spark, groups, edu_inf_row=None, y_inf_row=None):
+    rng = np.random.default_rng(0)
+    n = 200
+    g = [groups[i % len(groups)] for i in range(n)]
+    edu = rng.normal(12.0, 2.0, n)
+    y = 1.0 + 0.1 * edu + rng.normal(0.0, 0.1, n)
+    if edu_inf_row is not None:
+        edu[edu_inf_row] = np.inf
+    if y_inf_row is not None:
+        y[y_inf_row] = np.inf
+    rows = [(a, float(b), float(c)) for a, b, c in zip(g, edu, y)]
+    return spark.createDataFrame(rows, "g string, edu double, y double")
+
+
+@pytest.mark.parametrize("path", ["mean", "rif"])
+@pytest.mark.parametrize("column", ["edu", "y"])
+def test_infinite_values_raise_non_numeric(spark, path, column):
+    """An infinite predictor or outcome is refused on the mean and RIF
+    paths instead of yielding an infinite (or silently filtered) result."""
+    df = _edu_frame(spark, ["A", "B"], **{f"{column}_inf_row": 5})
+    b = OaxacaBuilder(df, "y", "g", "B").predictors(["edu"]).bootstrap_reps(0)
+    with pytest.raises(NonNumericData, match="infinite values") as err:
+        b.run() if path == "mean" else b.decompose_quantile(0.5)
+    assert err.value.column == column
+
+
+def test_extra_group_levels_are_dropped_with_a_warning(spark):
+    """Levels beyond group A and the reference are left out of the
+    comparison; the caller is told which ones."""
+    df = _edu_frame(spark, ["A", "B", "C"])
+    b = OaxacaBuilder(df, "y", "g", "C").predictors(["edu"]).bootstrap_reps(0)
+    with pytest.warns(UserWarning, match=r"dropping \['B'\]"):
+        res = b.run()
+    assert res.n_a + res.n_b < 200

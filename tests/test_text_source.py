@@ -1,79 +1,4 @@
-"""Tests for the raw-text sources (one-doc-per-line and one-doc-per-file)."""
-
-import os
-
-from oaxaca_blinder_rs_spark.sources.text import read_text_files, read_text_lines
-
-
-def test_read_text_lines_row_ids_and_blanks(spark, tmp_path):
-    p = tmp_path / "corpus.txt"
-    p.write_text("first doc\nsecond doc\n\n   \nthird doc\n", encoding="utf-8")
-    df = read_text_lines(spark, str(p))
-    rows = sorted(df.collect(), key=lambda r: r["__row_id__"] if "__row_id__" in r else r[df.columns[-1]])
-    texts = [r["text"] for r in rows]
-    assert texts == ["first doc", "second doc", "third doc"]
-    id_col = [c for c in df.columns if c != "text"][0]
-    assert sorted(r[id_col] for r in rows) == [0, 1, 2]
-
-
-def test_read_text_lines_keep_blanks(spark, tmp_path):
-    p = tmp_path / "c.txt"
-    p.write_text("a\n\nb\n", encoding="utf-8")
-    df = read_text_lines(spark, str(p), drop_blank=False, with_row_id=False)
-    assert df.count() == 3
-
-
-def test_read_text_files_whole_documents(spark, tmp_path):
-    d = tmp_path / "docs"
-    d.mkdir()
-    (d / "a.txt").write_text("alpha body\nwith two lines", encoding="utf-8")
-    (d / "b.txt").write_text("beta body", encoding="utf-8")
-    df = read_text_files(spark, str(d), with_row_id=False)
-    rows = {os.path.basename(r["source_path"]): r["text"] for r in df.collect()}
-    assert rows["a.txt"] == "alpha body\nwith two lines"
-    assert rows["b.txt"] == "beta body"
-
-
-def test_text_lines_feed_the_filter_ops(spark, tmp_path):
-    # ingest composes with the corpus filters: tokenize + quality on raw text
-    from pyspark.sql import functions as F
-
-    from oaxaca_blinder_rs_spark.operators import textops
-
-    p = tmp_path / "c.txt"
-    p.write_text("the quick brown fox\nanother short line\n", encoding="utf-8")
-    df = read_text_lines(spark, str(p), with_row_id=False)
-    out = df.select(textops.token_count(F.col("text")).alias("n")).collect()
-    assert sorted(r["n"] for r in out) == [3, 4]
-
-
-def test_orc_roundtrip_with_row_ids_and_pruning(spark, sf_dir, tmp_path):
-    """ORC source: roundtrip from driver parquet, dense input-order row ids,
-    partition pruning on a hive-partitioned write."""
-    from pyspark.sql import functions as F
-
-    from oaxaca_blinder_rs_spark.sources.orc import read_orc, write_orc
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = str(tmp_path / "docs.orc")
-    write_orc(docs, p)
-    back = read_orc(spark, p)
-    assert back.count() == docs.count()
-    ids = [r[0] for r in back.select("__ob_row_id__").collect()]
-    assert sorted(ids) == list(range(docs.count()))
-    # values survive the roundtrip
-    a = {r["doc_id"]: r["n_chars"] for r in docs.select("doc_id", "n_chars").collect()}
-    b = {r["doc_id"]: r["n_chars"] for r in back.select("doc_id", "n_chars").collect()}
-    assert a == b
-
-    # partitioned write -> the lang filter becomes a partition-pruned scan
-    pp = str(tmp_path / "docs_by_lang.orc")
-    write_orc(docs, pp, partition_by=["lang"])
-    pruned = read_orc(spark, pp, with_row_id=False).filter(F.col("lang") == "en")
-    want = docs.filter(F.col("lang") == "en").count()
-    assert pruned.count() == want
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(lang" in plan or "lang#" in plan
+"""Tests for the JSONL corpus source and sink (round trip)."""
 
 
 def test_jsonl_write_read_roundtrip(spark, sf_dir, tmp_path):

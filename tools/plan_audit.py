@@ -22,8 +22,7 @@ jobs) and scan the executed-plan string for the scale anti-patterns:
   CAVEAT: the printed tree textually duplicates shared subtrees (a frame
   referenced twice prints its upstream exchanges twice) and runtime AQE
   exchange-reuse is invisible here, so the static count OVERSTATES the
-  executed shuffles — e.g. part_triangles prints ~520 Exchange nodes yet
-  executes in ~5 s at sf0.01. Compare trends per query, not across them.
+  executed shuffles. Compare trends per query, not across them.
 
 Usage: python tools/plan_audit.py [--json OUT] [name ...]
 Writes one summary line per query; --json emits the committed artifact.
