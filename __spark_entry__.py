@@ -1141,8 +1141,8 @@ def q_mm_small_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     QuantileDecompositionBuilder.run() — tau draws, per-tau quantile
     regressions, covariate picks, counterfactual prediction, empirical
     quantiles, three-effect decomposition — on a fixed small contract
-    (l_orderkey <= 100 slice, S=12 simulations, B=0, taubatch engine,
-    seed 42). Every stage is replayed in the DuckDB oracle with zero
+    (l_orderkey <= 100 slice, S=12 simulations, B=0, driver exact-LP
+    engine, seed 42). Every stage is replayed in the DuckDB oracle with zero
     shared code: the taus AND the covariate picks come from one PCG64
     chain (pcg64_raw_sql; `uniform` eats whole uint64s, `integers` eats
     buffered 32-bit halves through Lemire rejection — low half first,
@@ -1171,7 +1171,7 @@ def q_mm_small_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .simulations(12)
         .bootstrap_reps(0)
         .seed(42)
-        .fit_engine("taubatch")
+        .fit_engine("driver")
         .run()
     )
     rows = []
@@ -1316,7 +1316,7 @@ def q_machado_mata(spark: SparkSession, sf_dir: str) -> DataFrame:
     production-scale row to a HASH-MATCHED mid-size contract (r7 verdict
     ask #8): l_orderkey <= 400 slice (~1050 A/R rows — scale-factor-
     invariant, the same slice at every SF), S=30 simulations, B=0,
-    taubatch/exact-LP engine, seed 42. The full composition — tau draws,
+    driver exact-LP engine, seed 42. The full composition — tau draws,
     per-tau exact quantile regressions, PCG64/Lemire covariate picks,
     counterfactual prediction, floor-index empirical quantiles, three-
     effect decomposition — is replayed by a zero-shared-code DuckDB
@@ -1340,7 +1340,7 @@ def q_machado_mata(spark: SparkSession, sf_dir: str) -> DataFrame:
         .simulations(30)
         .bootstrap_reps(0)
         .seed(42)
-        .fit_engine("taubatch")
+        .fit_engine("driver")
         .run()
     )
     rows = []

@@ -196,11 +196,9 @@ def bench_mean_kernel(matched_pdf, reps: int = 1) -> float:
 
 
 def bench_mm(spark, df, engine: str, S: int = 60, B: int = 8) -> float:
-    """Machado-Mata quantile decomposition, distributed engines head-to-head:
-    'distributed' = Gram-Newton on the smoothed check loss (pass count
-    independent of reps — the 100x path), 'taubatch' = legacy full-group
-    fan-out (work scales with reps). The bench runs a small config to bound
-    round time."""
+    """Machado-Mata quantile decomposition on the 'distributed' engine:
+    Gram-Newton on the smoothed check loss (pass count independent of reps
+    — the 100x path). The bench runs a small config to bound round time."""
     from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder
 
     t0 = time.time()
@@ -310,7 +308,7 @@ def suspect_queries(
     and per-query flags would be noise, so every timed query is listed.
 
     r9 (verdict item 3): the spread rule cannot flag a single-sample entry
-    — BENCH_r08 recorded mm_taubatch at 32.1 s (judge idle: 13.8 s)
+    — BENCH_r08 recorded an mm_* entry at 32.1 s (judge idle: 13.8 s)
     unflagged because its one sample had nothing to spread against. Every
     timed entry now carries >= 2 samples, AND any entry left with fewer
     than two usable (>50 ms) samples is flagged whenever its recorded
@@ -322,7 +320,7 @@ def suspect_queries(
     r14 (verdict item 2): the mm_* entries record an ADJACENT numpy
     pre-calibration row (``calibration_np_pre_<entry prefix>``) precisely
     so a host bandwidth phase local to that entry can be attributed — but
-    the rule never consulted them, and BENCH_r13 shipped mm_taubatch_s20_b2
+    the rule never consulted them, and BENCH_r13 shipped an mm_* entry
     at 17.5 s (same-tree clean run: 14.0 s) unflagged while its own pre-row
     read 2.5x the np reference. When ``np_ref`` is given, any timed entry
     whose matching np pre-row best exceeds ``np_limit`` x ``np_ref`` is now
@@ -503,7 +501,7 @@ def main():
         "corpus_prepare", bench_corpus_prepare, spark, reps=4, presettle=True
     )
     queries["embedding_cov"] = best("embedding_cov", bench_embedding_cov, spark)
-    # MM engines: fewer retakes — each run is already a long multi-pass job
+    # MM: fewer retakes — each run is already a long multi-pass job
     li_raw = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).filter(
         F.col("l_returnflag").isin(["A", "R"])
     )
@@ -511,8 +509,7 @@ def main():
     # ~2-3x slower (r6 measured cold-full ~85 s vs warm-full 18-35 s —
     # JVM codegen + worker spin-up + BLAS thread-pool init are shape-
     # dependent). The reference baseline measures a resident process, so
-    # the timed samples should be genuinely warm (BASELINE.md protocol);
-    # the taubatch trim below pays for the warm run.
+    # the timed samples should be genuinely warm (BASELINE.md protocol).
     settle(spark)  # the MM engines are the most allocation-heavy group
     bench_mm(spark, li_raw, "distributed")
     # per-entry bandwidth samples (r9 verdict item 8): the MM Gram kernels
@@ -524,20 +521,6 @@ def main():
     )
     queries["mm_gram_s60_b8"] = best(
         "mm_gram_s60_b8", bench_mm, spark, li_raw, "distributed", reps=2, presettle=True
-    )
-    # taubatch is the legacy parity engine (superseded by the Gram path at
-    # scale); keep a tracking entry but at S=20/B=2 — the r5 verdict flagged
-    # ~110 s of bench budget benchmarking a superseded engine at S=60, and
-    # its cost is linear in (B+1) replicated group copies (r7: B=8 took
-    # ~31 s even idle). Parity with the Gram engine, including the
-    # bootstrap path, stays covered by the pytest suite. r9: 2 samples —
-    # a single-sample entry cannot spread-flag its own contention (the
-    # BENCH_r08 32.1 s-vs-13.8 s-idle lesson, verdict item 3).
-    queries["calibration_np_pre_mm_taubatch"] = best(
-        "calibration_np_pre_mm_taubatch", bench_calibration_np
-    )
-    queries["mm_taubatch_s20_b2"] = best(
-        "mm_taubatch_s20_b2", bench_mm, spark, li_raw, "taubatch", reps=2, S=20, B=2, presettle=True
     )
     queries["calibration_post"] = best("calibration_post", bench_calibration, spark)
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["solve_qr", "exact_n_counts"]
+__all__ = ["solve_qr", "exact_n_index", "exact_n_counts"]
 
 # Worker-side memo for deterministic resample multiplicities: Spark reuses
 # Python workers across mapInPandas passes (spark.python.worker.reuse), so the
@@ -28,20 +28,23 @@ _COUNTS_CACHE: dict[tuple, np.ndarray] = {}
 _COUNTS_CACHE_MAX = 256
 
 
-def exact_n_counts(seed: int, rep: int, side: int, n: int) -> np.ndarray:
-    """Multiplicity vector of the deterministic exact-n bootstrap resample.
+def exact_n_index(seed: int, rep: int, side: int, n: int) -> np.ndarray:
+    """Row ranks of the deterministic exact-n bootstrap resample of one
+    (replicate, side): ``default_rng([seed, 11, rep, side]).integers(0, n, n)``.
+    The Machado-Mata driver engine fits the materialized resample, and both
+    engines translate simulation picks back to original rows through it."""
+    return np.random.default_rng([int(seed), 11, int(rep), int(side)]).integers(0, n, size=n)
 
-    Same stream as the Machado-Mata tau-batch engine's in-task resample
-    (``default_rng([seed, 11, rep, side]).integers(0, n, n)``) — a weighted
-    fit with these multiplicities is the identical estimator to fitting the
-    materialized resample, so both engines share one bootstrap definition and
-    the driver's simulation-pick translation.
+
+def exact_n_counts(seed: int, rep: int, side: int, n: int) -> np.ndarray:
+    """Multiplicity vector of ``exact_n_index``: a weighted fit with these
+    multiplicities is the identical estimator to fitting the materialized
+    resample, so the Gram-Newton engine weights rows instead of copying them.
     """
     key = (int(seed), int(rep), int(side), int(n))
     c = _COUNTS_CACHE.get(key)
     if c is None:
-        idx = np.random.default_rng([key[0], 11, key[1], key[2]]).integers(0, n, size=n)
-        c = np.bincount(idx, minlength=n).astype(np.int32)
+        c = np.bincount(exact_n_index(*key), minlength=n).astype(np.int32)
         if len(_COUNTS_CACHE) >= _COUNTS_CACHE_MAX:
             _COUNTS_CACHE.clear()
         _COUNTS_CACHE[key] = c

@@ -2,11 +2,11 @@
 
 Reference: /root/reference/oaxaca_blinder/src/quantile_decomposition.rs.
 
-Three fit engines, one semantics:
+Two fit engines, one orchestration (``run``):
 
-- 'driver': collect group matrices once, thread-pooled NumPy fits — the
-  reference's rayon design (quantile_decomposition.rs:221-229), guarded by
-  COLLECT_LIMIT_CELLS;
+- 'driver': collect both groups' matrices once, thread-pooled exact-LP fits
+  (solve_qr_exact) — the reference's rayon design
+  (quantile_decomposition.rs:221-229), guarded by COLLECT_LIMIT_CELLS;
 - 'distributed' (scale path): Gram-Newton on the convolution-smoothed check
   loss (conquer-style smoothed QR) — every (replicate, group, tau) quantile
   regression iterates simultaneously, each Newton iteration one mapInPandas
@@ -14,9 +14,12 @@ Three fit engines, one semantics:
   statistics ever reach the driver, data never duplicates across replicates
   or taus. Smoothing (h = 0.01 x sd) makes the optimum unique, so the
   distributed reduce's summation order cannot move the argmin along the
-  check loss's flat faces (it moved IRLS by ~0.3% of outcome scale);
-- 'taubatch' (legacy): per-tau-batch fan-out where each task holds one full
-  group — kept for parity testing.
+  check loss's flat faces (it moved IRLS by ~0.3% of outcome scale).
+
+The engines differ only in how they produce the per-(replicate, side) beta
+lists. Everything else is shared: the seeded streams, the failed-replicate
+rule, the simulation picks, the effects and the bootstrap assembly, so an
+engine switch moves results only through the QR solver.
 
 Determinism: tau draws, simulation row picks and bootstrap resamples all come
 from numpy Generators seeded from the builder seed (the reference uses
@@ -25,18 +28,17 @@ thread_rng — unseeded; we improve on that, SURVEY §7.1).
 
 from __future__ import annotations
 
-import math
 import warnings
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .errors import InvalidGroupVariable, OaxacaError
+from .errors import InvalidGroupVariable, NonNumericData, OaxacaError
 from .operators.bootstrap import bootstrap_stats
-from .operators.quantile_regression import solve_qr, solve_qr_exact
+from .operators.quantile_regression import exact_n_index, solve_qr_exact
 from .results import ComponentResult
 
 INTERCEPT = "__ob_intercept__"
@@ -51,7 +53,7 @@ GRAM_H0_FRAC = 0.5
 # r8: SHRINK 0.125 (target h one pass earlier) was tried and reverted —
 # the tied parity fixture's flat faces need the gentler 0.25 homotopy
 # (the 8x per-pass h jump overshoots the moving optimum and the damped
-# iterate lands on a different face vertex than taubatch's LP solution).
+# iterate lands on a different face vertex than the exact LP solution).
 # r12: (H0 0.125, SHRINK 0.1) and (H0 0.25, SHRINK 0.25) prototyped for the
 # cadence ask — 15-18% faster at sf0.1 (in-process ABAB, value drift
 # <= 7.3e-12) but BOTH strand a degenerate small-n bootstrap resample of
@@ -86,7 +88,6 @@ GRAM_ADAPT_MIN_RESID_RATIO = 0.25
 GRAM_ADAPT_MIN_KERNEL_MASS = 64.0
 
 
-
 @dataclass
 class QuantileDecompositionDetail:
     total_gap: ComponentResult
@@ -101,6 +102,9 @@ class QuantileDecompositionResults:
     results_by_quantile: dict[str, QuantileDecompositionDetail]
     n_a: int
     n_b: int
+    # bootstrap replicates dropped because fewer than S/2 of a side's
+    # quantile regressions converged; the SEs come from the rest
+    n_failed_reps: int = 0
 
     def summary(self) -> str:
         lines = ["Machado-Mata Quantile Decomposition", "=" * 40,
@@ -126,18 +130,63 @@ def _empirical_quantile(data: np.ndarray, q: float) -> float:
     return float(s[idx])
 
 
+def _rep_streams(seed: int, S: int, rep: int) -> tuple[np.ndarray, np.random.Generator]:
+    """Replicate ``rep``'s S tau draws on [0.01, 0.99) and its simulation-pick
+    generator, shared by both engines. Rep -1 (the point pass) draws the taus
+    and then the picks from one default_rng(seed); rep r >= 0 draws taus from
+    default_rng([seed, 7, r]) and picks from default_rng([seed, 13, r]), and
+    fits side s on the resample ``exact_n_index(seed, r, s, n)``."""
+    if rep < 0:
+        rng = np.random.default_rng(seed)
+        return rng.uniform(0.01, 0.99, size=S), rng
+    return (
+        np.random.default_rng([seed, 7, rep]).uniform(0.01, 0.99, size=S),
+        np.random.default_rng([seed, 13, rep]),
+    )
+
+
 def mm_tau_stream(seed: int, S: int, rep: int = -1) -> np.ndarray:
     """The Machado-Mata tau draw stream, exactly as the engines consume it
-    (quantile_decomposition.rs:96-101 semantics): rep -1 (the point pass)
-    draws S uniforms on [0.01, 0.99) from a fresh default_rng(seed); rep
-    r >= 0 from default_rng([seed, 7, r]). Public so the driver contract
-    can pin the stream itself: the mm_tau_stream oracle replays SeedSequence
-    + PCG64 + the uniform transform in DuckDB SQL (functions/pcg64_sql.py)
-    and hash-matches these doubles BIT-FOR-BIT — the simulation entropy is
-    no longer an un-oracle-able input."""
-    if rep < 0:
-        return np.random.default_rng(seed).uniform(0.01, 0.99, size=S)
-    return np.random.default_rng([seed, 7, rep]).uniform(0.01, 0.99, size=S)
+    (quantile_decomposition.rs:96-101 semantics; ``_rep_streams``). Public so
+    the driver contract can pin the stream itself: the mm_tau_stream oracle
+    replays SeedSequence + PCG64 + the uniform transform in DuckDB SQL
+    (functions/pcg64_sql.py) and hash-matches these doubles BIT-FOR-BIT — the
+    simulation entropy is no longer an un-oracle-able input."""
+    return _rep_streams(seed, S, rep)[0]
+
+
+def _raise_if_infinite(names: list[str], finite) -> None:
+    """NonNumericData for the first column whose ``finite`` flag is False
+    (names: the outcome, then the design columns)."""
+    for name, ok in zip(names, finite):
+        if not ok:
+            raise NonNumericData(name, "infinite values")
+
+
+def _effects(quantiles, row_of, ba, bb, rank_a, rank_b) -> dict[str, tuple[float, float, float]]:
+    """quantile_decomposition.rs:231-279: predict each simulated row with
+    its own tau's betas (A rows x A betas, B x B, and the counterfactual A
+    rows x B betas), then the floor-index quantiles of the three samples
+    give (gap, characteristics, coefficients). ``row_of(side, rank)`` is the
+    engine's covariate row lookup."""
+    m = len(rank_a)
+    y_aa = np.array([row_of(0, rank_a[i]) @ ba[i] for i in range(m)])
+    y_bb = np.array([row_of(1, rank_b[i]) @ bb[i] for i in range(m)])
+    y_ab = np.array([row_of(0, rank_a[i]) @ bb[i] for i in range(m)])
+    out = {}
+    for tau in quantiles:
+        q_aa = _empirical_quantile(y_aa, tau)
+        q_bb = _empirical_quantile(y_bb, tau)
+        q_ab = _empirical_quantile(y_ab, tau)
+        out[f"q{int(tau * 100)}"] = (q_aa - q_bb, q_ab - q_bb, q_aa - q_ab)
+    return out
+
+
+def _component(name: str, est: float, dist: list[float]) -> ComponentResult:
+    se, p, (lo, hi) = bootstrap_stats(dist, est)
+    t = est / se if (se == se and abs(se) > 1e-9) else 0.0
+    return ComponentResult(name=name, estimate=est, std_err=se, t_stat=t,
+                           p_value=p, ci_lower=lo, ci_upper=hi)
 
 
 class QuantileDecompositionBuilder:
@@ -209,13 +258,12 @@ class QuantileDecompositionBuilder:
         ``exact_n_counts`` — so shuffle volume is O(n) per iteration and
         driver traffic is O(models x k^2), independent of n.
 
-        'taubatch' (legacy distributed): replicate x tau-batch fan-out via
-        applyInPandas where each executor task holds ONE group's full rows —
-        n x (B+1) x n_batches rows cross the shuffle. Kept for parity
-        testing; superseded by the Gram engine at scale.
+        Both engines read the same seeded streams (tau draws, exact-n
+        resamples, simulation picks), so bootstrap standard errors differ
+        between them only through the QR solver.
         """
-        if engine not in ("auto", "driver", "distributed", "taubatch"):
-            raise ValueError("fit engine must be 'auto', 'driver', 'distributed' or 'taubatch'")
+        if engine not in ("auto", "driver", "distributed"):
+            raise ValueError("fit engine must be 'auto', 'driver' or 'distributed'")
         self._fit_engine = engine
         return self
 
@@ -256,99 +304,57 @@ class QuantileDecompositionBuilder:
         self._design_cache = (df, xcols, group_a, group_b)
         return self._design_cache
 
-    def _prepare(self):
-        df, xcols, group_a, group_b = self._prepare_design()
-        out = {}
-        for g in (group_a, group_b):
-            sub = df.filter(F.col(self._group) == F.lit(g)).select(*xcols, self._outcome)
-            n_rows = sub.count()
-            if n_rows * len(xcols) > COLLECT_LIMIT_CELLS:
-                # guard BEFORE collecting — the old post-toPandas check could
-                # OOM the driver on the way to raising
-                raise OaxacaError(
-                    "Group matrix exceeds the driver collect limit for Machado-Mata; "
-                    "use fit_engine('distributed') (or 'auto'), or raise COLLECT_LIMIT_CELLS"
-                )
-            pdf = sub.toPandas()
-            if len(pdf) < 2:
+    # -- driver engine ----------------------------------------------------------
+    def _driver_engine(self, design, xcols, group_a, taus_by_rep):
+        """One collect of both sides, then thread-pooled exact-LP fits
+        (quantile_decomposition.rs:173-229). A row's rank is its index in
+        the collected side array — the same order as the Gram engine's
+        ``__mm_rn``. ``run`` has already row-guarded the collect."""
+        pdf = design.select(self._group, self._outcome, *xcols).toPandas()
+        X, y = [], []
+        for in_a in (True, False):
+            sub = pdf[(pdf[self._group] == group_a) == in_a]
+            if len(sub) < 2:
                 raise InvalidGroupVariable("One group has insufficient data")
-            X = pdf[xcols].to_numpy(dtype=np.float64)
-            y = pdf[self._outcome].to_numpy(dtype=np.float64)
-            out[g] = (X, y)
-        return out[group_a], out[group_b], group_a, group_b
-
-    # -- single pass (quantile_decomposition.rs:173-279) -----------------------
-    def _single_pass(self, Xa, ya, Xb, yb, rng: np.random.Generator):
-        S = self._simulations
-        taus = rng.uniform(0.01, 0.99, size=S)
+            X.append(sub[xcols].to_numpy(dtype=np.float64))
+            y.append(sub[self._outcome].to_numpy(dtype=np.float64))
+        _raise_if_infinite(
+            [self._outcome] + xcols,
+            np.logical_and(*(np.r_[np.isfinite(y[s]).all(), np.isfinite(X[s]).all(axis=0)]
+                             for s in (0, 1))),
+        )
 
         def fit(args):
-            X, y, tau = args
+            Xs, ys, tau = args
             try:
-                return solve_qr_exact(X, y, tau)
+                return solve_qr_exact(Xs, ys, tau)
             except Exception:
                 return None
 
+        betas: dict[tuple[int, int], list[np.ndarray]] = {}
         with ThreadPoolExecutor(max_workers=self._threads) as pool:
-            betas_a = [b for b in pool.map(fit, [(Xa, ya, t) for t in taus]) if b is not None]
-            betas_b = [b for b in pool.map(fit, [(Xb, yb, t) for t in taus]) if b is not None]
+            for r, taus in taus_by_rep.items():
+                fits = {}
+                for s in (0, 1):
+                    Xs, ys = X[s], y[s]
+                    if r >= 0:
+                        idx = exact_n_index(self._seed, r, s, len(ys))
+                        Xs, ys = Xs[idx], ys[idx]
+                    fits[s] = pool.map(fit, [(Xs, ys, t) for t in taus])
+                for s, it in fits.items():
+                    betas[(r, s)] = [b for b in it if b is not None]
+        # every row is already here: the row lookup needs no fetch
+        return len(y[0]), len(y[1]), betas, lambda needed: lambda s, i: X[s][i]
 
-        if len(betas_a) < S / 2 or len(betas_b) < S / 2:
-            raise OaxacaError("Failed to estimate a sufficient number of quantile regressions.")
-
-        m = min(len(betas_a), len(betas_b))
-        idx_a = rng.integers(0, Xa.shape[0], size=m)
-        idx_b = rng.integers(0, Xb.shape[0], size=m)
-        y_aa = np.array([Xa[idx_a[i]] @ betas_a[i] for i in range(m)])
-        y_bb = np.array([Xb[idx_b[i]] @ betas_b[i] for i in range(m)])
-        y_ab = np.array([Xa[idx_a[i]] @ betas_b[i] for i in range(m)])
-
-        effects = {}
-        for tau in self._quantiles:
-            q_aa = _empirical_quantile(y_aa, tau)
-            q_bb = _empirical_quantile(y_bb, tau)
-            q_ab = _empirical_quantile(y_ab, tau)
-            effects[f"q{int(tau * 100)}"] = (
-                q_aa - q_bb,      # gap
-                q_ab - q_bb,      # characteristics
-                q_aa - q_ab,      # coefficients
-            )
-        return effects
-
-    # -- distributed engines --------------------------------------------------
-    def _run_distributed(self, strategy: str = "gram") -> QuantileDecompositionResults:
-        """Shared distributed orchestration: prepare + rank rows, draw taus,
-        fit every (replicate, group, tau) quantile regression via the chosen
-        strategy ('gram' = per-iteration weighted Gram aggregation, 'taubatch'
-        = legacy full-group fan-out), then run the simulation/effects stage on
-        the driver from the S x k beta table and the sampled covariate rows.
-
-        Bootstrap: exact-n resampling is defined by a deterministic
-        per-(rep, side) stream (numpy SeedSequence of [seed, 11, rep, side]);
-        executors regenerate it in-task (taubatch materializes the resample,
-        gram uses its multiplicity vector as weights — identical estimator)
-        and the driver regenerates the identical index array to translate
-        simulation picks back to original row ranks, so no resampled data is
-        ever shuffled and reruns reproduce exactly. RNG stream layout differs
-        from the driver engine (independent per-rep streams instead of one
-        sequential rng); statistically equivalent, documented divergence.
-        """
+    # -- distributed (Gram) engine ------------------------------------------------
+    def _gram_engine(self, design, xcols, group_a, group_b, taus_by_rep):
+        """Rank rows per group, fit every (replicate, side, tau) model with
+        ``_fit_gram`` and collect only the covariate rows the simulation
+        picks. Exact-n resamples enter as multiplicity weights
+        (``exact_n_counts``), so no resampled data is ever shuffled."""
         from pyspark.sql import Window
 
-        design, xcols, group_a, group_b = self._prepare_design()
-        design = design.filter(F.col(self._group).isin([group_a, group_b]))
         spark = design.sparkSession
-        B = self._bootstrap_reps
-        S = self._simulations
-        seed = self._seed
-
-        # tau draws: rep -1 (point pass) consumes default_rng(seed) exactly as
-        # before; bootstrap reps use independent spawned streams
-        rng0 = np.random.default_rng(seed)
-        taus_by_rep = {-1: rng0.uniform(0.01, 0.99, size=S)}
-        for r in range(B):
-            taus_by_rep[r] = np.random.default_rng([seed, 7, r]).uniform(0.01, 0.99, size=S)
-
         # stable per-group row rank: fixes row order inside executor tasks
         # (and the driver's pick translation); checkpoint pins the ids.
         # A window partitioned only by group would funnel each group through
@@ -389,177 +395,21 @@ class QuantileDecompositionBuilder:
             .drop("__mm_pid", "__mm_off")
         )
         n_a, n_b = int(running[group_a]), int(running[group_b])
+        betas = self._fit_gram(spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b)
 
-        if strategy == "taubatch":
-            betas = self._fit_taubatch(
-                spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
-            )
-        else:
-            betas = self._fit_gram(
-                spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
-            )
+        def rows(needed: dict[int, set[int]]):
+            want = ranked.filter(
+                ((F.col(self._group) == group_a) & F.col("__mm_rn").isin(sorted(needed[0])))
+                | ((F.col(self._group) == group_b) & F.col("__mm_rn").isin(sorted(needed[1])))
+            ).select(self._group, "__mm_rn", *xcols).collect()
+            rows_by = {
+                (0 if r_[self._group] == group_a else 1, int(r_["__mm_rn"])):
+                    np.array([float(r_[c]) for c in xcols])
+                for r_ in want
+            }
+            return lambda s, i: rows_by[(s, int(i))]
 
-        # per-rep simulation plan: translate picks into original row ranks
-        plans: dict[int, dict] = {}
-        needed: dict[str, set[int]] = {group_a: set(), group_b: set()}
-        failed = 0
-        for r in range(-1, B):
-            ba = betas.get((r, 0), [])
-            bb = betas.get((r, 1), [])
-            if len(ba) < S / 2 or len(bb) < S / 2:
-                if r == -1:
-                    raise OaxacaError(
-                        "Failed to estimate a sufficient number of quantile regressions."
-                    )
-                failed += 1
-                continue
-            m = min(len(ba), len(bb))
-            if r == -1:
-                idx_a = rng0.integers(0, n_a, size=m)
-                idx_b = rng0.integers(0, n_b, size=m)
-                rank_a, rank_b = idx_a, idx_b
-            else:
-                rs = np.random.default_rng([seed, 13, r])
-                idx_a = rs.integers(0, n_a, size=m)
-                idx_b = rs.integers(0, n_b, size=m)
-                ia = np.random.default_rng([seed, 11, r, 0]).integers(0, n_a, size=n_a)
-                ib = np.random.default_rng([seed, 11, r, 1]).integers(0, n_b, size=n_b)
-                rank_a, rank_b = ia[idx_a], ib[idx_b]
-            plans[r] = {"ba": ba, "bb": bb, "rank_a": rank_a, "rank_b": rank_b, "m": m}
-            needed[group_a].update(int(i) for i in rank_a)
-            needed[group_b].update(int(i) for i in rank_b)
-        if failed:
-            warnings.warn(
-                f"{failed} out of {B} bootstrap replications failed and "
-                f"were discarded. The analysis is based on {B - failed} successful "
-                "replications.",
-                stacklevel=2,
-            )
-
-        want = ranked.filter(
-            ((F.col(self._group) == group_a) & F.col("__mm_rn").isin(sorted(needed[group_a])))
-            | ((F.col(self._group) == group_b) & F.col("__mm_rn").isin(sorted(needed[group_b])))
-        ).select(self._group, "__mm_rn", *xcols).collect()
-        rows_by = {}
-        for r_ in want:
-            rows_by[(r_[self._group], int(r_["__mm_rn"]))] = np.array(
-                [float(r_[c]) for c in xcols]
-            )
-
-        def effects_for(plan) -> dict[str, tuple[float, float, float]]:
-            m = plan["m"]
-            y_aa = np.array(
-                [rows_by[(group_a, int(plan["rank_a"][i]))] @ plan["ba"][i] for i in range(m)]
-            )
-            y_bb = np.array(
-                [rows_by[(group_b, int(plan["rank_b"][i]))] @ plan["bb"][i] for i in range(m)]
-            )
-            y_ab = np.array(
-                [rows_by[(group_a, int(plan["rank_a"][i]))] @ plan["bb"][i] for i in range(m)]
-            )
-            out = {}
-            for tau in self._quantiles:
-                q_aa = _empirical_quantile(y_aa, tau)
-                q_bb = _empirical_quantile(y_bb, tau)
-                q_ab = _empirical_quantile(y_ab, tau)
-                out[f"q{int(tau * 100)}"] = (q_aa - q_bb, q_ab - q_bb, q_aa - q_ab)
-            return out
-
-        point = effects_for(plans[-1])
-        boot = [effects_for(plans[r]) for r in range(B) if r in plans]
-
-        def comp(name, est, dist):
-            se, p, (lo, hi) = bootstrap_stats(dist, est)
-            t = est / se if (se == se and abs(se) > 1e-9) else 0.0
-            return ComponentResult(name=name, estimate=est, std_err=se, t_stat=t,
-                                   p_value=p, ci_lower=lo, ci_upper=hi)
-
-        results = {}
-        for key, (gap, char, coeff) in point.items():
-            results[key] = QuantileDecompositionDetail(
-                total_gap=comp("Total Gap", gap, [b[key][0] for b in boot if key in b]),
-                characteristics_effect=comp(
-                    "Characteristics", char, [b[key][1] for b in boot if key in b]
-                ),
-                coefficients_effect=comp(
-                    "Coefficients", coeff, [b[key][2] for b in boot if key in b]
-                ),
-            )
-        return QuantileDecompositionResults(
-            results_by_quantile=results, n_a=n_a, n_b=n_b
-        )
-
-    def _fit_taubatch(
-        self, spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
-    ) -> dict[tuple[int, int], list[np.ndarray]]:
-        """Legacy fan-out: applyInPandas over (rep, group, tau-batch) keys —
-        each executor task holds ONE group's full rows (materializing the
-        exact-n resample for rep >= 0) and fits its batch of taus with
-        ``solve_qr``. n x (B+1) x n_batches rows cross the shuffle."""
-        import pandas as pd
-
-        B = self._bootstrap_reps
-        S = self._simulations
-        seed = self._seed
-
-        # sizing: (B+1) x 2 groups x n_batches tasks; shrink batches as the
-        # replicate dimension supplies parallelism (data shipped scales with
-        # reps x batches)
-        par = spark.sparkContext.defaultParallelism
-        total_keys = (B + 1) * 2
-        n_batches = max(1, min(16, math.ceil(par / total_keys)))
-        batch_assign = {b: [i for i in range(S) if i % n_batches == b] for b in range(n_batches)}
-        taus_payload = {
-            (r, b): [(i, float(taus_by_rep[r][i])) for i in batch_assign[b]]
-            for r in range(-1, B)
-            for b in range(n_batches)
-        }
-        rb_df = spark.createDataFrame(
-            [(r, b) for r in range(-1, B) for b in range(n_batches)],
-            "__mm_rep int, __mm_batch int",
-        )
-        # project to the columns fit_batch reads BEFORE replicating: every
-        # surviving byte crosses the shuffle (B+1) x n_batches times, so the
-        # dead __mm_mid (and anything else the design carries) is multiplied
-        # dead weight. Output-identical: fit_batch sorts by __mm_rn and reads
-        # named columns only.
-        thin = ranked.select(self._group, self._outcome, *xcols, "__mm_rn")
-        replicated = thin.crossJoin(F.broadcast(rb_df))
-
-        outcome = self._outcome
-        xcols_local = list(xcols)
-        ga = group_a
-
-        def fit_batch(key, pdf):
-            rep, gval, batch = int(key[0]), key[1], int(key[2])
-            pdf = pdf.sort_values("__mm_rn")
-            X = pdf[xcols_local].to_numpy(dtype=np.float64)
-            y = pdf[outcome].to_numpy(dtype=np.float64)
-            if rep >= 0:  # exact-n resample with replacement, deterministic
-                side = 0 if gval == ga else 1
-                idx = np.random.default_rng([seed, 11, rep, side]).integers(0, len(y), size=len(y))
-                X, y = X[idx], y[idx]
-            out = []
-            for ti, tau in taus_payload[(rep, batch)]:
-                try:
-                    beta = solve_qr_exact(X, y, tau)
-                    out.append((rep, gval, int(ti), [float(v) for v in beta], True))
-                except Exception:
-                    out.append((rep, gval, int(ti), [], False))
-            return pd.DataFrame(out, columns=["rep", "grp", "tau_idx", "beta", "ok"])
-
-        beta_rows = (
-            replicated.groupBy("__mm_rep", self._group, "__mm_batch")
-            .applyInPandas(fit_batch, "rep int, grp string, tau_idx int, beta array<double>, ok boolean")
-            .collect()
-        )
-        betas: dict[tuple[int, int], list[np.ndarray]] = {}
-        for row in sorted(
-            (r for r in beta_rows if r["ok"]), key=lambda r: (int(r["rep"]), int(r["tau_idx"]))
-        ):
-            side = 0 if row["grp"] == group_a else 1
-            betas.setdefault((int(row["rep"]), side), []).append(np.array(row["beta"]))
-        return betas
+        return n_a, n_b, betas, rows
 
     def _fit_gram(
         self, spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
@@ -787,6 +637,14 @@ class QuantileDecompositionBuilder:
             s: {"mode": "ols", "ureps": np.array(rep_list, dtype=np.int64)} for s in (0, 1)
         }
         init_stats = run_pass(init_payload)
+        # +-Infinity shows in the point pass's unit-weight column (rep -1 is
+        # column 0) at no extra Spark work: an infinite predictor makes its
+        # Gram diagonal infinite, an infinite outcome its sum of squares
+        diag = [tri.index((i, i)) for i in range(k)]
+        _raise_if_infinite(
+            [outcome] + xcols,
+            np.logical_and(*(np.isfinite(init_stats[s][[L + k + 2] + diag, 0]) for s in (0, 1))),
+        )
         model_h = np.zeros(M)  # target bandwidth per model
         # per-model anneal START as a multiple of the target bandwidth;
         # default = the proven conservative schedule, lowered per model only
@@ -914,45 +772,69 @@ class QuantileDecompositionBuilder:
         return betas
 
     def run(self) -> QuantileDecompositionResults:
+        design, xcols, group_a, group_b = self._prepare_design()
+        design = design.filter(F.col(self._group).isin([group_a, group_b]))
         engine = self._fit_engine
-        if engine == "auto":
-            # row-guard the engine choice like AkmBuilder.engine("auto"):
-            # full-data exact fits on the driver while the design fits the
-            # collect limit, the distributed Gram engine past it
-            df, xcols, ga, gb = self._prepare_design()
-            n = df.filter(F.col(self._group).isin([ga, gb])).count()
-            engine = "driver" if n * len(xcols) <= COLLECT_LIMIT_CELLS else "distributed"
-        if engine == "distributed":
-            return self._run_distributed("gram")
-        if engine == "taubatch":
-            return self._run_distributed("taubatch")
-        (Xa, ya), (Xb, yb), group_a, group_b = self._prepare()
-        rng = np.random.default_rng(self._seed)
-        point = self._single_pass(Xa, ya, Xb, yb, rng)
+        if engine != "distributed":
+            # one row guard, counted BEFORE collecting: 'auto' (like
+            # AkmBuilder.engine("auto")) fits exactly on the driver while the
+            # design fits the collect limit and falls back to the Gram engine
+            # past it; an explicit 'driver' raises instead of risking an OOM
+            fits = design.count() * len(xcols) <= COLLECT_LIMIT_CELLS
+            if engine == "driver" and not fits:
+                raise OaxacaError(
+                    "Group matrices exceed the driver collect limit for Machado-Mata; "
+                    "use fit_engine('distributed') (or 'auto'), or raise COLLECT_LIMIT_CELLS"
+                )
+            engine = "driver" if fits else "distributed"
+        S, B, seed = self._simulations, self._bootstrap_reps, self._seed
+        streams = {r: _rep_streams(seed, S, r) for r in range(-1, B)}
+        taus_by_rep = {r: taus for r, (taus, _) in streams.items()}
+        # each engine returns the side sizes, betas[(rep, side)] (the fits
+        # that converged, in tau order) and rows(needed), which turns the
+        # per-side row ranks the picks need into a row_of(side, rank) lookup
+        if engine == "driver":
+            n_a, n_b, betas, rows = self._driver_engine(design, xcols, group_a, taus_by_rep)
+        else:
+            n_a, n_b, betas, rows = self._gram_engine(design, xcols, group_a, group_b, taus_by_rep)
 
-        boot = []
-        for rep in range(self._bootstrap_reps):
-            rep_rng = np.random.default_rng(self._seed + 1000 + rep)
-            ia = rep_rng.integers(0, Xa.shape[0], size=Xa.shape[0])
-            ib = rep_rng.integers(0, Xb.shape[0], size=Xb.shape[0])
-            try:
-                boot.append(self._single_pass(Xa[ia], ya[ia], Xb[ib], yb[ib], rep_rng))
-            except OaxacaError:
+        # per-replicate simulation plan, picks translated to original row ranks
+        plans, failed, needed = {}, 0, {0: set(), 1: set()}
+        for r, (_, pick_rng) in streams.items():
+            ba, bb = betas.get((r, 0), []), betas.get((r, 1), [])
+            if len(ba) < S / 2 or len(bb) < S / 2:
+                if r < 0:
+                    raise OaxacaError("Failed to estimate a sufficient number of quantile regressions.")
+                failed += 1
                 continue
-
-        def comp(name, est, dist):
-            se, p, (lo, hi) = bootstrap_stats(dist, est)
-            t = est / se if (se == se and abs(se) > 1e-9) else 0.0
-            return ComponentResult(name=name, estimate=est, std_err=se, t_stat=t,
-                                   p_value=p, ci_lower=lo, ci_upper=hi)
-
-        results = {}
-        for key, (gap, char, coeff) in point.items():
-            results[key] = QuantileDecompositionDetail(
-                total_gap=comp("Total Gap", gap, [b[key][0] for b in boot if key in b]),
-                characteristics_effect=comp("Characteristics", char, [b[key][1] for b in boot if key in b]),
-                coefficients_effect=comp("Coefficients", coeff, [b[key][2] for b in boot if key in b]),
+            m = min(len(ba), len(bb))
+            rank_a = pick_rng.integers(0, n_a, size=m)
+            rank_b = pick_rng.integers(0, n_b, size=m)
+            if r >= 0:
+                rank_a = exact_n_index(seed, r, 0, n_a)[rank_a]
+                rank_b = exact_n_index(seed, r, 1, n_b)[rank_b]
+            plans[r] = (ba, bb, rank_a, rank_b)
+            needed[0].update(rank_a.tolist())
+            needed[1].update(rank_b.tolist())
+        if failed:
+            warnings.warn(
+                f"{failed} out of {B} bootstrap replications failed and "
+                f"were discarded. The analysis is based on {B - failed} successful "
+                "replications.",
+                stacklevel=2,
             )
+
+        row_of = rows(needed)
+        effects = {r: _effects(self._quantiles, row_of, *plan) for r, plan in plans.items()}
+        point = effects.pop(-1)
+        boot = list(effects.values())
+        names = ("Total Gap", "Characteristics", "Coefficients")
+        results = {
+            key: QuantileDecompositionDetail(*(
+                _component(name, est[j], [b[key][j] for b in boot]) for j, name in enumerate(names)
+            ))
+            for key, est in point.items()
+        }
         return QuantileDecompositionResults(
-            results_by_quantile=results, n_a=Xa.shape[0], n_b=Xb.shape[0]
+            results_by_quantile=results, n_a=n_a, n_b=n_b, n_failed_reps=failed
         )

@@ -44,7 +44,7 @@ def get_spark(app_name: str = "oaxaca-blinder-spark", shuffle_partitions: int | 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers.
 
-    Pandas-UDF closures (fused bootstrap GEMM, Machado-Mata tau-batch fits)
+    Pandas-UDF closures (fused bootstrap GEMM, Machado-Mata Gram passes)
     reference package modules by name, so workers must be able to import
     ``oaxaca_blinder_rs_spark`` — guaranteed only when the driver runs from
     the repo root or the package is pip-installed. Shipping a zip via

@@ -149,8 +149,8 @@ def test_matching_lsh_approximate(spark):
 
 
 def test_machado_mata_distributed_engine(spark):
-    """Distributed tau-batch fan-out: same identities, comparable estimates
-    to the driver engine on the same data."""
+    """The distributed Gram-Newton engine: same identities, comparable
+    estimates to the driver engine on the same data."""
     wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
     edu = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
     gender = (["F"] * 5 + ["M"] * 5) * 4
@@ -177,22 +177,31 @@ def test_machado_mata_distributed_engine(spark):
     assert abs(d.total_gap.estimate - rv.results_by_quantile["q50"].total_gap.estimate) < 4.0
 
 
-def test_machado_mata_gram_vs_taubatch_parity(spark):
-    """The Gram-Newton engine and the legacy tau-batch fan-out share taus,
-    resample streams and simulation picks — so they differ only through the
-    QR solver. Bound 2.0 (~20% of the gap): this fixture's tied rows create
-    genuinely FLAT optimal faces (see test_qr_degenerate_tie_case_bounded);
-    taubatch's solve_qr_exact lands on an LP VERTEX of the face while the
-    Gram engine minimizes the h-smoothed loss whose unique optimum sits near
-    the face's center — the maximal possible argmin spread, by construction.
-    On non-degenerate real data the driver/taubatch engines are LP-exact
-    (test_machado_mata_matches_independent_oracle at 1e-6) and the Gram
-    engine matches the exact-vertex oracle within its documented smoothed
-    bound (test_machado_mata_gram_engine_matches_independent_oracle)."""
+def tied_mm_df(spark, wage_edit=None, edu_edit=None):
+    """The small tied fixture the Machado-Mata tests share; ``*_edit`` maps
+    a row index to a replacement value."""
     wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
     edu = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
     gender = (["F"] * 5 + ["M"] * 5) * 4
-    df = spark.createDataFrame(list(zip(wage, edu, gender)), ["wage", "education", "gender"])
+    for col, edit in ((wage, wage_edit), (edu, edu_edit)):
+        for i, v in (edit or {}).items():
+            col[i] = v
+    return spark.createDataFrame(list(zip(wage, edu, gender)), ["wage", "education", "gender"])
+
+
+def test_machado_mata_gram_vs_driver_parity(spark):
+    """The Gram-Newton and driver engines share taus, resample streams and
+    simulation picks — so they differ only through the QR solver. Bound 2.0
+    (~20% of the gap): this fixture's tied rows create genuinely FLAT
+    optimal faces (see test_qr_degenerate_tie_case_bounded); the driver's
+    solve_qr_exact lands on an LP VERTEX of the face while the Gram engine
+    minimizes the h-smoothed loss whose unique optimum sits near the face's
+    center — the maximal possible argmin spread, by construction. On
+    non-degenerate real data the driver engine is LP-exact
+    (test_machado_mata_matches_independent_oracle at 1e-6) and the Gram
+    engine matches the exact-vertex oracle within its documented smoothed
+    bound (test_machado_mata_gram_engine_matches_independent_oracle)."""
+    df = tied_mm_df(spark)
 
     def build(engine):
         return (
@@ -206,19 +215,110 @@ def test_machado_mata_gram_vs_taubatch_parity(spark):
             .run()
         )
 
-    rg, rt = build("distributed"), build("taubatch")
+    rg, rd = build("distributed"), build("driver")
     for key in rg.results_by_quantile:
-        dg, dt = rg.results_by_quantile[key], rt.results_by_quantile[key]
-        assert dg.total_gap.estimate == pytest.approx(dt.total_gap.estimate, abs=2.0)
+        dg, dd = rg.results_by_quantile[key], rd.results_by_quantile[key]
+        assert dg.total_gap.estimate == pytest.approx(dd.total_gap.estimate, abs=2.0)
         assert dg.characteristics_effect.estimate == pytest.approx(
-            dt.characteristics_effect.estimate, abs=2.0
+            dd.characteristics_effect.estimate, abs=2.0
         )
-        assert dg.total_gap.std_err == pytest.approx(dt.total_gap.std_err, abs=2.0)
+        assert dg.total_gap.std_err == pytest.approx(dd.total_gap.std_err, abs=2.0)
+
+
+def test_machado_mata_engines_share_bootstrap_streams(spark):
+    """On a continuous (tie-free) panel both engines' QR fits land within
+    ~0.1% of each other, and every replicate reads the same taus, resample
+    and picks, so the bootstrap SEs agree to 10% — far inside the ~35%
+    sampling spread of an SE from 4 replicates that independent streams
+    would leave between them."""
+    rng = np.random.default_rng(3)
+    n = 2000
+    edu = rng.uniform(8.0, 20.0, n)
+    grp = np.where(rng.random(n) < 0.5, "F", "M")
+    wage = 5.0 + 1.5 * edu + np.where(grp == "F", 0.0, 4.0) + rng.normal(0, 3.0, n)
+    df = spark.createDataFrame(
+        list(zip(wage.tolist(), edu.tolist(), grp.tolist())), ["wage", "education", "gender"]
+    )
+
+    def build(engine):
+        return (
+            QuantileDecompositionBuilder(df, "wage", "gender", "F")
+            .predictors(["education"])
+            .quantiles([0.25, 0.5, 0.75])
+            .simulations(30)
+            .bootstrap_reps(4)
+            .seed(5)
+            .fit_engine(engine)
+            .run()
+        )
+
+    rd, rg = build("driver"), build("distributed")
+    for key, dd in rd.results_by_quantile.items():
+        dg = rg.results_by_quantile[key]
+        for cd, cg in ((dd.total_gap, dg.total_gap),
+                       (dd.characteristics_effect, dg.characteristics_effect)):
+            assert cd.std_err > 0.0
+            assert cg.std_err == pytest.approx(cd.std_err, rel=0.1), (key, cd.name)
+    assert rd.n_failed_reps == rg.n_failed_reps == 0
+
+
+@pytest.mark.parametrize("engine", ["driver", "distributed"])
+@pytest.mark.parametrize("column", ["wage", "education"])
+def test_machado_mata_rejects_infinite_values(spark, engine, column):
+    """+-Infinity in the outcome or a predictor survives dropna and no QR fit
+    survives it; both engines name the column instead of returning
+    NaN/garbage effects."""
+    from oaxaca_blinder_rs_spark.errors import NonNumericData
+
+    edit = {3: float("inf"), 27: float("-inf")}
+    df = tied_mm_df(spark, **{"wage_edit" if column == "wage" else "edu_edit": edit})
+    b = (
+        QuantileDecompositionBuilder(df, "wage", "gender", "F")
+        .predictors(["education"])
+        .quantiles([0.5])
+        .simulations(10)
+        .bootstrap_reps(0)
+        .fit_engine(engine)
+    )
+    with pytest.raises(NonNumericData, match="infinite values") as err:
+        b.run()
+    assert err.value.column == column
+
+
+def test_machado_mata_failed_replicates_counted(spark, monkeypatch):
+    """A bootstrap replicate whose QR fits fail is dropped, counted on the
+    result and reported in one warning; the SEs come from the survivors."""
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    bad = set(qb.mm_tau_stream(42, 20, rep=1).tolist())  # replicate 1's taus
+    real = qb.solve_qr_exact
+
+    def flaky(X, y, tau):
+        if tau in bad:
+            raise RuntimeError("forced fit failure")
+        return real(X, y, tau)
+
+    monkeypatch.setattr(qb, "solve_qr_exact", flaky)
+    b = (
+        QuantileDecompositionBuilder(tied_mm_df(spark), "wage", "gender", "F")
+        .predictors(["education"])
+        .quantiles([0.5])
+        .simulations(20)
+        .bootstrap_reps(3)
+        .seed(42)
+        .fit_engine("driver")
+    )
+    with pytest.warns(UserWarning, match="1 out of 3 bootstrap replications failed"):
+        res = b.run()
+    assert res.n_failed_reps == 1
+    d = res.results_by_quantile["q50"]
+    assert d.total_gap.std_err == d.total_gap.std_err  # two survivors: finite
 
 
 def test_machado_mata_distributed_bootstrap(spark):
-    """Bootstrap rides the fan-out key: finite SEs, identities per replicate
-    aggregate, and exact reproducibility across runs."""
+    """Gram-engine bootstrap (multiplicity-weighted resamples): finite SEs,
+    identities per replicate aggregate, and exact reproducibility across
+    runs."""
     wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
     edu = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
     gender = (["F"] * 5 + ["M"] * 5) * 4
