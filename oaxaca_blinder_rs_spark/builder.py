@@ -49,6 +49,7 @@ from .operators.bootstrap import (
     bootstrap_group_stats_fast,
     bootstrap_stats,
 )
+from .operators.scan import with_row_id
 from .results import ComponentResult, DecompositionDetail, OaxacaResults, TwoFoldResults
 
 INTERCEPT = "__ob_intercept__"
@@ -277,11 +278,6 @@ class OaxacaBuilder:
                 return var, prefix, dummy_name[len(prefix):]
         raise OaxacaError(f"Unknown dummy column: {dummy_name}")
 
-    def _ensure_row_id(self, df: DataFrame) -> DataFrame:
-        if self._id_col:
-            return df.withColumn(ROW_ID, F.col(self._id_col).cast("long"))
-        return df.withColumn(ROW_ID, F.monotonically_increasing_id())
-
     # -- decomposition from sufficient statistics -------------------------------
     def _decompose_from_stats(
         self,
@@ -399,7 +395,7 @@ class OaxacaBuilder:
             return run_heckman_oaxaca(self)
 
         df = self._clean(self._df)
-        df = self._ensure_row_id(df)
+        df = with_row_id(df, self._id_col, ROW_ID)
         dummy_names, category_counts, base_categories = self._dummy_levels(df)
 
         design, xcols = self._design(df, dummy_names)
@@ -598,6 +594,7 @@ class OaxacaBuilder:
             beta_star=[float(v) for v in point.beta_star],
             predictor_names=list(point.names),
             residual_row_ids=[],
+            n_failed_reps=self._bootstrap_reps - len(reps),
         )
         results.attach_residuals(residuals_df_factory, residual_supplier)
         return results
@@ -649,7 +646,7 @@ class OaxacaBuilder:
     # -- get_data_matrices (builder.rs:248-291) — test/debug helper --------------
     def get_data_matrices(self):
         df = self._clean(self._df)
-        df = self._ensure_row_id(df)
+        df = with_row_id(df, self._id_col, ROW_ID)
         dummy_names, _, _ = self._dummy_levels(df)
         group_a, group_b = self._group_names(df)
         design, xcols = self._design(df, dummy_names)

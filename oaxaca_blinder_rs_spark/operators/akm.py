@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ConvergenceError, InsufficientData, OaxacaError
+from .scan import local_table
 
 __all__ = ["AkmBuilder", "AkmResult"]
 
@@ -208,8 +209,7 @@ class AkmBuilder:
             comp_sizes[find(i)] = comp_sizes.get(find(i), 0) + 1
         largest = max(comp_sizes, key=comp_sizes.get)
         valid_workers = [w for w in workers if find(widx[w]) == largest]
-        spark = df.sparkSession
-        valid_df = spark.createDataFrame([(w,) for w in valid_workers], f"{self._worker} string")
+        valid_df = local_table(df.sparkSession, {self._worker: ("string", valid_workers)})
         return df.join(F.broadcast(valid_df), on=self._worker, how="inner")
 
     def _largest_component_mask(self, wcodes, fcodes, nW: int, nF: int):
@@ -325,23 +325,12 @@ class AkmBuilder:
         rss = float(np.sum((y - pred) ** 2))
         r2 = 1.0 - rss / tss
 
-        # r14 OPT (guide §4): createDataFrame from a Python list builds a
-        # pickled PythonRDD that re-spins a Python worker on EVERY downstream
-        # action (~2 s fixed overhead per job); the pandas/Arrow path embeds
-        # the same rows as a JVM LocalRelation evaluated with zero Python
-        # workers. Values are the identical doubles.
-        import pandas as pd
-
-        worker_effects = spark.createDataFrame(
-            pd.DataFrame(
-                {self._worker: [str(w) for w in workers], "effect": alpha.astype(np.float64)}
-            )
-        )
-        firm_effects = spark.createDataFrame(
-            pd.DataFrame(
-                {self._firm: [str(f) for f in firms], "effect": psi.astype(np.float64)}
-            )
-        )
+        worker_effects = local_table(spark, {
+            self._worker: ("string", [str(w) for w in workers]), "effect": ("double", alpha.tolist())
+        })
+        firm_effects = local_table(spark, {
+            self._firm: ("string", [str(f) for f in firms]), "effect": ("double", psi.tolist())
+        })
         return AkmResult(beta=beta, worker_effects=worker_effects, firm_effects=firm_effects, r2=r2)
 
     # -- distributed engine ------------------------------------------------

@@ -37,7 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scan import ordered_prev_cumsum, release
+from .scan import local_table, ordered_prev_cumsum, release, with_row_id
 from ..errors import ColumnNotFound, InvalidGroupVariable, NonNumericData, OaxacaError
 from ..functions.linalg import (
     GroupStats,
@@ -186,6 +186,7 @@ class DecompositionResult:
     detailed_explained: list = field(default_factory=list)
     detailed_unexplained: list = field(default_factory=list)
     unexplained_standard_error: float | None = None
+    n_failed_reps: int = 0
 
 
 # ---------------------------------------------------------------------------
@@ -213,25 +214,6 @@ def strict_numeric_cast(df: DataFrame, cols: list[str]) -> DataFrame:
         if int(bad[f"inf{i}"] or 0) > 0:
             raise NonNumericData(c, "infinite values")
     return df.withColumns({c: F.col(c).try_cast("double") for c in cols})
-
-
-def local_table(spark, columns: dict[str, tuple[str, list]]) -> DataFrame:
-    """A small driver-built table (``name -> ("long" | "double", values)``)
-    as a JVM LocalRelation. ``createDataFrame`` on a Python list yields a
-    pickled Python RDD, which starts Python worker tasks in every job that
-    reads it; an Arrow table is decoded in the JVM alone."""
-    import pyarrow as pa
-
-    types = {"long": pa.int64(), "double": pa.float64()}
-    return spark.createDataFrame(
-        pa.table({name: pa.array(vals, types[t]) for name, (t, vals) in columns.items()})
-    )
-
-
-def _with_row_id(df: DataFrame, id_col: str | None) -> DataFrame:
-    if id_col:
-        return df.withColumn(ROW_ID, F.col(id_col).cast("long"))
-    return df.withColumn(ROW_ID, F.monotonically_increasing_id())
 
 
 def _adjustment_table(df: DataFrame, adjustments) -> DataFrame:
@@ -381,6 +363,7 @@ def _decompose(
         detailed_explained=list(res.two_fold.detailed_explained),
         detailed_unexplained=list(res.two_fold.detailed_unexplained),
         unexplained_standard_error=res.two_fold.unexplained.std_err,
+        n_failed_reps=res.n_failed_reps,
     )
 
 
@@ -416,7 +399,7 @@ def _prepare(
     id_col: str | None,
 ) -> _Prepared:
     df = strict_numeric_cast(df, [outcome] + list(predictors))
-    df = _with_row_id(df, id_col).dropna(
+    df = with_row_id(df, id_col, ROW_ID).dropna(
         subset=[outcome, group] + list(predictors) + list(categorical_predictors or [])
     ).cache()
     try:
@@ -701,7 +684,7 @@ def verify_adjustments(
     id_col: str | None = None,
 ) -> DecompositionResult:
     """analysis.rs:40-96: apply wage deltas at row ids, re-run decomposition."""
-    df = _with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col)
+    df = with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col, ROW_ID)
     mutated = df.join(
         F.broadcast(_adjustment_table(df, adjustments)), on=ROW_ID, how="left"
     ).withColumn(
@@ -850,7 +833,7 @@ def check_defensibility(
     """defensibility.rs:9-388: adjustment defensible iff
     new_wage >= fair-wage 95% lower bound - 1.0 (reference-group SVD fit),
     with per-row predictor overrides applied before prediction."""
-    dfc = _with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col)
+    dfc = with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col, ROW_ID)
 
     if overrides:
         # NaN marks a predictor the row does not override

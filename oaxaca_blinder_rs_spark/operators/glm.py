@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..errors import ConvergenceError, SingularMatrix
 from ..functions.mathx import clamp, norm_cdf, norm_pdf, sigmoid
+from .scan import local_table
 
 __all__ = ["GlmFit", "logit", "probit", "fit_many", "fit_many_resampled", "xb_expr"]
 
@@ -67,7 +68,6 @@ def xb_expr(beta, xcols: list[str]) -> Column:
 
 def _beta_column(df: DataFrame, betas: dict, key_cols: list[str], k: int) -> tuple[DataFrame, Column]:
     """Materialize each row's current beta as an array column."""
-    spark = df.sparkSession
     if len(betas) <= _CASE_LITERAL_LIMIT:
         expr = None
         for key, beta in betas.items():
@@ -78,13 +78,11 @@ def _beta_column(df: DataFrame, betas: dict, key_cols: list[str], k: int) -> tup
             arr = F.array(*[F.lit(float(b)) for b in beta])
             expr = F.when(cond, arr) if expr is None else expr.when(cond, arr)
         return df, expr
-    rows = [tuple(list(key) + [[float(b) for b in beta]]) for key, beta in betas.items()]
-    schema_parts = []
-    for c in key_cols:
-        dtype = dict(df.dtypes).get(c, "string")
-        schema_parts.append(f"{c} {dtype}")
-    schema_parts.append("__beta array<double>")
-    beta_df = spark.createDataFrame(rows, ", ".join(schema_parts))
+    dtypes = dict(df.dtypes)
+    beta_df = local_table(df.sparkSession, {
+        **{c: (dtypes.get(c, "string"), [key[i] for key in betas]) for i, c in enumerate(key_cols)},
+        "__beta": ("array<double>", [[float(b) for b in beta] for beta in betas.values()]),
+    })
     joined = df.join(F.broadcast(beta_df), on=key_cols, how="inner")
     return joined, F.col("__beta")
 

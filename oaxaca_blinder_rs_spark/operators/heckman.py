@@ -28,16 +28,18 @@ panic on the same path).
 
 from __future__ import annotations
 
+import math
 import warnings
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from ..errors import InvalidGroupVariable, OaxacaError
+from ..errors import InvalidGroupVariable, NonNumericData, OaxacaError
 from ..functions.linalg import GroupStats, ols_from_stats
 from ..functions.mathx import norm_cdf, norm_pdf
 from .bootstrap import bootstrap_stats, hash_uniform, poisson_count_expr
 from . import decomposition as dec
+from .scan import local_table, with_row_id
 
 IMR_NAME = "IMR"
 
@@ -271,7 +273,7 @@ def run_heckman_oaxaca(builder):
     reps = builder._bootstrap_reps
 
     df = builder._clean(builder._df)
-    df = builder._ensure_row_id(df)
+    df = with_row_id(df, builder._id_col, ROW_ID)
     dummy_names, category_counts, base_categories = builder._dummy_levels(df)
     group_a, group_b = builder._group_names(df)
 
@@ -284,11 +286,18 @@ def run_heckman_oaxaca(builder):
 
     frame = None
     try:
-        full_counts = {
-            r[0]: r[1] for r in design.groupBy(group).count().collect()
-        }
+        # the group sizes' aggregate also counts +-Infinity per checked column
+        checked = list(dict.fromkeys([outcome, *builder._predictors, *sel_preds, sel_outcome]))
+        count_rows = design.groupBy(group).agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[F.sum((F.abs(c) == F.lit(math.inf)).cast("long")).alias(f"__inf{i}") for i, c in enumerate(checked)],
+        ).collect()
+        full_counts = {r[group]: r["__n"] for r in count_rows}
         if group_a not in full_counts or group_b not in full_counts:
             raise InvalidGroupVariable("One group has no data")
+        for i, c in enumerate(checked):
+            if any(r[f"__inf{i}"] for r in count_rows):
+                raise NonNumericData(c, "infinite values")
 
         if builder._engine == "pandas":
             # Arrow/BLAS engine: probit over all replicates with NO replicate
@@ -334,7 +343,7 @@ def run_heckman_oaxaca(builder):
             frame = frame.cache()
 
             # 1. probit of selection per (rep, group) — heckman.rs:46-47.
-            # r14 OPT: compress_cells — the selection design is typically
+            # compress_cells: the selection design is typically
             # low-support ([1, Z] categorical/discrete), so the per-(rep,
             # group) Fisher iterations run on the driver over the weighted
             # cell table instead of scanning the exploded frame per
@@ -352,12 +361,11 @@ def run_heckman_oaxaca(builder):
             )
 
             # 2. IMR expression; gamma via broadcast table (rep, group) -> array
-            spark = design.sparkSession
-            grows = [
-                (int(rep), gval, [float(x) for x in fit.beta])
-                for (rep, gval), fit in gammas.items()
-            ]
-            gamma_df = spark.createDataFrame(grows, f"__rep long, {group} string, __gamma array<double>")
+            gamma_df = local_table(design.sparkSession, {
+                "__rep": ("long", [int(rep) for rep, _ in gammas]),
+                group: ("string", [gval for _, gval in gammas]),
+                "__gamma": ("array<double>", [[float(x) for x in fit.beta] for fit in gammas.values()]),
+            })
             joined = frame.join(F.broadcast(gamma_df), on=["__rep", group])
             zg = F.lit(0.0)
             for j, c in enumerate(sel_cols):
@@ -371,17 +379,15 @@ def run_heckman_oaxaca(builder):
             )
             joined = joined.withColumn("__imr", imr)
 
-            # 3+4 fused (r14 OPT, guide §2.4/§1.2): the all-rows z-means and
-            # the selected-rows augmented Gram + IMR delta previously ran as
-            # TWO groupBy jobs, each re-evaluating the IMR/erf expression
-            # tree over the whole frame. One pass computes both: the
-            # selected-rows aggregates weight by __cnt_sel = __cnt when
-            # (selected AND outcome present) else 0.0 — excluded rows
-            # contribute exact 0.0 terms (or NULLs sum() skips, when the
-            # term touches the NULL outcome), so every partial sum is
-            # bit-identical to the filtered version's. A (rep, group) with
-            # no selected rows has __wsum 0 and stays OUT of per_key,
-            # matching the old groupBy-after-filter absence.
+            # 3+4 in one pass, so the IMR/erf expression tree is evaluated
+            # once: the all-rows z-means and the selected-rows augmented
+            # Gram + IMR delta. The selected-rows aggregates weight by
+            # __cnt_sel = __cnt when (selected AND outcome present) else
+            # 0.0 — excluded rows contribute exact 0.0 terms (or NULLs
+            # sum() skips, when the term touches the NULL outcome), so every
+            # partial sum is bit-identical to a filtered aggregate's. A
+            # (rep, group) with no selected rows has __wsum 0 and stays OUT
+            # of per_key.
             zmean_aggs = [
                 (F.sum(F.col("__cnt") * F.col(c)) / F.sum("__cnt")).alias(f"__zm_{j}")
                 for j, c in enumerate(sel_cols)
@@ -524,6 +530,7 @@ def run_heckman_oaxaca(builder):
             xb_mean=[float(v) for v in point["xb_mean"]],
             beta_star=[float(v) for v in point["beta_star"]],
             predictor_names=names,
+            n_failed_reps=reps - len(reps_results),
         )
         # residuals are zeroed under Heckman (estimation.rs:150-151)
         zero_df = (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..errors import InvalidGroupVariable, OaxacaError
 from .glm import logit
+from .scan import local_table, with_row_id
 
 ROW_ID = "__match_row_id__"
 
@@ -40,16 +41,6 @@ class MatchingEngine:
         self._outcome = outcome_col
         self._covariates = list(covariates)
         self._id_col = id_col
-
-    def _with_id(self) -> DataFrame:
-        # With an explicit id_col, match ids are fully deterministic. The
-        # monotonically_increasing_id fallback is partition-order dependent:
-        # ids (and therefore tie-breaks between equidistant controls) can
-        # change if the input's partitioning changes between runs — pass
-        # id_col for reproducible pipelines.
-        if self._id_col:
-            return self._df.withColumn(ROW_ID, F.col(self._id_col).cast("long"))
-        return self._df.withColumn(ROW_ID, F.monotonically_increasing_id())
 
     def _control_matrix(self, df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
         rows = (
@@ -82,12 +73,11 @@ class MatchingEngine:
         """Weights frame (row_id, weight) — engine.rs:113-229 semantics."""
         # Cache only the columns this pass touches (row id, treatment flag,
         # covariates — the outcome is not consumed here), with the double
-        # casts applied BEFORE caching. Caching the raw input frame kept
-        # every source column (wide comment strings at 10x the bytes) in
-        # storage and re-evaluated the casts on every one of the three
-        # actions below — measured as most of the ~8 s matching_1nn
-        # overhead the r5 verdict flagged.
-        df = self._with_id().select(
+        # casts applied BEFORE caching: caching the raw input frame would
+        # keep every source column (wide comment strings at 10x the bytes)
+        # in storage and re-evaluate the casts on each of the three
+        # actions below.
+        df = with_row_id(self._df, self._id_col, ROW_ID).select(
             ROW_ID,
             F.col(self._treatment).alias(self._treatment),
             *[F.col(c).cast("double").alias(c) for c in self._covariates],
@@ -182,8 +172,7 @@ class MatchingEngine:
             for idx, cnt in zip(totals["ctl_idx"], totals["cnt"]):
                 weights[int(idx)] = float(cnt) / float(k)
 
-            wrows = [(int(ctl_ids[i]), float(weights[i])) for i in range(n_ctl)]
-            ctl_w = spark.createDataFrame(wrows, "row_id long, weight double")
+            ctl_w = local_table(spark, {"row_id": ("long", ctl_ids.tolist()), "weight": ("double", weights.tolist())})
             treated_w = (
                 df.filter(F.col(self._treatment) == 1)
                 .select(F.col(ROW_ID).alias("row_id"), F.lit(1.0).alias("weight"))
@@ -210,7 +199,7 @@ class MatchingEngine:
 
         from .similarity import lsh_topk
 
-        df = self._with_id()
+        df = with_row_id(self._df, self._id_col, ROW_ID)
         vec = FF.array(*[FF.col(c).cast("double") for c in self._covariates])
         base = df.withColumn("__vec_arr", vec)
         treated = base.filter(FF.col(self._treatment) == 1).select(
@@ -237,7 +226,7 @@ class MatchingEngine:
     def match_psm(self, k: int) -> DataFrame:
         """Propensity-score matching (engine.rs:232-283): ridge-1e-6 logit of
         treatment on covariates, then 1-D NN matching on the score."""
-        df = self._with_id()
+        df = with_row_id(self._df, self._id_col, ROW_ID)
         design = df.withColumn("__psm_i", F.lit(1.0))
         for c in self._covariates:
             design = design.withColumn(c, F.col(c).cast("double"))

@@ -1,25 +1,27 @@
-"""Distributed ordered-scan primitives.
+"""Partition offsets, row ids and driver-built tables.
 
-A ``Window.orderBy(...)`` with no partition key funnels every row through a
-single task — fine at fixture scale, a stall at cluster scale. The greedy
-allocation operators (engine_ops.optimize, budget.allocate_budget, the
-efficient-frontier schedule) all need one global ordered running total, so
-that scan is expressed here once, parallel at any size:
+A ``Window.orderBy(...)`` with no partition key, or one partitioned only by
+a low-cardinality group, funnels rows through a single task. Every scan
+here instead works on a frame whose layout is pinned (persisted, locally
+checkpointed, or a deterministic source scan) and calls one helper,
+``partition_offsets``: one aggregation of a sum cell per (optional group
+key, partition id), the exclusive offsets folded on the driver in
+partition order, and the offsets attached without a Python-list table.
+Its callers:
 
-1. range-partition on the ordering (partition p's rows all precede
-   partition p+1's; ties never span a boundary),
-2. one tiny aggregation of per-partition sums -> exclusive offsets on the
-   driver (numPartitions rows),
-3. index the offsets as a literal array by partition id and finish with a
-   partition-LOCAL window.
+- ``ordered_prev_cumsum``: global exclusive running total (the greedy
+  allocation of engine_ops.optimize, budget.allocate_budget and the
+  efficient-frontier schedule; the reference's sequential payment loop,
+  oaxaca_blinder/src/analysis.rs);
+- ``grouped_prev_cumsum{,_multi}``: running totals within each group;
+- ``grouped_dense_rank``: dense per-group positions (the exact bootstrap);
+- ``sources/csv.attach_row_ids``: dense ids in input order;
+- ``quantile_builder``'s Gram engine: per-group row ranks ``__mm_rn``.
 
-The ranged frame is persisted across the two jobs (range bounds are sampled
-per physical plan, so both must read one materialization) and the result is
-checkpointed before the cache is dropped — cost over the naive window is
-one numPartitions-row collect plus one cached pass.
-
-Reference behavior pinned: oaxaca_blinder/src/analysis.rs greedy payment
-loop (sequential over sorted rows); same running totals, distributed.
+Each finishes with a window local to its (group, partition) cell, so the
+work is P x |groups| uniform units at any size. ``with_row_id`` is the one
+fallback row identity and ``local_table`` the one way a table built on the
+driver enters the JVM.
 """
 
 from __future__ import annotations
@@ -28,12 +30,82 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "partition_offsets",
     "ordered_prev_cumsum",
     "release",
     "grouped_prev_cumsum",
     "grouped_prev_cumsum_multi",
     "grouped_dense_rank",
+    "with_row_id",
+    "local_table",
 ]
+
+
+def local_table(spark, columns: dict[str, tuple[str, list]]) -> DataFrame:
+    """A small driver-built table (``name -> (Spark SQL type, values)``,
+    e.g. ``"long"``, ``"string"``, ``"array<double>"``) as a JVM
+    LocalRelation. ``createDataFrame`` on a Python list yields a pickled
+    Python RDD, which starts Python worker tasks in every job that reads
+    it; an Arrow table is decoded in the JVM alone."""
+    import pyarrow as pa
+
+    ddl = ", ".join(f"`{name}` {t}" for name, (t, _) in columns.items())
+    return spark.createDataFrame(pa.table({name: vals for name, (_, vals) in columns.items()}), ddl)
+
+
+def with_row_id(df: DataFrame, id_col: str | None, name: str) -> DataFrame:
+    """``name`` = ``id_col`` cast to long, or ``monotonically_increasing_id()``
+    without one. The fallback depends on the input's partitioning: ids, and
+    whatever they seed or break ties on, can change when it does, so pass
+    ``id_col`` for reproducible results."""
+    return df.withColumn(name, F.col(id_col).cast("long") if id_col else F.monotonically_increasing_id())
+
+
+def partition_offsets(
+    pinned: DataFrame, pid: str, values: dict[str, Column], group: str | None = None
+) -> tuple[DataFrame, dict]:
+    """Attach each row's exclusive partition offsets.
+
+    ``pinned`` must present the same rows in the same layout every time it
+    is read, and ``pid`` numbers its partitions in scan order. Each
+    ``values`` column is summed per (``group``, ``pid``) cell in one
+    aggregation; the driver folds the cells of each group, in ``pid``
+    order, into the sum over that group's earlier partitions, attached as
+    the column named by the ``values`` key (a null group is a group of its
+    own). Without a group the offsets are a literal array indexed by
+    ``pid``; with one, a broadcast ``local_table`` join. Also returns each
+    group's grand totals, keyed ``None`` when there is no group."""
+    names = list(values)
+    cells = pinned.groupBy(*([group] if group else []), pid).agg(
+        *[F.sum(c).alias(n) for n, c in values.items()]
+    )
+    types = {f.name: f.dataType.simpleString() for f in cells.schema.fields}
+    zero = [0.0 if types[n] == "double" else 0 for n in names]
+    by_group: dict = {}
+    for r in cells.collect():
+        by_group.setdefault(r[group] if group else None, []).append(r)
+    offsets, totals = [], {}
+    for g, rows in by_group.items():
+        running = zero
+        for r in sorted(rows, key=lambda r: r[pid]):
+            offsets.append((g, r[pid], running))
+            running = [a + (r[n] or z) for a, n, z in zip(running, names, zero)]
+        totals[g] = running
+    if group is None:
+        at = {p: off for _, p, off in offsets}
+
+        def lookup(i: int) -> Column:
+            lits = [F.lit(at.get(p, zero)[i]) for p in range(max(at, default=-1) + 1)]
+            return F.element_at(F.array(*lits), F.col(pid).cast("int") + 1) if lits else F.lit(zero[i])
+
+        return pinned.withColumns({n: lookup(i).cast(types[n]) for i, n in enumerate(names)}), totals
+    table = local_table(pinned.sparkSession, {
+        "__off_g": (types[group], [g for g, _, _ in offsets]),
+        "__off_pid": (types[pid], [p for _, p, _ in offsets]),
+        **{n: (types[n], [off[i] for _, _, off in offsets]) for i, n in enumerate(names)},
+    })
+    cond = F.col(group).eqNullSafe(table["__off_g"]) & (F.col(pid) == table["__off_pid"])
+    return pinned.join(F.broadcast(table), cond).drop("__off_g", "__off_pid"), totals
 
 
 def ordered_prev_cumsum(
@@ -47,11 +119,13 @@ def ordered_prev_cumsum(
     Row r gets sum(value) over all rows strictly before r in ``order``
     (ties resolved by the caller's tiebreaker columns, exactly as a global
     ``rowsBetween(unboundedPreceding, -1)`` window would) — without ever
-    collapsing the data to one partition. The grand total of ``value`` is
-    attached as ``._scan_total``; ``release`` drops the checkpoint.
+    collapsing the data to one partition: range-partition on the ordering
+    (partition p's rows all precede partition p+1's; ties never span a
+    boundary), offset each partition by the sums before it and finish with
+    a partition-local window. The grand total of ``value`` is attached as
+    ``._scan_total``; ``release`` drops the checkpoint.
     """
-    spark = df.sparkSession
-    nparts = max(spark.sparkContext.defaultParallelism, 1)
+    nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     # repartitionByRange samples its bounds per physical plan, so the offsets
     # job and the final scan MUST share one materialization — persist pins the
     # partitioning; the result is checkpointed before the cache is released.
@@ -62,39 +136,26 @@ def ordered_prev_cumsum(
         .persist()
     )
     try:
-        # <= nparts rows: ordered on the driver and indexed by partition id
-        # as a literal array, so the offsets cost no sort job and no table
-        sums = dict(
-            ranged.groupBy("__scan_pid").agg(F.sum("__scan_v").alias("__s")).collect()
-        )
-        if not sums:
-            out = df.withColumn(out_col, F.lit(0.0))
-            out._scan_total = 0.0
-            return out
-        offsets, running = [], 0.0
-        for pid in range(max(nparts, max(sums) + 1)):
-            offsets.append(running)
-            running += float(sums.get(pid) or 0.0)
+        offset, totals = partition_offsets(ranged, "__scan_pid", {"__scan_off": F.col("__scan_v")})
         w = (
             Window.partitionBy("__scan_pid")
             .orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        offset = F.element_at(F.array(*[F.lit(o) for o in offsets]), F.col("__scan_pid") + 1)
-        result = ranged.withColumn(
-            out_col, offset + F.coalesce(F.sum("__scan_v").over(w), F.lit(0.0))
-        ).drop("__scan_pid", "__scan_v")
+        result = offset.withColumn(
+            out_col, F.col("__scan_off") + F.coalesce(F.sum("__scan_v").over(w), F.lit(0.0))
+        ).drop("__scan_pid", "__scan_v", "__scan_off")
         out = _checkpoint_with_plan(result)
-        out._scan_total = running
+        out._scan_total = totals.get(None, [0.0])[0]
         return out
     finally:
         ranged.unpersist()
 
 
 def release(scanned: DataFrame) -> None:
-    """Drop the blocks a scan result's local checkpoint pins. The frame (and
-    anything derived from it) must not be read afterwards. A result that was
-    never checkpointed (empty input) pins nothing."""
+    """Drop the blocks a local checkpoint pins. The frame (and anything
+    derived from it) must not be read afterwards. A frame that is not a
+    checkpoint pins nothing."""
     plan = scanned._jdf.queryExecution().logical()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
@@ -128,16 +189,14 @@ def grouped_prev_cumsum(
     A window partitioned only by the group column gives each group to one
     task; with a skewed key (one web domain holding half the corpus) that
     task dominates the stage. Instead: range-partition on (group, *order)
-    so a big group SPANS partitions, aggregate one (group, partition) sum
-    cell per pair, fold the cells into per-(group, partition) exclusive
-    offsets on the driver (|groups-that-span| x P rows, tiny), and finish
-    with a window local to the (group, partition) cell.
+    so a big group SPANS partitions, offset each (group, partition) cell by
+    the group's earlier partitions, and finish with a window local to the
+    cell.
 
     Totals accumulate in int64 (``value`` is cast to long) — exact for
     token counts; use ordered_prev_cumsum for float values. Rows with a
-    null group form their own group (eqNullSafe join), matching
-    ``Window.partitionBy`` semantics. Result is eagerly checkpointed, the
-    grouped_dense_rank convention.
+    null group form their own group, matching ``Window.partitionBy``
+    semantics. Result is eagerly checkpointed.
     """
     return grouped_prev_cumsum_multi(df, group, order, [(value, out_col)])
 
@@ -149,18 +208,11 @@ def grouped_prev_cumsum_multi(
     values: list[tuple[Column, str]],
 ) -> DataFrame:
     """N exclusive running totals under ONE ordering in ONE ranged pass —
-    the shared machinery behind ``grouped_prev_cumsum``. r14 OPT (guide
-    §2.4): callers needing several cumulative sums over the same order
-    (roc_points' >=-threshold positive AND negative tallies,
-    vocab_coverage's cumulative count and exclusive rank) previously
-    chained scans, paying the repartitionByRange + offsets collect +
-    checkpoint cycle once PER VALUE; one pass computes all of them with
-    identical per-value arithmetic (same range partitioning, same per-cell
-    int64 sums, same window), so each output column is bit-identical to
-    its chained equivalent.
+    the shared machinery behind ``grouped_prev_cumsum``. Each output column
+    equals the single-value scan's: same range partitioning, same per-cell
+    int64 sums, same window.
     """
-    spark = df.sparkSession
-    nparts = max(spark.sparkContext.defaultParallelism, 1)
+    nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     ranged = df.repartitionByRange(
         nparts, F.col(group).asc(), *order
     ).withColumn("__scan_pid", F.spark_partition_id())
@@ -168,42 +220,15 @@ def grouped_prev_cumsum_multi(
         ranged = ranged.withColumn(f"__scan_v{i}", value.cast("long"))
     ranged = ranged.persist()
     try:
-        cells = (
-            ranged.groupBy(group, "__scan_pid")
-            .agg(*[F.sum(f"__scan_v{i}").alias(f"__s{i}") for i in range(len(values))])
-            .collect()
-        )
-        if not cells:
-            out = df
-            for _, out_col in values:
-                out = out.withColumn(out_col, F.lit(0).cast("long"))
-            return out
-        by_group: dict = {}
-        for r in cells:
-            by_group.setdefault(r[group], []).append(
-                (int(r["__scan_pid"]), [int(r[f"__s{i}"] or 0) for i in range(len(values))])
-            )
-        offs = []
-        for g, lst in by_group.items():
-            running = [0] * len(values)
-            for pid, sums in sorted(lst):
-                offs.append((g, pid, *running))
-                running = [a + b for a, b in zip(running, sums)]
-        gtype = dict(df.dtypes)[group]
-        off_cols = ", ".join(f"__scan_off{i} long" for i in range(len(values)))
-        off_df = spark.createDataFrame(
-            offs, f"`__scan_g` {gtype}, __scan_pid int, {off_cols}"
+        result, _ = partition_offsets(
+            ranged, "__scan_pid", {f"__scan_off{i}": F.col(f"__scan_v{i}") for i in range(len(values))}, group
         )
         w = (
             Window.partitionBy(group, "__scan_pid")
             .orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, -1)
         )
-        cond = F.col(group).eqNullSafe(F.col("__scan_g")) & (
-            ranged["__scan_pid"] == off_df["__scan_pid"]
-        )
-        result = ranged.join(F.broadcast(off_df), cond).drop(off_df["__scan_pid"])
-        drop = ["__scan_pid", "__scan_g"]
+        drop = ["__scan_pid"]
         for i, (_, out_col) in enumerate(values):
             result = result.withColumn(
                 out_col,
@@ -211,8 +236,7 @@ def grouped_prev_cumsum_multi(
                 + F.coalesce(F.sum(f"__scan_v{i}").over(w), F.lit(0).cast("long")),
             )
             drop += [f"__scan_off{i}", f"__scan_v{i}"]
-        result = result.drop(*drop)
-        return _checkpoint_with_plan(result)
+        return _checkpoint_with_plan(result.drop(*drop))
     finally:
         ranged.unpersist()
 
@@ -227,48 +251,24 @@ def grouped_dense_rank(
 
     A window partitioned only by the group column serializes each group
     through one task (the Oaxaca group column has 2 values). Instead:
-    range-partition on (group, order), count each (group, partition) cell,
-    turn the counts into per-group offsets, and rank with a window local to
-    the (group, partition) cell — P*|groups| uniform units of work. The
-    result is eagerly checkpointed before the ranged cache is released so
-    downstream actions cannot observe a re-sampled partitioning.
+    range-partition on (group, order), offset each (group, partition) cell
+    by the group's row count in earlier partitions, and rank with a window
+    local to the cell — P*|groups| uniform units of work. The result is
+    eagerly checkpointed before the ranged cache is released so downstream
+    actions cannot observe a re-sampled partitioning.
     """
-    spark = df.sparkSession
-    nparts = max(spark.sparkContext.defaultParallelism, 1)
+    nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     ranged = (
         df.repartitionByRange(nparts, F.col(group).asc(), F.col(order_col).asc())
         .withColumn("__scan_pid", F.spark_partition_id())
         .persist()
     )
     try:
-        cells = ranged.groupBy(group, "__scan_pid").agg(F.count(F.lit(1)).alias("__c")).collect()
-        if not cells:
-            return df.withColumn(out_col, F.lit(0).cast("long"))
-        by_group: dict = {}
-        for r in cells:
-            by_group.setdefault(r[group], []).append((int(r["__scan_pid"]), int(r["__c"])))
-        offs = []
-        for g, lst in by_group.items():
-            running = 0
-            for pid, c in sorted(lst):
-                offs.append((g, pid, running))
-                running += c
-        gtype = dict(df.dtypes)[group]
-        off_df = spark.createDataFrame(
-            offs, f"`__scan_g` {gtype}, __scan_pid int, __scan_off long"
-        )
+        result, _ = partition_offsets(ranged, "__scan_pid", {"__scan_off": F.lit(1)}, group)
         w = Window.partitionBy(group, "__scan_pid").orderBy(F.col(order_col).asc())
-        # null-safe group match: a plain equi-join would silently drop rows
-        # whose group value is null (the old per-group window ranked them)
-        cond = F.col(group).eqNullSafe(F.col("__scan_g")) & (
-            ranged["__scan_pid"] == off_df["__scan_pid"]
-        )
-        result = (
-            ranged.join(F.broadcast(off_df), cond)
-            .drop(off_df["__scan_pid"])
-            .withColumn(out_col, F.col("__scan_off") + F.row_number().over(w) - 1)
-            .drop("__scan_pid", "__scan_off", "__scan_g")
-        )
+        result = result.withColumn(
+            out_col, F.col("__scan_off") + F.row_number().over(w) - 1
+        ).drop("__scan_pid", "__scan_off")
         return _checkpoint_with_plan(result)
     finally:
         ranged.unpersist()

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from .errors import InvalidGroupVariable, NonNumericData, OaxacaError
 from .operators.bootstrap import bootstrap_stats
 from .operators.quantile_regression import exact_n_index, solve_qr_exact
+from .operators.scan import partition_offsets, release
 from .results import ComponentResult
 
 INTERCEPT = "__ob_intercept__"
@@ -347,23 +348,21 @@ class QuantileDecompositionBuilder:
         return len(y[0]), len(y[1]), betas, lambda needed: lambda s, i: X[s][i]
 
     # -- distributed (Gram) engine ------------------------------------------------
-    def _gram_engine(self, design, xcols, group_a, group_b, taus_by_rep):
+    def _gram_engine(self, design, xcols, group_a, group_b, taus_by_rep, pins):
         """Rank rows per group, fit every (replicate, side, tau) model with
         ``_fit_gram`` and collect only the covariate rows the simulation
         picks. Exact-n resamples enter as multiplicity weights
-        (``exact_n_counts``), so no resampled data is ever shuffled."""
+        (``exact_n_counts``), so no resampled data is ever shuffled. The
+        frames it checkpoints are appended to ``pins``."""
         from pyspark.sql import Window
 
-        spark = design.sparkSession
         # stable per-group row rank: fixes row order inside executor tasks
-        # (and the driver's pick translation); checkpoint pins the ids.
-        # A window partitioned only by group would funnel each group through
-        # one task; ranking instead shuffles on (group, source partition) —
-        # P*|groups| uniform cells — with per-cell offsets from one tiny
-        # count aggregation (monotonically_increasing_id is
-        # (partition << 33) + local index, so (group, pid) counts in pid
-        # order are exactly the mid-order prefix sizes).
-        # CHECKPOINT BEFORE the offsets collect, not after the join: the
+        # (and the driver's pick translation). A window partitioned only by
+        # group would funnel each group through one task; ranking instead
+        # windows each (group, source partition) cell, offset by the group's
+        # rows in earlier partitions (monotonically_increasing_id is
+        # (partition << 33) + local index).
+        # CHECKPOINT BEFORE the offsets are counted, not after the join: the
         # offsets job and the rank-window job otherwise execute the plan
         # twice, and AQE may lay out the upstream exchange differently
         # between them (observed at small SFs with a sorted input) — the
@@ -371,31 +370,24 @@ class QuantileDecompositionBuilder:
         # the one the window ranks, silently scrambling the pick
         # translation and breaking exact rerun reproducibility. Pinning
         # the ids first makes both jobs read the same materialized layout
-        # (and replaces, rather than adds to, the post-join checkpoint:
-        # the join+window is deterministic given pinned input).
+        # (the join+window is deterministic given pinned input).
         design = design.withColumn("__mm_mid", F.monotonically_increasing_id()).withColumn(
             "__mm_pid", F.shiftrightunsigned(F.col("__mm_mid"), 33)
         ).localCheckpoint()
-        cell_rows = (
-            design.groupBy(self._group, "__mm_pid")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        )
-        offs, running = [], {}
-        for r in sorted(cell_rows, key=lambda r: (str(r[self._group]), int(r["__mm_pid"]))):
-            g = r[self._group]
-            offs.append((g, int(r["__mm_pid"]), running.get(g, 0)))
-            running[g] = running.get(g, 0) + int(r["__c"])
-        gtype = dict(design.dtypes)[self._group]
-        off_df = spark.createDataFrame(offs, f"`{self._group}` {gtype}, __mm_pid long, __mm_off long")
+        pins.append(design)
+        counted, totals = partition_offsets(design, "__mm_pid", {"__mm_off": F.lit(1)}, self._group)
         w = Window.partitionBy(self._group, "__mm_pid").orderBy("__mm_mid")
-        ranked = (
-            design.join(F.broadcast(off_df), [self._group, "__mm_pid"])
-            .withColumn("__mm_rn", F.col("__mm_off") + F.row_number().over(w) - 1)
-            .drop("__mm_pid", "__mm_off")
+        ranked = counted.withColumn(
+            "__mm_rn", F.col("__mm_off") + F.row_number().over(w) - 1
+        ).drop("__mm_pid", "__mm_off")
+        n_a, n_b = totals[group_a][0], totals[group_b][0]
+        proj = (
+            ranked.select(self._group, "__mm_rn", self._outcome, *xcols)
+            .repartition(design.sparkSession.sparkContext.defaultParallelism)
+            .localCheckpoint()
         )
-        n_a, n_b = int(running[group_a]), int(running[group_b])
-        betas = self._fit_gram(spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b)
+        pins.append(proj)
+        betas = self._fit_gram(proj, xcols, group_a, group_b, taus_by_rep, n_a, n_b)
 
         def rows(needed: dict[int, set[int]]):
             want = ranked.filter(
@@ -412,7 +404,7 @@ class QuantileDecompositionBuilder:
         return n_a, n_b, betas, rows
 
     def _fit_gram(
-        self, spark, ranked, xcols, group_a, group_b, taus_by_rep, n_a, n_b
+        self, proj, xcols, group_a, group_b, taus_by_rep, n_a, n_b
     ) -> dict[tuple[int, int], list[np.ndarray]]:
         """Gram-Newton on the convolution-smoothed check loss: all (rep,
         side, tau) quantile regressions iterate simultaneously; each Newton
@@ -474,13 +466,6 @@ class QuantileDecompositionBuilder:
         # ~2.8x faster than the old 256-wide blocks, whose ~25 MB
         # temporaries thrash cache across the ~10 full-size intermediates.
         CHUNK = 64
-
-        par = spark.sparkContext.defaultParallelism
-        proj = (
-            ranked.select(gcol, "__mm_rn", outcome, *xcols)
-            .repartition(par)
-            .localCheckpoint()
-        )
 
         rep_list = list(range(-1, B))
         side_of = {group_a: 0, group_b: 1}
@@ -688,14 +673,11 @@ class QuantileDecompositionBuilder:
         self._gram_adapt_fast = int(
             (model_h0_ratio[status == 0] < H0_FRAC / H_FRAC - 1e-12).sum()
         )  # instrumentation: models on the shortened schedule
-        # NOTE (r8): an anneal start at the OLS residual scale (the r7
-        # verdict's suggested lever) was tried and REVERTED — a resample of
-        # a small tied fixture can make OLS interpolate (sd_resid ~ 0),
-        # which floors h0 at target and strands Newton in the
-        # zero-curvature far field (std_err blew up 80x in the parity
-        # test), while on the real benchmark data sd_resid ~ 0.7 sd(y)
-        # saved no passes at all. The r8 wall-clock win came from the
-        # cache-sized CHUNK + sparse far-field kernel instead.
+        # Why the anneal does not simply start at the OLS residual scale: a
+        # resample of a small tied fixture can make OLS interpolate
+        # (sd_resid ~ 0), which floors h0 at target and strands Newton in
+        # the zero-curvature far field (std_err blew up 80x in the parity
+        # test), while on real data sd_resid ~ 0.7 sd(y) saves no passes.
 
         # ---- Newton loop: one pass per iteration over all active models -----
         # Globalization, all driver-side (no extra Spark passes):
@@ -793,38 +775,43 @@ class QuantileDecompositionBuilder:
         # each engine returns the side sizes, betas[(rep, side)] (the fits
         # that converged, in tau order) and rows(needed), which turns the
         # per-side row ranks the picks need into a row_of(side, rank) lookup
-        if engine == "driver":
-            n_a, n_b, betas, rows = self._driver_engine(design, xcols, group_a, taus_by_rep)
-        else:
-            n_a, n_b, betas, rows = self._gram_engine(design, xcols, group_a, group_b, taus_by_rep)
+        pins: list = []  # the Gram engine's checkpoints, dropped once the picks are read
+        try:
+            if engine == "driver":
+                n_a, n_b, betas, rows = self._driver_engine(design, xcols, group_a, taus_by_rep)
+            else:
+                n_a, n_b, betas, rows = self._gram_engine(design, xcols, group_a, group_b, taus_by_rep, pins)
 
-        # per-replicate simulation plan, picks translated to original row ranks
-        plans, failed, needed = {}, 0, {0: set(), 1: set()}
-        for r, (_, pick_rng) in streams.items():
-            ba, bb = betas.get((r, 0), []), betas.get((r, 1), [])
-            if len(ba) < S / 2 or len(bb) < S / 2:
-                if r < 0:
-                    raise OaxacaError("Failed to estimate a sufficient number of quantile regressions.")
-                failed += 1
-                continue
-            m = min(len(ba), len(bb))
-            rank_a = pick_rng.integers(0, n_a, size=m)
-            rank_b = pick_rng.integers(0, n_b, size=m)
-            if r >= 0:
-                rank_a = exact_n_index(seed, r, 0, n_a)[rank_a]
-                rank_b = exact_n_index(seed, r, 1, n_b)[rank_b]
-            plans[r] = (ba, bb, rank_a, rank_b)
-            needed[0].update(rank_a.tolist())
-            needed[1].update(rank_b.tolist())
-        if failed:
-            warnings.warn(
-                f"{failed} out of {B} bootstrap replications failed and "
-                f"were discarded. The analysis is based on {B - failed} successful "
-                "replications.",
-                stacklevel=2,
-            )
+            # per-replicate simulation plan, picks translated to original row ranks
+            plans, failed, needed = {}, 0, {0: set(), 1: set()}
+            for r, (_, pick_rng) in streams.items():
+                ba, bb = betas.get((r, 0), []), betas.get((r, 1), [])
+                if len(ba) < S / 2 or len(bb) < S / 2:
+                    if r < 0:
+                        raise OaxacaError("Failed to estimate a sufficient number of quantile regressions.")
+                    failed += 1
+                    continue
+                m = min(len(ba), len(bb))
+                rank_a = pick_rng.integers(0, n_a, size=m)
+                rank_b = pick_rng.integers(0, n_b, size=m)
+                if r >= 0:
+                    rank_a = exact_n_index(seed, r, 0, n_a)[rank_a]
+                    rank_b = exact_n_index(seed, r, 1, n_b)[rank_b]
+                plans[r] = (ba, bb, rank_a, rank_b)
+                needed[0].update(rank_a.tolist())
+                needed[1].update(rank_b.tolist())
+            if failed:
+                warnings.warn(
+                    f"{failed} out of {B} bootstrap replications failed and "
+                    f"were discarded. The analysis is based on {B - failed} successful "
+                    "replications.",
+                    stacklevel=2,
+                )
 
-        row_of = rows(needed)
+            row_of = rows(needed)
+        finally:
+            for pinned in pins:
+                release(pinned)
         effects = {r: _effects(self._quantiles, row_of, *plan) for r, plan in plans.items()}
         point = effects.pop(-1)
         boot = list(effects.values())

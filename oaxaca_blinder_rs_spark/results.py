@@ -225,6 +225,8 @@ class OaxacaResults:
     # row_id (stable id) parallel to residuals, Spark-specific addition so
     # adjustments address durable ids rather than positions (SURVEY §7.5 r1).
     residual_row_ids: list[int] = field(default_factory=list)
+    # bootstrap replicates that failed and were left out of the standard errors
+    n_failed_reps: int = 0
 
     # -- lazy distributed residuals (Spark-specific scale design) -------------
     def attach_residuals(self, residuals_df, supplier) -> None:

@@ -14,6 +14,8 @@ import io
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.scan import partition_offsets
+
 __all__ = ["read_csv", "read_csv_bytes", "attach_row_ids"]
 
 ROW_ID = "__ob_row_id__"
@@ -24,31 +26,18 @@ def attach_row_ids(df: DataFrame) -> DataFrame:
 
     monotonically_increasing_id() encodes (partition_id << 33) + local_index
     with local indices dense from 0 inside each partition and partition ids
-    assigned in scan order, so global input order is (pid, local). A global
-    row_number() over that would move every row to a single partition; here
-    the per-partition counts (one tiny agg — numPartitions rows) are turned
-    into cumulative offsets and broadcast-joined back, keeping the id
-    assignment map-side and shuffle-free at any scale.
+    assigned in scan order, so global input order is (pid, local). Each
+    partition's id offset comes from ``scan.partition_offsets`` (one
+    numPartitions-row aggregate), keeping the assignment map-side and
+    shuffle-free at any scale.
     """
-    df = df.withColumn("__mid", F.monotonically_increasing_id())
-    pid = F.shiftrightunsigned(F.col("__mid"), 33)
-    counts = (
-        df.groupBy(pid.alias("__pid")).agg(F.count(F.lit(1)).alias("__cnt")).orderBy("__pid").collect()
+    df = df.withColumn("__mid", F.monotonically_increasing_id()).withColumn(
+        "__pid", F.shiftrightunsigned(F.col("__mid"), 33)
     )
-    offsets, running = [], 0
-    for r in counts:
-        offsets.append((r["__pid"], running))
-        running += r["__cnt"]
-    spark = df.sparkSession
-    if not offsets:
-        return df.withColumn(ROW_ID, F.lit(0).cast("long")).drop("__mid")
-    off_df = spark.createDataFrame(offsets, ["__pid", "__off"])
-    return (
-        df.withColumn("__pid", pid)
-        .join(F.broadcast(off_df), "__pid")
-        .withColumn(ROW_ID, F.col("__off") + (F.col("__mid") - F.shiftleft(F.col("__pid"), 33)))
-        .drop("__mid", "__pid", "__off")
-    )
+    df, _ = partition_offsets(df, "__pid", {"__off": F.lit(1)})
+    return df.withColumn(
+        ROW_ID, F.col("__off") + (F.col("__mid") - F.shiftleft(F.col("__pid"), 33))
+    ).drop("__mid", "__pid", "__off")
 
 
 def read_csv(spark: SparkSession, path: str, with_row_id: bool = True) -> DataFrame:

@@ -123,3 +123,18 @@ def test_fit_many_resampled_logit_family(heckman_df):
     assert any(
         not np.allclose(fast[(r, "B")].beta, fast[(-1, "B")].beta) for r in range(3)
     )
+
+
+@pytest.mark.parametrize("column", ["y", "x", "z", "sel"])
+def test_heckman_rejects_infinite_values(heckman_df, column):
+    """+-Infinity in the outcome, an outcome predictor, a selection
+    predictor or the selection outcome is refused by name, as on the mean
+    and Machado-Mata paths."""
+    from pyspark.sql import functions as F
+
+    from oaxaca_blinder_rs_spark.errors import NonNumericData
+
+    hit = (F.col("rid") % 97 == 0) & (F.col("sel") == 1.0)
+    df = heckman_df.withColumn(column, F.when(hit, F.lit(-np.inf)).otherwise(F.col(column)))
+    with pytest.raises(NonNumericData, match=f"'{column}' contains infinite values"):
+        _run(df, "expr", 0)

@@ -465,3 +465,24 @@ def test_gram_adaptive_anneal_start(spark):
     )
     b_t.run()
     assert b_t._gram_adapt_fast == 0
+
+
+def test_machado_mata_gram_engine_releases_its_pins(spark):
+    """The Gram engine's checkpoints (the ranked design and the Newton
+    passes' projection) are dropped once the picks are read: three runs
+    leave no new persistent RDD. Compared by id, because the context
+    cleaner may meanwhile drop blocks that earlier tests left."""
+    jsc = spark.sparkContext._jsc
+    df = tied_mm_df(spark)
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        (
+            QuantileDecompositionBuilder(df, "wage", "gender", "F")
+            .predictors(["education"])
+            .quantiles([0.5])
+            .simulations(10)
+            .bootstrap_reps(1)
+            .fit_engine("distributed")
+            .run()
+        )
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()

@@ -119,6 +119,26 @@ def test_infinite_value_is_tool_error(spark):
         assert "'education' contains infinite values" in res["content"][0]["text"]
 
 
+def test_failed_replicates_are_counted_in_responses(spark):
+    """decompose and verify report how many bootstrap replicates failed,
+    the same count the warning gives (5 rows a group leaves some resamples
+    rank-deficient)."""
+    import re
+    import warnings
+
+    server = McpServer(spark)
+    for tool, extra in (
+        ("forensic_decomposition", {"bootstrap_reps": 100}),
+        ("verify_adjustments", {"adjustments": [{"index": 0, "value": 1.0}]}),
+    ):
+        with warnings.catch_warnings(record=True) as record:
+            warnings.simplefilter("always")
+            out = _call(server, tool, extra)
+        warned = [re.match(r"(\d+) out of 100 bootstrap", str(w.message)) for w in record]
+        counts = [int(m.group(1)) for m in warned if m]
+        assert counts and out["n_failed_reps"] == counts[0] > 0, (tool, counts, out["n_failed_reps"])
+
+
 def _review(server, call=_call):
     """One pay-equity review through all five tools, in client order."""
     call(server, "forensic_decomposition", {"bootstrap_reps": 5})

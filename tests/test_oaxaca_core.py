@@ -273,10 +273,15 @@ def test_sinks(spark):
 
 def test_failed_replicates_are_reported_as_a_warning(spark):
     """A 3-row group makes many resamples rank-deficient; the discarded
-    replicates are reported through ``warnings``, not printed."""
+    replicates are reported through ``warnings``, not printed, and counted
+    on the result."""
+    import re
+
     rows = [(float(10 + i), float(i % 5), "F") for i in range(3)]
     rows += [(float(20 + i), float(i % 7), "M") for i in range(30)]
     df = spark.createDataFrame(rows, ["wage", "education", "gender"])
     b = OaxacaBuilder(df, "wage", "gender", "F").predictors(["education"]).bootstrap_reps(20)
-    with pytest.warns(UserWarning, match="bootstrap replications failed and were discarded"):
-        b.run()
+    with pytest.warns(UserWarning, match="bootstrap replications failed and were discarded") as record:
+        res = b.run()
+    warned = [re.match(r"(\d+) out of 20 bootstrap", str(w.message)) for w in record]
+    assert res.n_failed_reps == int(next(m for m in warned if m).group(1)) > 0

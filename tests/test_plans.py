@@ -386,3 +386,22 @@ def test_boilerplate_removal_no_global_window(spark, sf_dir):
     plan = _plan(remove_boilerplate_lines(docs, min_docs=3))
     assert "SinglePartition" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_offset_tables_start_no_python_rdd(spark):
+    """The per-partition offsets of grouped_dense_rank and attach_row_ids
+    enter the plan as a literal array or an Arrow LocalRelation, never as a
+    pickled Python RDD (an ``ExistingRDD`` scan, which starts Python
+    workers in every job that reads it)."""
+    from oaxaca_blinder_rs_spark.operators.scan import grouped_dense_rank
+    from oaxaca_blinder_rs_spark.sources.csv import attach_row_ids
+
+    base = spark.range(0, 400, 1, 4).select(
+        F.col("id"), F.when(F.col("id") % 3 == 0, "a").otherwise("b").alias("g")
+    )
+    ranked = grouped_dense_rank(base, "g", "id", "rk")
+    assert "Window" in ranked._scan_plan and "ExistingRDD" not in ranked._scan_plan
+    assert sorted(r["rk"] for r in ranked.filter(F.col("g") == "a").collect()) == list(range(134))
+    ids = attach_row_ids(base)
+    assert "ExistingRDD" not in ids._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r["__ob_row_id__"] for r in ids.collect()) == list(range(400))

@@ -84,3 +84,49 @@ def test_contracts_import_only_existing_modules():
         if name.startswith(f"{PKG}.") and name not in mods and name.rpartition(".")[0] not in mods
     )
     assert missing == [], f"contracts import missing modules: {missing}"
+
+
+PAPER_PATH = [
+    f"{PKG}.{m}" for m in ("builder", "quantile_builder", "api", "mcp_server", "sources.csv")
+] + [
+    f"{PKG}.operators.{m}" for m in (
+        "engine_ops", "scan", "bootstrap", "heckman", "glm", "akm", "matching", "dfl", "rif",
+        "kde", "budget", "jmp", "decomposition", "quantile_regression",
+    )
+]
+LITERALS = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp, ast.SetComp)
+
+
+def literal_names(tree: ast.AST) -> set[str]:
+    """Names the module binds, anywhere, to a list/tuple literal or a
+    comprehension (``rows = [...]``, ``offs, n = [], 0``)."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign):
+            for t in node.targets:
+                pairs = (
+                    zip(t.elts, node.value.elts)
+                    if isinstance(t, ast.Tuple) and isinstance(node.value, ast.Tuple)
+                    else [(t, node.value)]
+                )
+                out.update(tg.id for tg, v in pairs if isinstance(tg, ast.Name) and isinstance(v, LITERALS))
+    return out
+
+
+def test_no_python_list_tables_on_the_paper_path():
+    """``createDataFrame`` on Python rows builds a pickled Python RDD, which
+    starts Python worker tasks in every job that reads it. Tables built on
+    the driver go through ``scan.local_table`` (an Arrow LocalRelation)."""
+    mods = package_modules(os.path.join(ROOT, PKG))
+    paths = PAPER_PATH + sorted(m for m in mods if m.startswith(f"{PKG}.functions."))
+    assert set(paths) <= set(mods), sorted(set(paths) - set(mods))
+    offenders = []
+    for m in paths:
+        tree = ast.parse(open(mods[m]).read())
+        names = literal_names(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame":
+                data = node.args[0] if node.args else next((k.value for k in node.keywords if k.arg == "data"), None)
+                if isinstance(data, LITERALS) or (isinstance(data, ast.Name) and data.id in names):
+                    offenders.append(f"{m}:{node.lineno}")
+    assert offenders == [], f"createDataFrame on Python rows: {offenders}"
