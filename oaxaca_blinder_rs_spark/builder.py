@@ -28,14 +28,13 @@ guard.
 from __future__ import annotations
 
 import math
-import warnings
 from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .errors import ColumnNotFound, InsufficientData, InvalidGroupVariable, NonNumericData, OaxacaError
+from .errors import ColumnNotFound, InsufficientData, InvalidGroupVariable, NonNumericData, OaxacaError, warn
 from .formula import Formula
 from .functions.linalg import (
     GroupStats,
@@ -231,10 +230,9 @@ class OaxacaBuilder:
         group_a = levels[0] if levels[0] != group_b else levels[1]
         dropped = [lv for lv in levels if lv not in (group_a, group_b)]
         if dropped:
-            warnings.warn(
+            warn(
                 f"Group column '{self._group}' has {len(levels)} levels; comparing "
-                f"'{group_a}' with reference '{group_b}' and dropping {dropped}.",
-                stacklevel=3,
+                f"'{group_a}' with reference '{group_b}' and dropping {dropped}."
             )
         return group_a, group_b
 
@@ -498,12 +496,11 @@ class OaxacaBuilder:
                 except OaxacaError:
                     continue
             if len(reps_results) < self._bootstrap_reps:
-                warnings.warn(
+                warn(
                     f"{self._bootstrap_reps - len(reps_results)} out of "
                     f"{self._bootstrap_reps} bootstrap replications failed and were "
                     f"discarded. The analysis is based on {len(reps_results)} "
-                    "successful replications.",
-                    stacklevel=2,
+                    "successful replications."
                 )
 
         return self._assemble_results(point, reps_results, stats_a, stats_b, design, xcols, group_b)

@@ -6,6 +6,22 @@ builder.rs, math/ols.rs, math/logit.rs, akm.rs).
 
 from __future__ import annotations
 
+import os
+import sys
+import warnings
+
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__)) + os.sep
+
+
+def warn(message: str, category: type[Warning] = UserWarning) -> None:
+    """``warnings.warn`` attributed to the first frame outside this package,
+    so the warning names the caller's line whichever entry point (builder,
+    ``api``, CLI, MCP) led to it."""
+    frame, level = sys._getframe(1), 1
+    while frame is not None and os.path.abspath(frame.f_code.co_filename).startswith(_PACKAGE_DIR):
+        frame, level = frame.f_back, level + 1
+    warnings.warn(message, category, stacklevel=level + 1)
+
 
 class OaxacaError(Exception):
     """Base error for the engine."""

@@ -29,12 +29,11 @@ panic on the same path).
 from __future__ import annotations
 
 import math
-import warnings
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from ..errors import InvalidGroupVariable, NonNumericData, OaxacaError
+from ..errors import InvalidGroupVariable, NonNumericData, OaxacaError, warn
 from ..functions.linalg import GroupStats, ols_from_stats
 from ..functions.mathx import norm_cdf, norm_pdf
 from .bootstrap import bootstrap_stats, hash_uniform, poisson_count_expr
@@ -484,11 +483,10 @@ def run_heckman_oaxaca(builder):
             except OaxacaError:
                 continue
         if reps and len(reps_results) < reps:
-            warnings.warn(
+            warn(
                 f"{reps - len(reps_results)} out of {reps} bootstrap "
                 "replications failed and were discarded. The analysis is based "
-                f"on {len(reps_results)} successful replications.",
-                stacklevel=2,
+                f"on {len(reps_results)} successful replications."
             )
 
         def component(name, est, estimates):

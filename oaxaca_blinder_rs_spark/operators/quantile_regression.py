@@ -4,13 +4,15 @@ Reference: /root/reference/oaxaca_blinder/src/math/quantile_regression.rs
 formulates the check-loss minimization as an LP (min tau*1'u + (1-tau)*1'v
 s.t. X beta + u - v = y) solved by the Clarabel interior-point solver.
 
-This container has no LP solver (no scipy), so we solve the SAME objective by
+There is no LP solver here (no scipy). ``solve_qr_exact`` reaches the same
+LP optimum as a vertex: an optimal basic solution passes through k data
+points, and a basis-exchange simplex with Barrodale-Roberts line-search
+pivots (Koenker & d'Orey's ``rq.fit.br``) walks to it from the OLS plane and
+certifies it by the one-sided derivative along every edge. ``solve_qr`` is
 iteratively reweighted least squares (the MM algorithm statsmodels' QuantReg
-uses): WLS with weights w_i = 1/max(|r_i|, eps) scaled tau / (1-tau) by
-residual sign majorizes the check loss and converges to the LP optimum for
-well-posed problems. The reference's own accuracy bar (beta within 1e-4 on
-its test fixtures, quantile_regression.rs:131-171) is met; ties/degenerate
-vertices may differ from the LP at ~eps scale.
+uses): it attains the optimal check loss on well-posed problems, but its
+argmin can wander a flat optimal face, so it serves only as the start of the
+exact solver's fallback path for degenerate vertices.
 """
 
 from __future__ import annotations
@@ -59,7 +61,8 @@ def solve_qr(
     tol: float = 1e-8,
     eps: float = 1e-9,
 ) -> np.ndarray:
-    """Minimize sum rho_tau(y - X beta). Raises on failure like solve_qr."""
+    """Minimize sum rho_tau(y - X beta) by IRLS. Raises ValueError on bad
+    input and RuntimeError when a weighted solve fails or diverges."""
     n, k = X.shape
     if len(y) != n:
         raise ValueError("Input dimensions mismatch: X and y must have the same number of observations.")
@@ -92,45 +95,9 @@ def _check_loss(X: np.ndarray, y: np.ndarray, beta: np.ndarray, tau: float) -> f
     return float(np.sum(np.where(r >= 0, tau * r, (tau - 1.0) * r)))
 
 
-def solve_qr_exact(
-    X: np.ndarray,
-    y: np.ndarray,
-    tau: float,
-    max_pivots: int = 500,
-    return_basis: bool = False,
-):
-    """Exact LP-vertex quantile regression (the reference's semantics).
-
-    quantile_regression.rs:22-129 solves min sum rho_tau(y - X beta) as an
-    LP with an interior-point solver. Here: IRLS warm start (solve_qr), then
-    a basis-exchange simplex on the polyhedral complex — an optimal basic
-    solution passes through k data points, so maintain a nonsingular k-row
-    basis, check the one-sided directional derivative along every edge
-    direction (+-columns of inv(X_B)), and pivot along the steepest
-    descending edge to the nearest residual-zero crossing until every edge
-    derivative is nonnegative, which certifies the LP optimum (convex
-    piecewise-linear objective). Exact up to solve() roundoff, unlike IRLS
-    whose argmin can wander a near-flat optimal face by the documented
-    ~0.3%-of-scale spread.
-
-    With ``return_basis=True`` returns ``(beta, basis)`` where ``basis`` is
-    the certified k-row optimal basis (row indices into X) — or ``None`` on
-    the uncertified bail paths (rank deficiency, numeric degeneracy, pivot
-    budget). The SQL vertex-enumeration oracle (mm_qr_vertex) uses the
-    basis to canonicalize the optimal line from its two data points.
-    """
-
-    def _ret(b, basis_rows):
-        return (b, basis_rows) if return_basis else b
-
-    n, k = X.shape
-    beta = solve_qr(X, y, tau)
-    scale = max(float(np.max(np.abs(y))), 1.0)
-    ztol = 1e-9 * scale
-
-    # --- basis: k independent rows nearest the warm-start hyperplane ------
-    r = y - X @ beta
-    order = np.argsort(np.abs(r), kind="stable")
+def _independent_rows(X: np.ndarray, order: np.ndarray, k: int) -> np.ndarray | None:
+    """The first k linearly independent rows of X taken in ``order``
+    (Gram-Schmidt on the candidates), or None when they span less than k."""
     basis: list[int] = []
     U = np.zeros((k, k))  # orthonormal rows spanning chosen x_i's
     nu = 0
@@ -143,11 +110,111 @@ def solve_qr_exact(
             nu += 1
             basis.append(int(i))
             if nu == k:
-                break
-    if nu < k:
-        return _ret(beta, None)  # rank-deficient design: keep the IRLS solution
+                return np.array(basis)
+    return None
 
-    B = np.array(basis)
+
+def _smallest(v: np.ndarray, m: int) -> np.ndarray:
+    """Indices of the m smallest entries of v in increasing order (ties by
+    index), selected with ``argpartition`` rather than a full sort."""
+    idx = np.argpartition(v, m - 1)[:m] if m < len(v) else np.arange(len(v))
+    return idx[np.lexsort((idx, v[idx]))]
+
+
+def _one_sided(delta: np.ndarray, tau: float) -> np.ndarray:
+    """Per-column slope of the check loss of residuals sitting at zero that
+    move by ``delta`` per unit step: tau upward, tau-1 downward."""
+    return np.sum(np.where(delta > 0, tau * delta, (tau - 1.0) * delta), axis=0)
+
+
+def _line_search_vertex(X: np.ndarray, y: np.ndarray, tau: float, max_pivots: int):
+    """Basis exchange from the OLS plane with line-search pivots. Returns the
+    certified ``(beta, basis)``, or None on a degenerate vertex or any bail
+    (rank deficiency, singular basis, unbounded edge, pivot budget)."""
+    n, k = X.shape
+    scale = max(float(np.max(np.abs(y))), 1.0)
+    ztol = gtol = 1e-9 * scale
+    try:
+        beta, *_ = np.linalg.lstsq(X, y, rcond=None)
+    except np.linalg.LinAlgError:
+        return None
+    if not np.all(np.isfinite(beta)):
+        return None
+
+    # k independent rows nearest the OLS plane, from a growing nearest prefix
+    absr = np.abs(y - X @ beta)
+    m = min(n, 4 * k)
+    while True:
+        B = _independent_rows(X, _smallest(absr, m), k)
+        if B is not None or m == n:
+            break
+        m = min(n, 4 * m)
+    if B is None:
+        return None
+
+    for _ in range(max_pivots):
+        XB = X[B]
+        try:
+            beta = np.linalg.solve(XB, y[B])
+            Binv = np.linalg.inv(XB)
+        except np.linalg.LinAlgError:
+            return None
+        r = y - X @ beta
+        r[B] = 0.0
+        on_plane = np.abs(r) <= ztol
+        # slope along +-edge j (the +-j-th column of Binv): residuals change
+        # by delta = -+X @ Binv[:, j]; off the plane the slope is the signed
+        # weight w (tau above, tau-1 below) times delta, so one product
+        # (w @ X) @ Binv covers them; on the plane it is one-sided
+        w = np.where(r > 0, tau, tau - 1.0)
+        w[on_plane] = 0.0
+        wD = (w @ X) @ Binv
+        DZ = X[on_plane] @ Binv
+        grads = np.concatenate([_one_sided(-DZ, tau) - wD, _one_sided(DZ, tau) + wD])
+        jmin = int(np.argmin(grads))
+        if grads[jmin] >= -gtol:
+            # the 2k edges certify only a simple vertex: every point on the
+            # plane must copy a basis row (its row of X @ Binv a unit vector)
+            unit = (np.abs(np.abs(DZ).sum(axis=1) - 1.0) <= 1e-9) & (np.abs(DZ.max(axis=1) - 1.0) <= 1e-9)
+            return (beta, B) if unit.all() else None
+        s = 1.0 if jmin < k else -1.0
+        j = jmin % k
+        delta = -s * (X @ Binv[:, j])
+        # line search: pass crossings in step order, each adding |delta_i|
+        # to the slope; the row where the slope turns non-negative enters
+        cross = np.flatnonzero((r * delta < 0) & ~on_plane)
+        if cross.size == 0:
+            return None  # unbounded edge
+        t = -r[cross] / delta[cross]
+        gain = np.abs(delta[cross])
+        need = -grads[jmin] - gtol
+        m = min(cross.size, 64)
+        while True:
+            first = _smallest(t, m)
+            hit = int(np.searchsorted(np.cumsum(gain[first]), need))
+            if hit < m:
+                B[j] = cross[first[hit]]
+                break
+            if m == cross.size:
+                return None  # the slope stays negative: unbounded edge
+            m = min(cross.size, 2 * m)
+    return None
+
+
+def _nearest_crossing_vertex(X: np.ndarray, y: np.ndarray, tau: float, max_pivots: int):
+    """IRLS warm start, then pivots to the nearest residual-zero crossing:
+    the fallback for degenerate vertices. Returns ``(beta, basis)`` with
+    ``basis`` None on its bail paths, where beta is the IRLS solution or the
+    best vertex visited."""
+    k = X.shape[1]
+    beta = solve_qr(X, y, tau)
+    scale = max(float(np.max(np.abs(y))), 1.0)
+    ztol = 1e-9 * scale
+
+    B = _independent_rows(X, np.argsort(np.abs(y - X @ beta), kind="stable"), k)
+    if B is None:
+        return beta, None  # rank-deficient design: keep the IRLS solution
+
     best_beta, best_obj = beta, _check_loss(X, y, beta, tau)
     for _ in range(max_pivots):
         XB = X[B]
@@ -155,7 +222,7 @@ def solve_qr_exact(
             beta = np.linalg.solve(XB, y[B])
             Binv = np.linalg.inv(XB)
         except np.linalg.LinAlgError:
-            return _ret(best_beta, None)
+            return best_beta, None
         obj = _check_loss(X, y, beta, tau)
         if obj < best_obj:
             best_obj, best_beta = obj, beta
@@ -174,7 +241,7 @@ def solve_qr_exact(
             )
         jmin = int(np.argmin(grads))
         if grads[jmin] >= -1e-9 * scale:
-            return _ret(beta, B.copy())  # every edge ascends: LP optimum certified
+            return beta, B.copy()  # every edge ascends: LP optimum certified
         s = 1.0 if jmin < k else -1.0
         j = jmin % k
         delta = -s * D[:, j]
@@ -184,6 +251,51 @@ def solve_qr_exact(
         t[B] = np.inf
         enter = int(np.argmin(t))
         if not np.isfinite(t[enter]):
-            return _ret(best_beta, None)  # unbounded edge: numerically degenerate, bail
+            return best_beta, None  # unbounded edge: numerically degenerate, bail
         B[j] = enter
-    return _ret(best_beta, None)
+    return best_beta, None
+
+
+def solve_qr_exact(
+    X: np.ndarray,
+    y: np.ndarray,
+    tau: float,
+    max_pivots: int = 500,
+    return_basis: bool = False,
+):
+    """Exact LP-vertex quantile regression (the reference's semantics).
+
+    quantile_regression.rs:22-129 solves min sum rho_tau(y - X beta) as an
+    LP with an interior-point solver. Here a basis-exchange simplex on the
+    polyhedral complex: an optimal basic solution passes through k data
+    points, so keep a nonsingular k-row basis, take the one-sided
+    directional derivative along every edge direction (+-columns of
+    inv(X_B)), and pivot along the steepest descending edge until every edge
+    derivative is nonnegative, which certifies the LP optimum (convex
+    piecewise-linear objective). Exact up to solve() roundoff, unlike IRLS
+    whose argmin can wander a near-flat optimal face.
+
+    The path starts from the OLS plane (the k independent rows nearest it)
+    and pivots by line search: along the chosen edge it steps past residual
+    crossings while the slope stays negative (Barrodale-Roberts), so a few
+    pivots reach the optimum. The 2k-edge test certifies only a simple
+    vertex, so the certificate counts only when every point on the plane
+    copies a basis row (resampled duplicates are fine). On a degenerate
+    vertex (k+1 or more distinct points on the plane), and on every bail
+    path, the solve falls back to an IRLS start (``solve_qr``) with
+    nearest-crossing pivots.
+
+    With ``return_basis=True`` returns ``(beta, basis)`` where ``basis`` is
+    the certified k-row optimal basis (row indices into X) — or ``None`` on
+    the fallback's uncertified bail paths (rank deficiency, numeric
+    degeneracy, pivot budget). The SQL vertex-enumeration oracle
+    (mm_qr_vertex) uses the basis to canonicalize the optimal line from its
+    two data points.
+    """
+    if len(y) != X.shape[0]:
+        raise ValueError("Input dimensions mismatch: X and y must have the same number of observations.")
+    if not 0.0 <= tau <= 1.0:
+        raise ValueError("Tau must be between 0 and 1.")
+    found = _line_search_vertex(X, y, tau, max_pivots)
+    beta, basis = found if found is not None else _nearest_crossing_vertex(X, y, tau, max_pivots)
+    return (beta, basis) if return_basis else beta

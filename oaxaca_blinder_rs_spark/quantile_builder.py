@@ -4,8 +4,9 @@ Reference: /root/reference/oaxaca_blinder/src/quantile_decomposition.rs.
 
 Two fit engines, one orchestration (``run``):
 
-- 'driver': collect both groups' matrices once, thread-pooled exact-LP fits
-  (solve_qr_exact) — the reference's rayon design
+- 'driver': collect both groups' matrices once, then exact LP-vertex fits
+  (solve_qr_exact: line-search simplex pivots from the OLS plane) in a
+  thread pool sized to the usable cores — the reference's rayon design
   (quantile_decomposition.rs:221-229), guarded by COLLECT_LIMIT_CELLS;
 - 'distributed' (scale path): Gram-Newton on the convolution-smoothed check
   loss (conquer-style smoothed QR) — every (replicate, group, tau) quantile
@@ -28,7 +29,7 @@ thread_rng — unseeded; we improve on that, SURVEY §7.1).
 
 from __future__ import annotations
 
-import warnings
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
@@ -36,7 +37,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .errors import InvalidGroupVariable, NonNumericData, OaxacaError
+from .errors import InvalidGroupVariable, NonNumericData, OaxacaError, warn
 from .operators.bootstrap import bootstrap_stats
 from .operators.quantile_regression import exact_n_index, solve_qr_exact
 from .operators.scan import partition_offsets, release
@@ -156,6 +157,14 @@ def mm_tau_stream(seed: int, S: int, rep: int = -1) -> np.ndarray:
     return _rep_streams(seed, S, rep)[0]
 
 
+def _usable_cores() -> int:
+    """The cores this process may run on (its CPU affinity where the OS
+    reports one)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def _raise_if_infinite(names: list[str], finite) -> None:
     """NonNumericData for the first column whose ``finite`` flag is False
     (names: the outcome, then the design columns)."""
@@ -208,7 +217,6 @@ class QuantileDecompositionBuilder:
         self._simulations = 200
         self._bootstrap_reps = 20
         self._seed = 42
-        self._threads = 8
         self._fit_engine = "auto"
         self._design_cache = None
 
@@ -243,11 +251,13 @@ class QuantileDecompositionBuilder:
         limit (cells counted BEFORE collecting), else 'distributed' — a user
         at scale gets the Gram engine instead of an error.
 
-        'driver': collect group matrices once, thread-pooled NumPy fits
-        (reference's rayon shape; COLLECT_LIMIT-guarded). Each fit is the
-        exact LP-vertex optimum (solve_qr_exact: IRLS warm start + simplex
-        basis exchange) — the reference's interior-point semantics
-        (quantile_regression.rs:22-129) without an LP dependency.
+        'driver': collect group matrices once, NumPy fits in a thread pool
+        sized to the usable cores (reference's rayon shape;
+        COLLECT_LIMIT-guarded). Each fit is the exact LP-vertex optimum
+        (solve_qr_exact: simplex basis exchange with line-search pivots from
+        the OLS plane, an IRLS start only for degenerate vertices) — the
+        reference's interior-point semantics (quantile_regression.rs:22-129)
+        without an LP dependency.
 
         'distributed' (the scale path): Gram-Newton on the smoothed check
         loss — every (replicate, group, tau) quantile regression iterates
@@ -307,9 +317,11 @@ class QuantileDecompositionBuilder:
 
     # -- driver engine ----------------------------------------------------------
     def _driver_engine(self, design, xcols, group_a, taus_by_rep):
-        """One collect of both sides, then thread-pooled exact-LP fits
-        (quantile_decomposition.rs:173-229). A row's rank is its index in
-        the collected side array — the same order as the Gram engine's
+        """One collect of both sides, then exact-LP fits in a thread pool
+        with one thread per usable core (quantile_decomposition.rs:173-229):
+        a fit holds the GIL between its NumPy calls, so threads beyond the
+        cores only contend. A row's rank is its index in the collected side
+        array — the same order as the Gram engine's
         ``__mm_rn``. ``run`` has already row-guarded the collect."""
         pdf = design.select(self._group, self._outcome, *xcols).toPandas()
         X, y = [], []
@@ -329,11 +341,12 @@ class QuantileDecompositionBuilder:
             Xs, ys, tau = args
             try:
                 return solve_qr_exact(Xs, ys, tau)
-            except Exception:
-                return None
+            except (np.linalg.LinAlgError, RuntimeError, FloatingPointError, ValueError, OaxacaError):
+                return None  # a numeric failure: the fit counts as failed
 
         betas: dict[tuple[int, int], list[np.ndarray]] = {}
-        with ThreadPoolExecutor(max_workers=self._threads) as pool:
+        n_fits = 2 * sum(len(taus) for taus in taus_by_rep.values())
+        with ThreadPoolExecutor(max_workers=max(1, min(_usable_cores(), n_fits))) as pool:
             for r, taus in taus_by_rep.items():
                 fits = {}
                 for s in (0, 1):
@@ -801,11 +814,10 @@ class QuantileDecompositionBuilder:
                 needed[0].update(rank_a.tolist())
                 needed[1].update(rank_b.tolist())
             if failed:
-                warnings.warn(
+                warn(
                     f"{failed} out of {B} bootstrap replications failed and "
                     f"were discarded. The analysis is based on {B - failed} successful "
-                    "replications.",
-                    stacklevel=2,
+                    "replications."
                 )
 
             row_of = rows(needed)

@@ -138,3 +138,14 @@ def test_heckman_rejects_infinite_values(heckman_df, column):
     df = heckman_df.withColumn(column, F.when(hit, F.lit(-np.inf)).otherwise(F.col(column)))
     with pytest.raises(NonNumericData, match=f"'{column}' contains infinite values"):
         _run(df, "expr", 0)
+
+
+def test_dropped_group_level_warning_names_the_callers_line(heckman_df):
+    """A Heckman run on a third group level warns about the dropped level,
+    attributed to this file (the caller's line), not to a package frame."""
+    from pyspark.sql import functions as F
+
+    df = heckman_df.withColumn("grp", F.when(F.col("rid") % 10 == 0, F.lit("C")).otherwise(F.col("grp")))
+    with pytest.warns(UserWarning, match=r"dropping \['C'\]") as record:
+        _run(df, "expr", 0)
+    assert next(w for w in record if "dropping" in str(w.message)).filename == __file__

@@ -1,12 +1,16 @@
 """Matching engine and Machado-Mata tests (tests/matching_test.rs,
 math/quantile_regression.rs tests, integration_test.rs quantile part)."""
 
+import itertools
+
 import numpy as np
 import pytest
 
+from oaxaca_blinder_rs_spark.api import OaxacaBlinder
+from oaxaca_blinder_rs_spark.operators import quantile_regression
 from oaxaca_blinder_rs_spark.operators.matching import MatchingEngine
-from oaxaca_blinder_rs_spark.operators.quantile_regression import solve_qr
-from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder
+from oaxaca_blinder_rs_spark.operators.quantile_regression import exact_n_index, solve_qr, solve_qr_exact
+from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder, mm_tau_stream
 
 
 def matching_df(spark):
@@ -177,12 +181,15 @@ def test_machado_mata_distributed_engine(spark):
     assert abs(d.total_gap.estimate - rv.results_by_quantile["q50"].total_gap.estimate) < 4.0
 
 
+TIED_WAGE = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
+TIED_EDU = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
+TIED_GENDER = (["F"] * 5 + ["M"] * 5) * 4
+
+
 def tied_mm_df(spark, wage_edit=None, edu_edit=None):
     """The small tied fixture the Machado-Mata tests share; ``*_edit`` maps
     a row index to a replacement value."""
-    wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
-    edu = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
-    gender = (["F"] * 5 + ["M"] * 5) * 4
+    wage, edu, gender = list(TIED_WAGE), list(TIED_EDU), list(TIED_GENDER)
     for col, edit in ((wage, wage_edit), (edu, edu_edit)):
         for i, v in (edit or {}).items():
             col[i] = v
@@ -486,3 +493,122 @@ def test_machado_mata_gram_engine_releases_its_pins(spark):
             .run()
         )
         assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def test_machado_mata_failed_replicate_warning_names_the_callers_line(spark, monkeypatch):
+    """Through the ``api`` facade the failed-replicate warning is attributed
+    to the caller's line, not to ``quantile_builder.py`` or ``api.py``."""
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    bad = set(qb.mm_tau_stream(42, 20, rep=1).tolist())
+    real = qb.solve_qr_exact
+
+    def flaky(X, y, tau):
+        if tau in bad:
+            raise RuntimeError("forced fit failure")
+        return real(X, y, tau)
+
+    monkeypatch.setattr(qb, "solve_qr_exact", flaky)
+    mm = OaxacaBlinder(tied_mm_df(spark), "wage", "gender", "F", predictors=["education"], bootstrap_reps=3)
+    with pytest.warns(UserWarning, match="1 out of 3 bootstrap replications failed") as record:
+        mm.fit_machado_mata([0.5], simulations=20)
+    assert next(w for w in record if "bootstrap replications failed" in str(w.message)).filename == __file__
+
+
+def test_machado_mata_program_errors_propagate(spark, monkeypatch):
+    """Only numeric failures count as failed fits: a TypeError in the solver
+    reaches the caller instead of "Failed to estimate a sufficient number of
+    quantile regressions"."""
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    def broken(X, y, tau):
+        raise TypeError("solver bug")
+
+    monkeypatch.setattr(qb, "solve_qr_exact", broken)
+    b = (
+        QuantileDecompositionBuilder(tied_mm_df(spark), "wage", "gender", "F")
+        .predictors(["education"])
+        .quantiles([0.5])
+        .simulations(10)
+        .bootstrap_reps(0)
+        .fit_engine("driver")
+    )
+    with pytest.raises(TypeError, match="solver bug"):
+        b.run()
+
+
+def _check_loss(X, y, beta, tau):
+    r = y - X @ beta
+    return float(np.sum(np.where(r >= 0, tau * r, (tau - 1.0) * r)))
+
+
+def _enumerated_optimum(X, y, tau):
+    """The LP optimum by brute force: the least check loss over the planes
+    through every k rows with a nonsingular design."""
+    combos = np.array(list(itertools.combinations(range(len(y)), X.shape[1])))
+    XB = X[combos]
+    ok = np.abs(np.linalg.det(XB)) > 1e-9
+    betas = np.linalg.solve(XB[ok], y[combos[ok]][..., None])[..., 0]
+    r = y[None, :] - betas @ X.T
+    return float(np.min(np.sum(np.where(r >= 0, tau * r, (tau - 1.0) * r), axis=1)))
+
+
+def test_qr_exact_reaches_the_optimum_on_every_tied_fit():
+    """Every fit the driver engine makes on the tied fixture (replicates -1,
+    0 and 1, both sides, S=40, seed 42, exact-n resamples) attains the
+    enumerated LP optimum. Tied rows put k+1 or more distinct points on
+    many vertices' planes, where the 2k edge derivatives alone can certify a
+    non-optimal vertex."""
+    edu, wage, gender = np.array(TIED_EDU), np.array(TIED_WAGE), np.array(TIED_GENDER)
+    sides = [(np.column_stack([np.ones(m.sum()), edu[m]]), wage[m]) for m in (gender == "M", gender == "F")]
+    for rep in (-1, 0, 1):
+        for side, (X, y) in enumerate(sides):
+            if rep >= 0:
+                idx = exact_n_index(42, rep, side, len(y))
+                X, y = X[idx], y[idx]
+            for tau in mm_tau_stream(42, 40, rep):
+                got = _check_loss(X, y, solve_qr_exact(X, y, tau), tau)
+                assert got == pytest.approx(_enumerated_optimum(X, y, tau), rel=1e-12), (rep, side, tau)
+
+
+def test_qr_exact_reaches_the_optimum_on_an_integer_design():
+    """k=3 with integer predictors and outcome: degenerate vertices
+    everywhere; every fit attains the 3-point enumerated optimum."""
+    rng = np.random.default_rng(3)
+    n = 24
+    X = np.column_stack([np.ones(n), rng.integers(0, 4, n), rng.integers(0, 3, n)]).astype(float)
+    y = (X[:, 1] + 2.0 * X[:, 2] + rng.integers(-2, 3, n)).astype(float)
+    for tau in (0.1, 0.25, 0.5, 0.75, 0.9):
+        got = _check_loss(X, y, solve_qr_exact(X, y, tau), tau)
+        assert got == pytest.approx(_enumerated_optimum(X, y, tau), rel=1e-12), tau
+
+
+def test_qr_exact_certifies_a_vertex_of_the_flat_face():
+    """The 4-point face of test_qr_degenerate_tie_case_bounded: the exact
+    solver returns an optimal vertex (loss 1.0) with its certified basis."""
+    X = np.array([[1.0, 0.0], [1.0, 0.0], [1.0, 1.0], [1.0, 1.0]])
+    y = np.array([0.0, 1.0, 0.0, 1.0])
+    beta, basis = solve_qr_exact(X, y, 0.5, return_basis=True)
+    assert _check_loss(X, y, beta, 0.5) == pytest.approx(1.0, rel=1e-12)
+    assert basis is not None and len(basis) == 2
+    np.testing.assert_allclose(X[basis] @ beta, y[basis], atol=1e-12)
+
+
+def test_qr_exact_needs_no_irls_on_continuous_data(monkeypatch):
+    """On a continuous design every vertex is simple, so the line-search
+    path certifies the optimum by itself: with IRLS disabled the solver
+    still returns a certified basis."""
+
+    def no_irls(*args, **kwargs):
+        raise AssertionError("IRLS ran on a continuous design")
+
+    monkeypatch.setattr(quantile_regression, "solve_qr", no_irls)
+    rng = np.random.default_rng(11)
+    n = 5000
+    x = rng.uniform(8.0, 20.0, n)
+    X = np.column_stack([np.ones(n), x])
+    y = 5.0 + 1.5 * x + rng.normal(0.0, 3.0, n)
+    for tau in (0.1, 0.5, 0.9):
+        beta, basis = solve_qr_exact(X, y, tau, return_basis=True)
+        assert basis is not None
+        np.testing.assert_allclose(X[basis] @ beta, y[basis], atol=1e-9)

@@ -285,3 +285,16 @@ def test_failed_replicates_are_reported_as_a_warning(spark):
         res = b.run()
     warned = [re.match(r"(\d+) out of 20 bootstrap", str(w.message)) for w in record]
     assert res.n_failed_reps == int(next(m for m in warned if m).group(1)) > 0
+
+
+def test_failed_replicate_warning_names_the_callers_line(spark):
+    """Through the ``api`` facade the failed-replicate warning is attributed
+    to the caller's line, not to ``builder.py`` or ``api.py``."""
+    from oaxaca_blinder_rs_spark.api import OaxacaBlinder
+
+    rows = [(float(10 + i), float(i % 5), "F") for i in range(3)]
+    rows += [(float(20 + i), float(i % 7), "M") for i in range(30)]
+    df = spark.createDataFrame(rows, ["wage", "education", "gender"])
+    with pytest.warns(UserWarning, match="bootstrap replications failed") as record:
+        OaxacaBlinder(df, "wage", "gender", "F", predictors=["education"], bootstrap_reps=20).fit()
+    assert next(w for w in record if "bootstrap replications failed" in str(w.message)).filename == __file__

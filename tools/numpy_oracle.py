@@ -306,8 +306,8 @@ def check_loss(X: np.ndarray, y: np.ndarray, beta: np.ndarray, tau: float) -> fl
 def qr_exact_2d(X: np.ndarray, y: np.ndarray, tau: float, n_active: int = 50) -> np.ndarray:
     """Independent quantile-regression solver for k=2 ([intercept, x]).
 
-    A completely different algorithm than the engine's IRLS/MM
-    (operators/quantile_regression.py): (1) bisection on the slope
+    A completely different algorithm than the engine's basis-exchange
+    simplex (operators/quantile_regression.py): (1) bisection on the slope
     subgradient of g(b1) = min_b0 obj(b0, b1) — for fixed slope the optimal
     intercept is the tau-th inverted-CDF quantile of y - b1*x, and g is
     convex piecewise-linear in b1; (2) exact vertex polish — the LP optimum
@@ -381,7 +381,7 @@ def oracle_machado_mata(
     Replays the engine's exact seeded RNG stream (default_rng(seed): S
     uniform taus, then n-sized integer picks per side) but solves every
     quantile regression with `qr_exact_2d` — a different optimizer than the
-    engine's IRLS — so agreement pins the QR *solutions* and the simulation
+    engine's simplex — so agreement pins the QR *solutions* and the simulation
     semantics, not the iteration. Mirrors q_machado_mata: lineitem,
     y=l_extendedprice, x=l_quantity, groups A vs R, reps=0.
     """
