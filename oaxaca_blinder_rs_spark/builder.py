@@ -54,8 +54,31 @@ from .results import ComponentResult, DecompositionDetail, OaxacaResults, TwoFol
 INTERCEPT = "__ob_intercept__"
 GROUP_INDICATOR = "__ob_group_indicator__"
 ROW_ID = "__ob_row_id__"
+SEED = 42
 
 RESIDUAL_COLLECT_LIMIT = 2_000_000
+
+
+def categorical_levels(df: DataFrame, cols) -> dict[str, list]:
+    """Each categorical's distinct non-null levels in sorted order: one
+    distinct job per column."""
+    levels = {}
+    for var in cols:
+        levels[var] = [r[0] for r in df.select(var).distinct().orderBy(var).collect() if r[0] is not None]
+    return levels
+
+
+@dataclass
+class MeanPasses:
+    """What the mean path's Spark passes produce, for a caller that runs an
+    identically configured builder (reference coefficients aside) on the same
+    rows again: each categorical's levels, the point-estimate stats of every
+    group level, and the last bootstrap's ``(reps, method, replicate stats)``
+    (rep -> level -> stats)."""
+
+    levels: dict[str, list]
+    by_level: dict
+    boot: tuple[int, str, dict] | None = None
 
 
 @dataclass
@@ -94,7 +117,7 @@ class OaxacaBuilder:
         self._weights_col: str | None = None
         self._selection_outcome: str | None = None
         self._selection_predictors: list[str] = []
-        self._seed = 42
+        self._seed = SEED
         self._bootstrap_method = "auto"
         self._id_col: str | None = None
         self._engine = "expr"
@@ -200,20 +223,23 @@ class OaxacaBuilder:
         Levels come from the cleaned FULL frame (before the group filter),
         matching builder.rs:791-806 ordering of operations.
         """
+        return self._dummies(categorical_levels(df, self._categorical_predictors))
+
+    @staticmethod
+    def _dummies(levels: dict[str, list]) -> tuple[list[str], dict[str, int], dict[str, str]]:
+        """Dummy names (every level but the first), level counts and base
+        categories from ``categorical_levels``."""
         dummy_names: list[str] = []
         category_counts: dict[str, int] = {}
         base_categories: dict[str, str] = {}
-        for var in self._categorical_predictors:
-            levels = [r[0] for r in df.select(var).distinct().orderBy(var).collect()]
-            levels = [lv for lv in levels if lv is not None]
-            if not levels:
+        for var, lvs in levels.items():
+            if not lvs:
                 raise InsufficientData(
                     f"Categorical predictor '{var}' has no non-null levels"
                 )
-            category_counts[var] = len(levels)
-            base_categories[var] = f"{var}_{levels[0]}"
-            for lv in levels[1:]:
-                dummy_names.append(f"{var}_{lv}")
+            category_counts[var] = len(lvs)
+            base_categories[var] = f"{var}_{lvs[0]}"
+            dummy_names += [f"{var}_{lv}" for lv in lvs[1:]]
         return dummy_names, category_counts, base_categories
 
     def _group_names(self, df: DataFrame) -> tuple[str, str]:
@@ -391,10 +417,26 @@ class OaxacaBuilder:
             from .operators.heckman import run_heckman_oaxaca
 
             return run_heckman_oaxaca(self)
+        return self._run_mean()[0]
 
+    def _boot_method(self, n_total: int) -> str:
+        """The bootstrap method ``auto`` stands for: the fast GEMM stream on
+        the pandas engine or when reps x n is large, Catalyst otherwise."""
+        if self._bootstrap_method != "auto":
+            return self._bootstrap_method
+        if self._engine == "pandas" or self._bootstrap_reps * n_total > 2_000_000:
+            return "poisson_fast"
+        return "poisson"
+
+    def _run_mean(self, passes: MeanPasses | None = None) -> tuple[OaxacaResults, MeanPasses]:
+        """The mean path of ``run``. ``passes`` from an earlier run stands in
+        for the level scan and the point pass, and for the bootstrap pass
+        when it holds this run's replicates. Returns the results and the
+        passes, with whatever this run computed added to them."""
         df = self._clean(self._df)
         df = with_row_id(df, self._id_col, ROW_ID)
-        dummy_names, category_counts, base_categories = self._dummy_levels(df)
+        levels = passes.levels if passes is not None else categorical_levels(df, self._categorical_predictors)
+        dummy_names, category_counts, base_categories = self._dummies(levels)
 
         design, xcols = self._design(df, dummy_names)
         # NOTE: deliberately NOT cached. The design is consumed at most twice
@@ -408,12 +450,8 @@ class OaxacaBuilder:
         # analysis is one data scan. (Replicate work for group levels
         # outside {A, B} is wasted; pre-filter the input when the group
         # column has many levels.)
-        fused = (
-            self._engine == "pandas"
-            and self._bootstrap_method in ("poisson_fast", "exact_fast", "auto")
-        )
-        rep_stats: dict = {}
-        if fused:
+        fused_method = self._boot_method(0)
+        if passes is None and self._engine == "pandas" and fused_method in ("poisson_fast", "exact_fast"):
             all_stats = bootstrap_group_stats_fast(
                 design,
                 xcols,
@@ -424,17 +462,17 @@ class OaxacaBuilder:
                 wcol=self._weights_col,
                 id_col=ROW_ID,
                 include_identity=True,
-                method="exact" if self._bootstrap_method == "exact_fast" else "poisson",
+                method="exact" if fused_method == "exact_fast" else "poisson",
             )
-            stats = all_stats.pop(-1, {})
-            rep_stats = all_stats
-        else:
+            passes = MeanPasses(levels, all_stats.pop(-1, {}), (self._bootstrap_reps, fused_method, all_stats))
+        elif passes is None:
             # ONE aggregation pass computes every group's sufficient
             # stats; group names fall out of its keys (no distinct job).
-            stats = collect_group_stats(
+            passes = MeanPasses(levels, collect_group_stats(
                 design, xcols, self._outcome, group=self._group,
                 wcol=self._weights_col, engine=self._engine,
-            )
+            ))
+        stats = passes.by_level
         group_a, group_b = self._pick_groups(sorted(g for g in stats if g is not None))
         if group_a not in stats or group_b not in stats:
             raise InvalidGroupVariable("One group has no data")
@@ -446,39 +484,24 @@ class OaxacaBuilder:
         )
 
         reps_results: list[_SinglePass] = []
-        if self._bootstrap_reps > 0 and not fused:
-            boot_design = design.filter(F.col(self._group).isin([group_a, group_b]))
-            method = self._bootstrap_method
-            if method == "auto":
-                n_total = stats_a.n + stats_b.n
-                method = "poisson_fast" if self._bootstrap_reps * n_total > 2_000_000 else "poisson"
-            if method in ("poisson_fast", "exact_fast"):
-                rep_stats = bootstrap_group_stats_fast(
-                    boot_design,
-                    xcols,
-                    self._outcome,
-                    self._group,
-                    reps=self._bootstrap_reps,
-                    seed=self._seed,
-                    wcol=self._weights_col,
-                    id_col=ROW_ID,
-                    method="exact" if method == "exact_fast" else "poisson",
-                    group_sizes={group_a: stats_a.n, group_b: stats_b.n},
-                )
-            else:
-                rep_stats = bootstrap_group_stats(
-                    boot_design,
-                    xcols,
-                    self._outcome,
-                    self._group,
-                    reps=self._bootstrap_reps,
-                    seed=self._seed,
-                    wcol=self._weights_col,
-                    id_col=ROW_ID,
-                    method=method,
-                    group_sizes={group_a: stats_a.n, group_b: stats_b.n},
-                )
         if self._bootstrap_reps > 0:
+            method = self._boot_method(stats_a.n + stats_b.n)
+            boot = passes.boot
+            if boot is None or boot[:2] != (self._bootstrap_reps, method):
+                run_boot = bootstrap_group_stats_fast if method in ("poisson_fast", "exact_fast") else bootstrap_group_stats
+                boot = passes.boot = (self._bootstrap_reps, method, run_boot(
+                    design.filter(F.col(self._group).isin([group_a, group_b])),
+                    xcols,
+                    self._outcome,
+                    self._group,
+                    reps=self._bootstrap_reps,
+                    seed=self._seed,
+                    wcol=self._weights_col,
+                    id_col=ROW_ID,
+                    method=method.removesuffix("_fast"),
+                    group_sizes={group_a: stats_a.n, group_b: stats_b.n},
+                ))
+            rep_stats = boot[2]
             for rep in sorted(rep_stats):
                 per_group = rep_stats[rep]
                 if group_a not in per_group or group_b not in per_group:
@@ -503,7 +526,8 @@ class OaxacaBuilder:
                     "successful replications."
                 )
 
-        return self._assemble_results(point, reps_results, stats_a, stats_b, design, xcols, group_b)
+        results = self._assemble_results(point, reps_results, stats_a, stats_b, design, xcols, group_b)
+        return results, passes
 
     # -- results assembly (builder.rs:849-951) ----------------------------------
     def _assemble_results(

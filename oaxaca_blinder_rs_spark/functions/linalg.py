@@ -145,7 +145,7 @@ def stats_from_row(row, xcols: list[str], has_y: bool = True) -> GroupStats:
         ysum = 0.0
     return GroupStats(
         names=list(xcols),
-        n=int(row["__n"]),
+        n=int(row["__n"] or 0),
         wsum=float(row["__wsum"] or 0.0),
         xtx=xtx,
         xty=xty,

@@ -10,6 +10,19 @@ sessionId query param, x-api-key / Bearer auth, per-minute rate limit,
 http.server); each tool call parses the request's CSV bytes into a Spark
 frame and delegates to operators/engine_ops.
 
+A review sends the same company CSV to all five tools, so the server keeps
+each company's sufficient statistics between calls: a bounded, lock-guarded
+LRU of ``engine_ops.ReviewStats``, keyed by the SHA-256 of ``csv_content``
+and the model spec (outcome, group, reference group, predictors,
+categorical predictors). An entry holds driver-side aggregates only (the
+strict cast's verdict, the per-level point stats, the last decomposition's
+bootstrap replicate stats), never a Spark block, and the engine uses it
+only for the frame object and model spec it was handed with. The first
+tool to need an aggregate computes it; the others skip the cast check and
+the stats pass, and ``verify_adjustments`` derives its bootstrap from
+decompose's replicates plus one aggregation over the adjusted rows. Responses equal
+those of a fresh server up to floating-point summation order.
+
     python -m oaxaca_blinder_rs_spark.mcp_server                 # stdio
     python -m oaxaca_blinder_rs_spark.mcp_server --transport sse \
         --port 8084 --api-key KEY                                # HTTP/SSE
@@ -17,11 +30,14 @@ frame and delegates to operators/engine_ops.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import sys
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import asdict
 
 MAX_BODY_BYTES = 2 * 1024 * 1024
@@ -29,6 +45,7 @@ SSE_RATE_LIMIT_PER_MIN = 60
 SSE_SESSION_TTL_SECS = 3600.0  # idle sessions swept after 1h (ref never expires)
 
 RATE_LIMIT_PER_MIN = 30
+STATS_CACHE_ENTRIES = 8  # companies whose sufficient statistics a server keeps
 
 TOOLS = [
     {
@@ -147,16 +164,45 @@ def _clean_floats(obj):
     return obj
 
 
+class _StatsCache:
+    """LRU of ``engine_ops.ReviewStats`` by (CSV digest, model spec), at most
+    ``bound`` entries; an entry dropped from it is garbage, as it pins no
+    Spark block."""
+
+    def __init__(self, bound: int) -> None:
+        self.bound = bound
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, args: dict):
+        from .operators.engine_ops import ReviewStats, model_spec
+
+        csv = args["csv_content"]
+        spec = model_spec(
+            args["outcome_variable"], args["group_variable"], args["reference_group"],
+            args["predictors"], args.get("categorical_predictors"),
+        )
+        key = (hashlib.sha256(csv if isinstance(csv, bytes) else csv.encode()).hexdigest(), spec)
+        with self._lock:
+            entry = self._entries.pop(key, None) or ReviewStats(spec)
+            self._entries[key] = entry
+            while len(self._entries) > self.bound:
+                self._entries.popitem(last=False)
+            return entry
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
 class McpServer:
     def __init__(self, spark=None):
-        import threading
-
         self._spark = spark
         self._calls: list[float] = []
         # handle() is invoked from ThreadingHTTPServer handler threads in the
         # SSE transport; guard the sliding-window limiter like the rest of the
         # shared state so concurrent calls can't miscount.
         self._calls_lock = threading.Lock()
+        self._stats = _StatsCache(STATS_CACHE_ENTRIES)
 
     def spark(self):
         if self._spark is None:
@@ -175,7 +221,15 @@ class McpServer:
     def call_tool(self, name: str, args: dict):
         from .operators import engine_ops as eo
 
+        if name not in {t["name"] for t in TOOLS}:
+            raise ValueError(f"Unknown tool: {name}")
         df = self._frame(args)
+        with eo.reusing(self._stats.get(args), df):
+            return self._dispatch(name, df, args)
+
+    def _dispatch(self, name: str, df, args: dict):
+        from .operators import engine_ops as eo
+
         outcome = args["outcome_variable"]
         group = args["group_variable"]
         ref = args["reference_group"]
@@ -189,6 +243,7 @@ class McpServer:
                 bootstrap_reps=int(args.get("bootstrap_reps", 100)),
                 reference_coefficients=args.get("reference_coefficients"),
                 quantile=args.get("quantile"),
+                id_col=rid,
             )
             return asdict(res)
         if name == "simulate_remediation":
@@ -241,7 +296,6 @@ class McpServer:
                 id_col=rid,
             )
             return {"points": [asdict(p) for p in pts]}
-        raise ValueError(f"Unknown tool: {name}")
 
     # -- JSON-RPC ------------------------------------------------------------
     def handle(self, req: dict):
@@ -306,7 +360,6 @@ def make_sse_server(port: int, api_key: str, server: McpServer | None = None):
     - DELETE /sse: tears down the session named by Mcp-Session-Id.
     Rate limit: 60 req/min sliding window -> 429. Body cap 2 MiB -> 413.
     """
-    import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
     from urllib.parse import parse_qs, urlparse
 

@@ -47,6 +47,7 @@ __all__ = [
     "bootstrap_group_stats",
     "bootstrap_group_stats_fast",
     "poisson_count_expr",
+    "poisson_replicate_count",
     "poisson_counts_np",
     "hash_uniform",
 ]
@@ -73,6 +74,14 @@ def poisson_count_expr(u: Column, max_k: int = 12) -> Column:
         expr = F.when(cond, F.lit(k)) if expr is None else expr.when(cond, F.lit(k))
         pmf /= k + 1
     return expr.otherwise(F.lit(max_k))
+
+
+def poisson_replicate_count(row_id: Column, rep: Column, seed: int) -> Column:
+    """How many times row ``row_id`` appears in Catalyst Poisson replicate
+    ``rep`` (``bootstrap_group_stats(method='poisson')``), as a double. A
+    pure function of (row id, rep, seed): it does not depend on the row's
+    values."""
+    return poisson_count_expr(hash_uniform(row_id, rep, F.lit(seed))).cast("double")
 
 
 def bootstrap_stats(estimates: list[float], point_estimate: float) -> tuple[float, float, tuple[float, float]]:
@@ -113,8 +122,7 @@ def bootstrap_group_stats(
     """All B replicates' per-group sufficient statistics in one Spark job."""
     if method == "poisson":
         boot = df.withColumn("__rep", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
-        u = hash_uniform(F.col(id_col), F.col("__rep"), F.lit(seed))
-        boot = boot.withColumn("__cnt", poisson_count_expr(u).cast("double"))
+        boot = boot.withColumn("__cnt", poisson_replicate_count(F.col(id_col), F.col("__rep"), seed))
     elif method == "exact":
         if not group_sizes:
             group_sizes = {r[0]: r[1] for r in df.groupBy(group).count().collect()}

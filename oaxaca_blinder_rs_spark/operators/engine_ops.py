@@ -20,9 +20,17 @@ Spark-first realization:
   step's X'y / y'y delta from one aggregation over the payment schedule —
   no per-step data pass (the reference recomputes an n-row matmul per step,
   analysis.rs:1087-1096);
-- tables built on the driver (adjustments, overrides, budget steps) enter
+- tables built on the driver (adjustments, overrides) enter
   the JVM through ``local_table`` as Arrow LocalRelations, so no call
-  without a UDF starts a Python worker.
+  without a UDF starts a Python worker;
+- a caller that sends the same data through several of these functions
+  (the MCP server's review of one company CSV) can keep its driver-side
+  aggregates in a ``ReviewStats`` and run the calls on one frame object
+  inside ``reusing(stats, df)``: the strict cast's verdict, the per-level
+  point stats and the decomposition's last bootstrap are then computed
+  once. ``verify_adjustments`` derives the adjusted data's stats from them
+  and one aggregation over the adjusted rows (adjustments change only y),
+  and ``check_defensibility`` takes the reference Gram from them.
 
 Row identity: adjustments are keyed by a stable ``row_id`` (pass ``id_col``),
 not by position (SURVEY §7.5 risk 1).
@@ -31,17 +39,21 @@ not by position (SURVEY §7.5 risk 1).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from contextlib import contextmanager
+from contextvars import ContextVar
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
+from .bootstrap import poisson_replicate_count
 from .scan import local_table, ordered_prev_cumsum, release, with_row_id
+from ..builder import SEED, MeanPasses, OaxacaBuilder, categorical_levels
 from ..errors import ColumnNotFound, InvalidGroupVariable, NonNumericData, OaxacaError
 from ..functions.linalg import (
     GroupStats,
-    collect_group_stats,
     gram_agg_exprs,
     pooled_stats,
     stats_from_row,
@@ -190,6 +202,59 @@ class DecompositionResult:
 
 
 # ---------------------------------------------------------------------------
+# sufficient statistics kept across calls
+# ---------------------------------------------------------------------------
+
+def model_spec(outcome, group, reference_group, predictors, categorical_predictors) -> tuple:
+    """What the stats of one frame depend on besides its rows: (outcome,
+    group, reference group, predictors, categorical predictors)."""
+    return (outcome, group, reference_group, tuple(predictors), tuple(categorical_predictors or ()))
+
+
+class ReviewStats:
+    """Driver-side aggregates of one input frame under the model ``spec``
+    (``model_spec``), filled by whichever call computes them first. Holds no
+    Spark blocks.
+
+    - ``cast_checked``: ``strict_numeric_cast`` passed on the outcome and
+      predictors;
+    - ``point``: the builder's ``MeanPasses`` of the null-dropped rows
+      (categorical levels, every group level's point stats and the last
+      bootstrap's replicate stats) with, per group level, whether it is the
+      reference group under Spark's comparison."""
+
+    def __init__(self, spec: tuple) -> None:
+        self.spec = spec
+        self.cast_checked = False
+        self.point: tuple[MeanPasses, dict] | None = None
+
+
+_REVIEW: ContextVar[tuple[ReviewStats, DataFrame] | None] = ContextVar("engine_ops_review_stats", default=None)
+
+
+@contextmanager
+def reusing(stats: ReviewStats, df: DataFrame):
+    """Run this module's functions on ``stats``: a call given this very
+    ``df`` (the same object) and ``stats.spec``'s model takes the aggregates
+    ``stats`` holds instead of recomputing them, and adds the ones it
+    computes; any other frame or model is computed afresh. Context-local, so
+    concurrent threads each see their own."""
+    token = _REVIEW.set((stats, df))
+    try:
+        yield stats
+    finally:
+        _REVIEW.reset(token)
+
+
+def _review(df: DataFrame, *spec) -> ReviewStats | None:
+    """The ``reusing`` stats when they were set for ``df`` and this model."""
+    bound = _REVIEW.get()
+    if bound is None or bound[1] is not df or bound[0].spec != model_spec(*spec):
+        return None
+    return bound[0]
+
+
+# ---------------------------------------------------------------------------
 # shared helpers
 # ---------------------------------------------------------------------------
 
@@ -216,31 +281,145 @@ def strict_numeric_cast(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.withColumns({c: F.col(c).try_cast("double") for c in cols})
 
 
-def _adjustment_table(df: DataFrame, adjustments) -> DataFrame:
-    """(ROW_ID, __delta) from an ``index``/``adjustment`` frame or a list of
-    (index, delta) pairs."""
+def _cast(df: DataFrame, cols: list[str], review: ReviewStats | None) -> DataFrame:
+    """``strict_numeric_cast``, without its check job once ``review``
+    records that the check passed."""
+    if review is not None and review.cast_checked:
+        return df.withColumns({c: F.col(c).try_cast("double") for c in cols})
+    out = strict_numeric_cast(df, cols)
+    if review is not None:
+        review.cast_checked = True
+    return out
+
+
+def _fit_columns(outcome: str, group: str, predictors, categorical_predictors) -> list[str]:
+    return [outcome, group] + list(predictors) + list(categorical_predictors or [])
+
+
+def _complete(df: DataFrame, outcome: str, group: str, predictors, categorical_predictors) -> DataFrame:
+    """The rows every model here is fitted on (the builder's null drop)."""
+    return df.dropna(subset=_fit_columns(outcome, group, predictors, categorical_predictors))
+
+
+def _is_complete(df: DataFrame, cols: list[str]):
+    """``dropna(subset=cols)``'s row predicate as a column: every column
+    non-null, and not NaN where it is floating point."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    cond = F.lit(True)
+    for c in cols:
+        cond = cond & F.col(c).isNotNull()
+        if isinstance(types[c], (DoubleType, FloatType)):
+            cond = cond & ~F.isnan(c)
+    return cond
+
+
+def _point_stats(
+    df: DataFrame,
+    outcome: str,
+    group: str,
+    reference_group: str,
+    predictors: list[str],
+    categorical_predictors: list[str] | None,
+    review: ReviewStats | None,
+) -> tuple[DataFrame, MeanPasses, dict]:
+    """The cast frame, the point stats of its null-dropped rows per group
+    level and each level's reference flag (Spark's own comparison).
+
+    Taken from ``review`` when it holds them; otherwise ONE grouped
+    aggregation over every row makes ``strict_numeric_cast``'s checks and,
+    weighting incomplete rows out, the per-level Gram, and records all
+    three in ``review``."""
+    cols = [outcome] + list(predictors)
+    if review is not None and review.point is not None:
+        return _cast(df, cols, review), *review.point
+    for c in cols:
+        if c not in df.columns:
+            raise ColumnNotFound(c)
+    checks = {}
+    for i, c in enumerate(cols):
+        d = F.col(c).try_cast("double")
+        checks[f"__bad{i}"] = (d.isNull() & F.col(c).isNotNull()).cast("long")
+        checks[f"__inf{i}"] = (F.abs(d) == F.lit(math.inf)).cast("long")
+    cast = df.withColumns({**checks, **{c: F.col(c).try_cast("double") for c in cols}})
+    levels = categorical_levels(
+        _complete(cast, outcome, group, predictors, categorical_predictors), categorical_predictors or []
+    )
+    design, xcols = _design(cast, predictors, levels)
+    keep = _fit_columns(outcome, group, predictors, categorical_predictors)
+    rows = design.withColumn("__w", F.when(_is_complete(cast, keep), F.lit(1.0))).groupBy(group).agg(
+        F.first(F.col(group) == F.lit(reference_group)).alias("__is_ref"),
+        *[F.sum(name).alias(name) for name in checks],
+        *gram_agg_exprs(xcols, outcome, wcol="__w", count_expr=F.col("__w")),
+    ).collect()
+    for i, c in enumerate(cols):
+        if sum(r[f"__bad{i}"] or 0 for r in rows) > 0:
+            raise NonNumericData(c)
+        if sum(r[f"__inf{i}"] or 0 for r in rows) > 0:
+            raise NonNumericData(c, "infinite values")
+    rows = [r for r in rows if r[group] is not None and r["__n"]]
+    passes = MeanPasses(levels, {r[group]: stats_from_row(r, xcols) for r in rows})
+    is_ref = {r[group]: r["__is_ref"] for r in rows}
+    if review is not None:
+        review.cast_checked = True
+        review.point = passes, is_ref
+    return df.withColumns({c: F.col(c).try_cast("double") for c in cols}), passes, is_ref
+
+
+def _adjustment_table(df: DataFrame, adjustments, overrides=None, predictors=()) -> DataFrame:
+    """(ROW_ID, __delta), one row per index with its summed delta, from an
+    ``index``/``adjustment`` frame or a list of (index, delta) pairs.
+    ``overrides`` ({row id: {predictor: value}}) add one ``__ov_<predictor>``
+    column per predictor, NaN or null where the row does not override it."""
+    ov = {int(i): o for i, o in (overrides or {}).items()}
+
+    def override_columns(ids):
+        return {f"__ov_{p}": ("double", [float(ov.get(i, {}).get(p, math.nan)) for i in ids]) for p in predictors}
+
     if isinstance(adjustments, DataFrame):
-        return adjustments.select(
-            F.col("index").cast("long").alias(ROW_ID), F.col("adjustment").alias("__delta")
+        table = adjustments.groupBy(F.col("index").cast("long").alias(ROW_ID)).agg(
+            F.sum(F.col("adjustment").cast("double")).alias("__delta")
         )
-    return local_table(df.sparkSession, {
-        ROW_ID: ("long", [int(i) for i, _ in adjustments]),
-        "__delta": ("double", [float(v) for _, v in adjustments]),
-    })
+        if ov:
+            ids = list(ov)
+            table = table.join(
+                F.broadcast(local_table(df.sparkSession, {ROW_ID: ("long", ids), **override_columns(ids)})),
+                on=ROW_ID, how="left",
+            )
+        return table
+    deltas = _summed(adjustments)
+    ids = list(deltas)
+    columns = {ROW_ID: ("long", ids), "__delta": ("double", [deltas[i] for i in ids])}
+    return local_table(df.sparkSession, {**columns, **(override_columns(ids) if ov else {})})
 
 
-def _design(df: DataFrame, predictors: list[str], categorical_predictors: list[str] | None):
-    """Intercept-first design with skip-first dummies (builder conventions)."""
+def _summed(adjustments) -> dict[int, float]:
+    deltas: dict[int, float] = {}
+    for i, v in adjustments:
+        deltas[int(i)] = deltas.get(int(i), 0.0) + float(v)
+    return deltas
+
+
+def _design(df: DataFrame, predictors: list[str], levels: dict[str, list]):
+    """Intercept-first design with skip-first dummies (builder conventions)
+    over ``categorical_levels``."""
     dummy_names = []
     out = df.withColumn(INTERCEPT, F.lit(1.0))
-    for var in categorical_predictors or []:
-        levels = [r[0] for r in df.select(var).distinct().orderBy(var).collect() if r[0] is not None]
-        for lv in levels[1:]:
+    for var, lvs in levels.items():
+        for lv in lvs[1:]:
             name = f"{var}_{lv}"
             out = out.withColumn(name, (F.col(var) == F.lit(lv)).cast("double"))
             dummy_names.append(name)
     xcols = [INTERCEPT] + list(predictors) + dummy_names
     return out, xcols
+
+
+def _with_overrides(df: DataFrame, predictors: list[str]) -> DataFrame:
+    """Each predictor replaced by its joined ``__ov_<predictor>`` where that
+    is set (not null, not NaN)."""
+    return df.withColumns({
+        p: F.when(~F.isnan(F.coalesce(F.col(f"__ov_{p}"), F.lit(math.nan))), F.col(f"__ov_{p}")).otherwise(F.col(p))
+        for p in predictors
+    })
 
 
 def _lstsq_beta(xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
@@ -297,11 +476,42 @@ def run_decomposition(
     bootstrap_reps: int = 100,
     reference_coefficients: str | None = None,
     quantile: float | None = None,
+    id_col: str | None = None,
 ) -> DecompositionResult:
-    df = strict_numeric_cast(df, [outcome] + list(predictors))
+    """The library decomposition in the engine's conventions. Pass ``id_col``
+    (a stable row key) to make the bootstrap replicates independent of how
+    the frame is partitioned; only then are they kept in a reused
+    ``ReviewStats``."""
+    review = _review(df, outcome, group, reference_group, predictors, categorical_predictors)
+    if quantile is not None:
+        df = _cast(df, [outcome] + list(predictors), review)
+        return _decompose(
+            df, outcome, group, reference_group, predictors, categorical_predictors,
+            bootstrap_reps, reference_coefficients, quantile, id_col,
+        )
+    df, passes, _ = _point_stats(
+        df, outcome, group, reference_group, predictors, categorical_predictors, review
+    )
+    if id_col is None:
+        passes = MeanPasses(passes.levels, passes.by_level)
     return _decompose(
         df, outcome, group, reference_group, predictors, categorical_predictors,
-        bootstrap_reps, reference_coefficients, quantile,
+        bootstrap_reps, reference_coefficients, id_col=id_col, passes=passes,
+    )
+
+
+def _summary(by_level: dict, reference_group) -> DataSummary:
+    """engine summary from per-level (count, outcome sum) of the null-dropped
+    rows: A = the reference group, B = every other level (analysis.rs:106-133)."""
+    na, sa = by_level.get(reference_group, (0, 0.0))
+    nb = sum(n for lv, (n, _) in by_level.items() if lv != reference_group)
+    sb = sum(y for lv, (_, y) in by_level.items() if lv != reference_group)
+    return DataSummary(
+        total_count=na + nb,
+        group_a_count=na,
+        group_b_count=nb,
+        group_a_mean=sa / na if na else 0.0,
+        group_b_mean=sb / nb if nb else 0.0,
     )
 
 
@@ -315,25 +525,12 @@ def _decompose(
     bootstrap_reps: int,
     reference_coefficients: str | None = None,
     quantile: float | None = None,
+    id_col: str | None = None,
+    passes: MeanPasses | None = None,
 ) -> DecompositionResult:
-    """``run_decomposition`` on a frame ``strict_numeric_cast`` already checked."""
-    from ..builder import OaxacaBuilder
-
-    # engine summary: A = reference group (analysis.rs:106-133)
-    srow = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col(group) == reference_group).cast("long")).alias("na"),
-        F.avg(F.when(F.col(group) == reference_group, F.col(outcome))).alias("ma"),
-        F.avg(F.when(F.col(group) != reference_group, F.col(outcome))).alias("mb"),
-    ).collect()[0]
-    summary = DataSummary(
-        total_count=int(srow["n"]),
-        group_a_count=int(srow["na"] or 0),
-        group_b_count=int(srow["n"]) - int(srow["na"] or 0),
-        group_a_mean=float(srow["ma"] or 0.0),
-        group_b_mean=float(srow["mb"] or 0.0),
-    )
-
+    """``run_decomposition`` on a frame ``strict_numeric_cast`` already
+    checked. On the mean path ``passes`` stand in for the builder's own,
+    and receive the bootstrap replicates it computes."""
     rc = {"GroupA": "group_a", "GroupB": "group_b", "Weighted": "weighted"}.get(
         reference_coefficients or "", "pooled"
     )
@@ -345,10 +542,17 @@ def _decompose(
     )
     if categorical_predictors:
         b.categorical_predictors(categorical_predictors)
+    if id_col is not None:
+        b.id_col(id_col)
     if quantile is not None:
         res = b.decompose_quantile(quantile)
+        rows = _complete(df, outcome, group, predictors, categorical_predictors).groupBy(group).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(outcome).alias("ys")
+        ).collect()
+        summary = _summary({r[group]: (int(r["n"]), float(r["ys"])) for r in rows}, reference_group)
     else:
-        res = b.run()
+        res, passes = b._run_mean(passes)
+        summary = _summary({lv: (s.n, s.ysum) for lv, s in passes.by_level.items()}, reference_group)
 
     total = res.total_gap
     explained = res.two_fold.explained.estimate
@@ -398,26 +602,19 @@ def _prepare(
     categorical_predictors: list[str] | None,
     id_col: str | None,
 ) -> _Prepared:
-    df = strict_numeric_cast(df, [outcome] + list(predictors))
-    df = with_row_id(df, id_col, ROW_ID).dropna(
-        subset=[outcome, group] + list(predictors) + list(categorical_predictors or [])
+    review = _review(df, outcome, group, reference_group, predictors, categorical_predictors)
+    df, passes, is_ref = _point_stats(
+        df, outcome, group, reference_group, predictors, categorical_predictors, review
+    )
+    by_level = passes.by_level
+    ref = [by_level[lv] for lv, flag in is_ref.items() if flag is True]
+    tgt = [by_level[lv] for lv, flag in is_ref.items() if flag is False]
+    if not ref or not tgt:
+        raise OaxacaError("One group has no data")
+    df = _complete(
+        with_row_id(df, id_col, ROW_ID), outcome, group, predictors, categorical_predictors
     ).cache()
-    try:
-        design, xcols = _design(df, predictors, categorical_predictors)
-        # grouped by the raw level, so the library gap can pick its A the
-        # builder's way; the reference flag is Spark's own comparison
-        rows = design.groupBy(group).agg(
-            F.first(F.col(group) == F.lit(reference_group)).alias("__is_ref"),
-            *gram_agg_exprs(xcols, outcome),
-        ).collect()
-        by_level = {r[group]: stats_from_row(r, xcols) for r in rows}
-        ref = [by_level[r[group]] for r in rows if r["__is_ref"] is True]
-        tgt = [by_level[r[group]] for r in rows if r["__is_ref"] is False]
-        if not ref or not tgt:
-            raise OaxacaError("One group has no data")
-    except BaseException:
-        df.unpersist()
-        raise
+    design, xcols = _design(df, predictors, passes.levels)
     return _Prepared(df, design, xcols, by_level, _sum_stats(ref), _sum_stats(tgt))
 
 
@@ -434,8 +631,6 @@ def _original_gap(
     reference, A = first sorted level that is not B) and its from-stats
     path, so the value and the errors are those of
     ``OaxacaBuilder(...).run().total_gap``."""
-    from ..builder import OaxacaBuilder
-
     stats = prep.by_level
     levels = sorted(g for g in stats if g is not None)
     if len(levels) < 2:
@@ -683,17 +878,93 @@ def verify_adjustments(
     bootstrap_reps: int = 100,
     id_col: str | None = None,
 ) -> DecompositionResult:
-    """analysis.rs:40-96: apply wage deltas at row ids, re-run decomposition."""
-    df = with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col, ROW_ID)
-    mutated = df.join(
-        F.broadcast(_adjustment_table(df, adjustments)), on=ROW_ID, how="left"
-    ).withColumn(
+    """analysis.rs:40-96: apply wage deltas at row ids, re-run decomposition.
+
+    With a reused ``ReviewStats`` that holds this bootstrap's Catalyst
+    Poisson replicates, the adjusted data's stats are derived instead
+    (``_adjusted_passes``); the decomposition is the same either way."""
+    review = _review(df, outcome, group, reference_group, predictors, categorical_predictors)
+    df = with_row_id(_cast(df, [outcome] + list(predictors), review), id_col, ROW_ID)
+    adj = _adjustment_table(df, adjustments)
+    mutated = df.join(F.broadcast(adj), on=ROW_ID, how="left").withColumn(
         outcome, F.col(outcome) + F.coalesce(F.col("__delta"), F.lit(0.0))
     ).drop("__delta")
+    point = review.point if review is not None else None
+    passes = None
+    # a NaN delta makes its row a null the decomposition drops: not a shift
+    if point is not None and id_col is not None and not isinstance(adjustments, DataFrame) and all(
+        math.isfinite(v) for v in _summed(adjustments).values()
+    ):
+        passes = _adjusted_passes(
+            df, adj, point[0], outcome, group, predictors, categorical_predictors, bootstrap_reps
+        )
     return _decompose(
         mutated, outcome, group, reference_group, predictors, categorical_predictors,
-        bootstrap_reps,
+        bootstrap_reps, id_col=id_col, passes=passes,
     )
+
+
+def _adjusted_passes(
+    df: DataFrame,
+    adj: DataFrame,
+    passes: MeanPasses,
+    outcome: str,
+    group: str,
+    predictors: list[str],
+    categorical_predictors: list[str] | None,
+    reps: int,
+) -> MeanPasses | None:
+    """The builder's passes over the adjusted data, from ``passes`` of the
+    original data and ONE aggregation over the adjusted rows.
+
+    An adjustment changes only y, and a Catalyst Poisson replicate weighs
+    row i by c_i = poisson(hash(row id, rep, seed)) whatever y is. So every
+    replicate's (and, with c = 1, the point estimate's) stats move by exact
+    sums over the adjusted rows: X'X, n and the x sums stay,
+    X'y += sum c x delta, sum y += sum c delta, y'y += sum c (2 y delta + delta^2).
+    ``None`` when ``passes`` hold no Catalyst Poisson bootstrap of ``reps``
+    replicates (drawn with the builder's default seed)."""
+    boot = passes.boot
+    if reps > 0 and (boot is None or boot[:2] != (reps, "poisson")):
+        return None
+    design, xcols = _design(
+        _complete(df, outcome, group, predictors, categorical_predictors), predictors, passes.levels
+    )
+    rows = design.join(F.broadcast(adj), on=ROW_ID).withColumn(
+        "__rep", F.explode(F.sequence(F.lit(-1), F.lit(reps - 1)))
+    )
+    # rep -1 is the point estimate
+    count = F.when(F.col("__rep") < 0, F.lit(1.0)).otherwise(
+        poisson_replicate_count(F.col(ROW_ID), F.col("__rep"), SEED)
+    )
+    cd = count * F.col("__delta")
+    deltas = {
+        (int(r["__rep"]), r[group]): r
+        for r in rows.groupBy("__rep", group).agg(
+            *[F.sum(cd * F.col(c)).alias(f"__dxy_{j}") for j, c in enumerate(xcols)],
+            F.sum(cd).alias("__dys"),
+            F.sum(cd * (F.lit(2.0) * F.col(outcome) + F.col("__delta"))).alias("__dyty"),
+        ).collect()
+    }
+
+    def shifted(rep: int, lv, s: GroupStats) -> GroupStats:
+        r = deltas.get((rep, lv))
+        if r is None:
+            return s
+        return replace(
+            s,
+            xty=s.xty + np.array([float(r[f"__dxy_{j}"]) for j in range(len(xcols))]),
+            ysum=s.ysum + float(r["__dys"]),
+            yty=s.yty + float(r["__dyty"]),
+        )
+
+    out = MeanPasses(passes.levels, {lv: shifted(-1, lv, s) for lv, s in passes.by_level.items()})
+    if reps > 0:
+        out.boot = (reps, "poisson", {
+            rep: {lv: shifted(rep, lv, s) for lv, s in per_level.items()}
+            for rep, per_level in boot[2].items()
+        })
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -759,19 +1030,16 @@ def efficient_frontier(
         # against the baseline Gram state are plain sums:
         #   X'y(b) = X'y + sum_i x_i paid_i(b)
         #   y'y(b) = y'y + sum_i (2 y_i paid_i(b) + paid_i(b)^2)
-        # One crossJoin with the (steps)-row budget table + one groupBy yields
+        # Exploding each scheduled row over the steps + one groupBy yields
         # every step's deltas in a single job — nothing scaling with the
         # schedule reaches the driver (vs analysis.rs:1107-1150's per-step
         # sequential payment loop).
-        steps_df = local_table(prep.df.sparkSession, {
-            "__step": ("long", list(range(1, steps + 1))),
-            "__budget": ("double", [t * step_size for t in range(1, steps + 1)]),
-        })
+        budget = F.col("__step").cast("double") * F.lit(step_size)
         paid = F.greatest(
-            F.lit(0.0), F.least(F.col("__diff"), F.col("__budget") - F.col("__cum_prev"))
+            F.lit(0.0), F.least(F.col("__diff"), budget - F.col("__cum_prev"))
         )
         per_step = (
-            scanned.crossJoin(F.broadcast(steps_df))
+            scanned.withColumn("__step", F.explode(F.sequence(F.lit(1), F.lit(steps))))
             .withColumn("__paid", paid)
             .filter(F.col("__paid") > 0)
             .groupBy("__step")
@@ -818,6 +1086,36 @@ def efficient_frontier(
 # M22: defensibility
 # ---------------------------------------------------------------------------
 
+def _override_delta(rows, overrides, outcome, predictors, keep, levels, xcols) -> GroupStats:
+    """Stats of the overridden rows after their overrides minus before, each
+    side counted only where the row is complete (``dropna`` over ``keep``),
+    from those rows on the driver."""
+    k = len(xcols)
+    delta = GroupStats(list(xcols), 0, 0.0, np.zeros((k, k)), np.zeros(k), np.zeros(k), 0.0, 0.0)
+    for r in rows:
+        before = r.asDict()
+        after = dict(before)
+        for p, v in overrides[before[ROW_ID]].items():
+            if p in predictors and not math.isnan(float(v)):
+                after[p] = float(v)
+        for sign, vals in ((-1.0, before), (1.0, after)):
+            if any(vals[c] is None or (isinstance(vals[c], float) and math.isnan(vals[c])) for c in keep):
+                continue
+            x = np.array(
+                [1.0] + [vals[p] for p in predictors]
+                + [float(vals[var] == lv) for var, lvs in levels.items() for lv in lvs[1:]]
+            )
+            y = vals[outcome]
+            delta.n += int(sign)
+            delta.wsum += sign
+            delta.xtx = delta.xtx + sign * np.outer(x, x)
+            delta.xty = delta.xty + sign * y * x
+            delta.xsum = delta.xsum + sign * x
+            delta.yty += sign * y * y
+            delta.ysum += sign * y
+    return delta
+
+
 def check_defensibility(
     df: DataFrame,
     adjustments: list[tuple[int, float]] | DataFrame,
@@ -831,27 +1129,35 @@ def check_defensibility(
     id_col: str | None = None,
 ) -> DataFrame:
     """defensibility.rs:9-388: adjustment defensible iff
-    new_wage >= fair-wage 95% lower bound - 1.0 (reference-group SVD fit),
-    with per-row predictor overrides applied before prediction."""
-    dfc = with_row_id(strict_numeric_cast(df, [outcome] + list(predictors)), id_col, ROW_ID)
+    new_wage >= fair-wage 95% lower bound - 1.0 (reference-group SVD fit on
+    the null-dropped rows), with per-row predictor overrides applied before
+    the fit and the prediction.
 
+    The reference Gram is the per-level stats pass's (``_point_stats``,
+    taken from a reused ``ReviewStats`` when it holds them), moved by the
+    change of the overridden reference rows, which one filter on their row
+    ids collects."""
+    review = _review(df, outcome, group, reference_group, predictors, categorical_predictors)
+    df, passes, ref_flags = _point_stats(
+        df, outcome, group, reference_group, predictors, categorical_predictors, review
+    )
+    dfc = with_row_id(df, id_col, ROW_ID)
+    ref = [passes.by_level[lv] for lv, flag in ref_flags.items() if flag is True]
+    if not ref:  # no reference rows: the fit below has no Gram to invert
+        raise OaxacaError("Covariance matrix is singular")
+    stats_ref = _sum_stats(ref)
     if overrides:
-        # NaN marks a predictor the row does not override
-        ov_df = local_table(dfc.sparkSession, {
-            ROW_ID: ("long", [int(rid) for rid in overrides]),
-            **{f"__ov_{p}": ("double", [float(o.get(p, math.nan)) for o in overrides.values()])
-               for p in predictors},
-        })
-        dfc = dfc.join(F.broadcast(ov_df), on=ROW_ID, how="left")
-        for p in predictors:
-            dfc = dfc.withColumn(
-                p,
-                F.when(~F.isnan(F.coalesce(F.col(f"__ov_{p}"), F.lit(float("nan")))), F.col(f"__ov_{p}")).otherwise(F.col(p)),
-            )
+        ov = {int(i): o for i, o in overrides.items()}
+        keep = _fit_columns(outcome, group, predictors, categorical_predictors)
+        touched = dfc.filter(
+            (F.col(group) == F.lit(reference_group)) & F.col(ROW_ID).isin(list(ov))
+        ).select(ROW_ID, *keep).collect()
+        stats_ref = _sum_stats([
+            stats_ref, _override_delta(touched, ov, outcome, predictors, keep, passes.levels, stats_ref.names)
+        ])
 
-    design, xcols = _design(dfc, predictors, categorical_predictors)
-    is_ref = F.col(group) == F.lit(reference_group)
-    stats_ref = collect_group_stats(design.filter(is_ref), xcols, outcome)
+    rows = dfc.join(F.broadcast(_adjustment_table(dfc, adjustments, overrides, predictors)), on=ROW_ID)
+    design, xcols = _design(_with_overrides(rows, predictors) if overrides else rows, predictors, passes.levels)
     beta_fair = _lstsq_beta(stats_ref.xtx, stats_ref.xty)
     rss = float(stats_ref.yty - 2 * beta_fair @ stats_ref.xty + beta_fair @ stats_ref.xtx @ beta_fair)
     dof = stats_ref.n - len(xcols)
@@ -868,7 +1174,7 @@ def check_defensibility(
     else:
         lower = fair - F.lit(z) * F.sqrt(F.lit(sigma2) * (F.lit(1.0) + _leverage_expr(cov, xcols)))
 
-    out = design.join(F.broadcast(_adjustment_table(dfc, adjustments)), on=ROW_ID, how="inner").select(
+    out = design.select(
         F.col(ROW_ID).alias("index"),
         F.col("__delta").alias("adjustment"),
         F.col(outcome).alias("current_wage"),

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..errors import InvalidGroupVariable, NonNumericData, OaxacaError, warn
 from ..functions.linalg import GroupStats, ols_from_stats
 from ..functions.mathx import norm_cdf, norm_pdf
-from .bootstrap import bootstrap_stats, hash_uniform, poisson_count_expr
+from .bootstrap import bootstrap_stats, poisson_replicate_count
 from . import decomposition as dec
 from .scan import local_table, with_row_id
 
@@ -336,7 +336,7 @@ def run_heckman_oaxaca(builder):
             cnt = F.when(
                 F.col("__rep") < 0, F.lit(1.0)
             ).otherwise(
-                poisson_count_expr(hash_uniform(F.col(ROW_ID), F.col("__rep"), F.lit(builder._seed))).cast("double")
+                poisson_replicate_count(F.col(ROW_ID), F.col("__rep"), builder._seed)
             )
             frame = frame.withColumn("__cnt", cnt).filter(F.col("__cnt") > 0)
             frame = frame.cache()

@@ -258,6 +258,125 @@ def test_defensibility(spark):
     assert "below the fair-wage lower bound" in out2["defensibility_message"]
 
 
+@pytest.mark.parametrize("levels,ref", LEVELS)
+def test_data_summary_equals_pandas(spark, levels, ref):
+    """The summary (A = the reference level, B = every other level) comes
+    from the decomposition's stats pass and equals the frame's own counts
+    and means, with a third level too."""
+    pdf, df = _company(spark, levels, seed=11)
+    s = eo.run_decomposition(df, "wage", "g", ref, PREDS, bootstrap_reps=0).data_summary
+    is_ref = pdf["g"] == ref
+    assert (s.total_count, s.group_a_count, s.group_b_count) == (len(pdf), is_ref.sum(), (~is_ref).sum())
+    assert s.group_a_mean == pytest.approx(pdf.loc[is_ref, "wage"].mean(), rel=1e-12)
+    assert s.group_b_mean == pytest.approx(pdf.loc[~is_ref, "wage"].mean(), rel=1e-12)
+
+
+def test_bootstrap_keyed_on_id_col_ignores_partitioning(spark):
+    """With ``id_col`` the replicates are drawn per row id, so the standard
+    errors do not depend on how the frame is partitioned."""
+    _, df = _company(spark, ["F", "M"], seed=13)
+
+    def ses(frame):
+        res = eo.run_decomposition(frame, "wage", "g", "M", PREDS, bootstrap_reps=30, id_col="rid")
+        return [res.unexplained_standard_error] + [c.std_err for c in res.detailed_explained]
+
+    for a, b in zip(ses(df.repartition(1)), ses(df.repartition(5))):
+        assert a == pytest.approx(b, rel=1e-9)
+
+
+def test_repeated_index_in_a_frame_is_summed(spark):
+    """An ``index``/``adjustment`` frame that repeats an index applies the
+    summed delta, as a list does: verify keeps one copy of the employee and
+    defend returns one row per index, also with an override on a
+    reference-group row."""
+    pdf, df = _company(spark, ["F", "M"], seed=17)
+    tgt = [int(i) for i in pdf.loc[pdf["g"] == "F", "rid"][:2]]
+    ref_row = int(pdf.loc[pdf["g"] == "M", "rid"].iloc[0])
+    twice = spark.createDataFrame(
+        [(tgt[0], 500.0), (tgt[0], 500.0), (tgt[1], 250.0)], "index long, adjustment double"
+    )
+    summed = [(tgt[0], 1000.0), (tgt[1], 250.0)]
+
+    def verify(adj):
+        return eo.verify_adjustments(df, adj, "wage", "g", "M", PREDS, bootstrap_reps=0, id_col="rid")
+
+    v_twice, v_summed = verify(twice), verify(summed)
+    assert v_twice.data_summary.total_count == len(pdf)
+    assert v_twice.total_gap == pytest.approx(v_summed.total_gap, rel=1e-12)
+    assert v_twice.unexplained_gap == pytest.approx(v_summed.unexplained_gap, rel=1e-12)
+
+    overrides = {tgt[0]: {"education": 20.0}, ref_row: {"experience": 1.0}}
+
+    def defend(adj):
+        rows = eo.check_defensibility(
+            df, adj, "wage", "g", "M", PREDS, overrides=overrides, id_col="rid"
+        ).orderBy("index").collect()
+        return [r.asDict() for r in rows]
+
+    d_twice, d_summed = defend(twice), defend(summed)
+    assert [r["index"] for r in d_twice] == sorted(tgt)
+    for a, b in zip(d_twice, d_summed):
+        assert a == pytest.approx(b, rel=1e-12)
+
+
+def test_defensibility_overrides_match_numpy(spark):
+    """With overrides, two of them on reference-group rows, the fair wage
+    and its lower bound equal a NumPy fit on the overridden reference rows,
+    each adjusted row predicted at its overridden predictors."""
+    from oaxaca_blinder_rs_spark.functions.mathx import norm_ppf_scalar
+
+    pdf, df = _company(spark, ["F", "M"], seed=29)
+    ref_ids = [int(i) for i in pdf.loc[pdf["g"] == "M", "rid"][:2]]
+    tgt_ids = [int(i) for i in pdf.loc[pdf["g"] == "F", "rid"][:2]]
+    overrides = {
+        ref_ids[0]: {"education": 25.0},
+        ref_ids[1]: {"education": 10.0, "experience": math.nan},
+        tgt_ids[0]: {"experience": 3.0},
+    }
+    adj = [(tgt_ids[0], 700.0), (tgt_ids[1], 100.0), (ref_ids[0], 50.0)]
+    got = eo.check_defensibility(
+        df, adj, "wage", "g", "M", PREDS, overrides=overrides, id_col="rid"
+    ).orderBy("index").collect()
+
+    rows = pdf.set_index("rid")
+    for rid, ov in overrides.items():
+        for p, v in ov.items():
+            if not math.isnan(v):
+                rows.loc[rid, p] = v
+    X = np.column_stack([np.ones(len(rows))] + [rows[p].to_numpy(float) for p in PREDS])
+    is_ref = (rows["g"] == "M").to_numpy()
+    xtx = X[is_ref].T @ X[is_ref]
+    beta = np.linalg.pinv(xtx) @ (X[is_ref].T @ rows["wage"].to_numpy()[is_ref])
+    resid = rows["wage"].to_numpy()[is_ref] - X[is_ref] @ beta
+    sigma2 = resid @ resid / (is_ref.sum() - X.shape[1])
+    cov = np.linalg.inv(xtx)
+    assert [r["index"] for r in got] == sorted(i for i, _ in adj)
+    for r in got:
+        x = X[rows.index.get_loc(r["index"])]
+        fair = x @ beta
+        lower = fair - norm_ppf_scalar(0.975) * math.sqrt(sigma2 * (1 + x @ cov @ x))
+        assert r["fair_wage"] == pytest.approx(fair, rel=1e-9)
+        assert r["fair_wage_lower_bound"] == pytest.approx(lower, rel=1e-9)
+
+
+def test_reused_stats_serve_only_their_frame_and_model(spark):
+    """``reusing`` hands its stats only to calls on the frame object and the
+    model spec it was set for; another frame or model is computed afresh."""
+    _, df = _company(spark, ["F", "M"], seed=19)
+    _, other = _company(spark, ["F", "M"], seed=23)
+
+    def gap(frame, preds):
+        return eo.run_decomposition(frame, "wage", "g", "M", preds, bootstrap_reps=0, id_col="rid").explained_gap
+
+    stats = eo.ReviewStats(eo.model_spec("wage", "g", "M", PREDS, None))
+    with eo.reusing(stats, df):
+        gap(df, PREDS)
+        filled = stats.point
+        got = [gap(other, PREDS), gap(df, PREDS[:1])]
+    assert filled is not None and stats.point is filled
+    assert got == pytest.approx([gap(other, PREDS), gap(df, PREDS[:1])], rel=1e-12)
+
+
 def test_ordered_prev_cumsum_matches_global_window(spark):
     """The distributed prefix sum must equal a driver-side sequential scan
     under the same ordering (ties broken by id) and keep the plan free of a

@@ -2,6 +2,8 @@
 calls through the JSON-RPC handler."""
 
 import json
+import threading
+import uuid
 
 from oaxaca_blinder_rs_spark.mcp_server import McpServer
 
@@ -139,9 +141,9 @@ def test_failed_replicates_are_counted_in_responses(spark):
         assert counts and out["n_failed_reps"] == counts[0] > 0, (tool, counts, out["n_failed_reps"])
 
 
-def _review(server, call=_call):
+def _review(server, call=_call, decompose=None):
     """One pay-equity review through all five tools, in client order."""
-    call(server, "forensic_decomposition", {"bootstrap_reps": 5})
+    call(server, "forensic_decomposition", decompose or {"bootstrap_reps": 5})
     opt = call(server, "simulate_remediation", {"budget": 0.0, "reference_group": "M"})
     call(server, "generate_efficient_frontier", {"steps": 5, "reference_group": "M"})
     adj = [{"index": a["index"], "value": a["adjustment"]} for a in opt["adjustments"] if a["adjustment"] > 0]
@@ -151,34 +153,74 @@ def _review(server, call=_call):
 
 
 # Spark jobs per tool on CSV (local[4], 8 shuffle partitions), counted by
-# job group. Before the decision layer shared one cast, one stats pass and
-# one prefix scan per request, the same calls ran 8 / 32 / 36 / 14 / 8.
+# job group, on a server that keeps each company's sufficient statistics.
+# In ``_review`` decompose (reference F, 5 replicates) is the only call of
+# its model spec; remediate's stats pass also makes the strict-cast check,
+# frontier and defend take their stats from it, and verify, whose 100
+# replicates the server does not hold, decomposes the adjusted data afresh.
+# Before the cache the same review ran 8 / 13 / 15 / 11 / 8 jobs, and before
+# the decision layer shared one cast, one stats pass and one prefix scan per
+# request 8 / 32 / 36 / 14 / 8.
 TOOL_JOB_CEILINGS = {
-    "forensic_decomposition": 8,
-    "simulate_remediation": 13,
-    "generate_efficient_frontier": 15,
-    "verify_adjustments": 11,
-    "check_defensibility": 8,
+    "forensic_decomposition": 4,
+    "simulate_remediation": 11,
+    "generate_efficient_frontier": 10,
+    "verify_adjustments": 6,
+    "check_defensibility": 2,
 }
+# Each call of ``_review`` on a fresh server: what a library caller, or the
+# first call of a model spec, pays.
+TOOL_JOB_CEILINGS_COLD = {
+    "forensic_decomposition": 4,
+    "simulate_remediation": 11,
+    "generate_efficient_frontier": 12,
+    "verify_adjustments": 8,
+    "check_defensibility": 4,
+}
+# Decompose with the other calls' reference group and its default 100
+# replicates: remediate takes its stats from decompose, and verify derives
+# its bootstrap from decompose's replicates plus one aggregation over the
+# adjusted rows.
+TOOL_JOB_CEILINGS_SAME_SPEC = {**TOOL_JOB_CEILINGS, "simulate_remediation": 9, "verify_adjustments": 3}
 
 
-def test_tool_job_counts(spark):
+def _job_counts(spark, review, fresh=False):
+    """Spark jobs of each call of ``review``, on one server or (``fresh``)
+    each on a new one."""
     sc = spark.sparkContext
     server = McpServer(spark)
     jobs = {}
 
     def counting(server, name, extra):
-        group = f"test-jobs-{name}"
+        group = f"test-jobs-{name}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            out = _call(server, name, extra)
+            out = _call(McpServer(spark) if fresh else server, name, extra)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
         return out
 
-    _review(server, counting)
+    review(server, counting)
+    return jobs
+
+
+def test_tool_job_counts(spark):
+    jobs = _job_counts(spark, _review)
     assert all(jobs[t] <= TOOL_JOB_CEILINGS[t] for t in TOOL_JOB_CEILINGS), jobs
+
+
+def test_tool_job_counts_on_fresh_servers(spark):
+    jobs = _job_counts(spark, _review, fresh=True)
+    assert all(jobs[t] <= TOOL_JOB_CEILINGS_COLD[t] for t in TOOL_JOB_CEILINGS_COLD), jobs
+
+
+def test_tool_job_counts_same_spec_review(spark):
+    def review(server, call):
+        _review(server, call, {"reference_group": "M"})
+
+    jobs = _job_counts(spark, review)
+    assert all(jobs[t] <= TOOL_JOB_CEILINGS_SAME_SPEC[t] for t in TOOL_JOB_CEILINGS_SAME_SPEC), jobs
 
 
 def test_reviews_release_pinned_blocks(spark):
@@ -199,11 +241,223 @@ def test_reviews_release_pinned_blocks(spark):
         _review(server, checked)
 
 
+def _company_csv(n=300, seed=3, levels=("F", "M")):
+    """A payroll with an unexplained gap: wage on education, experience and
+    tenure plus a penalty for every level after the first."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    g = rng.choice(list(levels), n)
+    edu = np.round(rng.normal(14.0, 2.0, n), 1)
+    exp = np.round(rng.uniform(0.0, 25.0, n), 1)
+    ten = np.round(rng.uniform(0.0, 10.0, n), 1)
+    pen = np.array([-3000.0 * list(levels).index(x) for x in g])
+    wage = np.round(30000 + 2500 * edu + 600 * exp + 400 * ten + pen + rng.normal(0, 6000, n), 2)
+    pdf = pd.DataFrame({"wage": wage, "education": edu, "experience": exp, "tenure": ten, "gender": g})
+    return pdf, pdf.to_csv(index=False)
+
+
+def _company_args(csv):
+    return {
+        "csv_content": csv, "outcome_variable": "wage", "group_variable": "gender",
+        "reference_group": "M", "predictors": ["education", "experience", "tenure"],
+    }
+
+
+def _tool(server, name, args):
+    resp = server.handle({"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+                          "params": {"name": name, "arguments": args}})
+    assert resp["result"]["isError"] is False, resp["result"]
+    return json.loads(resp["result"]["content"][0]["text"])
+
+
+def _assert_close(got, want, path="", rel=1e-12):
+    """Same structure and values; floats within ``rel`` relative (the
+    summation order of a Spark aggregate is not fixed)."""
+    if isinstance(want, dict):
+        assert sorted(got) == sorted(want), path
+        for k in want:
+            _assert_close(got[k], want[k], f"{path}.{k}", rel)
+    elif isinstance(want, list):
+        assert len(got) == len(want), path
+        for i, (g, w) in enumerate(zip(got, want)):
+            _assert_close(g, w, f"{path}[{i}]", rel)
+    elif isinstance(want, float) and isinstance(got, float):
+        assert abs(got - want) <= rel * max(abs(got), abs(want)), (path, got, want)
+    else:
+        assert got == want, (path, got, want)
+
+
+def _review_calls(pdf, remediation):
+    """The follow-up calls a client makes after a remediation: verify its
+    raises, and defend a few of them plus one raise of a reference-group
+    (M) employee, two audited with an overridden predictor."""
+    adj = [{"index": a["index"], "value": a["adjustment"]} for a in remediation["adjustments"] if a["adjustment"] > 0]
+    ref_row = int(pdf.index[pdf["gender"] == "M"][0])
+    defend = [dict(a) for a in adj[:8]] + [{"index": ref_row, "value": 250.0}]
+    defend[0]["predictor_overrides"] = {"experience": 30.0}
+    defend[-1]["predictor_overrides"] = {"education": 20.0, "tenure": 1.0}
+    return [("verify_adjustments", {"adjustments": adj}), ("check_defensibility", {"adjustments": defend})]
+
+
+def test_warm_server_matches_fresh_servers(spark):
+    """Every tool answers the same from a server that already holds the
+    company's statistics as from a fresh one: within 1e-12 relative, in the
+    review's order and when the whole review is sent again. Verify derives
+    its bootstrap from decompose's replicates; the defensibility audit
+    overrides a predictor of a reference-group row."""
+    pdf, csv = _company_csv()
+    base = _company_args(csv)
+    calls = [
+        ("forensic_decomposition", {"bootstrap_reps": 100}),
+        ("simulate_remediation", {"budget": 50000.0}),
+        ("generate_efficient_frontier", {"steps": 8}),
+    ]
+    fresh = {name: _tool(McpServer(spark), name, {**base, **extra}) for name, extra in calls}
+    calls += _review_calls(pdf, fresh["simulate_remediation"])
+    for name, extra in calls[3:]:
+        fresh[name] = _tool(McpServer(spark), name, {**base, **extra})
+
+    warm = McpServer(spark)
+    for _ in range(2):
+        for name, extra in calls:
+            _assert_close(_tool(warm, name, {**base, **extra}), fresh[name], name)
+
+
+def test_verify_with_other_reps_than_decompose(spark):
+    """A verify whose bootstrap the server does not hold (decompose ran 5
+    replicates, verify runs 100) decomposes the adjusted data afresh."""
+    pdf, csv = _company_csv(seed=4)
+    base = _company_args(csv)
+    server = McpServer(spark)
+    _tool(server, "forensic_decomposition", {**base, "bootstrap_reps": 5})
+    opt = _tool(server, "simulate_remediation", {**base, "budget": 50000.0})
+    (name, extra), _ = _review_calls(pdf, opt)
+    _assert_close(_tool(server, name, {**base, **extra}), _tool(McpServer(spark), name, {**base, **extra}), name)
+
+
+def test_verify_sums_a_repeated_index(spark):
+    """Two adjustments of one employee count as their sum, not as a second
+    copy of the employee."""
+    _, csv = _company_csv(n=400, seed=6)
+    base = _company_args(csv)
+    twice = _tool(McpServer(spark), "verify_adjustments",
+                  {**base, "adjustments": [{"index": 7, "value": 500.0}, {"index": 7, "value": 500.0}]})
+    once = _tool(McpServer(spark), "verify_adjustments", {**base, "adjustments": [{"index": 7, "value": 1000.0}]})
+    assert twice["data_summary"]["total_count"] == 400
+    _assert_close(twice, once, rel=1e-9)
+
+
+def test_absent_reference_group_errors_alike_warm_and_fresh(spark):
+    """A reference group with no rows is the same tool error whether or not
+    the server already holds the company's statistics."""
+    def error(server, name):
+        req = {"jsonrpc": "2.0", "id": 1, "method": "tools/call", "params": {
+            "name": name, "arguments": {**BASE_ARGS, "reference_group": "Z", "bootstrap_reps": 0,
+                                        "adjustments": [{"index": 0, "value": 1.0}]}}}
+        res = server.handle(req)["result"]
+        assert res["isError"] is True
+        return res["content"][0]["text"]
+
+    warm = McpServer(spark)
+    error(warm, "forensic_decomposition")
+    for tool in ("check_defensibility", "verify_adjustments", "simulate_remediation"):
+        assert error(warm, tool) == error(McpServer(spark), tool), tool
+
+
+def test_stats_cache_is_bounded(spark):
+    """More companies than the bound leave at most the bound of entries, and
+    no persistent RDD."""
+    from oaxaca_blinder_rs_spark.mcp_server import STATS_CACHE_ENTRIES
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    server = McpServer(spark)
+    for i in range(STATS_CACHE_ENTRIES + 2):
+        _call(server, "forensic_decomposition", {"bootstrap_reps": 0, "csv_content": CSV.replace("25.0", f"{25 + i}.5")})
+        assert len(server._stats) <= STATS_CACHE_ENTRIES
+    assert len(server._stats) == STATS_CACHE_ENTRIES
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def test_concurrent_calls_match_serial_calls(spark):
+    """Two threads reviewing the same company on one server get the answers
+    a serial review gets."""
+    pdf, csv = _company_csv(n=200, seed=8)
+    base = _company_args(csv)
+
+    def review(server):
+        out = [_tool(server, "forensic_decomposition", {**base, "bootstrap_reps": 100})]
+        out.append(_tool(server, "simulate_remediation", {**base, "budget": 20000.0}))
+        for name, extra in _review_calls(pdf, out[-1]):
+            out.append(_tool(server, name, {**base, **extra}))
+        return out
+
+    serial = review(McpServer(spark))
+    shared = McpServer(spark)
+    results, errors = [None, None], []
+
+    def run(i):
+        try:
+            results[i] = review(shared)
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for got in results:
+        _assert_close(got, serial)
+
+
+def test_stats_cache_under_threads():
+    """Threads asking for the same companies at once share one entry per
+    company (a lost update would hand two of them different entries), and
+    a stream of new companies never leaves more than the bound."""
+    import sys
+
+    from oaxaca_blinder_rs_spark.mcp_server import STATS_CACHE_ENTRIES, _StatsCache
+
+    cache = _StatsCache(STATS_CACHE_ENTRIES)
+    shared = [{**BASE_ARGS, "csv_content": f"{CSV}# {i}"} for i in range(STATS_CACHE_ENTRIES // 2)]
+    seen = [[] for _ in shared]
+    sizes = []
+    n_threads = 8
+    barrier = threading.Barrier(n_threads, timeout=60)
+
+    def work(t):
+        for j in range(3000):
+            i = j % len(shared)
+            seen[i].append(cache.get(shared[i]))
+        barrier.wait()  # evictions start only after every shared lookup
+        for j in range(50):
+            cache.get({**BASE_ARGS, "csv_content": f"{CSV}# {t}-{j}"})
+            sizes.append(len(cache))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert all(len({id(e) for e in entries}) == 1 for entries in seen)
+    assert max(sizes) <= STATS_CACHE_ENTRIES
+
+
 # ---------------------------------------------------------------------------
 # HTTP/SSE transport (meridian-mcp/src/main.rs:254-520 semantics)
 # ---------------------------------------------------------------------------
 
-import threading
 import urllib.error
 import urllib.request
 
