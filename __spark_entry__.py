@@ -1052,9 +1052,9 @@ def q_heckman_probit_design(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mm_ols_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-matched companion to machado_mata (rows-only): the closed-form
     per-group OLS coefficients of l_extendedprice ~ 1 + l_quantity — the
-    exact warm start the Gram-Newton engine's init pass solves (quantile_
-    builder.py _fit_gram, rep=-1) before the tau iterations. The simulation
-    stage stays rows-only; this row proves the engine's entry state."""
+    plane every exact quantile fit starts from (solve_qr_exact pivots from
+    the k rows nearest it, in both Machado-Mata engines). The simulation
+    stage stays rows-only; this row proves the solver's entry state."""
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag").isin(["A", "R"]))
     agg = li.groupBy(F.col("l_returnflag").alias("grp")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -1322,9 +1322,10 @@ def q_machado_mata(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect decomposition — is replayed by a zero-shared-code DuckDB
     oracle (_mm_mid_oracle_sql) at ~4x the rows and 2.5x the sims of
     mm_small_exact, made tractable by factoring tau out of the vertex-
-    enumeration loss scan. The PRODUCTION-scale distributed Gram-Newton
-    engine remains pinned by the suite's exact-LP parity oracle
-    (test_numpy_oracle) and tracked by bench.py's mm_gram entry.
+    enumeration loss scan. The distributed engine (the same globbed exact
+    LP with its row passes in Spark) is pinned by the suite's exact-LP
+    parity oracle (test_numpy_oracle) and tracked by bench.py's mm_gram
+    entry.
     Reference semantics: quantile_decomposition.rs:96-279."""
     from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder
 

@@ -196,9 +196,12 @@ def bench_mean_kernel(matched_pdf, reps: int = 1) -> float:
 
 
 def bench_mm(spark, df, engine: str, S: int = 60, B: int = 8) -> float:
-    """Machado-Mata quantile decomposition on the 'distributed' engine:
-    Gram-Newton on the smoothed check loss (pass count independent of reps
-    — the 100x path). The bench runs a small config to bound round time."""
+    """Machado-Mata quantile decomposition on ``engine`` ('distributed':
+    the globbed exact LP with its row passes in Spark — one for the
+    subsample rows, one glob pass per wave of fits, a sign-check pass for
+    fits not certified by a bound, one per fix-up round, one for the
+    simulation picks). The bench runs a small config to bound
+    round time."""
     from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder
 
     t0 = time.time()
@@ -550,6 +553,9 @@ def main():
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
         "rows": n,
         "rows_matched": n_matched,
+        # the host the numbers come from: usable cores and Spark's task slots
+        "nproc": len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count(),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
         "baseline": {"rows": BASELINE_ROWS, "sec": BASELINE_SEC},
         "vs_baseline": vs_baseline,
         # contention audit: calibration is a fixed-cost 32-partition JVM job;

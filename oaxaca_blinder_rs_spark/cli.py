@@ -814,6 +814,7 @@ def main(argv=None) -> int:
         print("Top firm effects:")
         for r in res.firm_effects.orderBy("effect", ascending=False).limit(5).collect():
             print(f"  {r[0]}: {r[1]:.4f}")
+        res.release()
     elif args.analysis_type == "match":
         from .operators.matching import MatchingEngine
 

@@ -18,22 +18,24 @@ Two execution engines:
   vectorized (np.bincount scatter-gather). Bit-compatible with akm.rs.
 - 'dist': label propagation for the connected set (alternating min over the
   bipartite structure) and join-based demeaning — each sweep is two
-  groupBy+join shuffles, frames localCheckpoint'ed every few sweeps to cut
-  lineage. This is the 100 TB path: state per iteration is one column per
-  vector, worker/firm means are shuffles on their natural keys.
+  groupBy+join shuffles, its frame pinned (``scan.pinned``) to cut lineage
+  until the next sweep's is. This is the 100 TB path: state per iteration
+  is one column per vector, worker/firm means are shuffles on their natural
+  keys; the effects stay distributed, pinned until ``AkmResult.release()``.
 'auto' picks 'pandas' under a row guard.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import ConvergenceError, InsufficientData, OaxacaError
-from .scan import local_table
+from .scan import local_table, pinned
 
 __all__ = ["AkmBuilder", "AkmResult"]
 
@@ -48,6 +50,9 @@ class AkmResult:
     worker_effects: DataFrame
     firm_effects: DataFrame
     r2: float
+    # unpins the checkpoints the effect frames read ('dist' engine); the
+    # frames must not be read afterwards
+    release: Callable[[], None] = field(default=lambda: None, repr=False)
 
 
 class AkmBuilder:
@@ -104,17 +109,21 @@ class AkmBuilder:
             try:
                 if df.count() <= PANDAS_ROW_LIMIT:
                     return self._solve_pdf(df.toPandas(), df.sparkSession)
-                return self._solve_dist(self._largest_connected_set_dist(df))
+                return self._run_dist(df)
             finally:
                 df.unpersist()
         if engine == "pandas":
             # single data pull: connected-set filtering happens in NumPy on
             # the already-collected frame (no extra distinct job)
             return self._solve_pandas(df)
-        return self._solve_dist(self._largest_connected_set_dist(df))
+        return self._run_dist(df)
+
+    def _run_dist(self, df: DataFrame) -> AkmResult:
+        with pinned() as pin:
+            return self._solve_dist(self._largest_connected_set_dist(df, pin), pin)
 
     # -- connected set (distributed label propagation) --------------------
-    def _largest_connected_set_dist(self, df: DataFrame) -> DataFrame:
+    def _largest_connected_set_dist(self, df: DataFrame, pin) -> DataFrame:
         """Pure-DataFrame alternating-min label propagation on the bipartite
         graph — the cluster-scale path (no driver edge collection):
 
@@ -122,11 +131,11 @@ class AkmBuilder:
           worker_label = min(firm labels over its edges, own)
 
         repeated until no label changes. Each sweep = two groupBy+join
-        shuffles on the natural keys; edges (distinct pairs) are
-        localCheckpoint'ed once. Converges in O(diameter) sweeps.
+        shuffles on the natural keys; edges (distinct pairs) are pinned
+        once. Converges in O(diameter) sweeps.
         """
         w, f = self._worker, self._firm
-        edges = df.select(w, f).distinct().localCheckpoint()
+        edges = pin(df.select(w, f).distinct())
         # initial labels: the worker key ITSELF (collision-free — an earlier
         # build used xxhash64(worker), where a 64-bit collision across two
         # components would have merged them silently; the label is only ever
@@ -145,9 +154,7 @@ class AkmBuilder:
             )
             cmp = wlab.join(new_wlab, on=w)
             changed = cmp.filter(F.col("__lab_new") < F.col("__lab")).count()
-            wlab = cmp.select(
-                w, F.least("__lab", "__lab_new").alias("__lab")
-            ).localCheckpoint()
+            wlab = pin(cmp.select(w, F.least("__lab", "__lab_new").alias("__lab")), wlab)
             if changed == 0:
                 break
         # component sizes counted in NODES (workers + firms), akm.rs:200-212
@@ -334,7 +341,7 @@ class AkmBuilder:
         return AkmResult(beta=beta, worker_effects=worker_effects, firm_effects=firm_effects, r2=r2)
 
     # -- distributed engine ------------------------------------------------
-    def _solve_dist(self, df: DataFrame) -> AkmResult:
+    def _solve_dist(self, df: DataFrame, pin) -> AkmResult:
         """Join-based zig-zag: each sweep subtracts worker then firm means of
         every working column; convergence via one aggregate of squared deltas.
         Suited to cluster scale (state = columns, shuffles on natural keys)."""
@@ -343,9 +350,10 @@ class AkmBuilder:
         cur = df.withColumn("__y_r", F.col(self._outcome))
         for j, c in enumerate(self._controls):
             cur = cur.withColumn(f"__x_r_{j}", F.col(c))
-        cur = cur.localCheckpoint()
+        cur = work = pin(cur)
 
         for it in range(self._max_iters):
+            prev = work
             prev_cols = [F.col(c).alias(f"__prev_{c}") for c in vec_cols]
             work = cur.select("*", *prev_cols)
             wm = work.groupBy(w).agg(*[F.avg(c).alias(f"__wm_{c}") for c in vec_cols])
@@ -357,7 +365,7 @@ class AkmBuilder:
             for c in vec_cols:
                 work = work.withColumn(c, F.col(c) - F.col(f"__fm_{c}"))
             work = work.drop(*[f"__wm_{c}" for c in vec_cols], *[f"__fm_{c}" for c in vec_cols])
-            work = work.localCheckpoint()
+            work = pin(work, prev)
             diffs = work.agg(
                 *[F.sum(F.pow(F.col(c) - F.col(f"__prev_{c}"), 2)).alias(c) for c in vec_cols]
             ).collect()[0]
@@ -387,7 +395,7 @@ class AkmBuilder:
         r_expr = F.col(self._outcome)
         for j, c in enumerate(self._controls):
             r_expr = r_expr - F.col(c) * F.lit(float(beta[j]))
-        base = df.withColumn("__r", r_expr).localCheckpoint()
+        base = pin(df.withColumn("__r", r_expr))
         alpha_df = base.select(w).distinct().withColumn("__alpha", F.lit(0.0))
         psi_df = base.select(f).distinct().withColumn("__psi", F.lit(0.0))
         for it in range(self._max_iters):
@@ -408,8 +416,10 @@ class AkmBuilder:
                 .collect()[0][0]
                 or 0.0
             )
-            alpha_df = alpha_cmp.select(w, F.col("__alpha_new").alias("__alpha")).localCheckpoint()
-            psi_df = psi_cmp.select(f, F.col("__psi_new").alias("__psi")).localCheckpoint()
+            # both new frames read both old ones: release them after both
+            alpha_new = pin(alpha_cmp.select(w, F.col("__alpha_new").alias("__alpha")))
+            psi_df = pin(psi_cmp.select(f, F.col("__psi_new").alias("__psi")), alpha_df, psi_df)
+            alpha_df = alpha_new
             if float(d2) ** 0.5 <= self._tolerance:
                 break
         else:
@@ -418,6 +428,7 @@ class AkmBuilder:
             )
 
         # identification: psi of the alphabetically-first firm -> 0
+        pins = alpha_df, psi_df  # the effects' checkpoints, owned by the result
         first_firm = psi_df.orderBy(f).limit(1).collect()[0]
         ref = float(first_firm["__psi"])
         alpha_df = alpha_df.withColumn("__alpha", F.col("__alpha") + F.lit(ref))
@@ -441,4 +452,5 @@ class AkmBuilder:
             worker_effects=alpha_df.select(w, F.col("__alpha").alias("effect")),
             firm_effects=psi_df.select(f, F.col("__psi").alias("effect")),
             r2=r2,
+            release=pin.keep(*pins),
         )

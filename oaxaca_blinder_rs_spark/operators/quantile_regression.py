@@ -19,13 +19,14 @@ from __future__ import annotations
 
 import numpy as np
 
-__all__ = ["solve_qr", "exact_n_index", "exact_n_counts"]
+__all__ = ["solve_qr", "solve_qr_exact", "exact_n_index", "exact_n_counts", "tol_scale"]
 
 # Worker-side memo for deterministic resample multiplicities: Spark reuses
-# Python workers across mapInPandas passes (spark.python.worker.reuse), so the
-# Gram-Newton engine's per-iteration passes hit this cache instead of redrawing
-# n integers per (replicate, side) every iteration. int32 counts keep the
-# cache at ~4 MB per million rows per key; the size cap bounds worker memory.
+# Python workers across mapInPandas passes (spark.python.worker.reuse), so
+# every partition and pass of the distributed Machado-Mata engine after the
+# first in a worker hits this cache instead of redrawing n integers per
+# (replicate, side). int32 counts keep the cache at ~4 MB per million rows
+# per key; the size cap bounds worker memory.
 _COUNTS_CACHE: dict[tuple, np.ndarray] = {}
 _COUNTS_CACHE_MAX = 256
 
@@ -41,7 +42,8 @@ def exact_n_index(seed: int, rep: int, side: int, n: int) -> np.ndarray:
 def exact_n_counts(seed: int, rep: int, side: int, n: int) -> np.ndarray:
     """Multiplicity vector of ``exact_n_index``: a weighted fit with these
     multiplicities is the identical estimator to fitting the materialized
-    resample, so the Gram-Newton engine weights rows instead of copying them.
+    resample, so the distributed Machado-Mata engine weights its rows
+    instead of copying them (the glob sums and the band rows' counts).
     """
     key = (int(seed), int(rep), int(side), int(n))
     c = _COUNTS_CACHE.get(key)
@@ -127,12 +129,20 @@ def _one_sided(delta: np.ndarray, tau: float) -> np.ndarray:
     return np.sum(np.where(delta > 0, tau * delta, (tau - 1.0) * delta), axis=0)
 
 
+def tol_scale(y: np.ndarray) -> float:
+    """Scale of the zero and gradient tolerances: max(median |y|, 1). A
+    max-|y| scale lets one large outcome (an outlier, or a summed glob row)
+    widen the tolerances until ordinary rows count as on the plane, and the
+    solve then certifies a worse vertex."""
+    return max(float(np.median(np.abs(y))), 1.0)
+
+
 def _line_search_vertex(X: np.ndarray, y: np.ndarray, tau: float, max_pivots: int):
     """Basis exchange from the OLS plane with line-search pivots. Returns the
     certified ``(beta, basis)``, or None on a degenerate vertex or any bail
     (rank deficiency, singular basis, unbounded edge, pivot budget)."""
     n, k = X.shape
-    scale = max(float(np.max(np.abs(y))), 1.0)
+    scale = tol_scale(y)
     ztol = gtol = 1e-9 * scale
     try:
         beta, *_ = np.linalg.lstsq(X, y, rcond=None)
@@ -208,7 +218,7 @@ def _nearest_crossing_vertex(X: np.ndarray, y: np.ndarray, tau: float, max_pivot
     best vertex visited."""
     k = X.shape[1]
     beta = solve_qr(X, y, tau)
-    scale = max(float(np.max(np.abs(y))), 1.0)
+    scale = tol_scale(y)
     ztol = 1e-9 * scale
 
     B = _independent_rows(X, np.argsort(np.abs(y - X @ beta), kind="stable"), k)

@@ -15,24 +15,30 @@ Its callers:
   oaxaca_blinder/src/analysis.rs);
 - ``grouped_prev_cumsum{,_multi}``: running totals within each group;
 - ``grouped_dense_rank``: dense per-group positions (the exact bootstrap);
-- ``sources/csv.attach_row_ids``: dense ids in input order;
-- ``quantile_builder``'s Gram engine: per-group row ranks ``__mm_rn``.
+- ``sources/csv.attach_row_ids``: dense ids in input order.
 
 Each finishes with a window local to its (group, partition) cell, so the
-work is P x |groups| uniform units at any size. ``with_row_id`` is the one
+work is P x |groups| uniform units at any size. ``quantile_builder``'s
+distributed engine takes the folded offsets alone (``partition_cells``)
+and ranks each side's rows inside its row passes. ``with_row_id`` is the one
 fallback row identity and ``local_table`` the one way a table built on the
-driver enters the JVM.
+driver enters the JVM. ``pinned`` is the one way a multi-pass estimator
+checkpoints its frames and drops them when it is done.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "partition_cells",
     "partition_offsets",
     "ordered_prev_cumsum",
     "release",
+    "pinned",
     "grouped_prev_cumsum",
     "grouped_prev_cumsum_multi",
     "grouped_dense_rank",
@@ -61,6 +67,33 @@ def with_row_id(df: DataFrame, id_col: str | None, name: str) -> DataFrame:
     return df.withColumn(name, F.col(id_col).cast("long") if id_col else F.monotonically_increasing_id())
 
 
+def partition_cells(
+    pinned: DataFrame, pid: str, values: dict[str, Column], group: str | None = None
+) -> tuple[dict, dict, dict]:
+    """The driver half of ``partition_offsets``: each ``values`` column
+    summed per (``group``, ``pid``) cell in one aggregation, and folded per
+    group in ``pid`` order. Returns ``{(group, pid): [exclusive sums]}``, each
+    group's grand totals (keyed ``None`` when there is no group) and the
+    Spark SQL type of each sum."""
+    names = list(values)
+    cells = pinned.groupBy(*([group] if group else []), pid).agg(
+        *[F.sum(c).alias(n) for n, c in values.items()]
+    )
+    types = {f.name: f.dataType.simpleString() for f in cells.schema.fields}
+    zero = [0.0 if types[n] == "double" else 0 for n in names]
+    by_group: dict = {}
+    for r in cells.collect():
+        by_group.setdefault(r[group] if group else None, []).append(r)
+    offsets, totals = {}, {}
+    for g, rows in by_group.items():
+        running = zero
+        for r in sorted(rows, key=lambda r: r[pid]):
+            offsets[(g, r[pid])] = running
+            running = [a + (r[n] or z) for a, n, z in zip(running, names, zero)]
+        totals[g] = running
+    return offsets, totals, types
+
+
 def partition_offsets(
     pinned: DataFrame, pid: str, values: dict[str, Column], group: str | None = None
 ) -> tuple[DataFrame, dict]:
@@ -76,23 +109,10 @@ def partition_offsets(
     ``pid``; with one, a broadcast ``local_table`` join. Also returns each
     group's grand totals, keyed ``None`` when there is no group."""
     names = list(values)
-    cells = pinned.groupBy(*([group] if group else []), pid).agg(
-        *[F.sum(c).alias(n) for n, c in values.items()]
-    )
-    types = {f.name: f.dataType.simpleString() for f in cells.schema.fields}
+    offsets, totals, types = partition_cells(pinned, pid, values, group)
     zero = [0.0 if types[n] == "double" else 0 for n in names]
-    by_group: dict = {}
-    for r in cells.collect():
-        by_group.setdefault(r[group] if group else None, []).append(r)
-    offsets, totals = [], {}
-    for g, rows in by_group.items():
-        running = zero
-        for r in sorted(rows, key=lambda r: r[pid]):
-            offsets.append((g, r[pid], running))
-            running = [a + (r[n] or z) for a, n, z in zip(running, names, zero)]
-        totals[g] = running
     if group is None:
-        at = {p: off for _, p, off in offsets}
+        at = {p: off for (_, p), off in offsets.items()}
 
         def lookup(i: int) -> Column:
             lits = [F.lit(at.get(p, zero)[i]) for p in range(max(at, default=-1) + 1)]
@@ -100,9 +120,9 @@ def partition_offsets(
 
         return pinned.withColumns({n: lookup(i).cast(types[n]) for i, n in enumerate(names)}), totals
     table = local_table(pinned.sparkSession, {
-        "__off_g": (types[group], [g for g, _, _ in offsets]),
-        "__off_pid": (types[pid], [p for _, p, _ in offsets]),
-        **{n: (types[n], [off[i] for _, _, off in offsets]) for i, n in enumerate(names)},
+        "__off_g": (types[group], [g for g, _ in offsets]),
+        "__off_pid": (types[pid], [p for _, p in offsets]),
+        **{n: (types[n], [off[i] for off in offsets.values()]) for i, n in enumerate(names)},
     })
     cond = F.col(group).eqNullSafe(table["__off_g"]) & (F.col(pid) == table["__off_pid"])
     return pinned.join(F.broadcast(table), cond).drop("__off_g", "__off_pid"), totals
@@ -159,6 +179,37 @@ def release(scanned: DataFrame) -> None:
     plan = scanned._jdf.queryExecution().logical()
     if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+@contextmanager
+def pinned():
+    """Yield ``pin``: ``pin(frame)`` eagerly checkpoints ``frame`` locally and
+    returns the checkpoint. Every checkpoint pinned in the block is released
+    when it exits, so nothing read afterwards may derive from one, except
+    the checkpoints handed over by ``pin.keep(*frames)``: it returns the
+    function that releases them, for the result that returns them to own.
+    An iteration passes the checkpoints the new one supersedes as
+    ``replaces``; they are released as soon as it is materialized."""
+    frames: dict[int, DataFrame] = {}  # by identity
+
+    def pin(frame: DataFrame, *replaces: DataFrame) -> DataFrame:
+        out = frame.localCheckpoint()
+        frames[id(out)] = out
+        for old in replaces:
+            release(frames.pop(id(old), old))
+        return out
+
+    def keep(*kept: DataFrame):
+        for frame in kept:
+            frames.pop(id(frame), None)
+        return lambda: [release(frame) for frame in kept]
+
+    pin.keep = keep
+    try:
+        yield pin
+    finally:
+        for frame in frames.values():
+            release(frame)
 
 
 def _checkpoint_with_plan(result: DataFrame) -> DataFrame:

@@ -2,36 +2,55 @@
 
 Reference: /root/reference/oaxaca_blinder/src/quantile_decomposition.rs.
 
-Two fit engines, one orchestration (``run``):
+One algorithm, two places for the rows. Every (replicate, side, tau)
+quantile regression is the exact LP optimum (``solve_qr_exact``), reached by
+Portnoy & Koenker's preprocessing (1997, "The Gaussian hare and the
+Laplacian tortoise", section 3; ``quantreg::rq.fit.pfn``):
 
-- 'driver': collect both groups' matrices once, then exact LP-vertex fits
-  (solve_qr_exact: line-search simplex pivots from the OLS plane) in a
-  thread pool sized to the usable cores — the reference's rayon design
-  (quantile_decomposition.rs:221-229), guarded by COLLECT_LIMIT_CELLS;
-- 'distributed' (scale path): Gram-Newton on the convolution-smoothed check
-  loss (conquer-style smoothed QR) — every (replicate, group, tau) quantile
-  regression iterates simultaneously, each Newton iteration one mapInPandas
-  pass emitting score/Hessian Gram partials; only O(models x k^2)
-  statistics ever reach the driver, data never duplicates across replicates
-  or taus. Smoothing (h = 0.01 x sd) makes the optimum unique, so the
-  distributed reduce's summation order cannot move the argmin along the
-  check loss's flat faces (it moved IRLS by ~0.3% of outcome scale).
+1. fit a seeded subsample of m = ((k+1)n)^(2/3) of the side's rows;
+2. split the rows by their leverage-scaled residual against that fit: rows
+   far below the band are summed into one pseudo-row (a "glob"), rows far
+   above it into another, the band's rows stay as they are;
+3. solve the reduced LP (band rows plus the two globs) exactly;
+4. check that every globbed row kept its sign. The check loss is
+   subadditive and positively homogeneous, so then the reduced optimum is
+   the full optimum; rows that flipped move to the band and step 3 repeats.
+   The check needs no rows when the fit moved less than the band's width
+   (``_keeps_signs``: a Cauchy-Schwarz bound on every row's residual
+   change), which holds for every fit of a typical panel.
 
-The engines differ only in how they produce the per-(replicate, side) beta
-lists. Everything else is shared: the seeded streams, the failed-replicate
-rule, the simulation picks, the effects and the bootstrap assembly, so an
-engine switch moves results only through the QR solver.
+A side with m >= n/2 gains nothing from the reduction and is fitted whole.
+The globbed fits run in waves of about WAVE_CELLS band cells, so the
+driver's memory does not grow with simulations x bootstrap replicates. The
+per-block row pass (``_row_kernel``) computes the residuals of a block
+against every fit as one GEMM, sums the globs with the exact-n resample
+multiplicities (``exact_n_counts``) and emits the band rows or the sign
+violators. The engines differ only in where it runs:
 
-Determinism: tau draws, simulation row picks and bootstrap resamples all come
-from numpy Generators seeded from the builder seed (the reference uses
-thread_rng — unseeded; we improve on that, SURVEY §7.1).
+- 'driver': one collect of both sides; the kernel runs on the NumPy arrays
+  (guarded by COLLECT_LIMIT_CELLS);
+- 'distributed': rows stay in Spark, pinned in their source layout and
+  ranked per side by their partition's offset; the kernel runs in one
+  ``mapInPandas`` per pass: the subsample rows, then per wave the globs
+  (plus a sign check if a fit is not provably sign-stable, and one pass
+  per fix-up round), then the simulation picks.
+
+The LP solves run in a thread pool sized to the usable cores (the
+reference's rayon design, quantile_decomposition.rs:221-229). Everything
+else is shared too (seeded streams, failed-replicate rule, picks, effects,
+bootstrap assembly), so the engines differ only by the summation order of
+the glob rows.
+
+Determinism: tau draws, subsamples, simulation row picks and bootstrap
+resamples all come from numpy Generators seeded from the builder seed (the
+reference uses thread_rng — unseeded; we improve on that, SURVEY §7.1).
 """
 
 from __future__ import annotations
 
 import os
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -39,55 +58,27 @@ from pyspark.sql import functions as F
 
 from .errors import InvalidGroupVariable, NonNumericData, OaxacaError, warn
 from .operators.bootstrap import bootstrap_stats
-from .operators.quantile_regression import exact_n_index, solve_qr_exact
-from .operators.scan import partition_offsets, release
+from .operators.quantile_regression import exact_n_counts, exact_n_index, solve_qr_exact, tol_scale
+from .operators.scan import partition_cells, pinned
 from .results import ComponentResult
 
 INTERCEPT = "__ob_intercept__"
 COLLECT_LIMIT_CELLS = 50_000_000
-
-# Gram-engine smoothing schedule (see _fit_gram): target bandwidth fraction
-# of sd(y), anneal start fraction, per-pass shrink. Module-level so the
-# schedule-invariance test can vary the HOMOTOPY PATH and assert the
-# converged answer (the unique optimum of the target-h loss) doesn't move.
-GRAM_H_FRAC = 0.01
-GRAM_H0_FRAC = 0.5
-# r8: SHRINK 0.125 (target h one pass earlier) was tried and reverted —
-# the tied parity fixture's flat faces need the gentler 0.25 homotopy
-# (the 8x per-pass h jump overshoots the moving optimum and the damped
-# iterate lands on a different face vertex than the exact LP solution).
-# r12: (H0 0.125, SHRINK 0.1) and (H0 0.25, SHRINK 0.25) prototyped for the
-# cadence ask — 15-18% faster at sf0.1 (in-process ABAB, value drift
-# <= 7.3e-12) but BOTH strand a degenerate small-n bootstrap resample of
-# the tied parity fixture in the zero-curvature far field (its replicate
-# fit blows std_err 0.59 -> 33, the r8 failure mode) — rejected with data;
-# profile + ABAB table in NOTES_r12. Do not re-propose without a
-# per-model adaptive anneal start.
-GRAM_SHRINK = 0.25
-# r13: the per-model adaptive anneal start the r12 rejection called for.
-# The r12 data said a 0.125 x sd start is safe for EVERY real-data model
-# (uniform-0.125 ABAB converged with value drift <= 7.3e-12) and fails only
-# for degenerate small-n bootstrap resamples. What "degenerate" turns out
-# to mean, measured on the tied parity fixture (r13): NOT OLS interpolation
-# (the stranding replicate's sd_resid/sd is ~0.7, same as real data) but
-# KERNEL STARVATION — with n = 20 rows per side, a 0.125 x sd start puts
-# the expected number of points inside the kernel window at
-# n x h0 / sd_resid ~ 3.6, so the smoothed Hessian is built from ~zero
-# effective observations and the first Newton step leaves the basin (the
-# r8 failure mode; std_err 0.707 -> 48 when the ratio-only rule was tried
-# first this round). Both hazards are detectable driver-side for free from
-# the init pass's own Gram stats (SSR = y'Wy - 2 b'X'Wy + b'X'WXb):
-#   1. sd_resid >= GRAM_ADAPT_MIN_RESID_RATIO x sd(y) — an interpolating
-#      fit (sd_resid ~ 0) must keep the conservative start;
-#   2. n x (GRAM_H0_ADAPT_FRAC x sd) / sd_resid >= GRAM_ADAPT_MIN_KERNEL_MASS
-#      — the start bandwidth must cover enough observations to estimate
-#      curvature (real sf0.1 sides run ~1e5+, fixtures ~20: cleanly split).
-# Models passing BOTH start at GRAM_H0_ADAPT_FRAC x sd — one fewer anneal
-# pass (12.5 x 0.25^2 < 1 vs 50 x 0.25^3 < 1); anything suspicious keeps
-# the proven GRAM_H0_FRAC schedule, so every prior fixture is bit-safe.
-GRAM_H0_ADAPT_FRAC = 0.125
-GRAM_ADAPT_MIN_RESID_RATIO = 0.25
-GRAM_ADAPT_MIN_KERNEL_MASS = 64.0
+# The band between the globs spans BAND x m of a side's n rows in quantile
+# terms: tau +- BAND x m / (2n) of the subsample's scaled residuals.
+# rq.fit.pfn's 0.8 estimates the cut from all n rows; a cut estimated from
+# the m subsample rows needs a wider band. On 25,000-row sides (k=2, S=20,
+# B in {0, 2}) 1.2 still needed a fix-up round in two of six draws; at 2.0
+# none did, and every fit's sign certificate (``_keeps_signs``) held.
+BAND = 2.0
+# the row kernel's blocks: at most FIT_CHUNK fits by ROW_BLOCK rows (the
+# driver engine's blocks; a Spark partition is one block)
+FIT_CHUNK = 64
+ROW_BLOCK = 1 << 16
+# the globbed fits' band rows on the driver: about WAVE_CELLS cells a wave,
+# a quarter of the collect limit, as a row pass's output is copied up to
+# three times on its way into the reduced problems
+WAVE_CELLS = COLLECT_LIMIT_CELLS // 4
 
 
 @dataclass
@@ -165,6 +156,12 @@ def _usable_cores() -> int:
     return os.cpu_count() or 1
 
 
+def _levels(df: DataFrame, col: str) -> list:
+    """The sorted non-null values of ``col``: one distinct job, sorted on
+    the driver (a Spark orderBy adds a sampling job and an exchange)."""
+    return sorted(r[0] for r in df.select(col).distinct().collect() if r[0] is not None)
+
+
 def _raise_if_infinite(names: list[str], finite) -> None:
     """NonNumericData for the first column whose ``finite`` flag is False
     (names: the outcome, then the design columns)."""
@@ -173,16 +170,15 @@ def _raise_if_infinite(names: list[str], finite) -> None:
             raise NonNumericData(name, "infinite values")
 
 
-def _effects(quantiles, row_of, ba, bb, rank_a, rank_b) -> dict[str, tuple[float, float, float]]:
+def _effects(quantiles, ba, bb, xa, xb) -> dict[str, tuple[float, float, float]]:
     """quantile_decomposition.rs:231-279: predict each simulated row with
     its own tau's betas (A rows x A betas, B x B, and the counterfactual A
     rows x B betas), then the floor-index quantiles of the three samples
-    give (gap, characteristics, coefficients). ``row_of(side, rank)`` is the
-    engine's covariate row lookup."""
-    m = len(rank_a)
-    y_aa = np.array([row_of(0, rank_a[i]) @ ba[i] for i in range(m)])
-    y_bb = np.array([row_of(1, rank_b[i]) @ bb[i] for i in range(m)])
-    y_ab = np.array([row_of(0, rank_a[i]) @ bb[i] for i in range(m)])
+    give (gap, characteristics, coefficients). ``xa`` and ``xb`` hold the
+    simulations' picked covariate rows of each side."""
+    y_aa = np.array([x @ b for x, b in zip(xa, ba)])
+    y_bb = np.array([x @ b for x, b in zip(xb, bb)])
+    y_ab = np.array([x @ b for x, b in zip(xa, bb)])
     out = {}
     for tau in quantiles:
         q_aa = _empirical_quantile(y_aa, tau)
@@ -197,6 +193,284 @@ def _component(name: str, est: float, dist: list[float]) -> ComponentResult:
     t = est / se if (se == se and abs(se) > 1e-9) else 0.0
     return ComponentResult(name=name, estimate=est, std_err=se, t_stat=t,
                            p_value=p, ci_lower=lo, ci_upper=hi)
+
+
+# -- the globbed exact fit, shared by both engines ------------------------------
+def _design_ranks(seed: int, rep: int, side: int, n: int, k: int) -> tuple[np.ndarray, bool]:
+    """Row ranks of the rows that (rep, side)'s first fits run on, and
+    whether those fits are final. With m = ((k+1)n)^(2/3) >= n/2 they are
+    the whole side (its exact-n resample when rep >= 0) and the fits are
+    final; otherwise default_rng([seed, 17, rep + 1, side]) draws m of the n
+    positions without replacement, taken within the resample when rep >= 0
+    (rep -1 is the point pass)."""
+    resample = exact_n_index(seed, rep, side, n) if rep >= 0 else None
+    m = int(round(((k + 1) * n) ** (2.0 / 3.0)))
+    if 2 * m >= n:
+        return (np.arange(n) if resample is None else resample), True
+    pos = np.sort(np.random.default_rng([int(seed), 17, int(rep) + 1, int(side)]).choice(n, size=m, replace=False))
+    return (pos if resample is None else resample[pos]), False
+
+
+def _band_factor(X: np.ndarray) -> np.ndarray:
+    """A with ||x A|| = sqrt(x' pinv(X'X) x), the leverage scale of a row's
+    residual against a fit to X (rq.fit.pfn's band). Directions X does not
+    span get zero columns."""
+    lam, V = np.linalg.eigh(X.T @ X)
+    keep = lam > 1e-12 * max(float(lam.max()), 1e-300)
+    return np.where(keep, V / np.sqrt(np.where(keep, lam, 1.0)), 0.0)
+
+
+def _keeps_signs(A: np.ndarray, Xd: np.ndarray, delta: np.ndarray, lo: float, hi: float) -> bool:
+    """Whether every row globbed against a subsample fit provably keeps its
+    sign at that fit plus ``delta``, without looking at the rows. A low row
+    has r < s lo - tol with s = ||x A||; at the new fit its residual is
+    r - x delta, and |x delta| <= s ||Xd delta|| (Cauchy-Schwarz, A of full
+    rank), so lo + ||Xd delta|| <= 0 keeps it below -tol; likewise hi for
+    the up rows. The 1% margin covers the roundoff of A."""
+    if not np.abs(A).sum(axis=0).all():
+        return False
+    reach = 1.01 * float(np.linalg.norm(Xd @ delta))
+    return lo + reach <= 0.0 and hi - reach >= 0.0
+
+
+@dataclass
+class _SidePlan:
+    """What the row kernel needs for one side's globbed fits. ``fit`` are
+    global fit ids; ``col`` indexes ``reps`` and ``factor`` per fit; ``beta``
+    are the subsample fits; rows with scaled residual below ``lo`` (above
+    ``hi``) are globbed, ``tol`` apart, unless ``kept`` lists their rank as
+    a row of the fit's reduced problem; ``beta_star`` are the reduced fits
+    under check."""
+
+    seed: int
+    side: int
+    n: int
+    reps: np.ndarray
+    factor: np.ndarray
+    fit: np.ndarray
+    col: np.ndarray
+    beta: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    tol: np.ndarray
+    kept: dict = field(default_factory=dict)
+    beta_star: np.ndarray | None = None
+
+
+def _row_kernel(X: np.ndarray, y: np.ndarray, rn: np.ndarray, plan: _SidePlan) -> dict:
+    """The row pass on one block of one side's rows (ranks ``rn``). Residuals
+    against every fit are one GEMM per chunk of fits; each fit's globs are
+    the multiplicity-weighted sums of its rows below and above the band
+    (rank -1 and -2, multiplicity = the summed count). Without
+    ``beta_star`` it emits the band rows; with it, the globbed rows whose
+    residual against ``beta_star`` has the wrong sign (the violators, left
+    out of the glob sums it emits). Returns columns fit, rn, w, y, X."""
+    C = np.empty((len(y), len(plan.reps)))
+    for i, r in enumerate(plan.reps):
+        C[:, i] = 1.0 if r < 0 else exact_n_counts(plan.seed, int(r), plan.side, plan.n)[rn]
+    scale = np.stack([np.sqrt(((X @ A) ** 2).sum(axis=1)) for A in plan.factor], axis=1)
+    XY = np.column_stack([X, y])
+    fit_o, row_o, w_o, glob_o = [], [], [], []
+    for c0 in range(0, len(plan.fit), FIT_CHUNK):
+        sl = slice(c0, c0 + FIT_CHUNK)
+        col, tol, fits = plan.col[sl], plan.tol[sl], plan.fit[sl]
+        Cf, band = C[:, col], scale[:, col]
+        held = Cf > 0
+        R = y[:, None] - X @ plan.beta[sl].T
+        with np.errstate(invalid="ignore"):  # an infinite cut times a zero scale
+            low = (R < band * plan.lo[sl] - tol) & held
+            up = (R > band * plan.hi[sl] + tol) & held
+        for j, f in enumerate(fits):
+            if int(f) in plan.kept:
+                hit = np.isin(rn, plan.kept[int(f)])
+                low[hit, j] = up[hit, j] = False
+        if plan.beta_star is None:
+            emit = held & ~(low | up)
+        else:
+            Rs = y[:, None] - X @ plan.beta_star[sl].T
+            emit = (low & (Rs > tol)) | (up & (Rs < -tol))
+            low &= ~emit
+            up &= ~emit
+        rows, cols = np.nonzero(emit)
+        fit_o.append(fits[cols])
+        row_o.append(rows)
+        w_o.append(Cf[rows, cols])
+        for code, mask in ((-1, low), (-2, up)):
+            W = Cf * mask
+            w = W.sum(axis=0)
+            has = np.flatnonzero(w > 0)
+            glob_o.append((fits[has], np.full(len(has), code), w[has], (W.T @ XY)[has]))
+    rows = np.concatenate(row_o)
+    G = np.concatenate([g[3] for g in glob_o]) if glob_o else np.empty((0, X.shape[1] + 1))
+    return {
+        "fit": np.concatenate(fit_o + [g[0] for g in glob_o]).astype(np.int64),
+        "rn": np.concatenate([rn[rows]] + [g[1] for g in glob_o]).astype(np.int64),
+        "w": np.concatenate(w_o + [g[2] for g in glob_o]),
+        "y": np.concatenate([y[rows], G[:, -1]]),
+        "X": np.concatenate([X[rows], G[:, :-1]]),
+    }
+
+
+@dataclass
+class _Reduced:
+    """One fit's reduced problem: band rows (rank order, then each fix-up
+    round's rows in rank order; with multiplicity) and the glob rows (rank
+    -1 low, -2 up -> (x sum, y sum))."""
+
+    rn: np.ndarray
+    X: np.ndarray
+    y: np.ndarray
+    w: np.ndarray
+    globs: dict
+
+    def problem(self) -> tuple[np.ndarray, np.ndarray]:
+        reps = self.w.astype(np.int64)
+        gx = [self.globs[c][0][None, :] for c in (-1, -2) if c in self.globs]
+        gy = [np.array([self.globs[c][1]]) for c in (-1, -2) if c in self.globs]
+        return (np.concatenate([np.repeat(self.X, reps, axis=0)] + gx),
+                np.concatenate([np.repeat(self.y, reps)] + gy))
+
+
+def _split(em: dict) -> dict[int, _Reduced]:
+    """A row pass's output per fit: rows in rank order, and glob partials
+    summed in partition order."""
+    o = np.lexsort((em["pid"], em["rn"], em["fit"]))
+    fit, rn, w, y, X = (em[c][o] for c in ("fit", "rn", "w", "y", "X"))
+    ids, start = np.unique(fit, return_index=True)
+    out = {}
+    for f, a, b in zip(ids.tolist(), start, np.r_[start[1:], len(fit)]):
+        r = rn[a:b]
+        nb = int(np.searchsorted(r, 0))  # globs (-2, -1) sort first
+        globs = {}
+        for code in (-2, -1):
+            sel = np.flatnonzero(r[:nb] == code) + a
+            if len(sel):
+                globs[code] = (X[sel].sum(axis=0), y[sel].sum())
+        out[f] = _Reduced(r[nb:], X[a + nb:b], y[a + nb:b], w[a + nb:b], globs)
+    return out
+
+
+def _array_rows(X: list[np.ndarray], y: list[np.ndarray]):
+    """The side sizes, ``rows`` and ``row_pass`` of ``_fit_globbed`` for
+    sides held as arrays: the kernel runs on blocks of ROW_BLOCK rows, as
+    it runs on partitions in Spark."""
+
+    def row_pass(plans):
+        outs = []
+        for s, plan in plans.items():
+            for b0 in range(0, len(y[s]), ROW_BLOCK):
+                b = slice(b0, b0 + ROW_BLOCK)
+                out = _row_kernel(X[s][b], y[s][b], np.arange(len(y[s]))[b], plan)
+                outs.append({**out, "pid": np.full(len(out["fit"]), b0 // ROW_BLOCK, np.int64)})
+        return {c: np.concatenate([o[c] for o in outs]) for c in outs[0]}
+
+    return ({s: len(ys) for s, ys in enumerate(y)},
+            lambda wanted: {key: {s: (X[s][r], y[s][r]) for s, r in w.items()} for key, w in wanted.items()},
+            row_pass)
+
+
+def _waves(ids: list[int], cells: dict[int, float]):
+    """Runs of consecutive ``ids`` whose summed ``cells`` stay within
+    WAVE_CELLS (a fit that alone exceeds it is a wave of its own)."""
+    wave, used = [], 0.0
+    for i in ids:
+        if wave and used + cells[i] > WAVE_CELLS:
+            yield wave
+            wave, used = [], 0.0
+        wave.append(i)
+        used += cells[i]
+    if wave:
+        yield wave
+
+
+def _solve(args):
+    X, y, tau = args
+    try:
+        return solve_qr_exact(X, y, tau)
+    except (np.linalg.LinAlgError, RuntimeError, FloatingPointError, ValueError, OaxacaError):
+        return None  # a numeric failure: the fit counts as failed
+
+
+def _fit_globbed(seed, k, ns, taus_by_rep, rows, row_pass, pool) -> dict[tuple[int, int], list[np.ndarray]]:
+    """Every (rep, side, tau) fit by the globbed exact LP. ``rows(wanted)``
+    fetches key -> side -> (X, y) of the ranks ``wanted[key][side]`` (any
+    order, repeats included); ``row_pass(plans)`` runs ``_row_kernel`` over
+    each planned side's rows and returns its output with a ``pid`` column.
+    Returns betas[(rep, side)]: the fits that succeeded, in tau order."""
+    keys = [(r, s, t) for r in taus_by_rep for s in ns for t in range(len(taus_by_rep[r]))]
+    tau = [taus_by_rep[r][t] for r, _, t in keys]
+    design = {(r, s): _design_ranks(seed, r, s, n, k) for r in taus_by_rep for s, n in ns.items()}
+    data = {rs: got[rs[1]] for rs, got in rows({rs: {rs[1]: d[0]} for rs, d in design.items()}).items()}
+    beta = dict(zip(keys, pool.map(_solve, [(*data[key[:2]], t) for key, t in zip(keys, tau)])))
+
+    # the fits of subsampled sides: cut their bands
+    factor = {rs: _band_factor(data[rs][0]) for rs, (_, whole) in design.items() if not whole}
+    cut = {}
+    for i, key in enumerate(keys):
+        if key[:2] not in factor or beta[key] is None:
+            continue
+        Xd, yd = data[key[:2]]
+        z = (yd - Xd @ beta[key]) / np.maximum(np.sqrt(((Xd @ factor[key[:2]]) ** 2).sum(axis=1)), 1e-300)
+        h = BAND * len(yd) / (2.0 * ns[key[1]])
+        cut[i] = (np.quantile(z, tau[i] - h) if tau[i] - h > 0.0 else -np.inf,
+                  np.quantile(z, tau[i] + h) if tau[i] + h < 1.0 else np.inf,
+                  1e-9 * tol_scale(yd))
+    # then glob them in waves: a wave's band rows (about BAND x m a fit, k + 5
+    # cells a row as the row pass emits them) stay within WAVE_CELLS, and its
+    # reduced problems are dropped once solved
+    cells = {i: (BAND * len(data[keys[i][:2]][1]) + 2) * (k + 5) for i in cut}
+    for wave in _waves(sorted(cut), cells):
+        plans = {}
+        for s, n in ns.items():
+            ids = [i for i in wave if keys[i][1] == s]
+            if not ids:
+                continue
+            reps = np.unique([keys[i][0] for i in ids])
+            plans[s] = _SidePlan(
+                seed=seed, side=s, n=n, reps=reps, factor=np.stack([factor[(r, s)] for r in reps.tolist()]),
+                fit=np.array(ids, dtype=np.int64), col=np.searchsorted(reps, [keys[i][0] for i in ids]),
+                beta=np.stack([beta[keys[i]] for i in ids]),
+                **{a: np.array([cut[i][j] for i in ids]) for j, a in enumerate(("lo", "hi", "tol"))},
+            )
+        reduced = _split(row_pass(plans))
+        pending = wave
+        while pending:
+            sols = pool.map(_solve, [(*reduced[i].problem(), tau[i]) for i in pending])
+            # a fit whose globs provably keep their signs is final; the rest
+            # are checked row by row in one pass
+            checks = {}
+            for i, b in zip(pending, sols):
+                rs = keys[i][:2]
+                if b is None or _keeps_signs(factor[rs], data[rs][0], b - beta[keys[i]], *cut[i][:2]):
+                    beta[keys[i]] = b
+                else:
+                    checks[i] = b
+            for s, plan in list(plans.items()):
+                on = np.array([int(f) in checks for f in plan.fit], dtype=bool)
+                if not on.any():
+                    del plans[s]
+                    continue
+                plans[s] = replace(
+                    plan, **{a: getattr(plan, a)[on] for a in ("fit", "col", "beta", "lo", "hi", "tol")},
+                    kept={int(f): reduced[int(f)].rn for f in plan.fit[on]},
+                    beta_star=np.stack([checks[int(f)] for f in plan.fit[on]]),
+                )
+            found = _split(row_pass(plans)) if plans else {}
+            pending = []
+            for i, b in checks.items():
+                if i in found and len(found[i].rn):
+                    # the band, then the violators, with the new globs
+                    band = (np.concatenate([getattr(reduced[i], a), getattr(found[i], a)]) for a in ("rn", "X", "y", "w"))
+                    reduced[i] = _Reduced(*band, found[i].globs)
+                    pending.append(i)
+                else:
+                    beta[keys[i]] = b
+            pending.sort()
+    betas: dict[tuple[int, int], list[np.ndarray]] = {}
+    for key in keys:
+        if beta[key] is not None:
+            betas.setdefault(key[:2], []).append(beta[key])
+    return betas
 
 
 class QuantileDecompositionBuilder:
@@ -249,29 +523,38 @@ class QuantileDecompositionBuilder:
     def fit_engine(self, engine: str) -> "QuantileDecompositionBuilder":
         """'auto' (default): 'driver' when the design fits the driver collect
         limit (cells counted BEFORE collecting), else 'distributed' — a user
-        at scale gets the Gram engine instead of an error.
+        at scale gets the distributed engine instead of an error.
 
-        'driver': collect group matrices once, NumPy fits in a thread pool
-        sized to the usable cores (reference's rayon shape;
-        COLLECT_LIMIT-guarded). Each fit is the exact LP-vertex optimum
-        (solve_qr_exact: simplex basis exchange with line-search pivots from
-        the OLS plane, an IRLS start only for degenerate vertices) — the
-        reference's interior-point semantics (quantile_regression.rs:22-129)
-        without an LP dependency.
+        Both engines fit every (replicate, group, tau) quantile regression
+        as the exact LP optimum (``solve_qr_exact``: simplex basis exchange
+        with line-search pivots from the OLS plane, an IRLS start only for
+        degenerate vertices), the reference's interior-point semantics
+        (quantile_regression.rs:22-129) without an LP dependency, after
+        Portnoy-Koenker globbing (see the module docstring): a seeded
+        subsample fit, a band of rows kept as they are, the rest summed into
+        two glob rows, and a sign check with fix-up rounds. The LP solves run
+        on the driver in a thread pool sized to the usable cores.
 
-        'distributed' (the scale path): Gram-Newton on the smoothed check
-        loss — every (replicate, group, tau) quantile regression iterates
-        simultaneously; each Newton iteration is ONE mapInPandas pass over
-        the unexploded projection computing smoothed score/Hessian Gram
-        partials (X'DX upper triangle, X'v) for all active models with two
-        BLAS GEMMs per partition, and the driver performs the k x k solves. No row is ever duplicated across
-        replicates or taus — resampling is multiplicity-weighted via
-        ``exact_n_counts`` — so shuffle volume is O(n) per iteration and
-        driver traffic is O(models x k^2), independent of n.
+        'driver': collect group matrices once (COLLECT_LIMIT-guarded); the
+        row passes run in NumPy on the collected arrays.
+
+        'distributed' (the scale path): rows stay in Spark. Each row pass is
+        one ``mapInPandas`` over the pinned design; only the subsample rows,
+        the band rows, the glob sums and the sign violators reach the
+        driver, about ((k+1)n)^(2/3) rows per fit, in waves of about
+        WAVE_CELLS cells. Resamples enter as multiplicities
+        (``exact_n_counts``), so no row is duplicated across replicates or
+        taus. A run takes one row pass for the subsample rows, one glob
+        pass per wave (plus a sign-check pass when some fit's globs are not
+        provably sign-stable, and one per fix-up round) and one for the
+        simulation picks.
 
         Both engines read the same seeded streams (tau draws, exact-n
-        resamples, simulation picks), so bootstrap standard errors differ
-        between them only through the QR solver.
+        resamples, subsamples, simulation picks) and solve the same reduced
+        LPs, so they agree to the roundoff of the glob sums. On tied
+        outcomes an optimal face can be flat, and that roundoff could then
+        pick another vertex of the face (the same check loss, other
+        effects); the tied panels of the test suite land on the same one.
         """
         if engine not in ("auto", "driver", "distributed"):
             raise ValueError("fit engine must be 'auto', 'driver' or 'distributed'")
@@ -296,13 +579,13 @@ class QuantileDecompositionBuilder:
 
         dummy_names: list[str] = []
         for var in self._categorical_predictors:
-            levels = [r[0] for r in df.select(var).distinct().orderBy(var).collect() if r[0] is not None]
+            levels = _levels(df, var)
             for lv in levels[1:]:
                 name = f"{var}_{lv}"
                 df = df.withColumn(name, (F.col(var) == F.lit(lv)).cast("double"))
                 dummy_names.append(name)
 
-        uniques = [r[0] for r in df.select(self._group).distinct().orderBy(self._group).collect() if r[0] is not None]
+        uniques = _levels(df, self._group)
         if len(uniques) < 2:
             raise InvalidGroupVariable("Not enough groups")
         group_b = self._reference_group
@@ -315,14 +598,11 @@ class QuantileDecompositionBuilder:
         self._design_cache = (df, xcols, group_a, group_b)
         return self._design_cache
 
-    # -- driver engine ----------------------------------------------------------
-    def _driver_engine(self, design, xcols, group_a, taus_by_rep):
-        """One collect of both sides, then exact-LP fits in a thread pool
-        with one thread per usable core (quantile_decomposition.rs:173-229):
-        a fit holds the GIL between its NumPy calls, so threads beyond the
-        cores only contend. A row's rank is its index in the collected side
-        array — the same order as the Gram engine's
-        ``__mm_rn``. ``run`` has already row-guarded the collect."""
+    # -- where the rows live -----------------------------------------------------
+    def _driver_rows(self, design, xcols, group_a):
+        """One collect of both sides; ``run`` has already row-guarded it. A
+        row's rank is its index in the collected side array — the same order
+        as the distributed engine's ranks. Returns ``_array_rows``."""
         pdf = design.select(self._group, self._outcome, *xcols).toPandas()
         X, y = [], []
         for in_a in (True, False):
@@ -331,440 +611,90 @@ class QuantileDecompositionBuilder:
                 raise InvalidGroupVariable("One group has insufficient data")
             X.append(sub[xcols].to_numpy(dtype=np.float64))
             y.append(sub[self._outcome].to_numpy(dtype=np.float64))
-        _raise_if_infinite(
-            [self._outcome] + xcols,
-            np.logical_and(*(np.r_[np.isfinite(y[s]).all(), np.isfinite(X[s]).all(axis=0)]
-                             for s in (0, 1))),
-        )
+        finite = np.isfinite(np.column_stack([np.r_[y[0], y[1]], np.vstack(X)])).all(axis=0)
+        _raise_if_infinite([self._outcome] + xcols, finite)
+        return _array_rows(X, y)
 
-        def fit(args):
-            Xs, ys, tau = args
-            try:
-                return solve_qr_exact(Xs, ys, tau)
-            except (np.linalg.LinAlgError, RuntimeError, FloatingPointError, ValueError, OaxacaError):
-                return None  # a numeric failure: the fit counts as failed
-
-        betas: dict[tuple[int, int], list[np.ndarray]] = {}
-        n_fits = 2 * sum(len(taus) for taus in taus_by_rep.values())
-        with ThreadPoolExecutor(max_workers=max(1, min(_usable_cores(), n_fits))) as pool:
-            for r, taus in taus_by_rep.items():
-                fits = {}
-                for s in (0, 1):
-                    Xs, ys = X[s], y[s]
-                    if r >= 0:
-                        idx = exact_n_index(self._seed, r, s, len(ys))
-                        Xs, ys = Xs[idx], ys[idx]
-                    fits[s] = pool.map(fit, [(Xs, ys, t) for t in taus])
-                for s, it in fits.items():
-                    betas[(r, s)] = [b for b in it if b is not None]
-        # every row is already here: the row lookup needs no fetch
-        return len(y[0]), len(y[1]), betas, lambda needed: lambda s, i: X[s][i]
-
-    # -- distributed (Gram) engine ------------------------------------------------
-    def _gram_engine(self, design, xcols, group_a, group_b, taus_by_rep, pins):
-        """Rank rows per group, fit every (replicate, side, tau) model with
-        ``_fit_gram`` and collect only the covariate rows the simulation
-        picks. Exact-n resamples enter as multiplicity weights
-        (``exact_n_counts``), so no resampled data is ever shuffled. The
-        frames it checkpoints are appended to ``pins``."""
-        from pyspark.sql import Window
-
-        # stable per-group row rank: fixes row order inside executor tasks
-        # (and the driver's pick translation). A window partitioned only by
-        # group would funnel each group through one task; ranking instead
-        # windows each (group, source partition) cell, offset by the group's
-        # rows in earlier partitions (monotonically_increasing_id is
-        # (partition << 33) + local index).
-        # CHECKPOINT BEFORE the offsets are counted, not after the join: the
-        # offsets job and the rank-window job otherwise execute the plan
-        # twice, and AQE may lay out the upstream exchange differently
-        # between them (observed at small SFs with a sorted input) — the
-        # per-(group, pid) counts then describe a DIFFERENT layout than
-        # the one the window ranks, silently scrambling the pick
-        # translation and breaking exact rerun reproducibility. Pinning
-        # the ids first makes both jobs read the same materialized layout
-        # (the join+window is deterministic given pinned input).
-        design = design.withColumn("__mm_mid", F.monotonically_increasing_id()).withColumn(
-            "__mm_pid", F.shiftrightunsigned(F.col("__mm_mid"), 33)
-        ).localCheckpoint()
-        pins.append(design)
-        counted, totals = partition_offsets(design, "__mm_pid", {"__mm_off": F.lit(1)}, self._group)
-        w = Window.partitionBy(self._group, "__mm_pid").orderBy("__mm_mid")
-        ranked = counted.withColumn(
-            "__mm_rn", F.col("__mm_off") + F.row_number().over(w) - 1
-        ).drop("__mm_pid", "__mm_off")
-        n_a, n_b = totals[group_a][0], totals[group_b][0]
-        proj = (
-            ranked.select(self._group, "__mm_rn", self._outcome, *xcols)
-            .repartition(design.sparkSession.sparkContext.defaultParallelism)
-            .localCheckpoint()
-        )
-        pins.append(proj)
-        betas = self._fit_gram(proj, xcols, group_a, group_b, taus_by_rep, n_a, n_b)
-
-        def rows(needed: dict[int, set[int]]):
-            want = ranked.filter(
-                ((F.col(self._group) == group_a) & F.col("__mm_rn").isin(sorted(needed[0])))
-                | ((F.col(self._group) == group_b) & F.col("__mm_rn").isin(sorted(needed[1])))
-            ).select(self._group, "__mm_rn", *xcols).collect()
-            rows_by = {
-                (0 if r_[self._group] == group_a else 1, int(r_["__mm_rn"])):
-                    np.array([float(r_[c]) for c in xcols])
-                for r_ in want
-            }
-            return lambda s, i: rows_by[(s, int(i))]
-
-        return n_a, n_b, betas, rows
-
-    def _fit_gram(
-        self, proj, xcols, group_a, group_b, taus_by_rep, n_a, n_b
-    ) -> dict[tuple[int, int], list[np.ndarray]]:
-        """Gram-Newton on the convolution-smoothed check loss: all (rep,
-        side, tau) quantile regressions iterate simultaneously; each Newton
-        iteration is one mapInPandas pass over the unexploded projection.
-
-        Solver: conquer-style smoothed quantile regression (Fernandes, Guerre
-        & Horowitz 2021 JoE; He, Pan, Tan & Zhou 2023 "smoothed quantile
-        regression with large-scale inference") — minimize (rho_tau * K_h)(r)
-        with a Gaussian kernel. Why not the exact check loss here: on tied /
-        discrete data the check-loss argmin is a FLAT face whose interior
-        IRLS traverses slowly and lands on chaotically (the stop point moves
-        by O(face diameter) under summation-order perturbation, which a
-        distributed reduce cannot pin). The smoothed loss is smooth and
-        strictly convex, so its minimizer is UNIQUE, Newton converges in
-        ~6-10 passes, and partition/summation order moves the result by
-        ~1e-10 (measured), not hundreds. Bandwidth h = 0.01 x sd_rep(y):
-        smoothing bias is O(h^2) and measured effects sit within ~0.1% of
-        the exact-LP-vertex oracle — inside the documented 0.3% flat-face
-        bound that already governs IRLS-vs-LP divergence. Globalization:
-        anneal h from 1.0 x sd (halving per pass) plus driver-side adaptive
-        damping and a trust clamp (see the Newton loop below).
-
-        Per pass each partition emits ONE row per group side holding the
-        flattened (L + k) x m_active block [Ptri' (d_m c_rep); X' (v_m
-        c_rep)] where d/v are the smoothed-loss Hessian/score row weights,
-        Ptri the n x k(k+1)/2 upper-triangle product matrix, and c_rep the
-        exact-n resample multiplicities (``exact_n_counts``) — a
-        count-weighted fit is the identical estimator to fitting the
-        materialized resample. Shuffle volume is O(n) data + O(partitions x
-        models x k^2) stats regardless of reps — the 100x-scale fix for the
-        crossJoin fan-out. Converged (rep, side, tau) models leave the
-        payload, so late passes compute only stragglers. Reference
-        semantics: quantile_regression.rs:22-129 (same population target;
-        the reference's Clarabel LP picks a vertex of the same optimal
-        face).
-        """
+    def _spark_rows(self, design, xcols, group_a, group_b, pin):
+        """Pin the projected design in its source layout and count each
+        side's rows per partition; ``rows`` and ``row_pass`` are one
+        ``mapInPandas`` pass over the pinned frame each. A row's rank within
+        its side is its side's row count in earlier partitions plus its
+        place in its own partition: the order the driver engine collects
+        in. The first ``rows`` pass also raises on +-Infinity."""
         import pandas as pd
 
-        B = self._bootstrap_reps
-        S = self._simulations
-        seed = self._seed
-        gcol = self._group
-        outcome = self._outcome
-        k = len(xcols)
-        tri = [(i, j) for i in range(k) for j in range(i, k)]
-        L = len(tri)
-        MAX_ITER, TOL, RIDGE = 60, 1e-9, 1e-12
-        # Anneal schedule: h starts at H0_FRAC x sd and shrinks by SHRINK per
-        # pass down to the H_FRAC x sd target. The converged result is the
-        # unique optimum of the TARGET-h smoothed loss, so the schedule only
-        # affects globalization robustness and pass count, not the answer:
-        # (0.5, 0.25) reaches target at pass 3 (50 x 0.25^3 < 1) instead of
-        # the old (1.0, 0.5)'s pass 7 — ~40% fewer full-data passes, with
-        # the adaptive damping + trust clamp absorbing the larger h steps.
-        H_FRAC, H0_FRAC, SHRINK = GRAM_H_FRAC, GRAM_H0_FRAC, GRAM_SHRINK
-        # CHUNK bounds the n_p x CHUNK residual/weight blocks per task.
-        # Profiled at n_p ~ 12.5k (sf0.1 / 32 partitions): 64-wide blocks
-        # (~6 MB working set, L2/L3-resident) run the identical arithmetic
-        # ~2.8x faster than the old 256-wide blocks, whose ~25 MB
-        # temporaries thrash cache across the ~10 full-size intermediates.
-        CHUNK = 64
-
-        rep_list = list(range(-1, B))
+        # pinned BEFORE the rows are counted: read twice, an unpinned plan
+        # may be laid out differently each time (AQE, observed at small SFs
+        # with a sorted input), and the counts would then describe another
+        # layout than the one the passes rank
+        gcol, outcome, k = self._group, self._outcome, len(xcols)
+        design = pin(design.select(gcol, outcome, *xcols).withColumn(
+            "__mm_pid", F.spark_partition_id().cast("long")
+        ))
+        offsets, totals, _ = partition_cells(design, "__mm_pid", {"__mm_n": F.lit(1)}, gcol)
         side_of = {group_a: 0, group_b: 1}
-        n_by_side = {0: n_a, 1: n_b}
-        models = [(r, s, t) for r in rep_list for s in (0, 1) for t in range(S)]
-        M = len(models)
-        model_rep = np.array([m[0] for m in models], dtype=np.int64)
-        model_side = np.array([m[1] for m in models], dtype=np.int64)
-        model_tidx = np.array([m[2] for m in models], dtype=np.int64)
-        model_tau = np.array([taus_by_rep[r][t] for (r, s, t) in models])
-        betas_arr = np.zeros((M, k))
-        status = np.zeros(M, dtype=np.int8)  # 0 active, 1 converged/stopped, 2 failed
-        xcols_l = list(xcols)
-        tri_l = list(tri)
-        n_by_side_l = dict(n_by_side)
-        side_of_l = dict(side_of)
+        offset = {(side_of[g], p): int(off[0]) for (g, p), off in offsets.items()}
+        schema = "fit long, pid long, rn long, w double, y double, " + ", ".join(f"x{j} double" for j in range(k))
 
-        def run_pass(payload: dict) -> dict[int, np.ndarray]:
-            """One mapInPandas pass. payload: side -> dict(mode, ureps[,
-            repcol, taus, betas, h]). Returns side -> summed stat block:
-            (L+k+3) x nreps for mode 'ols' (adds count/sum/sumsq y-moment
-            rows for the bandwidth), (L+k) x m for mode 'newton'."""
+        def run_pass(block):
+            """``block(side, X, y, rn)`` -> kernel columns, over every
+            partition's rows of each side; returns them concatenated."""
 
-            def compute(iterator, payload=payload):
-                from pyspark import TaskContext
-
-                from oaxaca_blinder_rs_spark.functions.mathx import erf_np
-                from oaxaca_blinder_rs_spark.operators.quantile_regression import (
-                    exact_n_counts,
-                )
-
-                _SQRT2 = np.sqrt(2.0)
-                _SQRT2PI = np.sqrt(2.0 * np.pi)
-
-                ctx = TaskContext.get()
-                pid = ctx.partitionId() if ctx is not None else 0
+            def compute(iterator):
                 by: dict = {}
+                pid = None
                 for pdf in iterator:
                     for gval, sub in pdf.groupby(gcol, sort=False):
-                        by.setdefault(gval, []).append(sub)
-                rows = []
-                for gval, parts in by.items():
-                    s = side_of_l[gval]
-                    pl = payload.get(s)
-                    if pl is None:
-                        continue
+                        by.setdefault(side_of[gval], []).append(sub)
+                        pid = int(sub["__mm_pid"].iloc[0])
+                for s, parts in by.items():
                     sub = pd.concat(parts, ignore_index=True)
-                    X = sub[xcols_l].to_numpy(dtype=np.float64)
-                    y = sub[outcome].to_numpy(dtype=np.float64)
-                    rn = sub["__mm_rn"].to_numpy(dtype=np.int64)
-                    n_side = n_by_side_l[s]
-                    ureps = pl["ureps"]
-                    C = np.empty((len(rn), len(ureps)))
-                    for ci, r in enumerate(ureps):
-                        if r < 0:
-                            C[:, ci] = 1.0
-                        else:
-                            C[:, ci] = exact_n_counts(seed, int(r), s, n_side)[rn]
-                    P = np.empty((len(rn), L))
-                    for c0, (i, j) in enumerate(tri_l):
-                        P[:, c0] = X[:, i] * X[:, j]
-                    if pl["mode"] == "ols":
-                        W = C  # one init model per unique rep, unit weights
-                        ymom = np.stack(
-                            [C.sum(axis=0), y @ C, (y * y) @ C], axis=0
-                        )
-                        stat = np.concatenate(
-                            [P.T @ W, X.T @ (W * y[:, None]), ymom], axis=0
-                        )
-                    else:
-                        m = len(pl["taus"])
-                        stat = np.empty((L + k, m))
-                        for c0 in range(0, m, CHUNK):
-                            sl = slice(c0, min(c0 + CHUNK, m))
-                            Z = (y[:, None] - X @ pl["betas"][sl].T) / pl["h"][None, sl]
-                            Cs = C[:, pl["repcol"][sl]]
-                            # smoothed check loss (Gaussian kernel):
-                            # score v = tau - 1 + Phi(z), curvature d =
-                            # phi(z)/h — evaluated SPARSELY: for |z| >= 40,
-                            # erf(z/sqrt(2)) is exactly +-1 in doubles
-                            # (CALERF XBIG ~ 26.5 < 40/sqrt(2)) and
-                            # exp(-z^2/2) underflows to exactly 0, so the
-                            # far field contributes V = (tau-1) + {0,1} and
-                            # D = 0 BIT-IDENTICALLY to the dense evaluation
-                            # while skipping erf/exp for the ~75-95% of
-                            # residuals outside the kernel window once h
-                            # nears target (fp addition is commutative, so
-                            # (tau-1)+step == dense's tau-1+0.5(1+erf)).
-                            W = np.where(Z > 0, 1.0, 0.0)
-                            W += pl["taus"][None, sl] - 1.0
-                            rows_in, cols_in = np.nonzero(np.abs(Z) < 40.0)
-                            zin = Z[rows_in, cols_in]
-                            W[rows_in, cols_in] = (
-                                pl["taus"][sl][cols_in] - 1.0
-                            ) + 0.5 * (1.0 + erf_np(zin / _SQRT2))
-                            DC = np.zeros_like(Z)
-                            DC[rows_in, cols_in] = (
-                                np.exp(-0.5 * zin * zin)
-                                / (_SQRT2PI * pl["h"][sl][cols_in])
-                            ) * Cs[rows_in, cols_in]
-                            stat[:L, sl] = P.T @ DC
-                            W *= Cs
-                            stat[L:, sl] = X.T @ W
-                    rows.append((int(s), int(pid), stat.ravel(order="F").tolist()))
-                yield pd.DataFrame(rows, columns=["side", "pid", "stats"])
+                    rn = offset[(s, pid)] + np.arange(len(sub), dtype=np.int64)
+                    out = block(s, sub[xcols].to_numpy(dtype=np.float64), sub[outcome].to_numpy(dtype=np.float64), rn)
+                    if out is None:
+                        continue
+                    Xo = out.pop("X")
+                    out["pid"] = np.full(len(out["fit"]), pid, np.int64)
+                    yield pd.DataFrame({**out, **{f"x{j}": Xo[:, j] for j in range(k)}})
 
-            pdf_all = proj.mapInPandas(
-                compute, schema="side int, pid int, stats array<double>"
-            ).toPandas()
-            out: dict[int, np.ndarray] = {}
-            # fixed (side, pid) summation order -> bit-deterministic reruns
-            pdf_all = pdf_all.sort_values(["side", "pid"], kind="mergesort")
-            for side_v, grp in pdf_all.groupby("side", sort=True):
-                pl = payload[int(side_v)]
-                if pl["mode"] == "ols":
-                    m, height = len(pl["ureps"]), L + k + 3
-                else:
-                    m, height = len(pl["taus"]), L + k
-                acc = np.zeros((height, m))
-                for st in grp["stats"]:
-                    acc += np.asarray(st, dtype=np.float64).reshape((height, m), order="F")
-                out[int(side_v)] = acc
+            pdf = design.mapInPandas(compute, schema=schema).toPandas()
+            em = {c: pdf[c].to_numpy() for c in ("fit", "pid", "rn", "w", "y")}
+            return {**em, "X": pdf[[f"x{j}" for j in range(k)]].to_numpy(np.float64).reshape(-1, k)}
+
+        def rows(wanted):
+            """``rows`` of ``_fit_globbed``, each rank fetched once. Each
+            block also reports whether its columns are finite (rank -1, fit
+            = the side, y and X = 1.0 when finite)."""
+            distinct = {s: np.unique(np.concatenate([w.get(s, []) for w in wanted.values()])).astype(np.int64)
+                        for s in (0, 1)}
+
+            def fetch(s, X, y, rn):
+                want = distinct[s]
+                at = np.minimum(np.searchsorted(want, rn), max(len(want) - 1, 0))
+                hit = np.flatnonzero(want[at] == rn) if len(want) else np.empty(0, np.int64)
+                flags = np.r_[np.isfinite(y).all(), np.isfinite(X).all(axis=0)].astype(np.float64)
+                return {"fit": np.full(len(hit) + 1, s, np.int64), "rn": np.r_[rn[hit], -1],
+                        "w": np.ones(len(hit) + 1), "y": np.r_[y[hit], flags[0]],
+                        "X": np.concatenate([X[hit], flags[None, 1:]])}
+
+            em = run_pass(fetch)
+            flag = em["rn"] < 0
+            _raise_if_infinite([outcome] + list(xcols), np.r_[em["y"][flag].all(), em["X"][flag].all(axis=0)])
+            out: dict = {}
+            for s in (0, 1):
+                sel = np.flatnonzero((em["fit"] == s) & ~flag)
+                sel = sel[np.argsort(em["rn"][sel], kind="stable")]
+                for key, w in wanted.items():
+                    if s in w:
+                        at = sel[np.searchsorted(distinct[s], w[s])]
+                        out.setdefault(key, {})[s] = em["X"][at], em["y"][at]
             return out
 
-        def solve_block(stats: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-            """Batched k x k solves from stacked stats ((L+k) x m): A from the
-            triangle rows, rhs from the tail rows -> (solution m x k, ok
-            mask). Serves both the OLS init (A = X'CX, rhs = X'Cy -> beta)
-            and the Newton passes (A = Hessian, rhs = score -> step).
-            Singular/non-finite models are flagged, not raised."""
-            m = stats.shape[1]
-            A = np.zeros((m, k, k))
-            for idx, (i, j) in enumerate(tri_l):
-                A[:, i, j] = stats[idx]
-                A[:, j, i] = stats[idx]
-            A += RIDGE * np.eye(k)[None, :, :]
-            b = stats[L:].T  # m x k
-            sol = np.full((m, k), np.nan)
-            try:
-                sol = np.linalg.solve(A, b)
-            except np.linalg.LinAlgError:
-                for i in range(m):
-                    try:
-                        sol[i] = np.linalg.solve(A[i], b[i])
-                    except np.linalg.LinAlgError:
-                        pass
-            ok = np.isfinite(sol).all(axis=1)
-            return sol, ok
+        def row_pass(plans):
+            return run_pass(lambda s, X, y, rn: _row_kernel(X, y, rn, plans[s]) if s in plans else None)
 
-        # ---- init: count-weighted OLS per (rep, side), shared across taus ----
-        # The same pass also collects the count-weighted y moments that set
-        # the per-(rep, side) smoothing bandwidth h = H_FRAC x sd(y).
-        init_payload = {
-            s: {"mode": "ols", "ureps": np.array(rep_list, dtype=np.int64)} for s in (0, 1)
-        }
-        init_stats = run_pass(init_payload)
-        # +-Infinity shows in the point pass's unit-weight column (rep -1 is
-        # column 0) at no extra Spark work: an infinite predictor makes its
-        # Gram diagonal infinite, an infinite outcome its sum of squares
-        diag = [tri.index((i, i)) for i in range(k)]
-        _raise_if_infinite(
-            [outcome] + xcols,
-            np.logical_and(*(np.isfinite(init_stats[s][[L + k + 2] + diag, 0]) for s in (0, 1))),
-        )
-        model_h = np.zeros(M)  # target bandwidth per model
-        # per-model anneal START as a multiple of the target bandwidth;
-        # default = the proven conservative schedule, lowered per model only
-        # when the init fit's residual scale certifies the near field (see
-        # the GRAM_H0_ADAPT_FRAC constants note)
-        model_h0_ratio = np.full(M, H0_FRAC / H_FRAC)
-        for s in (0, 1):
-            sol, ok = solve_block(init_stats[s][: L + k])
-            cnt, sy, syy = init_stats[s][L + k], init_stats[s][L + k + 1], init_stats[s][L + k + 2]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mean = sy / cnt
-                var = np.maximum(syy / cnt - mean * mean, 0.0)
-            sd = np.sqrt(var)
-            for ri, r in enumerate(rep_list):
-                sel = (model_rep == r) & (model_side == s)
-                if ok[ri]:
-                    betas_arr[sel] = sol[ri]
-                    # degenerate (constant-y) resamples get an absolute floor
-                    model_h[sel] = max(H_FRAC * sd[ri], 1e-8 * (1.0 + abs(mean[ri])))
-                    if sd[ri] > 0.0 and cnt[ri] > 0.0:
-                        # SSR from the already-summed Gram stats: zero extra
-                        # Spark work. b'X'WXb via the tri block, b'X'Wy via
-                        # the score rows.
-                        b = sol[ri]
-                        g = init_stats[s][L : L + k, ri]
-                        quad = 0.0
-                        for c0, (i, j) in enumerate(tri_l):
-                            aij = init_stats[s][c0, ri]
-                            quad += (1.0 if i == j else 2.0) * aij * b[i] * b[j]
-                        ssr = max(syy[ri] - 2.0 * float(b @ g) + quad, 0.0)
-                        sd_resid = np.sqrt(ssr / cnt[ri])
-                        not_interp = sd_resid >= GRAM_ADAPT_MIN_RESID_RATIO * sd[ri]
-                        kernel_mass = (
-                            cnt[ri] * (GRAM_H0_ADAPT_FRAC * sd[ri]) / sd_resid
-                            if sd_resid > 0.0 else 0.0
-                        )
-                        if not_interp and kernel_mass >= GRAM_ADAPT_MIN_KERNEL_MASS:
-                            model_h0_ratio[sel] = GRAM_H0_ADAPT_FRAC / H_FRAC
-                else:
-                    status[sel] = 2  # degenerate design for this resample
-        self._gram_adapt_fast = int(
-            (model_h0_ratio[status == 0] < H0_FRAC / H_FRAC - 1e-12).sum()
-        )  # instrumentation: models on the shortened schedule
-        # Why the anneal does not simply start at the OLS residual scale: a
-        # resample of a small tied fixture can make OLS interpolate
-        # (sd_resid ~ 0), which floors h0 at target and strands Newton in
-        # the zero-curvature far field (std_err blew up 80x in the parity
-        # test), while on real data sd_resid ~ 0.7 sd(y) saves no passes.
-
-        # ---- Newton loop: one pass per iteration over all active models -----
-        # Globalization, all driver-side (no extra Spark passes):
-        #   - anneal h_m(it) = max(h_target_m, h0_ratio_m x h_target_m x
-        #     SHRINK^(it-1)) with the PER-MODEL start h0_ratio_m (adaptive:
-        #     near-field-certified models start at GRAM_H0_ADAPT_FRAC x sd,
-        #     suspicious ones keep GRAM_H0_FRAC x sd); a model may converge
-        #     only once its bandwidth reached target;
-        #   - adaptive damping alpha_m: halved when the raw Newton step norm
-        #     grows >1.5x pass-over-pass (overshoot signature: residuals left
-        #     the kernel window, Hessian -> 0, steps explode), doubled back
-        #     toward 1 otherwise;
-        #   - trust clamp ||eff step||_inf <= 0.5 x (1 + max|beta_m|), so a
-        #     flat-curvature model can never leave the data's scale.
-        # Small-n tied fixtures may ride the cap and keep the last (bounded,
-        # near-optimal) iterate — same semantics as solve_qr's max_iter.
-        it = 0
-        model_prev_sn = np.full(M, np.inf)
-        model_alpha = np.ones(M)
-        while it < MAX_ITER and (status == 0).any():
-            h_now = np.maximum(model_h, model_h0_ratio * model_h * SHRINK ** it)
-            it += 1
-            payload = {}
-            act_idx: dict[int, np.ndarray] = {}
-            for s in (0, 1):
-                sel = np.where((status == 0) & (model_side == s))[0]
-                if len(sel) == 0:
-                    continue
-                act_idx[s] = sel
-                payload[s] = {
-                    "mode": "newton",
-                    "ureps": np.unique(model_rep[sel]),
-                    "taus": model_tau[sel],
-                    "betas": betas_arr[sel],
-                    "h": h_now[sel],
-                }
-                payload[s]["repcol"] = np.searchsorted(
-                    payload[s]["ureps"], model_rep[sel]
-                )
-            stats = run_pass(payload)
-            for s, sel in act_idx.items():
-                step, ok = solve_block(stats[s])
-                betas_arr[sel[~ok]] = np.nan
-                status[sel[~ok]] = 2
-                good = sel[ok]
-                sn = np.abs(step[ok]).max(axis=1)
-                grow = sn > 1.5 * model_prev_sn[good]
-                model_alpha[good] = np.where(
-                    grow,
-                    np.maximum(model_alpha[good] * 0.5, 1.0 / 64),
-                    np.minimum(1.0, model_alpha[good] * 2.0),
-                )
-                trust = 0.5 * (1.0 + np.abs(betas_arr[good]).max(axis=1))
-                eff = step[ok] * model_alpha[good][:, None]
-                esn = np.abs(eff).max(axis=1)
-                over = esn > trust
-                eff[over] *= (trust[over] / esn[over])[:, None]
-                betas_arr[good] += eff
-                model_prev_sn[good] = sn
-                delta = np.abs(eff).max(axis=1)
-                scale = 1.0 + np.abs(betas_arr[good]).max(axis=1)
-                at_target = h_now[good] <= model_h[good] * 1.0000001
-                status[good[at_target & (delta < TOL * scale)]] = 1
-        status[status == 0] = 1  # max_iter reached: keep last iterate
-        self._gram_passes = it  # instrumentation: full-data Newton passes
-
-        betas: dict[tuple[int, int], list[np.ndarray]] = {}
-        order = np.lexsort((model_tidx, model_side, model_rep))
-        for mi in order:
-            if status[mi] == 1 and np.isfinite(betas_arr[mi]).all():
-                betas.setdefault(
-                    (int(model_rep[mi]), int(model_side[mi])), []
-                ).append(betas_arr[mi].copy())
-        return betas
+        return {0: totals[group_a][0], 1: totals[group_b][0]}, rows, row_pass
 
     def run(self) -> QuantileDecompositionResults:
         design, xcols, group_a, group_b = self._prepare_design()
@@ -772,8 +702,8 @@ class QuantileDecompositionBuilder:
         engine = self._fit_engine
         if engine != "distributed":
             # one row guard, counted BEFORE collecting: 'auto' (like
-            # AkmBuilder.engine("auto")) fits exactly on the driver while the
-            # design fits the collect limit and falls back to the Gram engine
+            # AkmBuilder.engine("auto")) fits on the driver while the design
+            # fits the collect limit and falls back to the distributed engine
             # past it; an explicit 'driver' raises instead of risking an OOM
             fits = design.count() * len(xcols) <= COLLECT_LIMIT_CELLS
             if engine == "driver" and not fits:
@@ -785,18 +715,19 @@ class QuantileDecompositionBuilder:
         S, B, seed = self._simulations, self._bootstrap_reps, self._seed
         streams = {r: _rep_streams(seed, S, r) for r in range(-1, B)}
         taus_by_rep = {r: taus for r, (taus, _) in streams.items()}
-        # each engine returns the side sizes, betas[(rep, side)] (the fits
-        # that converged, in tau order) and rows(needed), which turns the
-        # per-side row ranks the picks need into a row_of(side, rank) lookup
-        pins: list = []  # the Gram engine's checkpoints, dropped once the picks are read
-        try:
+        # a fit holds the GIL between its NumPy calls, so threads beyond the
+        # cores only contend
+        workers = max(1, min(_usable_cores(), 2 * S * (B + 1)))
+        with pinned() as pin, ThreadPoolExecutor(max_workers=workers) as pool:
             if engine == "driver":
-                n_a, n_b, betas, rows = self._driver_engine(design, xcols, group_a, taus_by_rep)
+                ns, rows, row_pass = self._driver_rows(design, xcols, group_a)
             else:
-                n_a, n_b, betas, rows = self._gram_engine(design, xcols, group_a, group_b, taus_by_rep, pins)
+                ns, rows, row_pass = self._spark_rows(design, xcols, group_a, group_b, pin)
+            n_a, n_b = ns[0], ns[1]
+            betas = _fit_globbed(seed, len(xcols), ns, taus_by_rep, rows, row_pass, pool)
 
             # per-replicate simulation plan, picks translated to original row ranks
-            plans, failed, needed = {}, 0, {0: set(), 1: set()}
+            plans, failed = {}, 0
             for r, (_, pick_rng) in streams.items():
                 ba, bb = betas.get((r, 0), []), betas.get((r, 1), [])
                 if len(ba) < S / 2 or len(bb) < S / 2:
@@ -804,27 +735,21 @@ class QuantileDecompositionBuilder:
                         raise OaxacaError("Failed to estimate a sufficient number of quantile regressions.")
                     failed += 1
                     continue
-                m = min(len(ba), len(bb))
-                rank_a = pick_rng.integers(0, n_a, size=m)
-                rank_b = pick_rng.integers(0, n_b, size=m)
+                picks = {s: pick_rng.integers(0, n, size=min(len(ba), len(bb))) for s, n in ns.items()}
                 if r >= 0:
-                    rank_a = exact_n_index(seed, r, 0, n_a)[rank_a]
-                    rank_b = exact_n_index(seed, r, 1, n_b)[rank_b]
-                plans[r] = (ba, bb, rank_a, rank_b)
-                needed[0].update(rank_a.tolist())
-                needed[1].update(rank_b.tolist())
+                    picks = {s: exact_n_index(seed, r, s, ns[s])[p] for s, p in picks.items()}
+                plans[r] = ba, bb, picks
             if failed:
                 warn(
                     f"{failed} out of {B} bootstrap replications failed and "
                     f"were discarded. The analysis is based on {B - failed} successful "
                     "replications."
                 )
-
-            row_of = rows(needed)
-        finally:
-            for pinned in pins:
-                release(pinned)
-        effects = {r: _effects(self._quantiles, row_of, *plan) for r, plan in plans.items()}
+            picked = rows({r: picks for r, (_, _, picks) in plans.items()})
+        effects = {
+            r: _effects(self._quantiles, ba, bb, picked[r][0][0], picked[r][1][0])
+            for r, (ba, bb, _) in plans.items()
+        }
         point = effects.pop(-1)
         boot = list(effects.values())
         names = ("Total Gap", "Characteristics", "Coefficients")

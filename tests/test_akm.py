@@ -79,3 +79,20 @@ def test_akm_dist_label_propagation_drops_island(spark):
     res = AkmBuilder(df, "y", "worker", "firm").engine("dist").run()
     workers = {r[0] for r in res.worker_effects.collect()}
     assert workers == {"w1", "w2"}
+
+
+def test_akm_dist_engine_releases_its_pins(spark):
+    """The distributed engine drops its checkpoints (edges, label sweeps,
+    demeaning sweeps, effect sweeps) before it returns, except the two its
+    effect frames read, which ``release()`` drops: three runs leave no new
+    persistent RDD. Compared by id, because the context cleaner may
+    meanwhile drop blocks that earlier tests left."""
+    jsc = spark.sparkContext._jsc
+    df = akm_fixture(spark, n=200, n_workers=20, n_firms=5, seed=3)
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        res = AkmBuilder(df, "y", "worker", "firm").controls(["x"]).engine("dist").run()
+        assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 2
+        assert res.worker_effects.count() == 20 and res.firm_effects.count() == 5
+        res.release()
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()

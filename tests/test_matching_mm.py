@@ -153,8 +153,8 @@ def test_matching_lsh_approximate(spark):
 
 
 def test_machado_mata_distributed_engine(spark):
-    """The distributed Gram-Newton engine: same identities, comparable
-    estimates to the driver engine on the same data."""
+    """The distributed engine: same identities, comparable estimates to
+    the driver engine on the same data."""
     wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
     edu = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
     gender = (["F"] * 5 + ["M"] * 5) * 4
@@ -196,18 +196,22 @@ def tied_mm_df(spark, wage_edit=None, edu_edit=None):
     return spark.createDataFrame(list(zip(wage, edu, gender)), ["wage", "education", "gender"])
 
 
+def _continuous_mm_df(spark, n, seed=3):
+    """A tie-free panel: uniform education, a group shift and normal noise."""
+    rng = np.random.default_rng(seed)
+    edu = rng.uniform(8.0, 20.0, n)
+    grp = np.where(rng.random(n) < 0.5, "F", "M")
+    wage = 5.0 + 1.5 * edu + np.where(grp == "F", 0.0, 4.0) + rng.normal(0, 3.0, n)
+    return spark.createDataFrame(
+        list(zip(wage.tolist(), edu.tolist(), grp.tolist())), ["wage", "education", "gender"]
+    )
+
+
 def test_machado_mata_gram_vs_driver_parity(spark):
-    """The Gram-Newton and driver engines share taus, resample streams and
-    simulation picks — so they differ only through the QR solver. Bound 2.0
-    (~20% of the gap): this fixture's tied rows create genuinely FLAT
-    optimal faces (see test_qr_degenerate_tie_case_bounded); the driver's
-    solve_qr_exact lands on an LP VERTEX of the face while the Gram engine
-    minimizes the h-smoothed loss whose unique optimum sits near the face's
-    center — the maximal possible argmin spread, by construction. On
-    non-degenerate real data the driver engine is LP-exact
-    (test_machado_mata_matches_independent_oracle at 1e-6) and the Gram
-    engine matches the exact-vertex oracle within its documented smoothed
-    bound (test_machado_mata_gram_engine_matches_independent_oracle)."""
+    """Both engines share taus, resample streams, simulation picks and the
+    globbed exact LP; this fixture is small enough that every side is fitted
+    whole, so both solve identical LPs. Its tied rows create flat optimal
+    faces, and identical problems still land on the same vertex."""
     df = tied_mm_df(spark)
 
     def build(engine):
@@ -225,27 +229,51 @@ def test_machado_mata_gram_vs_driver_parity(spark):
     rg, rd = build("distributed"), build("driver")
     for key in rg.results_by_quantile:
         dg, dd = rg.results_by_quantile[key], rd.results_by_quantile[key]
-        assert dg.total_gap.estimate == pytest.approx(dd.total_gap.estimate, abs=2.0)
+        assert dg.total_gap.estimate == pytest.approx(dd.total_gap.estimate, abs=1e-9)
         assert dg.characteristics_effect.estimate == pytest.approx(
-            dd.characteristics_effect.estimate, abs=2.0
+            dd.characteristics_effect.estimate, abs=1e-9
         )
-        assert dg.total_gap.std_err == pytest.approx(dd.total_gap.std_err, abs=2.0)
+        assert dg.total_gap.std_err == pytest.approx(dd.total_gap.std_err, abs=1e-9)
+
+
+def test_machado_mata_engines_agree_on_tied_globbed_data(spark):
+    """Tied outcomes on sides large enough to be globbed (about 2,000 rows
+    each against m = 330): the driver engine sums each glob in one block and
+    Spark in one partial per partition, and the sums are not exact (values
+    on a 0.1 grid), yet every reduced LP lands on the same vertex."""
+    rng = np.random.default_rng(1)
+    n = 4000
+    edu = rng.integers(8, 21, n) * 0.7
+    grp = np.where(rng.random(n) < 0.5, "F", "M")
+    wage = np.round(5.0 + 1.5 * edu + np.where(grp == "F", 0.0, 4.0) + rng.normal(0, 3.0, n), 1) + 0.1
+    df = spark.createDataFrame(
+        list(zip(wage.tolist(), edu.tolist(), grp.tolist())), ["wage", "education", "gender"]
+    ).repartition(4)
+
+    def build(engine):
+        return (
+            QuantileDecompositionBuilder(df, "wage", "gender", "F")
+            .predictors(["education"])
+            .simulations(20)
+            .bootstrap_reps(2)
+            .seed(1)
+            .fit_engine(engine)
+            .run()
+        )
+
+    rd, rg = build("driver"), build("distributed")
+    for key, dd in rd.results_by_quantile.items():
+        dg = rg.results_by_quantile[key]
+        for cd, cg in ((dd.total_gap, dg.total_gap), (dd.characteristics_effect, dg.characteristics_effect)):
+            assert cg.estimate == pytest.approx(cd.estimate, abs=1e-9), (key, cd.name)
+            assert cg.std_err == pytest.approx(cd.std_err, abs=1e-9), (key, cd.name)
 
 
 def test_machado_mata_engines_share_bootstrap_streams(spark):
-    """On a continuous (tie-free) panel both engines' QR fits land within
-    ~0.1% of each other, and every replicate reads the same taus, resample
-    and picks, so the bootstrap SEs agree to 10% — far inside the ~35%
-    sampling spread of an SE from 4 replicates that independent streams
-    would leave between them."""
-    rng = np.random.default_rng(3)
-    n = 2000
-    edu = rng.uniform(8.0, 20.0, n)
-    grp = np.where(rng.random(n) < 0.5, "F", "M")
-    wage = 5.0 + 1.5 * edu + np.where(grp == "F", 0.0, 4.0) + rng.normal(0, 3.0, n)
-    df = spark.createDataFrame(
-        list(zip(wage.tolist(), edu.tolist(), grp.tolist())), ["wage", "education", "gender"]
-    )
+    """On a continuous (tie-free) panel both engines reach the same LP
+    optimum of every globbed fit, and every replicate reads the same taus,
+    resample, subsample and picks, so the bootstrap SEs agree to roundoff."""
+    df = _continuous_mm_df(spark, 2000)
 
     def build(engine):
         return (
@@ -265,7 +293,8 @@ def test_machado_mata_engines_share_bootstrap_streams(spark):
         for cd, cg in ((dd.total_gap, dg.total_gap),
                        (dd.characteristics_effect, dg.characteristics_effect)):
             assert cd.std_err > 0.0
-            assert cg.std_err == pytest.approx(cd.std_err, rel=0.1), (key, cd.name)
+            assert cg.estimate == pytest.approx(cd.estimate, abs=1e-12), (key, cd.name)
+            assert cg.std_err == pytest.approx(cd.std_err, rel=1e-9), (key, cd.name)
     assert rd.n_failed_reps == rg.n_failed_reps == 0
 
 
@@ -323,7 +352,7 @@ def test_machado_mata_failed_replicates_counted(spark, monkeypatch):
 
 
 def test_machado_mata_distributed_bootstrap(spark):
-    """Gram-engine bootstrap (multiplicity-weighted resamples): finite SEs,
+    """Distributed-engine bootstrap (multiplicity-weighted resamples): finite SEs,
     identities per replicate aggregate, and exact reproducibility across
     runs."""
     wage = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
@@ -361,7 +390,7 @@ def test_machado_mata_distributed_bootstrap(spark):
 
 def test_machado_mata_auto_engine_row_guard(spark, monkeypatch):
     """fit_engine('auto') (the default) picks the driver engine under the
-    collect limit and silently falls back to the distributed Gram engine
+    collect limit and silently falls back to the distributed engine
     past it — a user at scale gets a result, not an error (round-5 verdict
     ask #7)."""
     import oaxaca_blinder_rs_spark.quantile_builder as qb
@@ -403,80 +432,9 @@ def test_machado_mata_auto_engine_row_guard(spark, monkeypatch):
         build().fit_engine("driver").run()
 
 
-def test_gram_adaptive_anneal_start(spark):
-    """r13: the per-model adaptive anneal start (GRAM_H0_ADAPT_FRAC). Two
-    laws: (1) large well-conditioned data takes the shortened schedule and
-    the answer does not move vs the proven schedule (the anneal start is
-    globalization only — the converged point is the unique optimum of the
-    TARGET-h loss); (2) the small tied parity fixture NEVER takes the fast
-    path (kernel-mass guard), so the r8/r12 stranding class is structurally
-    excluded."""
-    import oaxaca_blinder_rs_spark.quantile_builder as qb
-
-    rng = np.random.default_rng(7)
-    n = 4000
-    edu = rng.uniform(8.0, 20.0, n)
-    grp = np.where(rng.random(n) < 0.5, "F", "M")
-    wage = 5.0 + 1.5 * edu + np.where(grp == "F", 0.0, 4.0) + rng.normal(0, 3.0, n)
-    df = spark.createDataFrame(
-        list(zip(wage.tolist(), edu.tolist(), grp.tolist())),
-        ["wage", "education", "gender"],
-    )
-
-    def build():
-        return (
-            QuantileDecompositionBuilder(df, "wage", "gender", "F")
-            .predictors(["education"])
-            .quantiles([0.5])
-            .simulations(20)
-            .bootstrap_reps(2)
-            .seed(11)
-            .fit_engine("distributed")
-        )
-
-    b_fast = build()
-    r_fast = b_fast.run()
-    assert b_fast._gram_adapt_fast > 0  # the fast path actually engaged
-
-    saved = qb.GRAM_ADAPT_MIN_KERNEL_MASS
-    try:
-        qb.GRAM_ADAPT_MIN_KERNEL_MASS = float("inf")  # pre-r13 schedule
-        b_slow = build()
-        r_slow = b_slow.run()
-        assert b_slow._gram_adapt_fast == 0
-    finally:
-        qb.GRAM_ADAPT_MIN_KERNEL_MASS = saved
-    df_, ds_ = r_fast.results_by_quantile["q50"], r_slow.results_by_quantile["q50"]
-    assert df_.total_gap.estimate == pytest.approx(ds_.total_gap.estimate, abs=1e-6)
-    assert df_.total_gap.std_err == pytest.approx(ds_.total_gap.std_err, abs=1e-6)
-    assert df_.characteristics_effect.estimate == pytest.approx(
-        ds_.characteristics_effect.estimate, abs=1e-6
-    )
-
-    # law 2: the tied small-n fixture measures kernel mass ~3.6 << 64 on
-    # every (rep, side) and must stay on the proven 0.5 start
-    wage_t = [10.0, 12.0, 11.0, 13.0, 15.0, 20.0, 22.0, 21.0, 23.0, 25.0] * 4
-    edu_t = [12.0, 16.0, 14.0, 16.0, 18.0] * 8
-    gender_t = (["F"] * 5 + ["M"] * 5) * 4
-    df_t = spark.createDataFrame(
-        list(zip(wage_t, edu_t, gender_t)), ["wage", "education", "gender"]
-    )
-    b_t = (
-        QuantileDecompositionBuilder(df_t, "wage", "gender", "F")
-        .predictors(["education"])
-        .quantiles([0.5])
-        .simulations(10)
-        .bootstrap_reps(2)
-        .seed(42)
-        .fit_engine("distributed")
-    )
-    b_t.run()
-    assert b_t._gram_adapt_fast == 0
-
-
 def test_machado_mata_gram_engine_releases_its_pins(spark):
-    """The Gram engine's checkpoints (the ranked design and the Newton
-    passes' projection) are dropped once the picks are read: three runs
+    """The distributed engine's checkpoint (the projected design its row
+    passes read) is dropped once the picks are read: three runs
     leave no new persistent RDD. Compared by id, because the context
     cleaner may meanwhile drop blocks that earlier tests left."""
     jsc = spark.sparkContext._jsc
@@ -493,6 +451,37 @@ def test_machado_mata_gram_engine_releases_its_pins(spark):
             .run()
         )
         assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+@pytest.mark.parametrize("reps", [0, 2])
+def test_machado_mata_distributed_pass_count_is_fixed(spark, reps):
+    """The distributed engine runs a fixed number of Spark jobs whatever the
+    tau draw: 2 for the group levels, 1 pinning the design, 2 counting each
+    side's rows per partition, then 3 row passes (the subsample rows, the
+    globs of the one wave, the simulation picks): 8 jobs. Every fit of this
+    panel keeps its globs' signs provably, so the sign-check pass (one more
+    job, and one per fix-up round) never runs."""
+    df = _continuous_mm_df(spark, 4000)
+    sc = spark.sparkContext
+    counts = []
+    for seed in (1, 2):
+        group = f"mm-pass-count-{reps}-{seed}"
+        sc.setJobGroup(group, "Machado-Mata pass count")
+        try:
+            (
+                QuantileDecompositionBuilder(df, "wage", "gender", "F")
+                .predictors(["education"])
+                .quantiles([0.5])
+                .simulations(20)
+                .bootstrap_reps(reps)
+                .seed(seed)
+                .fit_engine("distributed")
+                .run()
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [8, 8]
 
 
 def test_machado_mata_failed_replicate_warning_names_the_callers_line(spark, monkeypatch):
@@ -612,3 +601,159 @@ def test_qr_exact_needs_no_irls_on_continuous_data(monkeypatch):
         beta, basis = solve_qr_exact(X, y, tau, return_basis=True)
         assert basis is not None
         np.testing.assert_allclose(X[basis] @ beta, y[basis], atol=1e-9)
+
+
+@pytest.mark.parametrize("outlier", [1e4, 1e5])
+def test_qr_exact_is_not_misled_by_one_large_outcome(outlier):
+    """One huge y must not widen the solver's zero tolerance until ordinary
+    rows count as on the plane. The reference moves the outlier in to 20,
+    still above every fitted plane: a row's y moving along its own side
+    leaves the LP optimum where it is, so both problems share an optimum."""
+    rng = np.random.default_rng(2)
+    n = 5000
+    edu, exper = rng.uniform(8.0, 20.0, n), rng.uniform(0.0, 30.0, n)
+    X = np.column_stack([np.ones(n), edu, exper])
+    y = 1.0 + 0.08 * edu + 0.02 * exper + rng.normal(0.0, 0.05, n)
+    y_in = y.copy()
+    y[7], y_in[7] = outlier, 20.0
+    for tau in np.random.default_rng(102).uniform(0.01, 0.99, 19):
+        ref = solve_qr_exact(X, y_in, tau)
+        assert y_in[7] - X[7] @ ref > 0.0
+        got = _check_loss(X, y, solve_qr_exact(X, y, tau), tau)
+        assert got <= _check_loss(X, y, ref, tau) * (1.0 + 1e-13), tau
+
+
+def _two_sides(seed=5):
+    """Two continuous sides (3,000 and 2,500 rows, k = 3) held as arrays."""
+    rng = np.random.default_rng(seed)
+    X, y = [], []
+    for n, shift in ((3000, 0.0), (2500, 1.0)):
+        x = rng.uniform(8.0, 20.0, (n, 2))
+        X.append(np.column_stack([np.ones(n), x]))
+        y.append(shift + 0.5 * x[:, 0] - 0.2 * x[:, 1] + rng.standard_t(3, n))
+    return X, y
+
+
+@pytest.mark.parametrize("band, row_block", [(None, None), (0.2, None), (None, 700)])
+def test_globbed_fits_reach_the_full_lp_optimum(monkeypatch, band, row_block):
+    """Every globbed fit (replicates -1 and 0, both sides) attains the check
+    loss of the exact solve on all of its rows. At the default band every
+    fit's globs provably keep their signs, so one row pass suffices; a
+    narrow band (0.2) makes globbed rows change sign, so the sign-check
+    pass and the fix-up rounds are exercised too. Row blocks of 700 sum the
+    globs from several blocks, as partitions do in Spark."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    rounds = []
+    real_split = qb._split
+    monkeypatch.setattr(qb, "_split", lambda em: rounds.append(1) or real_split(em))
+    if band is not None:
+        monkeypatch.setattr(qb, "BAND", band)
+    if row_block is not None:
+        monkeypatch.setattr(qb, "ROW_BLOCK", row_block)
+    X, y = _two_sides()
+    ns, rows, row_pass = qb._array_rows(X, y)
+    taus = {r: mm_tau_stream(9, 6, r) for r in (-1, 0)}
+    with ThreadPoolExecutor(2) as pool:
+        betas = qb._fit_globbed(9, 3, ns, taus, rows, row_pass, pool)
+    assert len(rounds) == 1 if band is None else len(rounds) > 2
+    for (rep, side), bs in betas.items():
+        Xs, ys = X[side], y[side]
+        if rep >= 0:
+            idx = exact_n_index(9, rep, side, len(ys))
+            Xs, ys = Xs[idx], ys[idx]
+        assert len(bs) == len(taus[rep])
+        for tau, b in zip(taus[rep], bs):
+            want = _check_loss(Xs, ys, solve_qr_exact(Xs, ys, tau), tau)
+            assert _check_loss(Xs, ys, b, tau) == pytest.approx(want, rel=1e-12), (rep, side, tau)
+
+
+def test_machado_mata_engines_agree_through_fix_up_rounds(spark, monkeypatch):
+    """With a band narrow enough to force fix-up rounds, the distributed
+    engine's extra sign-check passes still reproduce the driver engine."""
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    monkeypatch.setattr(qb, "BAND", 0.2)
+    rounds = []
+    real_split = qb._split
+    monkeypatch.setattr(qb, "_split", lambda em: rounds.append(1) or real_split(em))
+    df = _continuous_mm_df(spark, 3000, seed=4)
+
+    def build(engine):
+        return (
+            QuantileDecompositionBuilder(df, "wage", "gender", "F")
+            .predictors(["education"])
+            .quantiles([0.25, 0.5, 0.75])
+            .simulations(12)
+            .bootstrap_reps(2)
+            .seed(6)
+            .fit_engine(engine)
+            .run()
+        )
+
+    rd = build("driver")
+    rounds.clear()
+    rg = build("distributed")
+    assert len(rounds) > 2  # the glob pass, a sign check with violators, and more
+    for key, dd in rd.results_by_quantile.items():
+        dg = rg.results_by_quantile[key]
+        for cd, cg in ((dd.total_gap, dg.total_gap), (dd.characteristics_effect, dg.characteristics_effect)):
+            assert cg.estimate == pytest.approx(cd.estimate, abs=1e-12), (key, cd.name)
+            assert cg.std_err == pytest.approx(cd.std_err, rel=1e-9), (key, cd.name)
+
+
+def test_sign_certificate_is_sound():
+    """Whenever ``_keeps_signs`` certifies a move of the subsample fit,
+    every globbed row keeps its sign at the moved fit, and it certifies
+    small moves while refusing large ones."""
+    from oaxaca_blinder_rs_spark.quantile_builder import _band_factor, _keeps_signs
+
+    rng = np.random.default_rng(8)
+    verdicts = []
+    for _ in range(300):
+        X = np.column_stack([np.ones(400), rng.normal(0.0, 1.0, (400, 2))])
+        y = X @ np.array([1.0, 0.5, -0.3]) + rng.standard_t(4, 400)
+        Xd = X[rng.choice(400, 60, replace=False)]
+        A = _band_factor(Xd)
+        beta = solve_qr(Xd, y[:60], 0.5)
+        s = np.sqrt(((X @ A) ** 2).sum(axis=1))
+        z = (y - X @ beta) / s
+        lo, hi = np.quantile(z, [0.2, 0.8])
+        delta = rng.normal(0.0, 1.0, 3) * 10.0 ** rng.uniform(-3.0, 0.0)
+        ok = _keeps_signs(A, Xd, delta, lo, hi)
+        verdicts.append(ok)
+        if ok:
+            r = y - X @ (beta + delta)
+            assert (r[y - X @ beta < s * lo] < 0.0).all() and (r[y - X @ beta > s * hi] > 0.0).all()
+    assert 0 < sum(verdicts) < len(verdicts)
+
+
+def test_globbed_fits_run_in_waves_within_the_cell_budget(monkeypatch):
+    """The driver holds the band rows of one wave of fits at a time. With a
+    budget of a few fits, every row pass returns at most WAVE_CELLS cells
+    (k + 5 a row, as the pass emits them), the 48 globbed fits take several
+    waves, and they equal the fits of a single wave."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import oaxaca_blinder_rs_spark.quantile_builder as qb
+
+    X, y = _two_sides()
+    taus = {r: mm_tau_stream(9, 8, r) for r in (-1, 0, 1)}
+
+    def fit():
+        ns, rows, row_pass = qb._array_rows(X, y)
+        with ThreadPoolExecutor(2) as pool:
+            return qb._fit_globbed(9, 3, ns, taus, rows, row_pass, pool)
+
+    whole = fit()
+    cells = []
+    real_split = qb._split
+    monkeypatch.setattr(qb, "_split", lambda em: cells.append(len(em["fit"]) * 8) or real_split(em))
+    monkeypatch.setattr(qb, "WAVE_CELLS", 40_000)
+    waved = fit()
+    assert len(cells) >= 6 and max(cells) <= 40_000, cells
+    assert waved.keys() == whole.keys()
+    for key, bs in whole.items():
+        np.testing.assert_allclose(np.array(waved[key]), np.array(bs), rtol=0, atol=1e-9)

@@ -301,16 +301,11 @@ def test_machado_mata_matches_independent_oracle(spark, sf_dir, mm_oracle):
 
 
 def test_machado_mata_gram_engine_matches_independent_oracle(spark, sf_dir, mm_oracle):
-    """The distributed Gram-Newton (smoothed-QR) engine against the same
-    exact-vertex oracle: at reps=0 the engine consumes the identical seeded
-    stream as the driver engine (taus then simulation picks from
-    default_rng(seed)), so the oracle replay applies unchanged. Tolerance is
-    the documented flat-valley bound (300 ~ 0.3% of outcome scale); the
-    smoothed estimator's h^2 bias plus the smoothed-vs-LP-vertex argmin
-    spread measures ~117 on this data, and distributed-summation order moves
-    the unique smoothed optimum by ~1e-10 (unlike IRLS, whose argmin on flat
-    faces wandered by hundreds under summation-order perturbation — the
-    reason this engine smooths)."""
+    """The distributed engine against the same exact-vertex oracle: at
+    reps=0 it consumes the identical seeded stream as the driver engine
+    (taus then simulation picks from default_rng(seed)), and it solves the
+    same globbed exact LPs, so the oracle replay applies unchanged at the
+    driver engine's bound (solver roundoff, 1e-6 on a ~1e5-scale outcome)."""
     from oaxaca_blinder_rs_spark.quantile_builder import QuantileDecompositionBuilder
 
     li = _spark_lineitem(spark, sf_dir)
@@ -330,7 +325,7 @@ def test_machado_mata_gram_engine_matches_independent_oracle(spark, sf_dir, mm_o
         d = res.results_by_quantile[key]
         got = (d.total_gap.estimate, d.characteristics_effect.estimate, d.coefficients_effect.estimate)
         for g, w in zip(got, want):
-            assert g == pytest.approx(w, abs=300), (key, got, want)
+            assert g == pytest.approx(w, abs=1e-6), (key, got, want)
 
 
 def test_pcg64_transliteration_matches_numpy():
