@@ -1981,7 +1981,9 @@ def q_optimizer_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M19: remediation optimizer, greedy allocation under a fixed budget.
 
     Fair wage = reference-group least squares; eligibility diff > 1e-6;
-    greedy = window cumsum over (diff desc, id).
+    greedy = exclusive running total over (diff desc, id). The target rows
+    are below ``COLLECT_LIMIT``, so ``adjustments_df`` is the driver-built
+    table of the optimizer's one collect.
     """
     from oaxaca_blinder_rs_spark.operators import engine_ops as eo
 

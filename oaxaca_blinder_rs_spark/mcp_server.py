@@ -14,13 +14,16 @@ A review sends the same company CSV to all five tools, so the server keeps
 each company's sufficient statistics between calls: a bounded, lock-guarded
 LRU of ``engine_ops.ReviewStats``, keyed by the SHA-256 of ``csv_content``
 and the model spec (outcome, group, reference group, predictors,
-categorical predictors). An entry holds driver-side aggregates only (the
-strict cast's verdict, the per-level point stats, the last decomposition's
-bootstrap replicate stats), never a Spark block, and the engine uses it
-only for the frame object and model spec it was handed with. The first
-tool to need an aggregate computes it; the others skip the cast check and
-the stats pass, and ``verify_adjustments`` derives its bootstrap from
-decompose's replicates plus one aggregation over the adjusted rows. Responses equal
+categorical predictors). An entry holds driver-side state only (the strict
+cast's verdict, the per-level point stats, the last decomposition's
+bootstrap replicate stats, the default scoring's greedy schedule: at most
+``engine_ops.COLLECT_LIMIT`` rows, see ``engine_ops.ReviewStats`` for the
+bytes), never a Spark block, and the engine uses it only for the frame
+object and model spec it was handed with. The first tool to need an
+aggregate computes it; the others skip the cast check and the stats pass,
+``verify_adjustments`` derives its bootstrap from decompose's replicates
+plus one aggregation over the adjusted rows, and a frontier after a
+remediation of the default scoring runs no Spark job. Responses equal
 those of a fresh server up to floating-point summation order.
 
     python -m oaxaca_blinder_rs_spark.mcp_server                 # stdio

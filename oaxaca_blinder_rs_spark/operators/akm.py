@@ -152,10 +152,14 @@ class AkmBuilder:
                 .groupBy(w)
                 .agg(F.min("__flab").alias("__lab_new"))
             )
-            cmp = wlab.join(new_wlab, on=w)
-            changed = cmp.filter(F.col("__lab_new") < F.col("__lab")).count()
-            wlab = pin(cmp.select(w, F.least("__lab", "__lab_new").alias("__lab")), wlab)
-            if changed == 0:
+            # the sweep's plan runs once, into the checkpoint; the changed
+            # labels are counted from its blocks
+            wlab = pin(wlab.join(new_wlab, on=w).select(
+                w,
+                F.least("__lab", "__lab_new").alias("__lab"),
+                (F.col("__lab_new") < F.col("__lab")).alias("__changed"),
+            ), wlab)
+            if wlab.filter(F.col("__changed")).count() == 0:
                 break
         # component sizes counted in NODES (workers + firms), akm.rs:200-212
         fl = edges.join(wlab, on=w).groupBy(f).agg(F.min("__lab").alias("__lab"))

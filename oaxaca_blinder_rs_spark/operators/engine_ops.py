@@ -11,15 +11,21 @@ Spark-first realization:
 - fair wage, leverage x'(X'X)^{-1}x, prediction intervals, eligibility and
   per-feature contributions are ALL Catalyst column expressions built from
   k x k driver constants — they run distributed over any n;
-- greedy allocation is the window-cumsum reformulation (exact equivalence to
-  the sequential loop, see budget.py);
-- one request casts, validates, aggregates and scans its frame once:
-  ``optimize`` and ``efficient_frontier`` share one strict cast, one stats
-  pass per group level and one greedy prefix scan; the frontier's pooled
-  Gram state comes from the per-group stats on the driver, and every budget
-  step's X'y / y'y delta from one aggregation over the payment schedule —
-  no per-step data pass (the reference recomputes an n-row matmul per step,
-  analysis.rs:1087-1096);
+- greedy allocation is the prefix-sum reformulation (exact equivalence to
+  the sequential loop, see budget.py): a row's payment at budget b is
+  ``_paid`` = clip(b - cum_prev, 0, gap), one formula for both paths below;
+- one request casts, validates and aggregates its frame once: ``optimize``
+  and ``efficient_frontier`` share one strict cast and one stats pass per
+  group level, and the frontier's pooled Gram state comes from the
+  per-group stats on the driver. The stats count the in-scope rows, so
+  with at most ``COLLECT_LIMIT`` of them the scored rows are collected
+  ONCE and the greedy schedule (``_Schedule``: the order, the running
+  totals, the payments and every frontier step's X'y / y'y delta, a
+  steps x n matrix product) is NumPy work on the driver; above the limit
+  the order is one distributed prefix scan (``scan.ordered_prev_cumsum``)
+  and the frontier's deltas one aggregation over schedule x steps. Either
+  way there is no per-step data pass (the reference recomputes an n-row
+  matmul per step, analysis.rs:1087-1096);
 - tables built on the driver (adjustments, overrides) enter
   the JVM through ``local_table`` as Arrow LocalRelations, so no call
   without a UDF starts a Python worker;
@@ -27,10 +33,12 @@ Spark-first realization:
   (the MCP server's review of one company CSV) can keep its driver-side
   aggregates in a ``ReviewStats`` and run the calls on one frame object
   inside ``reusing(stats, df)``: the strict cast's verdict, the per-level
-  point stats and the decomposition's last bootstrap are then computed
-  once. ``verify_adjustments`` derives the adjusted data's stats from them
-  and one aggregation over the adjusted rows (adjustments change only y),
-  and ``check_defensibility`` takes the reference Gram from them.
+  point stats, the decomposition's last bootstrap and the default
+  scoring's greedy schedule are then computed once. ``verify_adjustments``
+  derives the adjusted data's stats from them and one aggregation over the
+  adjusted rows (adjustments change only y), ``check_defensibility`` takes
+  the reference Gram from them, and a frontier after a remediation of the
+  default scoring runs no Spark job.
 
 Row identity: adjustments are keyed by a stable ``row_id`` (pass ``id_col``),
 not by position (SURVEY §7.5 risk 1).
@@ -42,6 +50,8 @@ import math
 from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field, replace
+from functools import cached_property
+from typing import Callable
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -90,16 +100,18 @@ class Adjustment:
 
 
 class OptimizationResult:
-    """Result of ``optimize``. ``adjustments_df`` is the lazy plan; the
-    scalar summaries and the driver-side ``adjustments`` list are computed
-    ON FIRST ACCESS, so a query path that only consumes ``adjustments_df``
-    (the contract shape) pays for no summary job and no collect. Each lazy
-    attribute memoizes.
+    """Result of ``optimize``. The scalar summaries, the driver-side
+    ``adjustments`` list and ``adjustments_df`` are computed ON FIRST
+    ACCESS and memoized, so a caller pays only for what it reads.
 
-    The result owns the frames ``optimize`` pinned (the cleaned input and
-    the greedy scan's checkpoint): the lazy attributes read them, and
-    ``release()`` drops them once the caller is done. A long-lived caller
-    (the MCP server) must call it; nothing may be read afterwards."""
+    With at most ``COLLECT_LIMIT`` in-scope rows they all come from the
+    driver arrays of ``optimize``'s one collect, and ``adjustments_df`` is a
+    ``local_table`` of them (same columns and types as the plan below).
+    Above the limit ``adjustments_df`` is a lazy plan over the cached input
+    and the greedy scan's checkpoint, which the result owns: ``release()``
+    drops them once the caller is done, and nothing may be read afterwards.
+    A long-lived caller (the MCP server) calls it either way; on the driver
+    path it is a no-op."""
 
     def __init__(
         self,
@@ -109,8 +121,8 @@ class OptimizationResult:
         original_gap_fn,
         target_stats_fn,
         adjustments_fn,
+        adjustments_df_fn,
         model_coefficients: list[Contribution],
-        adjustments_df: DataFrame | None = None,
         release_fn=None,
     ) -> None:
         self._required_budget_fn = required_budget_fn
@@ -118,9 +130,9 @@ class OptimizationResult:
         self._original_gap_fn = original_gap_fn
         self._target_stats_fn = target_stats_fn
         self._adjustments_fn = adjustments_fn
+        self._adjustments_df_fn = adjustments_df_fn
         self._release_fn = release_fn
         self.model_coefficients = model_coefficients
-        self.adjustments_df = adjustments_df
         self._memo: dict[str, object] = {}
 
     def _get(self, key: str, fn):
@@ -168,6 +180,10 @@ class OptimizationResult:
     @property
     def adjustments(self) -> list[Adjustment]:
         return self._get("adjustments", self._adjustments_fn)
+
+    @property
+    def adjustments_df(self) -> DataFrame:
+        return self._get("adjustments_df", self._adjustments_df_fn)
 
 
 @dataclass
@@ -221,12 +237,20 @@ class ReviewStats:
     - ``point``: the builder's ``MeanPasses`` of the null-dropped rows
       (categorical levels, every group level's point stats and the last
       bootstrap's replicate stats) with, per group level, whether it is the
-      reference group under Spark's comparison."""
+      reference group under Spark's comparison;
+    - ``schedule``: (row-id column, ``_Schedule``) of the default scoring
+      (``DEFAULT_SCORING``, the frontier's), once a driver-path
+      ``optimize`` or ``efficient_frontier`` built it. It holds at most
+      ``COLLECT_LIMIT`` rows of seven 8-byte arrays plus the k design
+      columns, (56 + 8k) bytes a row: at most 56 + 8k MB an entry, so
+      448 + 64k MB for the MCP server's 8-entry LRU at the limit (a
+      3,000-row company CSV with k = 4 takes about 0.1 MB)."""
 
     def __init__(self, spec: tuple) -> None:
         self.spec = spec
         self.cast_checked = False
         self.point: tuple[MeanPasses, dict] | None = None
+        self.schedule: tuple[str | None, _Schedule] | None = None
 
 
 _REVIEW: ContextVar[tuple[ReviewStats, DataFrame] | None] = ContextVar("engine_ops_review_stats", default=None)
@@ -399,18 +423,20 @@ def _summed(adjustments) -> dict[int, float]:
     return deltas
 
 
+def _design_names(predictors: list[str], levels: dict[str, list]) -> list[str]:
+    """``_design``'s columns: the intercept, the predictors, then one dummy
+    per categorical level after the first."""
+    return [INTERCEPT] + list(predictors) + [f"{var}_{lv}" for var, lvs in levels.items() for lv in lvs[1:]]
+
+
 def _design(df: DataFrame, predictors: list[str], levels: dict[str, list]):
     """Intercept-first design with skip-first dummies (builder conventions)
     over ``categorical_levels``."""
-    dummy_names = []
     out = df.withColumn(INTERCEPT, F.lit(1.0))
     for var, lvs in levels.items():
         for lv in lvs[1:]:
-            name = f"{var}_{lv}"
-            out = out.withColumn(name, (F.col(var) == F.lit(lv)).cast("double"))
-            dummy_names.append(name)
-    xcols = [INTERCEPT] + list(predictors) + dummy_names
-    return out, xcols
+            out = out.withColumn(f"{var}_{lv}", (F.col(var) == F.lit(lv)).cast("double"))
+    return out, _design_names(predictors, levels)
 
 
 def _with_overrides(df: DataFrame, predictors: list[str]) -> DataFrame:
@@ -580,17 +606,36 @@ def _payable():
     return F.col("__eligible") & (F.col("__diff") > 0)
 
 
+# The scoring of the efficient frontier (analysis.rs:871-1153), and the
+# one whose greedy schedule a reused ``ReviewStats`` keeps
+DEFAULT_SCORING = {
+    "target": "reference", "range_target": "midpoint", "confidence_level": 0.95,
+    "min_gap_pct": 0.0, "forensic_mode": False, "adjust_both_groups": False,
+}
+
+
 @dataclass
 class _Prepared:
-    """One request's cleaned frame (cached; the caller unpersists it) and
-    its single stats pass, per raw group level and split reference/target."""
+    """One request's single stats pass, per raw group level and split
+    reference/target, and whether its in-scope rows fit on the driver
+    (``local``: at most ``COLLECT_LIMIT`` of them, counted by the stats).
+    ``design`` builds the cleaned rows with their design columns on first
+    use; off the driver path they are cached, as the scan reads them more
+    than once, and the caller unpersists them."""
 
-    df: DataFrame
-    design: DataFrame
+    source: DataFrame
     xcols: list[str]
     by_level: dict
     stats_ref: GroupStats
     stats_tgt: GroupStats
+    local: bool
+    review: ReviewStats | None
+    id_col: str | None
+    build: Callable[[], DataFrame]
+
+    @cached_property
+    def design(self) -> DataFrame:
+        return self.build()
 
 
 def _prepare(
@@ -601,7 +646,9 @@ def _prepare(
     predictors: list[str],
     categorical_predictors: list[str] | None,
     id_col: str | None,
+    with_ref: bool,
 ) -> _Prepared:
+    """``with_ref``: the reference rows are in scope too."""
     review = _review(df, outcome, group, reference_group, predictors, categorical_predictors)
     df, passes, is_ref = _point_stats(
         df, outcome, group, reference_group, predictors, categorical_predictors, review
@@ -611,11 +658,16 @@ def _prepare(
     tgt = [by_level[lv] for lv, flag in is_ref.items() if flag is False]
     if not ref or not tgt:
         raise OaxacaError("One group has no data")
-    df = _complete(
-        with_row_id(df, id_col, ROW_ID), outcome, group, predictors, categorical_predictors
-    ).cache()
-    design, xcols = _design(df, predictors, passes.levels)
-    return _Prepared(df, design, xcols, by_level, _sum_stats(ref), _sum_stats(tgt))
+    stats_ref, stats_tgt = _sum_stats(ref), _sum_stats(tgt)
+    local = stats_tgt.n + (stats_ref.n if with_ref else 0) <= COLLECT_LIMIT
+
+    def build() -> DataFrame:
+        clean = _complete(with_row_id(df, id_col, ROW_ID), outcome, group, predictors, categorical_predictors)
+        design = _design(clean, predictors, passes.levels)[0]
+        return design if local else design.cache()
+
+    xcols = _design_names(predictors, passes.levels)
+    return _Prepared(df, xcols, by_level, stats_ref, stats_tgt, local, review, id_col, build)
 
 
 def _original_gap(
@@ -639,7 +691,7 @@ def _original_gap(
     if group_a not in stats or reference_group not in stats:
         raise InvalidGroupVariable("One group has no data")
     builder = (
-        OaxacaBuilder(prep.df, outcome, group, reference_group)
+        OaxacaBuilder(prep.source, outcome, group, reference_group)
         .predictors(predictors)
         .categorical_predictors(categorical_predictors or [])
         .reference_coefficients("pooled")
@@ -650,29 +702,27 @@ def _original_gap(
     return point.total_gap
 
 
+def _fair_beta(prep: _Prepared, target: str) -> np.ndarray:
+    """Fair-wage coefficients from the stats pass (analysis.rs:389-460)."""
+    stats_ref, stats_tgt = prep.stats_ref, prep.stats_tgt
+    if target == "pooled":
+        return _lstsq_beta(stats_ref.xtx + stats_tgt.xtx, stats_ref.xty + stats_tgt.xty)
+    return _lstsq_beta(stats_ref.xtx, stats_ref.xty)
+
+
 def _score(
     prep: _Prepared,
     outcome: str,
     group: str,
     reference_group: str,
-    *,
-    target: str,
-    range_target: str,
-    confidence_level: float,
-    min_gap_pct: float,
-    forensic_mode: bool,
-    adjust_both_groups: bool,
-) -> tuple[np.ndarray, DataFrame, DataFrame]:
-    """Fair-wage model from the stats pass (analysis.rs:389-490), every row
-    scored against it (``__diff``; design columns kept for the frontier) and
-    the in-scope rows with ``__eligible``."""
-    stats_ref, stats_tgt = prep.stats_ref, prep.stats_tgt
+    beta_fair: np.ndarray,
+    scoring: dict,
+) -> tuple[DataFrame, DataFrame]:
+    """Every row scored against the fair-wage model under ``scoring``
+    (``__diff``; design columns kept for the frontier and the
+    contributions) and the in-scope rows with ``__eligible``."""
+    stats_ref = prep.stats_ref
     xcols = prep.xcols
-    if target == "pooled":
-        beta_fair = _lstsq_beta(stats_ref.xtx + stats_tgt.xtx, stats_ref.xty + stats_tgt.xty)
-    else:
-        beta_fair = _lstsq_beta(stats_ref.xtx, stats_ref.xty)
-
     # sigma^2 from reference-group residuals (analysis.rs:477-490)
     rss = float(stats_ref.yty - 2 * beta_fair @ stats_ref.xty + beta_fair @ stats_ref.xtx @ beta_fair)
     dof = stats_ref.n - len(xcols)
@@ -684,7 +734,7 @@ def _score(
             "Covariance matrix is singular, likely due to perfect multicollinearity."
         ) from e
 
-    confidence = min(max(confidence_level, 0.50), 0.999)
+    confidence = min(max(scoring["confidence_level"], 0.50), 0.999)
     z = norm_ppf_scalar(1.0 - (1.0 - confidence) / 2.0)
 
     fair = _xb_expr(beta_fair, xcols)
@@ -694,9 +744,7 @@ def _score(
         se = F.sqrt(F.lit(sigma2) * (F.lit(1.0) + _leverage_expr(cov, xcols)))
         lower = fair - F.lit(z) * se
         upper = fair + F.lit(z) * se
-    target_wage = {"midpoint": fair, "lowerbound": lower, "upperbound": upper}[
-        range_target.replace("_", "").lower()
-    ]
+    target_wage = {"midpoint": fair, "lowerbound": lower, "upperbound": upper}[scoring["range_target"]]
     diff = target_wage - F.col(outcome)
     gap_pct = F.when(F.abs(F.col(outcome)) > 1e-6, diff / F.col(outcome)).otherwise(F.lit(0.0))
 
@@ -715,22 +763,149 @@ def _score(
         ).alias("contributions"),
         *xcols,
     )
-    in_scope = (~F.col("__is_ref")) | F.lit(bool(adjust_both_groups or forensic_mode))
+    both = scoring["adjust_both_groups"]
+    in_scope = (~F.col("__is_ref")) | F.lit(both or scoring["forensic_mode"])
     eligible = (
         (F.col("__diff") > 1e-6)
-        & (F.col("__gap_pct") >= F.lit(float(min_gap_pct)))
-        & ((~F.col("__is_ref")) | F.lit(bool(adjust_both_groups)))
+        & (F.col("__gap_pct") >= F.lit(scoring["min_gap_pct"]))
+        & ((~F.col("__is_ref")) | F.lit(both))
     )
-    pot = scored.filter(in_scope).withColumn("__eligible", eligible)
-    if not forensic_mode:
-        pot = pot.filter(F.col("__eligible"))
-    return beta_fair, scored, pot
+    return scored, scored.filter(in_scope).withColumn("__eligible", eligible)
+
+
+class _Columns:
+    """``np.minimum`` and ``np.maximum`` over Spark columns, for ``_paid``."""
+
+    minimum = staticmethod(lambda a, b: F.least(F.lit(a), F.lit(b)))
+    maximum = staticmethod(lambda a, b: F.greatest(F.lit(a), F.lit(b)))
+
+
+def _paid(budget, cum_prev, gap, xp=np):
+    """A payable row's greedy payment at ``budget``, given the gaps paid
+    before it: clip(budget - cum_prev, 0, gap), the sequential loop's
+    payment in closed form. NumPy arrays by default; ``xp=_Columns`` for
+    Spark columns."""
+    return xp.minimum(gap, xp.maximum(budget - cum_prev, 0.0))
+
+
+@dataclass
+class _Schedule:
+    """The rows a remediation lists, as driver arrays in one order: the
+    ``n_pay`` payable rows first, in greedy order (gap descending, row id
+    ascending), then the rest (forensic mode's unpayable rows, paid 0).
+    ``x`` holds their design columns (``_Prepared.xcols``); ``cum_prev`` is
+    each payable row's exclusive running total of the gaps before it and
+    ``total`` the budget that pays every one of them in full. ``target_net``
+    is the sum of ``__diff`` over every target-group row."""
+
+    ids: np.ndarray
+    gap: np.ndarray
+    wage: np.ndarray
+    fair: np.ndarray
+    lower: np.ndarray
+    upper: np.ndarray
+    x: np.ndarray
+    n_pay: int
+    cum_prev: np.ndarray
+    total: float
+    target_net: float
+
+
+_SCOPE_COLUMNS = [ROW_ID, "__wage", "fair_wage", "fair_wage_lower_bound", "fair_wage_upper_bound", "__diff"]
+
+
+def _collect_schedule(scope: DataFrame, xcols: list[str], forensic_mode: bool) -> _Schedule:
+    """The ``_Schedule`` of ``_score``'s in-scope rows, from ONE collect."""
+    pdf = scope.select(*_SCOPE_COLUMNS, "__is_ref", "__eligible", *xcols).toPandas()
+    ids, wage, fair, lower, upper, gap = (pdf[c].to_numpy() for c in _SCOPE_COLUMNS)
+    eligible = pdf["__eligible"].to_numpy(bool)
+    payable = eligible & (gap > 0)
+    listed = np.ones_like(eligible) if forensic_mode else eligible
+    pay = np.flatnonzero(payable)
+    pay = pay[np.lexsort((ids[pay], -gap[pay]))]
+    rest = np.flatnonzero(listed & ~payable)
+    order = np.concatenate([pay, rest])
+    cum = np.cumsum(gap[pay])
+    return _Schedule(
+        ids[order].astype(np.int64), gap[order], wage[order], fair[order], lower[order], upper[order],
+        pdf[xcols].to_numpy(float)[order], len(pay), np.concatenate(([0.0], cum))[:-1],
+        float(cum[-1]) if len(cum) else 0.0, float(np.sum(gap[~pdf["__is_ref"].to_numpy(bool)])),
+    )
+
+
+def _scheduled(
+    prep: _Prepared, outcome: str, group: str, reference_group: str, beta_fair: np.ndarray, scoring: dict
+) -> _Schedule:
+    """The driver schedule of ``scoring``: a reused ``ReviewStats``'s when
+    it holds the default scoring's for this row-id column, else one collect
+    (kept there when the scoring is the default)."""
+    keep = prep.review is not None and scoring == DEFAULT_SCORING
+    held = prep.review.schedule if keep else None
+    if held is not None and held[0] == prep.id_col:
+        return held[1]
+    _, scope = _score(prep, outcome, group, reference_group, beta_fair, scoring)
+    schedule = _collect_schedule(scope, prep.xcols, scoring["forensic_mode"])
+    if keep:
+        prep.review.schedule = (prep.id_col, schedule)
+    return schedule
+
+
+def _allocate(s: _Schedule, strategy: str, budget: float) -> tuple[np.ndarray, float, float]:
+    """Each listed row's adjustment, the required budget and the budget
+    spent against (``budget``, or 1.00001 x the need when it is 0)."""
+    gap = s.gap[:s.n_pay]
+    adjustment = np.zeros(len(s.ids))
+    if strategy == "equitable":
+        need = float(np.sum(gap))
+        effective = budget if budget > 0.0 else need * 1.00001
+        adjustment[:s.n_pay] = gap * (min(effective / need, 1.0) if need > 0 else 0.0)
+    else:
+        need = s.total
+        effective = budget if budget > 0.0 else need * 1.00001
+        adjustment[:s.n_pay] = _paid(effective, s.cum_prev, gap)
+    return adjustment, need, effective
+
+
+def _adjustments_local(spark, s: _Schedule, adjustment: np.ndarray, beta_fair, xcols):
+    """The driver path's ``adjustments`` list and ``adjustments_df`` (a
+    ``local_table``), both in row-id order. A contribution is x_j * beta_j,
+    the product the Catalyst plan computes."""
+    import pyarrow as pa
+
+    at = np.argsort(s.ids, kind="stable")
+    cols = {
+        "index": s.ids[at], "adjustment": adjustment[at], "current_wage": s.wage[at],
+        "new_wage": s.wage[at] + adjustment[at], "fair_wage": s.fair[at],
+        "fair_wage_lower_bound": s.lower[at], "fair_wage_upper_bound": s.upper[at],
+    }
+    contributions = s.x[at] * np.asarray(beta_fair)
+
+    def listed() -> list[Adjustment]:
+        names = list(cols)
+        return [
+            Adjustment(*row, contributions=[Contribution(n, v) for n, v in zip(xcols, c)])
+            for *row, c in zip(*(cols[n].tolist() for n in names), contributions.tolist())
+        ]
+
+    def table() -> DataFrame:
+        n, k = contributions.shape
+        offsets = pa.array(np.arange(0, n * k + 1, k, dtype=np.int32))
+        keys = pa.array(np.tile(np.asarray(xcols, dtype=object), n), pa.string())
+        return local_table(spark, {
+            **{name: ("long" if name == "index" else "double", v) for name, v in cols.items()},
+            "contributions": (
+                "map<string,double>", pa.MapArray.from_arrays(offsets, keys, pa.array(contributions.ravel()))
+            ),
+        })
+
+    return listed, table
 
 
 def _greedy_scan(payable: DataFrame) -> DataFrame:
-    """``__cum_prev`` = the gaps paid before each row under greedy order
-    (largest gap first, row id breaking ties); ``._scan_total`` = the
-    budget that pays every row in full."""
+    """Above ``COLLECT_LIMIT``: ``__cum_prev`` = the gaps paid before each
+    row under greedy order (largest gap first, row id breaking ties), by
+    one distributed prefix scan; ``._scan_total`` = the budget that pays
+    every row in full. ``scan.release`` drops its checkpoint."""
     return ordered_prev_cumsum(
         payable, [F.col("__diff").desc(), F.col(ROW_ID).asc()], F.col("__diff"), "__cum_prev"
     )
@@ -756,96 +931,121 @@ def optimize(
 ) -> OptimizationResult:
     """Remediation-budget optimizer (analysis.rs:309-869).
 
-    One strict cast, one stats pass and (greedy) one prefix scan; the
-    original gap, the target-group summary and the greedy required budget
-    are derived from those on the driver. The result owns the cached input
-    and the scan's checkpoint: call ``release()`` when done with it."""
-    prep = _prepare(df, outcome, group, reference_group, predictors, categorical_predictors, id_col)
-    scanned = None
-
-    def release_fn() -> None:
-        prep.df.unpersist()
-        if scanned is not None:
-            release(scanned)
-
-    try:
-        beta_fair, scored, pot = _score(
-            prep, outcome, group, reference_group,
-            target=target, range_target=range_target, confidence_level=confidence_level,
-            min_gap_pct=min_gap_pct, forensic_mode=forensic_mode,
-            adjust_both_groups=adjust_both_groups,
+    One strict cast and one stats pass; the original gap and the
+    target-group summary come from them on the driver. With at most
+    ``COLLECT_LIMIT`` in-scope rows, which the stats count, ONE collect of
+    the scored rows gives the rest on the driver (``_Schedule``): the
+    greedy order, the payments, the required budget, the adjustments and
+    ``adjustments_df``. A reused ``ReviewStats`` that holds the default
+    scoring's schedule saves even that collect. Above the limit the greedy
+    order is one distributed prefix scan and the result owns the cached
+    input and the scan's checkpoint: call ``release()`` when done with it
+    (a no-op on the driver path)."""
+    scoring = {
+        "target": "pooled" if target == "pooled" else "reference",
+        "range_target": range_target.replace("_", "").lower(),
+        "confidence_level": float(confidence_level),
+        "min_gap_pct": float(min_gap_pct),
+        "forensic_mode": bool(forensic_mode),
+        "adjust_both_groups": bool(adjust_both_groups),
+    }
+    equitable = strategy.lower() == "equitable"
+    prep = _prepare(
+        df, outcome, group, reference_group, predictors, categorical_predictors, id_col,
+        with_ref=adjust_both_groups or forensic_mode,
+    )
+    beta_fair = _fair_beta(prep, scoring["target"])
+    model_coefficients = [Contribution(n, float(b)) for n, b in zip(prep.xcols, beta_fair)]
+    if prep.local:
+        schedule = _scheduled(prep, outcome, group, reference_group, beta_fair, scoring)
+        adjustment, total_need, effective_budget = _allocate(
+            schedule, "equitable" if equitable else "greedy", budget
         )
-        model_coefficients = [Contribution(n, float(b)) for n, b in zip(prep.xcols, beta_fair)]
-        keep = [ROW_ID, "__wage", "fair_wage", "fair_wage_lower_bound",
-                "fair_wage_upper_bound", "__diff", "contributions"]
+        adjustments_fn, adjustments_df_fn = _adjustments_local(
+            prep.source.sparkSession, schedule, adjustment, beta_fair, prep.xcols
+        )
+        release_fn = None
 
-        if strategy.lower() == "equitable":
-            total_need = float(
-                pot.filter(_payable()).agg(F.sum("__diff")).collect()[0][0] or 0.0
+        def target_net_fn() -> float:
+            return schedule.target_net
+    else:
+        scanned = None
+
+        def release_fn() -> None:
+            prep.design.unpersist()
+            if scanned is not None:
+                release(scanned)
+
+        try:
+            scored, scope = _score(prep, outcome, group, reference_group, beta_fair, scoring)
+            pot = scope if forensic_mode else scope.filter(F.col("__eligible"))
+            keep = [ROW_ID, "__wage", "fair_wage", "fair_wage_lower_bound",
+                    "fair_wage_upper_bound", "__diff", "contributions"]
+            if equitable:
+                total_need = float(
+                    pot.filter(_payable()).agg(F.sum("__diff")).collect()[0][0] or 0.0
+                )
+                effective_budget = budget if budget > 0.0 else total_need * 1.00001
+                coverage = min(effective_budget / total_need, 1.0) if total_need > 0 else 0.0
+                alloc = pot.withColumn(
+                    "adjustment",
+                    F.when(_payable(), F.col("__diff") * F.lit(coverage)).otherwise(F.lit(0.0)),
+                ).select(*keep, "adjustment")
+            else:
+                scanned = _greedy_scan(pot.filter(_payable()).select(*keep))
+                total_need = scanned._scan_total
+                effective_budget = budget if budget > 0.0 else total_need * 1.00001
+                paid = scanned.withColumn(
+                    "adjustment",
+                    _paid(effective_budget, F.col("__cum_prev"), F.col("__diff"), _Columns),
+                ).drop("__cum_prev")
+                rest = pot.filter(~_payable()).select(*keep).withColumn("adjustment", F.lit(0.0))
+                alloc = paid.unionByName(rest)
+
+            adjustments_df = alloc.withColumn("new_wage", F.col("__wage") + F.col("adjustment")).select(
+                F.col(ROW_ID).alias("index"),
+                "adjustment",
+                F.col("__wage").alias("current_wage"),
+                "new_wage",
+                "fair_wage",
+                "fair_wage_lower_bound",
+                "fair_wage_upper_bound",
+                "contributions",
             )
-            effective_budget = budget if budget > 0.0 else total_need * 1.00001
-            coverage = min(effective_budget / total_need, 1.0) if total_need > 0 else 0.0
-            alloc = pot.withColumn(
-                "adjustment",
-                F.when(_payable(), F.col("__diff") * F.lit(coverage)).otherwise(F.lit(0.0)),
-            ).select(*keep, "adjustment")
-        else:
-            scanned = _greedy_scan(pot.filter(_payable()).select(*keep))
-            total_need = scanned._scan_total
-            effective_budget = budget if budget > 0.0 else total_need * 1.00001
-            paid = scanned.withColumn(
-                "adjustment",
-                F.least(
-                    F.col("__diff"),
-                    F.greatest(F.lit(effective_budget) - F.col("__cum_prev"), F.lit(0.0)),
-                ),
-            ).drop("__cum_prev")
-            rest = pot.filter(~_payable()).select(*keep).withColumn("adjustment", F.lit(0.0))
-            alloc = paid.unionByName(rest)
+        except BaseException:
+            release_fn()
+            raise
 
-        alloc = alloc.withColumn("new_wage", F.col("__wage") + F.col("adjustment"))
-        adjustments_df = alloc.select(
-            F.col(ROW_ID).alias("index"),
-            "adjustment",
-            F.col("__wage").alias("current_wage"),
-            "new_wage",
-            "fair_wage",
-            "fair_wage_lower_bound",
-            "fair_wage_upper_bound",
-            "contributions",
-        )
-    except BaseException:
-        release_fn()
-        raise
+        def target_net_fn() -> float:
+            row = scored.filter(~F.col("__is_ref")).agg(F.sum("__diff")).collect()[0]
+            return float(row[0] or 0.0)
+
+        def adjustments_fn() -> list[Adjustment]:
+            if adjustments_df.count() > COLLECT_LIMIT:
+                return []
+            return [
+                Adjustment(
+                    index=int(r["index"]),
+                    adjustment=float(r["adjustment"]),
+                    current_wage=float(r["current_wage"]),
+                    new_wage=float(r["new_wage"]),
+                    fair_wage=float(r["fair_wage"]),
+                    fair_wage_lower_bound=float(r["fair_wage_lower_bound"]),
+                    fair_wage_upper_bound=float(r["fair_wage_upper_bound"]),
+                    contributions=[Contribution(n, float(v)) for n, v in r["contributions"].items()],
+                )
+                for r in sorted(adjustments_df.collect(), key=lambda r: r["index"])
+            ]
+
+        def adjustments_df_fn() -> DataFrame:
+            return adjustments_df
 
     def target_stats_fn() -> tuple[float, float]:
         tgt = prep.stats_tgt
-        if range_target.replace("_", "").lower() == "midpoint":
+        if scoring["range_target"] == "midpoint":
             # sum over target rows of (x'beta - y): linear, so from the stats
             return float(tgt.n), float(beta_fair @ tgt.xsum - tgt.ysum)
-        row = scored.filter(~F.col("__is_ref")).agg(F.sum("__diff")).collect()[0]
-        return float(tgt.n), float(row[0] or 0.0)
-
-    def adjustments_fn() -> list[Adjustment]:
-        # the stats pass bounds the row count; count only past the limit
-        n_scope = prep.stats_tgt.n + (
-            prep.stats_ref.n if (adjust_both_groups or forensic_mode) else 0
-        )
-        if n_scope > COLLECT_LIMIT and adjustments_df.count() > COLLECT_LIMIT:
-            return []
-        return [
-            Adjustment(
-                index=int(r["index"]),
-                adjustment=float(r["adjustment"]),
-                current_wage=float(r["current_wage"]),
-                new_wage=float(r["new_wage"]),
-                fair_wage=float(r["fair_wage"]),
-                fair_wage_lower_bound=float(r["fair_wage_lower_bound"]),
-                fair_wage_upper_bound=float(r["fair_wage_upper_bound"]),
-                contributions=[Contribution(n, float(v)) for n, v in r["contributions"].items()],
-            )
-            for r in sorted(adjustments_df.collect(), key=lambda r: r["index"])
-        ]
+        return float(tgt.n), target_net_fn()
 
     return OptimizationResult(
         required_budget_fn=lambda: total_need,
@@ -857,8 +1057,8 @@ def optimize(
         ),
         target_stats_fn=target_stats_fn,
         adjustments_fn=adjustments_fn,
+        adjustments_df_fn=adjustments_df_fn,
         model_coefficients=model_coefficients,
-        adjustments_df=adjustments_df,
         release_fn=release_fn,
     )
 
@@ -971,6 +1171,28 @@ def _adjusted_passes(
 # M21: efficient frontier
 # ---------------------------------------------------------------------------
 
+# rows x steps cells of the payment matrix one block of ``_step_deltas`` holds
+_DELTA_BLOCK_CELLS = 1 << 22
+
+
+def _step_deltas(s: _Schedule, budgets: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each budget's X'y and y'y deltas (rows of the two results) from the
+    payments of ``s``'s payable rows on the pooled design, whose group
+    dummy is 1 on every one of them (the default scoring pays target
+    rows only): (payments @ X, sum of 2 y paid + paid^2), in blocks of
+    budgets of at most ``_DELTA_BLOCK_CELLS`` payments."""
+    m = s.n_pay
+    x = np.insert(s.x[:m], 1, 1.0, axis=1)
+    gap, y2 = s.gap[:m], 2.0 * s.wage[:m]
+    dxy, dyty = np.empty((len(budgets), x.shape[1])), np.empty(len(budgets))
+    block = max(1, _DELTA_BLOCK_CELLS // max(m, 1))
+    for lo in range(0, len(budgets), block):
+        paid = _paid(budgets[lo:lo + block, None], s.cum_prev, gap)
+        dxy[lo:lo + block] = paid @ x
+        dyty[lo:lo + block] = (y2 * paid + paid * paid).sum(axis=1)
+    return dxy, dyty
+
+
 def efficient_frontier(
     df: DataFrame,
     outcome: str,
@@ -986,82 +1208,85 @@ def efficient_frontier(
     """analysis.rs:871-1153: t-stat of the group dummy as budget grows.
 
     Reuses ``optimize``'s work rather than repeating it: one strict cast,
-    one stats pass per group level and one greedy prefix scan, all on the
-    null-dropped rows the optimizer pays. The pooled Gram state with the
-    group dummy at position 1 is assembled on the driver from the
-    per-group stats (``linalg.pooled_stats``). At the auto budget
-    (1.00001 x need) every scheduled row is paid its full gap, so the
-    payment schedule is the scan itself: gap = ``__diff``, running total =
-    ``__cum_prev``. One aggregation over schedule x steps then yields every
-    step's X'y / y'y delta; the t-statistics are k x k driver work.
+    one stats pass per group level and the greedy schedule of
+    ``DEFAULT_SCORING``, all on the null-dropped rows the optimizer pays.
+    The pooled Gram state with the group dummy at position 1 is assembled
+    on the driver from the per-group stats (``linalg.pooled_stats``). Under
+    greedy allocation a row's payment at budget b is ``_paid`` =
+    clip(b - cum_prev, 0, gap), and payments are totals from the baseline,
+    so each step's deltas against the baseline Gram state are plain sums:
+
+      X'y(b) = X'y + sum_i x_i paid_i(b)
+      y'y(b) = y'y + sum_i (2 y_i paid_i(b) + paid_i(b)^2)
+
+    With at most ``COLLECT_LIMIT`` target rows the schedule is driver
+    arrays (``_scheduled``: a reused ``ReviewStats``'s, as a remediation of
+    the default scoring left it, or one collect) and the deltas of every
+    step one steps x n matrix product. Above the limit the schedule is a
+    distributed prefix scan and the deltas one aggregation over schedule x
+    steps. The t-statistics are k x k driver work either way (vs
+    analysis.rs:1107-1150's per-step sequential payment loop).
     """
-    prep = _prepare(df, outcome, group, reference_group, predictors, categorical_predictors, id_col)
-    scanned = None
+    prep = _prepare(df, outcome, group, reference_group, predictors, categorical_predictors, id_col, with_ref=False)
+    # pooled design [intercept, group_dummy(=1 for non-reference), features...]
+    pooled = pooled_stats(prep.stats_tgt, prep.stats_ref, "__gd", indicator_pos=1)
     try:
-        _, _, pot = _score(
-            prep, outcome, group, reference_group,
-            target="reference", range_target="midpoint", confidence_level=0.95,
-            min_gap_pct=0.0, forensic_mode=False, adjust_both_groups=False,
-        )
-        # pooled design [intercept, group_dummy(=1 for non-reference), features...]
-        pooled = pooled_stats(prep.stats_tgt, prep.stats_ref, "__gd", indicator_pos=1)
-        try:
-            xtx_inv = np.linalg.inv(pooled.xtx)
-        except np.linalg.LinAlgError as e:
-            raise OaxacaError("Singular matrix in Pooled OLS") from e
-        xcols = pooled.names
-        dof = pooled.n - len(xcols)
+        xtx_inv = np.linalg.inv(pooled.xtx)
+    except np.linalg.LinAlgError as e:
+        raise OaxacaError("Singular matrix in Pooled OLS") from e
+    xcols = pooled.names
+    dof = pooled.n - len(xcols)
+    beta_fair = _fair_beta(prep, DEFAULT_SCORING["target"])
 
-        scanned = _greedy_scan(
-            pot.filter(_payable()).select(
-                ROW_ID, "__diff", "__wage",
-                *[(~F.col("__is_ref")).cast("double").alias(c) if c == "__gd" else F.col(c)
-                  for c in xcols],
-            )
-        )
-        total_need = scanned._scan_total
+    def step_size_for(total_need: float) -> float:
         mb = max_budget if max_budget is not None else total_need * 1.1
-        safe_max = mb if mb >= 1e-9 else 1000.0
-        step_size = safe_max / steps
+        return (mb if mb >= 1e-9 else 1000.0) / steps
 
-        # Under greedy allocation the amount paid to a row at budget b is
-        # closed-form: paid_i(b) = clip(b - cum_prev_i, 0, gap_i). Payments
-        # at budget b are totals from the baseline, so each step's deltas
-        # against the baseline Gram state are plain sums:
-        #   X'y(b) = X'y + sum_i x_i paid_i(b)
-        #   y'y(b) = y'y + sum_i (2 y_i paid_i(b) + paid_i(b)^2)
-        # Exploding each scheduled row over the steps + one groupBy yields
-        # every step's deltas in a single job — nothing scaling with the
-        # schedule reaches the driver (vs analysis.rs:1107-1150's per-step
-        # sequential payment loop).
-        budget = F.col("__step").cast("double") * F.lit(step_size)
-        paid = F.greatest(
-            F.lit(0.0), F.least(F.col("__diff"), budget - F.col("__cum_prev"))
-        )
-        per_step = (
-            scanned.withColumn("__step", F.explode(F.sequence(F.lit(1), F.lit(steps))))
-            .withColumn("__paid", paid)
-            .filter(F.col("__paid") > 0)
-            .groupBy("__step")
-            .agg(
-                *[F.sum(F.col(c) * F.col("__paid")).alias(f"__dxy_{j}") for j, c in enumerate(xcols)],
-                F.sum(
-                    F.lit(2.0) * F.col("__wage") * F.col("__paid") + F.col("__paid") * F.col("__paid")
-                ).alias("__dyty"),
+    if prep.local:
+        schedule = _scheduled(prep, outcome, group, reference_group, beta_fair, DEFAULT_SCORING)
+        step_size = step_size_for(schedule.total)
+        deltas = dict(enumerate(zip(*_step_deltas(schedule, np.arange(1, steps + 1) * step_size)), start=1))
+    else:
+        scanned = None
+        try:
+            _, scope = _score(prep, outcome, group, reference_group, beta_fair, DEFAULT_SCORING)
+            scanned = _greedy_scan(
+                scope.filter(_payable()).select(
+                    ROW_ID, "__diff", "__wage",
+                    *[(~F.col("__is_ref")).cast("double").alias(c) if c == "__gd" else F.col(c)
+                      for c in xcols],
+                )
             )
-            .collect()
-        )
-    finally:
-        prep.df.unpersist()
-        if scanned is not None:
-            release(scanned)
-    deltas = {
-        int(r["__step"]): (
-            np.array([float(r[f"__dxy_{j}"] or 0.0) for j in range(len(xcols))]),
-            float(r["__dyty"] or 0.0),
-        )
-        for r in per_step
-    }
+            step_size = step_size_for(scanned._scan_total)
+            # each scheduled row exploded over the steps, one groupBy: every
+            # step's deltas in a single job
+            per_step = (
+                scanned.withColumn("__step", F.explode(F.sequence(F.lit(1), F.lit(steps))))
+                .withColumn("__paid", _paid(
+                    F.col("__step").cast("double") * F.lit(step_size), F.col("__cum_prev"), F.col("__diff"),
+                    _Columns,
+                ))
+                .filter(F.col("__paid") > 0)
+                .groupBy("__step")
+                .agg(
+                    *[F.sum(F.col(c) * F.col("__paid")).alias(f"__dxy_{j}") for j, c in enumerate(xcols)],
+                    F.sum(
+                        F.lit(2.0) * F.col("__wage") * F.col("__paid") + F.col("__paid") * F.col("__paid")
+                    ).alias("__dyty"),
+                )
+                .collect()
+            )
+        finally:
+            prep.design.unpersist()
+            if scanned is not None:
+                release(scanned)
+        deltas = {
+            int(r["__step"]): (
+                np.array([float(r[f"__dxy_{j}"] or 0.0) for j in range(len(xcols))]),
+                float(r["__dyty"] or 0.0),
+            )
+            for r in per_step
+        }
 
     def t_stat(xty_t: np.ndarray, yty_t: float):
         beta = xtx_inv @ xty_t

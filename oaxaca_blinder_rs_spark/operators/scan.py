@@ -9,10 +9,12 @@ key, partition id), the exclusive offsets folded on the driver in
 partition order, and the offsets attached without a Python-list table.
 Its callers:
 
-- ``ordered_prev_cumsum``: global exclusive running total (the greedy
-  allocation of engine_ops.optimize, budget.allocate_budget and the
-  efficient-frontier schedule; the reference's sequential payment loop,
-  oaxaca_blinder/src/analysis.rs);
+- ``ordered_prev_cumsum``: global exclusive running total (the reference's
+  sequential payment loop, oaxaca_blinder/src/analysis.rs): the greedy
+  schedule of engine_ops.optimize and efficient_frontier above
+  ``engine_ops.COLLECT_LIMIT`` in-scope rows (below it they order and sum
+  one collect on the driver), budget.allocate_budget, corpus packing
+  offsets and score ranks, and textops vocabulary ids;
 - ``grouped_prev_cumsum{,_multi}``: running totals within each group;
 - ``grouped_dense_rank``: dense per-group positions (the exact bootstrap);
 - ``sources/csv.attach_row_ids``: dense ids in input order.
@@ -49,8 +51,8 @@ __all__ = [
 
 def local_table(spark, columns: dict[str, tuple[str, list]]) -> DataFrame:
     """A small driver-built table (``name -> (Spark SQL type, values)``,
-    e.g. ``"long"``, ``"string"``, ``"array<double>"``) as a JVM
-    LocalRelation. ``createDataFrame`` on a Python list yields a pickled
+    e.g. ``"long"``, ``"string"``, ``"array<double>"``; the values a list,
+    a NumPy array or a pyarrow array) as a JVM LocalRelation. ``createDataFrame`` on a Python list yields a pickled
     Python RDD, which starts Python worker tasks in every job that reads
     it; an Arrow table is decoded in the JVM alone."""
     import pyarrow as pa

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,6 +22,24 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> (the Spark jobs ``fn()`` ran, counted by job
+    group, what it returned)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run
 
 
 @pytest.fixture(scope="session")

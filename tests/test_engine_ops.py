@@ -240,6 +240,54 @@ def test_frontier_matches_numpy_pooled_ols(spark, levels, ref):
         assert p.t_statistic == pytest.approx(beta[1] / se, rel=1e-9), p.budget
 
 
+@pytest.mark.parametrize("levels,ref", LEVELS)
+def test_driver_schedule_matches_prefix_scan(spark, monkeypatch, levels, ref):
+    """Below ``COLLECT_LIMIT`` the greedy schedule is one collect ordered on
+    the driver; with the limit set under the row count the same frame goes
+    through the distributed prefix scan (``ordered_prev_cumsum``). Both give
+    the same ``adjustments_df`` (columns, types, rows; payments within
+    1e-9 x budget), required budget and frontier, at the auto budget, at a
+    limited one and pro rata."""
+    pdf, df = _company(spark, levels, seed=13)
+    scans = []
+    greedy_scan = eo._greedy_scan
+    monkeypatch.setattr(eo, "_greedy_scan", lambda frame: scans.append(1) or greedy_scan(frame))
+
+    def run():
+        full = eo.optimize(df, "wage", "g", ref, PREDS, id_col="rid")
+        budget = 0.4 * full.required_budget
+        out = {"required": full.required_budget}
+        for name, kw in (("auto", {}), ("limited", {"budget": budget}),
+                         ("equitable", {"budget": budget, "strategy": "equitable"})):
+            res = eo.optimize(df, "wage", "g", ref, PREDS, id_col="rid", **kw)
+            table = res.adjustments_df
+            out[name] = (table.dtypes, sorted(tuple(r) for r in table.collect()), res.total_cost)
+            res.release()
+        full.release()
+        out["frontier"] = eo.efficient_frontier(df, "wage", "g", ref, PREDS, steps=8, id_col="rid")
+        return out
+
+    local = run()
+    assert not scans
+    monkeypatch.setattr(eo, "COLLECT_LIMIT", 10)
+    scanned = run()
+    assert len(scans) == 4  # three greedy remediations and the frontier
+    budget = local["required"]
+    assert scanned["required"] == pytest.approx(budget, rel=1e-12)
+    for name in ("auto", "limited", "equitable"):
+        (types, rows, cost), (want_types, want_rows, want_cost) = local[name], scanned[name]
+        assert types == want_types and len(rows) == len(want_rows) > 0, name
+        assert cost == pytest.approx(want_cost, rel=1e-12, abs=1e-9 * budget), name
+        for got, want in zip(rows, want_rows):
+            assert got[0] == want[0] and got[2] == want[2] and got[4:7] == want[4:7], (name, got, want)
+            assert got[1] == pytest.approx(want[1], abs=1e-9 * budget), (name, got, want)
+            assert got[3] == pytest.approx(want[3], abs=1e-9 * budget), (name, got, want)
+            assert got[7] == want[7], (name, got, want)
+    for got, want in zip(local["frontier"], scanned["frontier"]):
+        assert got.budget == pytest.approx(want.budget, rel=1e-12)
+        assert got.t_statistic == pytest.approx(want.t_statistic, rel=1e-9), got.budget
+
+
 def test_defensibility(spark):
     df = mock_df(spark)
     opt = eo.optimize(df, "wage", "gender", "M", ["education", "experience"], id_col="rid")

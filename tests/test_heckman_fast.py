@@ -10,6 +10,8 @@ not bitwise. Reference semantics: heckman.rs:38-108, estimation.rs:114-269.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -149,3 +151,14 @@ def test_dropped_group_level_warning_names_the_callers_line(heckman_df):
     with pytest.warns(UserWarning, match=r"dropping \['C'\]") as record:
         _run(df, "expr", 0)
     assert next(w for w in record if "dropping" in str(w.message)).filename == __file__
+
+
+@pytest.mark.parametrize("engine,jobs", [("expr", 13), ("pandas", 16)])
+def test_heckman_bootstrap_job_count(heckman_df, spark_jobs, engine, jobs):
+    """A Heckman two-step with 20 bootstrap replicates runs a fixed number
+    of Spark jobs, counted by job group: 13 on the Catalyst engine and 16
+    on the Arrow/BLAS engine, measured on local[4]."""
+    heckman_df.count()  # the fixture's cache is filled outside the count
+    count, res = spark_jobs(lambda: _run(heckman_df, engine, 20))
+    assert count == jobs
+    assert math.isfinite(res.two_fold.unexplained.std_err)

@@ -3,7 +3,6 @@ calls through the JSON-RPC handler."""
 
 import json
 import threading
-import uuid
 
 from oaxaca_blinder_rs_spark.mcp_server import McpServer
 
@@ -155,16 +154,18 @@ def _review(server, call=_call, decompose=None):
 # Spark jobs per tool on CSV (local[4], 8 shuffle partitions), counted by
 # job group, on a server that keeps each company's sufficient statistics.
 # In ``_review`` decompose (reference F, 5 replicates) is the only call of
-# its model spec; remediate's stats pass also makes the strict-cast check,
-# frontier and defend take their stats from it, and verify, whose 100
-# replicates the server does not hold, decomposes the adjusted data afresh.
-# Before the cache the same review ran 8 / 13 / 15 / 11 / 8 jobs, and before
-# the decision layer shared one cast, one stats pass and one prefix scan per
-# request 8 / 32 / 36 / 14 / 8.
+# its model spec; remediate's stats pass also makes the strict-cast check
+# and its one collect of the scored rows leaves the greedy schedule on the
+# server, so the frontier runs no job; defend takes its stats from it, and
+# verify, whose 100 replicates the server does not hold, decomposes the
+# adjusted data afresh. With a 7-job distributed prefix scan in remediate
+# and in the frontier the same review ran 4 / 11 / 10 / 6 / 2 jobs; before
+# the cache 8 / 13 / 15 / 11 / 8, and before the decision layer shared one
+# cast, one stats pass and one prefix scan per request 8 / 32 / 36 / 14 / 8.
 TOOL_JOB_CEILINGS = {
     "forensic_decomposition": 4,
-    "simulate_remediation": 11,
-    "generate_efficient_frontier": 10,
+    "simulate_remediation": 3,
+    "generate_efficient_frontier": 0,
     "verify_adjustments": 6,
     "check_defensibility": 2,
 }
@@ -172,55 +173,50 @@ TOOL_JOB_CEILINGS = {
 # first call of a model spec, pays.
 TOOL_JOB_CEILINGS_COLD = {
     "forensic_decomposition": 4,
-    "simulate_remediation": 11,
-    "generate_efficient_frontier": 12,
+    "simulate_remediation": 3,
+    "generate_efficient_frontier": 3,
     "verify_adjustments": 8,
     "check_defensibility": 4,
 }
 # Decompose with the other calls' reference group and its default 100
-# replicates: remediate takes its stats from decompose, and verify derives
-# its bootstrap from decompose's replicates plus one aggregation over the
-# adjusted rows.
-TOOL_JOB_CEILINGS_SAME_SPEC = {**TOOL_JOB_CEILINGS, "simulate_remediation": 9, "verify_adjustments": 3}
+# replicates: remediate takes its stats from decompose and collects the
+# scored rows once, and verify derives its bootstrap from decompose's
+# replicates plus one aggregation over the adjusted rows.
+TOOL_JOB_CEILINGS_SAME_SPEC = {**TOOL_JOB_CEILINGS, "simulate_remediation": 1, "verify_adjustments": 3}
+SAME_SPEC_REVIEW_JOBS = 12
 
 
-def _job_counts(spark, review, fresh=False):
+def _job_counts(spark, spark_jobs, review, fresh=False):
     """Spark jobs of each call of ``review``, on one server or (``fresh``)
     each on a new one."""
-    sc = spark.sparkContext
     server = McpServer(spark)
     jobs = {}
 
     def counting(server, name, extra):
-        group = f"test-jobs-{name}-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            out = _call(McpServer(spark) if fresh else server, name, extra)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs[name], out = spark_jobs(lambda: _call(McpServer(spark) if fresh else server, name, extra))
         return out
 
     review(server, counting)
     return jobs
 
 
-def test_tool_job_counts(spark):
-    jobs = _job_counts(spark, _review)
+def test_tool_job_counts(spark, spark_jobs):
+    jobs = _job_counts(spark, spark_jobs, _review)
     assert all(jobs[t] <= TOOL_JOB_CEILINGS[t] for t in TOOL_JOB_CEILINGS), jobs
 
 
-def test_tool_job_counts_on_fresh_servers(spark):
-    jobs = _job_counts(spark, _review, fresh=True)
+def test_tool_job_counts_on_fresh_servers(spark, spark_jobs):
+    jobs = _job_counts(spark, spark_jobs, _review, fresh=True)
     assert all(jobs[t] <= TOOL_JOB_CEILINGS_COLD[t] for t in TOOL_JOB_CEILINGS_COLD), jobs
 
 
-def test_tool_job_counts_same_spec_review(spark):
+def test_tool_job_counts_same_spec_review(spark, spark_jobs):
     def review(server, call):
         _review(server, call, {"reference_group": "M"})
 
-    jobs = _job_counts(spark, review)
+    jobs = _job_counts(spark, spark_jobs, review)
     assert all(jobs[t] <= TOOL_JOB_CEILINGS_SAME_SPEC[t] for t in TOOL_JOB_CEILINGS_SAME_SPEC), jobs
+    assert sum(jobs.values()) <= SAME_SPEC_REVIEW_JOBS, jobs
 
 
 def test_reviews_release_pinned_blocks(spark):
@@ -347,6 +343,44 @@ def test_verify_sums_a_repeated_index(spark):
     once = _tool(McpServer(spark), "verify_adjustments", {**base, "adjustments": [{"index": 7, "value": 1000.0}]})
     assert twice["data_summary"]["total_count"] == 400
     _assert_close(twice, once, rel=1e-9)
+
+
+def test_frontier_after_same_spec_remediation_runs_no_job(spark, spark_jobs):
+    """Remediation of the default scoring leaves its greedy schedule on the
+    server; the frontier that follows builds on it without a Spark job and
+    answers as a fresh server does."""
+    _, csv = _company_csv(seed=5)
+    base = _company_args(csv)
+    server = McpServer(spark)
+    _tool(server, "simulate_remediation", {**base, "budget": 40000.0})
+    args = {**base, "steps": 8}
+    jobs, out = spark_jobs(lambda: _tool(server, "generate_efficient_frontier", args))
+    assert jobs == 0
+    _assert_close(out, _tool(McpServer(spark), "generate_efficient_frontier", args), rel=1e-9)
+
+
+def test_frontier_of_another_spec_computes_afresh(spark, spark_jobs):
+    """The kept schedule serves only its own company and scoring: a frontier
+    with another ``max_budget`` steps through the same schedule, one after
+    a remediation of another scoring (lower-bound targets) or of another
+    company collects its own, and each answers as a fresh server does."""
+    _, csv = _company_csv(seed=5)
+    _, other_csv = _company_csv(seed=6)
+    base, other = _company_args(csv), _company_args(other_csv)
+
+    def fresh(args):
+        return _tool(McpServer(spark), "generate_efficient_frontier", args)
+
+    server = McpServer(spark)
+    _tool(server, "simulate_remediation", {**base, "budget": 40000.0, "range_target": "LowerBound"})
+    jobs, out = spark_jobs(lambda: _tool(server, "generate_efficient_frontier", base))
+    assert jobs > 0
+    _assert_close(out, fresh(base), rel=1e-9)
+    capped = {**base, "steps": 6, "max_budget": 30000.0}
+    _assert_close(_tool(server, "generate_efficient_frontier", capped), fresh(capped), rel=1e-9)
+    jobs, out = spark_jobs(lambda: _tool(server, "generate_efficient_frontier", other))
+    assert jobs > 0
+    _assert_close(out, fresh(other), rel=1e-9)
 
 
 def test_absent_reference_group_errors_alike_warm_and_fresh(spark):

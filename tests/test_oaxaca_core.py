@@ -298,3 +298,25 @@ def test_failed_replicate_warning_names_the_callers_line(spark):
     with pytest.warns(UserWarning, match="bootstrap replications failed") as record:
         OaxacaBlinder(df, "wage", "gender", "F", predictors=["education"], bootstrap_reps=20).fit()
     assert next(w for w in record if "bootstrap replications failed" in str(w.message)).filename == __file__
+
+
+def test_fused_bootstrap_is_one_job(spark, spark_jobs):
+    """The pandas engine's fast bootstrap fuses the point stats and 500
+    Poisson replicates into one ``mapInPandas`` pass over the data: the
+    whole mean decomposition is one Spark job."""
+    rng = np.random.default_rng(11)
+    n = 2000
+    g = np.where(rng.random(n) < 0.5, "F", "M")
+    edu = rng.normal(14.0, 2.0, n)
+    wage = 10.0 + 1.5 * edu + 2.0 * (g == "M") + rng.normal(0.0, 1.0, n)
+    df = spark.createDataFrame(
+        [(float(w), float(e), str(s), i) for i, (w, e, s) in enumerate(zip(wage, edu, g))],
+        "wage double, education double, gender string, rid long",
+    )
+    b = (
+        OaxacaBuilder(df, "wage", "gender", "F").predictors(["education"]).id_col("rid")
+        .compute_engine("pandas").bootstrap_method("poisson_fast").bootstrap_reps(500).seed(7)
+    )
+    jobs, res = spark_jobs(b.run)
+    assert jobs == 1
+    assert res.n_failed_reps == 0 and math.isfinite(res.two_fold.unexplained.std_err)
